@@ -92,7 +92,11 @@ object Runner {
             forceOverwrite = params.forceOverwrite,
             overwriteSchema = params.overwriteSchema,
             policy = if (params.omitValidationErrors) FeatureStore.IgnoreMissing
-              else FeatureStore.FailOnMissing))
+              else FeatureStore.FailOnMissing,
+            // registration reads lineage from TBLPROPERTIES like the
+            // reference's get_metadata; it rides the save's commit
+            properties = params.registry.fold(Map.empty[String, String])(_ =>
+              Map("graft.sourceTables" -> sourceName))))
           catch { case scala.util.control.NonFatal(e) => saveError = Some(e) }
         }
         // register the run's validations BEFORE aborting, so failed runs
@@ -114,11 +118,8 @@ object Runner {
         }
         saveError.foreach(e => throw e)
         // post-task registration (feature_store_register.py: a task that
-        // reaches TERMINATED/SUCCESS gets its feature tables registered);
-        // lineage comes from TBLPROPERTIES like the reference's
-        // get_metadata, so record the pipeline's source first
+        // reaches TERMINATED/SUCCESS gets its feature tables registered)
         if (saveReport.isDefined) params.registry.foreach { reg =>
-          store.setProperties(table, Map("graft.sourceTables" -> sourceName))
           Registration.registerFeatureTable(store, reg, table)
         }
         if (!passed && !params.omitValidationErrors)

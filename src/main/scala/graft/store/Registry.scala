@@ -3,6 +3,7 @@ package graft.store
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -11,10 +12,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * (`notebooks/feature_store_register.py`): `get_table` / `register_table`
   * / `drop_table` / `add_data_sources` / `delete_data_sources`.
   *
-  * Persistence is one JSON document per table under `<path>/<table>.json`
-  * (parsed with Spark's JSON reader, like [[TableStore]] `_meta.json` — no
-  * external JSON dependency). The registry is pure metadata: entries point
-  * at [[TableStore]] tables, they never hold data. Registration is a
+  * Persistence is one JSON document per table under `<path>/<table>.json`,
+  * read and written on the driver through the store's metadata codec
+  * ([[MetaJson]], shared with [[TableStore]] `_meta.json`): strict parsing,
+  * atomic replace, no Spark job. `spark` is unused and kept for source
+  * compatibility. The registry is pure metadata: entries point at
+  * [[TableStore]] tables, they never hold data. Registration is a
   * driver-side catalog write — nothing here touches the executor path, so
   * there is no scale dimension beyond "one small file per feature table".
   *
@@ -30,47 +33,14 @@ final class FeatureRegistry(spark: SparkSession, path: String) {
 
   private def entryPath(table: String): Path = Paths.get(path, s"$table.json")
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
+  private[store] def put(e: Entry): Entry = {
+    MetaJson.publish(entryPath(e.table), encode(e))
+    e
   }
 
-  private def writeEntry(e: Entry): Unit = {
-    def arr(xs: Seq[String]) = xs.map(x => s""""${esc(x)}"""").mkString("[", ",", "]")
-    val tags = e.tags.map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString("{", ",", "}")
-    val json = s"""{"table":"${esc(e.table)}","schemaJson":"${esc(e.schemaJson)}",""" +
-      s""""primaryKeys":${arr(e.primaryKeys)},"timestampKeys":${arr(e.timestampKeys)},""" +
-      s""""description":"${esc(e.description)}","tags":$tags,"dataSources":${arr(e.dataSources)}}"""
-    Files.createDirectories(Paths.get(path))
-    Files.writeString(entryPath(e.table), json)
-  }
-
-  /** `fs.get_table` (`feature_store_register.py:83-96,117`). */
-  def getTable(table: String): Option[Entry] = {
-    val p = entryPath(table)
-    if (!Files.exists(p)) None
-    else {
-      import spark.implicits._
-      val row = spark.read
-        .schema("table STRING, schemaJson STRING, primaryKeys ARRAY<STRING>, " +
-          "timestampKeys ARRAY<STRING>, description STRING, " +
-          "tags MAP<STRING,STRING>, dataSources ARRAY<STRING>")
-        .json(Seq(Files.readString(p)).toDS()).first()
-      Some(Entry(
-        row.getAs[String]("table"),
-        row.getAs[String]("schemaJson"),
-        Option(row.getAs[scala.collection.Seq[String]]("primaryKeys")).map(_.toSeq).getOrElse(Nil),
-        Option(row.getAs[scala.collection.Seq[String]]("timestampKeys")).map(_.toSeq).getOrElse(Nil),
-        Option(row.getAs[String]("description")).getOrElse(""),
-        Option(row.getAs[scala.collection.Map[String, String]]("tags")).map(_.toMap).getOrElse(Map.empty),
-        Option(row.getAs[scala.collection.Seq[String]]("dataSources")).map(_.toSeq).getOrElse(Nil)))
-    }
-  }
+  /** `fs.get_table` (`feature_store_register.py:83-96,117`). A torn or
+    * malformed entry raises an error naming the file. */
+  def getTable(table: String): Option[Entry] = MetaJson.read(entryPath(table))(decode)
 
   def tableExists(table: String): Boolean = getTable(table).isDefined
 
@@ -88,22 +58,26 @@ final class FeatureRegistry(spark: SparkSession, path: String) {
     * touched here (the notebook reconciles it separately). */
   def registerTable(table: String, schema: StructType, primaryKeys: Seq[String],
                     timestampKeys: Seq[String], description: String = "",
-                    tags: Map[String, String] = Map.empty): Entry = {
-    val schemaJson = schema.json
-    getTable(table) match {
-      case Some(cur) if cur.schema.map(f => (f.name, f.dataType.simpleString)) !=
-          schema.map(f => (f.name, f.dataType.simpleString)) =>
-        throw new SchemaConflictException(
-          s"feature table $table already exists with a different schema: " +
-            SchemaDiff.diff(cur.schema, schema).describe)
-      case Some(cur) =>
-        val e = cur.copy(schemaJson = schemaJson, primaryKeys = primaryKeys,
-          timestampKeys = timestampKeys, description = description, tags = tags)
-        writeEntry(e); e
-      case None =>
-        val e = Entry(table, schemaJson, primaryKeys, timestampKeys, description, tags, Nil)
-        writeEntry(e); e
-    }
+                    tags: Map[String, String] = Map.empty): Entry =
+    put(registered(getTable(table), table, schema, primaryKeys, timestampKeys,
+      description, tags))
+
+  /** The entry [[registerTable]] writes over `existing`, without writing
+    * it; raises [[SchemaConflictException]] on a schema mismatch. */
+  private[store] def registered(existing: Option[Entry], table: String,
+                                schema: StructType, primaryKeys: Seq[String],
+                                timestampKeys: Seq[String], description: String,
+                                tags: Map[String, String]): Entry = existing match {
+    case Some(cur) if cur.schema.map(f => (f.name, f.dataType.simpleString)) !=
+        schema.map(f => (f.name, f.dataType.simpleString)) =>
+      throw new SchemaConflictException(
+        s"feature table $table already exists with a different schema: " +
+          SchemaDiff.diff(cur.schema, schema).describe)
+    case Some(cur) =>
+      cur.copy(schemaJson = schema.json, primaryKeys = primaryKeys,
+        timestampKeys = timestampKeys, description = description, tags = tags)
+    case None =>
+      Entry(table, schema.json, primaryKeys, timestampKeys, description, tags, Nil)
   }
 
   /** `fs.drop_table` (`feature_store_register.py:175`): catalog entry only —
@@ -115,13 +89,13 @@ final class FeatureRegistry(spark: SparkSession, path: String) {
     * preserving order, deduplicating against what is already recorded. */
   def addDataSources(table: String, sources: Seq[String]): Unit = {
     val cur = getTable(table).getOrElse(sys.error(s"not registered: $table"))
-    writeEntry(cur.copy(dataSources = cur.dataSources ++ sources.filterNot(cur.dataSources.contains)))
+    put(cur.copy(dataSources = cur.dataSources ++ sources.filterNot(cur.dataSources.contains)))
   }
 
   /** `fs.delete_data_sources` (`feature_store_register.py:123-126`). */
   def deleteDataSources(table: String, sources: Seq[String]): Unit = {
     val cur = getTable(table).getOrElse(sys.error(s"not registered: $table"))
-    writeEntry(cur.copy(dataSources = cur.dataSources.filterNot(sources.contains)))
+    put(cur.copy(dataSources = cur.dataSources.filterNot(sources.contains)))
   }
 }
 
@@ -134,8 +108,23 @@ object FeatureRegistry {
       description: String,
       tags: Map[String, String],
       dataSources: Seq[String]) {
-    def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+    lazy val schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
   }
+
+  /** Registry entry layout; the field names are the on-disk format. */
+  private def encode(e: Entry): ObjectNode = {
+    val o = MetaJson.obj().put("table", e.table).put("schemaJson", e.schemaJson)
+    MetaJson.putStrings(o, "primaryKeys", e.primaryKeys)
+    MetaJson.putStrings(o, "timestampKeys", e.timestampKeys)
+    o.put("description", e.description)
+    MetaJson.putStringMap(o, "tags", e.tags)
+    MetaJson.putStrings(o, "dataSources", e.dataSources)
+  }
+
+  private def decode(f: MetaJson.Fields): Entry = Entry(
+    f.str("table"), f.str("schemaJson"), f.strings("primaryKeys"),
+    f.strings("timestampKeys"), f.strOr("description", ""), f.stringMap("tags"),
+    f.strings("dataSources"))
 
   /** The "already exists with a different schema" ValueError analog. */
   final class SchemaConflictException(msg: String) extends RuntimeException(msg)
@@ -180,25 +169,20 @@ object Registration {
 
   /** `_registry_feature_table` (`feature_store_register.py:98-142`):
     * register (create-or-update), then reconcile data-source lineage by
-    * replacement when the sets differ. */
+    * replacement when the sets differ. The notebook's register → delete →
+    * add sequence is computed first and the final entry written once, so a
+    * crash never leaves an entry without its lineage. */
   private def registerAndReconcile(registry: FeatureRegistry, table: String,
                                    schema: StructType, description: String,
                                    tags: Map[String, String],
                                    sourceTables: Seq[String]): Unit = {
     val (pks, tks) = defaultKeys(table)
     val existing = registry.getTable(table)
-    registry.registerTable(table, schema, pks, tks, description, tags) // may throw conflict
-    existing match {
-      case Some(cur) =>
-        val currentSources = cur.dataSources
-        val differs = currentSources.toSet != sourceTables.toSet
-        if (sourceTables.nonEmpty && differs) {
-          if (currentSources.nonEmpty) registry.deleteDataSources(table, currentSources)
-          registry.addDataSources(table, sourceTables)
-        }
-      case None =>
-        if (sourceTables.nonEmpty) registry.addDataSources(table, sourceTables)
-    }
+    val e = registry.registered(existing, table, schema, pks, tks, description, tags) // may throw conflict
+    // delete-all-then-add leaves exactly the incoming list
+    val replace = sourceTables.nonEmpty &&
+      existing.forall(_.dataSources.toSet != sourceTables.toSet)
+    registry.put(if (replace) e.copy(dataSources = sourceTables) else e)
   }
 
   /** `registry_feature_table` (`feature_store_register.py:144-197`): read

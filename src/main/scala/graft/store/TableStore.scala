@@ -3,6 +3,7 @@ package graft.store
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,6 +16,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   <root>/<table>/v=N/part-*.parquet   — immutable snapshot per version
   *   <root>/<table>/_meta.json           — version log + schema + PKs + props
   * }}}
+  *
+  * `_meta.json` is the commit pointer. It is read and written on the
+  * driver by the store's metadata codec ([[MetaJson]], Jackson): a
+  * metadata read launches no Spark job, a torn file raises instead of
+  * reading as defaults, and a commit replaces the file by atomic rename.
+  * Reads of the current version pass the schema it records to the Parquet
+  * reader, so building the frame needs no footer-inference job either.
   *
   * Reference semantics delivered:
   *  - upsert-by-PK (`notebooks/utils.py:1748-1758` MERGE) = union incoming
@@ -60,8 +68,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
 final class TableStore(spark: SparkSession, root: String) {
 
   /** Process-wide write serialization + commit-time lost-update detection
-    * — see the class-doc concurrency contract. */
-  private def withWriteLock[T](table: String)(body: => T): T = {
+    * — see the class-doc concurrency contract. Reentrant (a JVM monitor). */
+  private[store] def withWriteLock[T](table: String)(body: => T): T = {
     val key = Paths.get(root).toAbsolutePath.normalize.toString + "#" + table
     TableStore.writeLocks.computeIfAbsent(key, _ => new Object)
       .synchronized(body)
@@ -89,51 +97,17 @@ final class TableStore(spark: SparkSession, root: String) {
 
   import TableStore.Meta
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
+  /** Publish `m` as the table's committed metadata (atomic replace). */
+  private def writeMeta(table: String, m: Meta): Meta = {
+    MetaJson.publish(metaPath(table), TableStore.encode(m))
+    m
   }
 
-  private def writeMeta(table: String, m: Meta): Unit = {
-    val props = m.properties.map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString("{", ",", "}")
-    val json =
-      s"""{"version":${m.version},"schemaJson":"${esc(m.schemaJson)}",
-         |"primaryKeys":[${m.primaryKeys.map(k => s""""${esc(k)}"""").mkString(",")}],
-         |"timestampKeys":[${m.timestampKeys.map(k => s""""${esc(k)}"""").mkString(",")}],
-         |"buckets":${m.buckets},
-         |"partitionCols":[${m.partitionCols.map(k => s""""${esc(k)}"""").mkString(",")}],
-         |"description":"${esc(m.description)}","properties":$props}""".stripMargin.replace("\n", "")
-    Files.createDirectories(tableDir(table))
-    Files.writeString(metaPath(table), json)
-  }
-
-  /** Parse _meta.json via Spark's JSON reader (no external JSON dep). */
-  def meta(table: String): Option[Meta] = {
-    val p = metaPath(table)
-    if (!Files.exists(p)) None
-    else {
-      import spark.implicits._
-      val row = spark.read
-        .schema("version INT, schemaJson STRING, primaryKeys ARRAY<STRING>, " +
-          "timestampKeys ARRAY<STRING>, buckets INT, partitionCols ARRAY<STRING>, " +
-          "description STRING, properties MAP<STRING,STRING>")
-        .json(Seq(Files.readString(p)).toDS()).first()
-      Some(Meta(
-        row.getAs[Int]("version"),
-        row.getAs[String]("schemaJson"),
-        Option(row.getAs[scala.collection.Seq[String]]("primaryKeys")).map(_.toSeq).getOrElse(Nil),
-        Option(row.getAs[scala.collection.Seq[String]]("timestampKeys")).map(_.toSeq).getOrElse(Nil),
-        Option(row.getAs[java.lang.Integer]("buckets")).fold(0)(_.intValue),
-        Option(row.getAs[String]("description")).getOrElse(""),
-        Option(row.getAs[scala.collection.Map[String, String]]("properties")).map(_.toMap).getOrElse(Map.empty),
-        Option(row.getAs[scala.collection.Seq[String]]("partitionCols")).map(_.toSeq).getOrElse(Nil)))
-    }
-  }
+  /** The table's committed metadata, read on the driver (no Spark job);
+    * None when the table does not exist. A torn or malformed `_meta.json`
+    * raises an error naming the file. */
+  def meta(table: String): Option[Meta] =
+    MetaJson.read(metaPath(table))(TableStore.decode)
 
   def exists(table: String): Boolean = meta(table).isDefined
 
@@ -147,23 +121,33 @@ final class TableStore(spark: SparkSession, root: String) {
 
   // ----------------------------------------------------------------- read
 
-  def read(table: String): DataFrame = {
-    val m = meta(table).getOrElse(sys.error(s"no such table: $table"))
-    readVersionWith(table, m.version, m.buckets)
-  }
+  def read(table: String): DataFrame =
+    readCurrent(table, meta(table).getOrElse(sys.error(s"no such table: $table")))
 
   /** Time travel (S13): read any retained snapshot. Bucketed snapshots are
     * read through their catalog entry so the scan reports the PK hash
     * partitioning (falls back to the path when the catalog entry is gone,
     * e.g. a fresh session over an existing store — data is identical, only
-    * the co-location metadata is lost). */
-  def readVersion(table: String, version: Int): DataFrame =
-    readVersionWith(table, version, meta(table).map(_.buckets).getOrElse(0))
+    * the co-location metadata is lost). Only the current version has its
+    * schema recorded; an older one is read with footer inference. */
+  def readVersion(table: String, version: Int): DataFrame = meta(table) match {
+    case Some(m) if m.version == version => readCurrent(table, m)
+    case m => readSnapshot(table, version, m.fold(0)(_.buckets), None)
+  }
 
-  private def readVersionWith(table: String, version: Int, buckets: Int): DataFrame = {
+  /** The current snapshot, read with the schema `_meta.json` records, so
+    * building the frame runs no footer-inference job. With a user schema
+    * Spark appends hive partition columns last, as inference does, and
+    * types them from the schema instead of from the directory names. */
+  private def readCurrent(table: String, m: Meta): DataFrame =
+    readSnapshot(table, m.version, m.buckets, Some(m.schema))
+
+  private def readSnapshot(table: String, version: Int, buckets: Int,
+                           schema: Option[StructType]): DataFrame = {
     val cat = catalogName(table, version)
     if (buckets > 0 && spark.catalog.tableExists(cat)) spark.table(cat)
-    else spark.read.parquet(versionDir(table, version).toString)
+    else schema.fold(spark.read)(s => spark.read.schema(s))
+      .parquet(versionDir(table, version).toString)
   }
 
   /** Append-only log write: current ∪ rows as a new snapshot version
@@ -172,8 +156,9 @@ final class TableStore(spark: SparkSession, root: String) {
     * (rows per run, not data volume). For data-volume appends use
     * [[appendFiles]]. */
   def append(table: String, df: DataFrame): Unit = withWriteLock(table) {
-    if (exists(table)) overwrite(table, read(table).unionByName(df))
-    else overwrite(table, df)
+    val current = meta(table)
+    commitOverwrite(table, current,
+      current.fold(df)(m => readCurrent(table, m).unionByName(df)))
   }
 
   /** FILE-LEVEL append: the new snapshot version is hardlinks of every
@@ -304,7 +289,20 @@ final class TableStore(spark: SparkSession, root: String) {
                 expectedVersion: Option[Int] = None,
                 buckets: Int = 0, partitionBy: Seq[String] = Nil): Unit =
     withWriteLock(table) {
-    val current = meta(table)
+      commitOverwrite(table, meta(table), df, primaryKeys, timestampKeys, description,
+        mergeSchema, overwriteSchema, expectedVersion, buckets, partitionBy)
+    }
+
+  /** [[overwrite]] from `current`, the metadata the caller read under the
+    * table's write lock; `properties` are added to the committed ones.
+    * Returns the committed metadata. */
+  private[store] def commitOverwrite(
+      table: String, current: Option[Meta], df: DataFrame,
+      primaryKeys: Seq[String] = Nil, timestampKeys: Seq[String] = Nil,
+      description: String = "", mergeSchema: Boolean = false,
+      overwriteSchema: Boolean = false, expectedVersion: Option[Int] = None,
+      buckets: Int = 0, partitionBy: Seq[String] = Nil,
+      properties: Map[String, String] = Map.empty): Meta = {
     checkExpected(table, current.map(_.version), expectedVersion)
     val out = current match {
       case Some(m) =>
@@ -338,9 +336,9 @@ final class TableStore(spark: SparkSession, root: String) {
       if (timestampKeys.nonEmpty) timestampKeys else current.map(_.timestampKeys).getOrElse(Nil),
       nb,
       if (description.nonEmpty) description else current.map(_.description).getOrElse(""),
-      current.map(_.properties).getOrElse(Map.empty),
+      current.map(_.properties).getOrElse(Map.empty) ++ properties,
       pcols))
-    }
+  }
 
   /** S8 — upsert by primary key (MERGE whenMatchedUpdate +
     * whenNotMatchedInsert, `utils.py:1748-1758`): current ∪ incoming →
@@ -350,11 +348,20 @@ final class TableStore(spark: SparkSession, root: String) {
     * table. */
   def upsert(table: String, df: DataFrame, primaryKeys: Seq[String] = Nil,
              expectedVersion: Option[Int] = None): Unit = withWriteLock(table) {
-    meta(table) match {
+    commitUpsert(table, meta(table), df, primaryKeys, expectedVersion)
+  }
+
+  /** [[upsert]] from `current`, read under the table's write lock, as
+    * [[commitOverwrite]]. */
+  private[store] def commitUpsert(table: String, current: Option[Meta], df: DataFrame,
+                                  primaryKeys: Seq[String] = Nil,
+                                  expectedVersion: Option[Int] = None,
+                                  properties: Map[String, String] = Map.empty): Meta =
+    current match {
       case None =>
         require(primaryKeys.nonEmpty, "first write needs primaryKeys")
         checkExpected(table, None, expectedVersion)
-        overwrite(table, df, primaryKeys)
+        commitOverwrite(table, None, df, primaryKeys, properties = properties)
       case Some(m) =>
         checkExpected(table, Some(m.version), expectedVersion)
         val pks = if (primaryKeys.nonEmpty) primaryKeys else m.primaryKeys
@@ -364,9 +371,9 @@ final class TableStore(spark: SparkSession, root: String) {
         writeSnapshot(table, merged, v, m.buckets, pks, shuffleToBuckets = false,
           partitionCols = m.partitionCols)
         commitGuard(table, Some(m.version))
-        writeMeta(table, m.copy(version = v, schemaJson = merged.schema.json))
+        writeMeta(table, m.copy(version = v, schemaJson = merged.schema.json,
+          properties = m.properties ++ properties))
     }
-  }
 
   /** Build the post-merge frame for an upsert (exposed for plan-shape
     * specs). Two formulations with identical semantics — prefer the
@@ -394,7 +401,7 @@ final class TableStore(spark: SparkSession, root: String) {
         }.select(allCols.map(col): _*)
       val dataCols = allCols.filterNot(pks.contains)
       val w = Window.partitionBy(pks.map(col): _*)
-        .orderBy(xxhash64(dataCols.map(col): _*).desc)
+        .orderBy(payloadHash(dataCols).desc)
       val incDedup = pad(df, curTypes)
         .repartition(m.buckets, pks.map(col): _*)
         .withColumn("__rn", row_number().over(w))
@@ -408,13 +415,18 @@ final class TableStore(spark: SparkSession, root: String) {
       val unioned = current.unionByName(incoming, allowMissingColumns = true)
       val dataCols = unioned.columns.filterNot(c => c == "__src" || pks.contains(c))
       val w = Window.partitionBy(pks.map(col): _*)
-        .orderBy(col("__src").desc, xxhash64(dataCols.toIndexedSeq.map(col): _*).desc)
+        .orderBy(col("__src").desc, payloadHash(dataCols.toIndexedSeq).desc)
       unioned
         .withColumn("__rn", row_number().over(w))
         .where(col("__rn") === 1)
         .drop("__src", "__rn")
     }
   }
+
+  /** Content hash that breaks PK ties in [[mergedForUpsert]]; a table of
+    * key columns only has no payload (`xxhash64()` rejects zero columns). */
+  private def payloadHash(dataCols: Seq[String]) =
+    if (dataCols.isEmpty) lit(0L) else xxhash64(dataCols.map(col): _*)
 
   /** S9 — replaceWhere: rewrite only the rows NOT matching the predicate,
     * union the incoming batch (partition-scoped overwrite semantics,
@@ -598,8 +610,24 @@ object TableStore {
       description: String,
       properties: Map[String, String],
       partitionCols: Seq[String] = Nil) {
-    def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+    lazy val schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
   }
+
+  /** `_meta.json` layout; the field names are the on-disk format. */
+  private[store] def encode(m: Meta): ObjectNode = {
+    val o = MetaJson.obj().put("version", m.version).put("schemaJson", m.schemaJson)
+    MetaJson.putStrings(o, "primaryKeys", m.primaryKeys)
+    MetaJson.putStrings(o, "timestampKeys", m.timestampKeys)
+    o.put("buckets", m.buckets)
+    MetaJson.putStrings(o, "partitionCols", m.partitionCols)
+    o.put("description", m.description)
+    MetaJson.putStringMap(o, "properties", m.properties)
+  }
+
+  private[store] def decode(f: MetaJson.Fields): Meta = Meta(
+    f.int("version"), f.str("schemaJson"), f.strings("primaryKeys"),
+    f.strings("timestampKeys"), f.intOr("buckets", 0), f.strOr("description", ""),
+    f.stringMap("properties"), f.strings("partitionCols"))
 }
 
 /** The feature-store face of [[TableStore]]: validate → save → register,
@@ -613,27 +641,34 @@ object FeatureStore {
 
   final case class SaveReport(table: String, version: Int, diff: Option[SchemaDiff])
 
+  /** Validate `df` against the stored schema, then overwrite (new or
+    * forced) or upsert. One metadata read under the table's write lock;
+    * the `graft.*` key properties and the caller's `properties` ride the
+    * data commit, so a save writes `_meta.json` once. */
   def save(store: TableStore, table: String, df: DataFrame,
            primaryKeys: Seq[String], timestampKeys: Seq[String],
            description: String = "", forceOverwrite: Boolean = false,
            overwriteSchema: Boolean = false,
-           policy: MissingColumnPolicy = FailOnMissing): SaveReport = {
-    val diff = store.meta(table).map(m => SchemaDiff.diff(m.schema, df.schema))
-    diff.foreach { d =>
-      if (d.missingColumns.nonEmpty && policy == FailOnMissing && !overwriteSchema)
-        sys.error(s"missing columns on save of $table: ${d.missingColumns.mkString(", ")}")
-      if (d.hasTypeChanges && !overwriteSchema)
-        sys.error(s"type changes on save of $table: ${d.describe}")
+           policy: MissingColumnPolicy = FailOnMissing,
+           properties: Map[String, String] = Map.empty): SaveReport =
+    store.withWriteLock(table) {
+      val current = store.meta(table)
+      val diff = current.map(m => SchemaDiff.diff(m.schema, df.schema))
+      diff.foreach { d =>
+        if (d.missingColumns.nonEmpty && policy == FailOnMissing && !overwriteSchema)
+          sys.error(s"missing columns on save of $table: ${d.missingColumns.mkString(", ")}")
+        if (d.hasTypeChanges && !overwriteSchema)
+          sys.error(s"type changes on save of $table: ${d.describe}")
+      }
+      val props = properties ++ Map(
+        "graft.primaryKeys" -> primaryKeys.mkString(","),
+        "graft.timestampKeys" -> timestampKeys.mkString(","),
+        "graft.description" -> description)
+      val committed =
+        if (forceOverwrite || current.isEmpty)
+          store.commitOverwrite(table, current, df, primaryKeys, timestampKeys, description,
+            mergeSchema = true, overwriteSchema = overwriteSchema, properties = props)
+        else store.commitUpsert(table, current, df, primaryKeys, properties = props)
+      SaveReport(table, committed.version, diff)
     }
-    if (forceOverwrite || !store.exists(table))
-      store.overwrite(table, df, primaryKeys, timestampKeys, description,
-        mergeSchema = true, overwriteSchema = overwriteSchema)
-    else
-      store.upsert(table, df, primaryKeys)
-    store.setProperties(table, Map(
-      "graft.primaryKeys" -> primaryKeys.mkString(","),
-      "graft.timestampKeys" -> timestampKeys.mkString(","),
-      "graft.description" -> description))
-    SaveReport(table, store.currentVersion(table), diff)
-  }
 }

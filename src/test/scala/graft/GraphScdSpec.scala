@@ -214,6 +214,9 @@ class GraphScdSpec extends AnyFunSuite {
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
     }
+    // deliver earlier tests' queued query events first: a late PageRank
+    // completion (two hash joins) would otherwise count here
+    org.apache.spark.TestBus.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L))

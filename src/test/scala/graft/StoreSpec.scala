@@ -1,10 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types._
 
-import graft.store.{FeatureStore, SchemaDiff, TableStore}
+import graft.store.{FeatureRegistry, FeatureStore, SchemaDiff, TableStore}
 
 class StoreSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -12,6 +15,30 @@ class StoreSpec extends AnyFunSuite {
 
   private def freshStore() =
     new TableStore(spark, Files.createTempDirectory("graft_store").toString)
+
+  /** `body`'s result and the number of Spark jobs it launched on this
+    * thread: a listener counts job starts tagged with a fresh job group,
+    * read after the listener bus has drained. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"store-spec-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "StoreSpec job count")
+    try {
+      val r = body
+      TestBus.drain(sc)
+      (r, n.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("schema diff classifies NEW / MISSING / TYPE_CHANGED") {
     val stored = StructType.fromDDL("a INT, b STRING, c DOUBLE")
@@ -425,6 +452,154 @@ class StoreSpec extends AnyFunSuite {
     assert(m.properties("team") == "graft")
     assert(m.description.contains("\"quoted\""))
     assert(m.primaryKeys == Seq("k") && m.timestampKeys == Seq("k"))
+    // every character class the writer must escape or pass through
+    val awkward = "q\"uote b\\ack\\slash\nnew\ttab\rcr\u0001ctl café 日本語 \uD83D\uDE80"
+    store.setProperties("p", Map(awkward -> awkward, "plain" -> awkward))
+    store.upsert("p", Seq(2).toDF("k")) // a data commit carries them forward
+    val m2 = store.meta("p").get
+    assert(m2.properties(awkward) == awkward && m2.properties("plain") == awkward)
+    assert(m2.properties("team") == "graft" && m2.version == 1)
+    assert(m2.description == "a \"quoted\" description\nline2")
+    assert(m2.schema.map(f => (f.name, f.dataType)) == Seq("k" -> IntegerType))
+  }
+
+  /** A `_meta.json` and a registry entry exactly as the earlier
+    * string-templated writers produced them (escapes `"` `\` `\n` `\r`
+    * `\t` and other control characters as `\u00XX`, everything else raw
+    * UTF-8), so stores written before the Jackson codec stay readable. */
+  test("format compatibility: files of the earlier writer parse to the same Meta and Entry") {
+    val root = Files.createTempDirectory("graft_store_compat")
+    val schemaJson = StructType.fromDDL("k BIGINT NOT NULL, ts DATE, v STRING").json
+    val escSchema = schemaJson.replace("\\", "\\\\").replace("\"", "\\\"")
+    // the escaped text of: say "hi" C:\tmp <newline> next <tab> t <U+0001> café 日本語 🚀
+    val escAwkward = """say \"hi\" C:\\tmp\nnext\tt""" + "\\u0001" + " café 日本語 \uD83D\uDE80"
+    val awkward = "say \"hi\" C:\\tmp\nnext\tt\u0001 café 日本語 \uD83D\uDE80"
+    Files.createDirectories(root.resolve("old"))
+    Files.writeString(root.resolve("old").resolve("_meta.json"),
+      s"""{"version":3,"schemaJson":"$escSchema",""" +
+        """"primaryKeys":["k"],"timestampKeys":["ts"],"buckets":0,"partitionCols":[],""" +
+        s""""description":"$escAwkward","properties":{"team":"graft","$escAwkward":"$escAwkward"}}""")
+    val m = new TableStore(spark, root.toString).meta("old").get
+    assert(m == TableStore.Meta(3, schemaJson, Seq("k"), Seq("ts"), 0, awkward,
+      Map("team" -> "graft", awkward -> awkward), Nil))
+    assert(m.schema.fieldNames.toSeq == Seq("k", "ts", "v"))
+    // files from before buckets / partitionCols were recorded read as their defaults
+    Files.createDirectories(root.resolve("older"))
+    Files.writeString(root.resolve("older").resolve("_meta.json"),
+      s"""{"version":0,"schemaJson":"$escSchema","primaryKeys":["k"],"timestampKeys":[],""" +
+        """"description":"","properties":{}}""")
+    val old = new TableStore(spark, root.toString).meta("older").get
+    assert(old.buckets == 0 && old.partitionCols == Nil && old.version == 0)
+
+    val regDir = Files.createTempDirectory("graft_registry_compat")
+    Files.writeString(regDir.resolve("fs_cus_x.json"),
+      s"""{"table":"fs_cus_x","schemaJson":"$escSchema",""" +
+        """"primaryKeys":["k","ts"],"timestampKeys":["ts"],""" +
+        s""""description":"$escAwkward","tags":{"$escAwkward":"$escAwkward"},""" +
+        """"dataSources":["clientes","pagos"]}""")
+    val reg = new FeatureRegistry(spark, regDir.toString)
+    val e = reg.getTable("fs_cus_x").get
+    assert(e == FeatureRegistry.Entry("fs_cus_x", schemaJson, Seq("k", "ts"), Seq("ts"),
+      awkward, Map(awkward -> awkward), Seq("clientes", "pagos")))
+    // the new writer's output round-trips
+    reg.addDataSources("fs_cus_x", Seq("buro"))
+    assert(reg.getTable("fs_cus_x").get == e.copy(dataSources = Seq("clientes", "pagos", "buro")))
+    assert(reg.tables == Seq("fs_cus_x"))
+  }
+
+  test("a torn _meta.json raises an error naming it; a killed writer's temp file is ignored") {
+    val root = Files.createTempDirectory("graft_store_torn")
+    val store = new TableStore(spark, root.toString)
+    store.overwrite("t", Seq((1, "a")).toDF("pk", "v"), primaryKeys = Seq("pk"))
+    store.upsert("t", Seq((2, "b")).toDF("pk", "v"))
+    val dir = root.resolve("t")
+    def names(d: Path) = Files.list(d).iterator().asScala.map(_.getFileName.toString).toSet
+    // publishing leaves no temp file behind
+    assert(names(dir) == Set("_meta.json", "v=0", "v=1"))
+    // a writer killed before its rename leaves a half-written temp file
+    // beside the pointer; readers never look at it
+    Files.writeString(dir.resolve("._meta.json.0b1c.tmp"), "{\"version\":7,\"sch")
+    assert(store.currentVersion("t") == 1)
+    assert(store.read("t").count() == 2)
+    store.upsert("t", Seq((3, "c")).toDF("pk", "v"))
+    assert(store.currentVersion("t") == 2)
+    val regDir = Files.createTempDirectory("graft_registry_torn")
+    val reg = new FeatureRegistry(spark, regDir.toString)
+    reg.registerTable("t", store.meta("t").get.schema, Seq("pk"), Nil)
+    Files.writeString(regDir.resolve(".t.json.0b1c.tmp"), "{\"table\":\"t\",")
+    assert(reg.tables == Seq("t") && reg.getTable("t").get.primaryKeys == Seq("pk"))
+    // a torn pointer (truncated to half) fails loudly instead of reading
+    // as version 0 with no schema and no keys
+    val meta = dir.resolve("_meta.json")
+    val bytes = Files.readAllBytes(meta)
+    Files.write(meta, bytes.take(bytes.length / 2))
+    val err = intercept[IllegalStateException](store.meta("t"))
+    assert(err.getMessage.contains(meta.toString), err.getMessage)
+    intercept[IllegalStateException](store.read("t"))
+    intercept[IllegalStateException](store.upsert("t", Seq((4, "d")).toDF("pk", "v")))
+    // trailing bytes and a missing required field are malformed too
+    Files.writeString(meta, new String(bytes, "UTF-8") + "}")
+    intercept[IllegalStateException](store.meta("t"))
+    Files.writeString(meta, "{\"schemaJson\":\"{}\"}")
+    assert(intercept[IllegalStateException](store.meta("t")).getMessage.contains("version"))
+    val entry = regDir.resolve("t.json")
+    Files.write(entry, Files.readAllBytes(entry).take(10))
+    assert(intercept[IllegalStateException](reg.getTable("t"))
+      .getMessage.contains(entry.toString))
+  }
+
+  test("metadata operations launch no Spark job; current-version reads pin the " +
+      "recorded schema, equal to the footer-inferred one") {
+    val root = Files.createTempDirectory("graft_store_jobs")
+    val store = new TableStore(spark, root.toString)
+    val reg = new FeatureRegistry(spark, Files.createTempDirectory("graft_registry_jobs").toString)
+    store.overwrite("plain", Seq((1L, "x", 1.5)).toDF("k", "s", "d"), primaryKeys = Seq("k"))
+    store.overwrite("hive", (1 to 12).map(i => (i.toLong, i % 3, i * 1.0, s"t$i"))
+      .toDF("id", "month", "amt", "tag"), primaryKeys = Seq("id"), partitionBy = Seq("month"))
+    store.setProperties("plain", Map("team" -> "graft"))
+    reg.registerTable("plain", store.meta("plain").get.schema, Seq("k"), Nil)
+    val (_, metaJobs) = jobsOf {
+      store.meta("plain"); store.meta("hive")
+      store.exists("plain"); store.exists("absent")
+      store.currentVersion("hive")
+      store.setProperties("plain", Map("team" -> "graft")) // no change: no write
+      reg.getTable("plain")
+    }
+    assert(metaJobs == 0)
+    val (_, readJobs) = jobsOf {
+      store.read("plain"); store.read("hive")
+      store.readVersion("plain", store.currentVersion("plain"))
+    }
+    assert(readJobs == 0)
+
+    /** The current read's schema against Spark's footer inference over the
+      * same version dir — names, types, nullability and order. */
+    def sameAsInferred(t: String): Unit = {
+      val dir = root.resolve(t).resolve(s"v=${store.currentVersion(t)}")
+      val inferred = spark.read.parquet(dir.toString).schema
+      assert(store.read(t).schema == inferred, s"$t: ${store.read(t).schema} vs $inferred")
+      assert(store.readVersion(t, store.currentVersion(t)).schema == inferred)
+    }
+    sameAsInferred("plain")
+    sameAsInferred("hive") // partition column last, as inference puts it
+    assert(store.read("hive").columns.toSeq == Seq("id", "amt", "tag", "month"))
+    // mergeSchema overwrite: a stored column null-padded, a new one appended
+    store.overwrite("plain", Seq((2L, "y", true)).toDF("k", "s", "b"), mergeSchema = true)
+    sameAsInferred("plain")
+    // an upsert that adds a column, on both layouts
+    store.upsert("plain", Seq((3L, "z", 2.5, false, 7)).toDF("k", "s", "d", "b", "n"))
+    sameAsInferred("plain")
+    assert(store.read("plain").columns.toSeq == Seq("k", "s", "d", "b", "n"))
+    store.upsert("hive", Seq((99L, 1, 9.0, "new", 3L)).toDF("id", "month", "amt", "tag", "extra"))
+    sameAsInferred("hive")
+    assert(store.read("hive").where($"id" === 99L).select("extra").as[Long].head() == 3L)
+    // partition columns take the stored type: digit strings stay strings,
+    // where inference would type them from the directory names as ints
+    store.overwrite("digits", Seq((1L, "2024")).toDF("id", "yr"), primaryKeys = Seq("id"),
+      partitionBy = Seq("yr"))
+    assert(store.read("digits").schema("yr").dataType == StringType)
+    assert(spark.read.parquet(root.resolve("digits").resolve("v=0").toString)
+      .schema("yr").dataType == IntegerType)
   }
 
   test("Sources: layered read/write resolution and existence probes") {
