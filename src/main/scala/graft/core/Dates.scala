@@ -31,8 +31,6 @@ object Dates {
   def releaseDt(c: Column, fmt: String = "yyyy-MM"): Column =
     shiftDate(c, fmt, days = 0, months = 1)
 
-  def monthFloor(c: Column): Column = trunc(c, "month")
-
   /** yyyy + MM (lpad) assembly → date (`date.py:57-96`). */
   def yearMonthToDate(year: Column, month: Column): Column =
     to_date(concat(year.cast("string"), lpad(month.cast("string"), 2, "0")), "yyyyMM")

@@ -27,10 +27,6 @@ object Exprs {
   def safePct(num: Column, den: Column, scale: Int = 4): Column =
     when(den =!= 0, round(num / den * 100, scale)).otherwise(lit(null))
 
-  /** Helper variant defaulting to 0 (`fs_cus_credit_risk.py:153-164`). */
-  def ratioOrZero(num: Column, den: Column, scale: Int = 4): Column =
-    when(den =!= 0, round(num / den, scale)).otherwise(lit(0.0))
-
   /** CASE-WHEN category mapping: value → value, with optional default
     * (`fs_cus_demographic.py:176-193`; generic `feature_generation.py:121-192`). */
   def caseMap(c: Column, mapping: Seq[(String, Any)], default: Any = null): Column =
@@ -65,19 +61,8 @@ object Exprs {
     "row_number" -> (_ => row_number()), "year" -> year, "month" -> month,
   )
 
-  /** Binary column-operator registry — the `getattr(operator, op)` pattern
-    * (`feature_generation.py:12-58`). */
-  val fn2: Map[String, (Column, Column) => Column] = Map(
-    "add" -> (_ + _), "sub" -> (_ - _), "mul" -> (_ * _), "truediv" -> (_ / _),
-    "mod" -> (_ % _), "pow" -> ((a, b) => pow(a, b)),
-    "eq" -> (_ === _), "ne" -> (_ =!= _), "lt" -> (_ < _), "le" -> (_ <= _),
-    "gt" -> (_ > _), "ge" -> (_ >= _),
-  )
-
   def resolve1(op: String): Column => Column =
     fn1.getOrElse(op, throw new IllegalArgumentException(s"unknown function: $op"))
-  def resolve2(op: String): (Column, Column) => Column =
-    fn2.getOrElse(op, throw new IllegalArgumentException(s"unknown operator: $op"))
 
   /** Typed constant column (`feature_generation.py:320-345`). */
   def litCol(v: Any, castTo: String): Column = lit(v).cast(castTo)

@@ -79,7 +79,4 @@ object TextNorm {
     * normalize the *values* of every string column. */
   def normalizeTable(df: DataFrame, exclude: Set[String] = Set.empty): DataFrame =
     applyToStringCols(df, normalize, exclude)
-
-  def trimTable(df: DataFrame): DataFrame = applyToStringCols(df, trim)
-  def lowerTable(df: DataFrame): DataFrame = applyToStringCols(df, lower)
 }

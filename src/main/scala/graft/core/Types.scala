@@ -37,12 +37,4 @@ object Types {
 
   /** The full `feature_output` coercion pass. */
   def standardize(df: DataFrame): DataFrame = longsToInts(decimalsToFloats(df))
-
-  /** Declarative cast-by-name layer (`schemas.py:13-63`). */
-  def castColumns(df: DataFrame, casts: Map[String, String]): DataFrame = {
-    if (casts.isEmpty) df
-    else df.select(df.columns.map { n =>
-      casts.get(n).map(t => col(n).cast(t).as(n)).getOrElse(col(n))
-    }.toIndexedSeq: _*)
-  }
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Registry-free Column ⇄ Expression bridge. `classic.ExpressionUtils` is
-  * `private[sql]`, so pure Column-builder helpers (no SparkSession in
-  * scope, nothing to register against) reach it through this shim — the
+  * `private[sql]`, so graft's typed kernel builders
+  * ([[graft.functions.GraftFunctions]]) reach it through this shim — the
   * same accessor every Spark connector library embeds to inject custom
   * expressions into the classic DataFrame API. */
 object ColumnShim {

@@ -72,98 +72,3 @@ case class CosineSimilarity(left: Expression, right: Expression)
                                                  newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
-
-/** Session wiring for graft's native expressions.
-  *
-  * Use either path:
-  *  - `GraftFunctions.register(spark)` — function-registry registration,
-  *    then `expr("graft_cosine(a, b)")` / SQL;
-  *  - `.withExtensions(new GraftExtensions)` at session build time
-  *    (`SparkSessionExtensions.injectFunction`).
-  */
-object GraftFunctions {
-  import org.apache.spark.sql.{Column, SparkSession}
-
-  val cosineDescriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,
-      org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    org.apache.spark.sql.catalyst.FunctionIdentifier("graft_cosine"),
-    new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      classOf[CosineSimilarity].getName, "graft_cosine"),
-    (children: Seq[Expression]) => CosineSimilarity(children(0), children(1)))
-
-  /** Session ids already registered — registration is cheap but re-running
-    * it per query floods the log with "function replaced" warnings. */
-  private val registered = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
-
-  def register(spark: SparkSession): Unit = {
-    if (!registered.add(System.identityHashCode(spark.sessionState.functionRegistry).toString)) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", exprs => MinHashSig(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", exprs => SimHashSig(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaccard_sorted", exprs => JaccardSorted(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_intersect", exprs => SortedIntersect(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ngram_hashes", exprs => NgramHashes(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_long", exprs => MinHashLong(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_srp_keys", exprs => SrpKeys(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_eq_positions", exprs => EqPositions(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_might_contain", exprs => BloomMightContain(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk", exprs => TopKSketch.fromExprs(exprs), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_scrub_repeats", exprs => ScrubRepeats(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_char_entropy", exprs => CharEntropy(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dsir_buckets", exprs => DsirBuckets(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_token_buckets", exprs => TokenBuckets(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_repetition_stats", exprs => RepetitionStats(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_deflate_len", exprs => DeflateLen(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bootstrap_weights",
-      exprs => BootstrapWeights(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cms_buckets",
-      exprs => CmsBuckets(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow_hashes",
-      exprs => WinnowHashes(exprs(0), exprs(1), exprs(2)), "built-in")
-  }
-
-  /** Column-API face (usable after [[register]]). */
-  def graftCosine(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("graft_cosine", a, b)
-  }
-
-  /** Registry-free Column over the [[GraftTokens]] tokenizer kernel —
-    * usable from pure Column-builder helpers that have no SparkSession at
-    * hand (the expression is injected directly, no function lookup). */
-  def tokens(text: Column, keepAccents: Boolean, dropEmpty: Boolean): Column = {
-    import org.apache.spark.sql.graft.ColumnShim
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    ColumnShim.column(GraftTokens(ColumnShim.expression(text),
-      Literal(keepAccents), Literal(dropEmpty)))
-  }
-}
-
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction(GraftFunctions.cosineDescriptor)
-    e.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
-  }
-}

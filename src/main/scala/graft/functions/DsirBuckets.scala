@@ -75,9 +75,10 @@ object DsirBuckets {
     (v >>> 4) % buckets
   }
 
-  /** Non-null token bytes, in order. The kernels are registered
-    * session-wide (`graft_dsir_buckets` / `graft_token_buckets`), so
-    * arbitrary SQL can hand them arrays with null elements — those are
+  /** Non-null token bytes, in order. The kernels are also SQL functions
+    * (`graft_dsir_buckets` / `graft_token_buckets`, installed by
+    * [[GraftFunctions.register]] or [[GraftExtensions]]), so arbitrary
+    * SQL can hand them arrays with null elements — those are
     * SKIPPED (treated as absent; neighbours become bigram-adjacent),
     * matching what `filter(arr, x -> x IS NOT NULL)` upstream would
     * produce, instead of crashing with a raw NPE (r11 advice). */

@@ -102,7 +102,7 @@ object RepetitionStats {
 
   def compute(tokens: ArrayData, topN: Int, dupN: Int): InternalRow = {
     val total = tokens.numElements()
-    // Null elements are skipped (session-registered SQL function — a
+    // Null elements are skipped (also a SQL function — a
     // null-element array must degrade like filter(x -> x IS NOT NULL)
     // upstream, not NPE; r11 advice).
     var n = 0

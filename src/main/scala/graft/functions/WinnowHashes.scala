@@ -69,8 +69,8 @@ object WinnowHashes {
 
   def compute(tokens: ArrayData, n: Int, w: Int): ArrayData = {
     val total = tokens.numElements()
-    // null elements skipped (session-registered SQL function contract —
-    // degrade like filter(x -> x IS NOT NULL), never NPE)
+    // null elements skipped (SQL can hand the kernel any array: degrade
+    // like filter(x -> x IS NOT NULL), never NPE)
     var len = 0
     var j = 0
     while (j < total) { if (!tokens.isNullAt(j)) len += 1; j += 1 }

@@ -18,16 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Aggregations {
 
-  /** A1 — grouped agg with fixed ops: count(*) + per-column named aggs
-    * (`fs_cus_credit_risk.py:213-261`). Aggs supplied as (op, col, alias). */
-  def groupedAgg(df: DataFrame, keys: Seq[String],
-                 aggs: Seq[(String, String, String)],
-                 countAlias: Option[String] = None): DataFrame = {
-    val cols = countAlias.map(a => count(lit(1)).as(a)).toSeq ++
-      aggs.map { case (op, c, alias) => graft.core.Exprs.resolve1(op)(col(c)).as(alias) }
-    df.groupBy(keys.map(col): _*).agg(cols.head, cols.tail: _*)
-  }
-
   /** A2 — config-driven agg: `{col -> ops}` with default `{c}_{op}` aliases
     * (`aggregation.py:60-159`), optional join-back onto the input (J6). */
   def configAgg(df: DataFrame, keys: Seq[String], ops: Map[String, Seq[String]],

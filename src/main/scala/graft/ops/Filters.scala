@@ -40,10 +40,6 @@ object Filters {
   /** P8 — null fill with per-column values (`transform_column.py:90-129`). */
   def fillNa(df: DataFrame, values: Map[String, Any]): DataFrame = df.na.fill(values)
 
-  /** P8 — null drop on a subset or all (`data_quality.py:41-75`). */
-  def dropNa(df: DataFrame, subset: Seq[String] = Nil): DataFrame =
-    if (subset.isEmpty) df.na.drop() else df.na.drop(subset)
-
   /** P9 — dedup (`data_quality.py:78-112`). */
   def dedup(df: DataFrame, subset: Seq[String] = Nil): DataFrame =
     if (subset.isEmpty) df.dropDuplicates() else df.dropDuplicates(subset)
@@ -54,12 +50,6 @@ object Filters {
       if (cols.contains(n)) graft.core.Exprs.naStandardize(col(n), sentinels).as(n)
       else col(n)
     }.toIndexedSeq: _*)
-
-  /** P11 — date-range parameter filter (`fs_cus_demographic.py:35-46`). */
-  def dateRange(df: DataFrame, c: String, start: Option[String], end: Option[String]): DataFrame = {
-    val conds = start.map(s => col(c) >= lit(s)).toSeq ++ end.map(e => col(c) <= lit(e))
-    if (conds.isEmpty) df else df.where(conds.reduce(_ && _))
-  }
 
   /** In [0, 1): position of the key's hash on the unit interval. */
   private def hashU(keyCols: Seq[String], salt: Int) =

@@ -151,13 +151,6 @@ object Scale {
       .drop("__lo", "__hi")
   }
 
-  /** Repartition to a target in-memory partition size given a total size
-    * estimate — the sizing rule `spark.sql.files.maxPartitionBytes`
-    * applies at scan time, applied here for shuffled intermediates. */
-  def repartitionBySize(df: DataFrame, totalBytes: Long,
-                        targetBytes: Long = 128L << 20): DataFrame =
-    df.repartition(math.max(1, (totalBytes / targetBytes).toInt))
-
   /** Spread a CPU-bound stage (native digest kernels: bootstrap weights,
     * CMS buckets, minhash) across the cores when — and ONLY when — the
     * input scan is too small to feed them: a single small parquet file

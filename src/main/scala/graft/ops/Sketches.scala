@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.{BloomFilter, CountMinSketch}
+import graft.functions.GraftFunctions
 
 /** Approximate-query sketch kit — the operators a 100 TB pipeline reaches
   * for when exact answers would shuffle the world: HyperLogLog++
@@ -76,10 +77,7 @@ object Sketches {
     // posexplode_OUTER keeps InferFiltersFromGenerate from planting a
     // size() probe that re-runs the kernel (CLAUDE.md invariant 6);
     // the array is always length `depth`, so outer ≡ inner.
-    import org.apache.spark.sql.graft.ColumnShim
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val buckets = ColumnShim.column(graft.functions.CmsBuckets(
-      ColumnShim.expression(col("__x")), Literal(depth), Literal(hexChars)))
+    val buckets = GraftFunctions.cmsBuckets(col("__x"), depth, hexChars)
     Scale.spreadSmallScan(
         df.where(col(itemCol).isNotNull)
           .select(col(itemCol).cast("string").as("__x")))
@@ -149,15 +147,13 @@ object Sketches {
     val bf = keyBloom(small, smallKey, expectedItems, fpp)
     val out = new java.io.ByteArrayOutputStream()
     bf.writeTo(out)
-    graft.functions.GraftFunctions.register(large.sparkSession)
     // native codegen predicate (graft_bloom_might_contain) — integral or
     // string keys, type-checked instead of silently cast; the serialized
     // filter ships with the plan like Spark's own runtime bloom pushdown
     // (task binaries are broadcast once per executor, so the cost is plan
     // size, not per-task payload — for very large expectedItems keep the
     // filter tens of MB, not hundreds: ~1.2 GB per 1e9 items at fpp 0.01)
-    large.where(call_function("graft_bloom_might_contain",
-        col(largeKey), lit(out.toByteArray)))
+    large.where(GraftFunctions.bloomMightContain(col(largeKey), out.toByteArray))
       .join(small, large(largeKey) === small(smallKey))
   }
 
@@ -171,10 +167,8 @@ object Sketches {
     * capacity is guaranteed present. */
   def topKApprox(df: DataFrame, groupCols: Seq[String], itemCol: String,
                  k: Int, capacity: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val agg = df.groupBy(groupCols.map(col): _*)
-      .agg(call_function("graft_topk", col(itemCol).cast("string"),
-        lit(k), lit(capacity)).as("__top"))
+      .agg(GraftFunctions.topK(col(itemCol).cast("string"), k, capacity).as("__top"))
     agg.select(groupCols.map(col) :+ posexplode(col("__top")).as(Seq("rank", "t")): _*)
       .select(groupCols.map(col) ++ Seq(col("rank").cast("int").as("rank"),
         col("t.item").as("item"), col("t.cnt").as("cnt"), col("t.err").as("err")): _*)

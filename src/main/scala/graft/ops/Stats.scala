@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** Experiment analysis and resampling statistics (extension beyond the
   * reference surface — the measurement layer a feature store feeds:
@@ -96,8 +97,6 @@ object Stats {
                           salt: Int = 42): DataFrame = {
     require(keyCols.nonEmpty, "keyCols must be non-empty")
     require(nReplicates >= 2, "need nReplicates >= 2")
-    import org.apache.spark.sql.graft.ColumnShim
-    import org.apache.spark.sql.catalyst.expressions.Literal
     // All R weights per row in ONE native kernel call (BootstrapWeights):
     // the Column form evaluated concat_ws+md5+substring+conv+when per
     // EXPLODED row (R× per input row — 9.7 s honest at sf0.1, r11's
@@ -109,9 +108,7 @@ object Stats {
     // outer form keeps InferFiltersFromGenerate from planting a
     // size(__ws) > 0 filter that would re-run the kernel per row
     // (CLAUDE.md invariant 6).
-    val ws = ColumnShim.column(graft.functions.BootstrapWeights(
-      ColumnShim.expression(col("__key")),
-      Literal(nReplicates), Literal(salt.toString)))
+    val ws = GraftFunctions.bootstrapWeights(col("__key"), nReplicates, salt.toString)
     // The kernel is CPU-bound (R md5 digests per row) behind a scan that
     // may be a single small parquet file → 1-2 input partitions running
     // the whole digest loop on one core (measured: 3 s of the entry's

@@ -29,8 +29,9 @@ import org.apache.spark.sql.types.{DoubleType, LongType, NumericType}
   * Each (row, interval) pair meets in exactly one bin (the bin of `v`), so
   * the rewrite is duplicate-free by construction.
   *
-  * Registered via [[graft.functions.GraftExtensions]]
-  * (`injectOptimizerRule`) or `spark.experimental.extraOptimizations`.
+  * Opt-in: installed at session build by [[graft.functions.GraftExtensions]]
+  * (`injectOptimizerRule`, next to the kernels' SQL names) or per session
+  * via `spark.experimental.extraOptimizations`.
   */
 object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 

@@ -2,6 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** Embedding-space clustering and cluster-bucketed semantic dedup —
   * the SemDeDup recipe (Abbas et al., arXiv:2303.09540): cluster the
@@ -153,7 +154,6 @@ object Cluster {
   def semanticDupPairs(df: DataFrame, idCol: String, vecCol: String,
                        centroids: Seq[Seq[Long]],
                        threshold: Double = 0.95): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val b = assignQuantized(df, vecCol, centroids)
       .select(col("cluster"), col(idCol).as("__id"),
         col(vecCol).cast("array<double>").as("__v"))
@@ -163,7 +163,7 @@ object Cluster {
     a.join(c.hint("shuffle_hash"), Seq("cluster"))
       .where(col("id_a") < col("id_b"))
       .withColumn("cosine_sim",
-        round(call_function("graft_cosine", col("v_a"), col("v_b")), 6))
+        round(GraftFunctions.cosine(col("v_a"), col("v_b")), 6))
       .where(col("cosine_sim") >= threshold)
       .select("id_a", "id_b", "cosine_sim")
   }
@@ -257,7 +257,6 @@ object Cluster {
                            registerSurvivors: Boolean = true,
                            appendOnly: Boolean = false,
                            broadcastMaxProbeDocs: Long = 65536): DataFrame = {
-    graft.functions.GraftFunctions.register(batch.sparkSession)
     // pinned: one assign+quantize pass feeds the corpus probe, the batch
     // self-join, and the returned frame — and the broadcast gate's count
     val bsig = Similarity.int8Quantize(
@@ -272,14 +271,10 @@ object Cluster {
       col("__cluster").as("cluster"), col("__codes").as("c_new"),
       col("__scale").as("s_new"))
     val simGate = (cA: Column, sA: Column, cB: Column, sB: Column) =>
-      round(call_function("graft_cosine", deq(cA, sA), deq(cB, sB)), 6) >= threshold
+      round(GraftFunctions.cosine(deq(cA, sA), deq(cB, sB)), 6) >= threshold
     val corpusDupIds =
       if (store.exists(sigTable)) {
-        val stored = store.read(sigTable)
-        // kernels must resolve under the session analyzing the store-read
-        // frames too (foreachBatch hands a CLONED session — inv. 10c)
-        graft.functions.GraftFunctions.register(stored.sparkSession)
-        val hits = stored
+        val hits = store.read(sigTable)
           .select(col("id").as("old_id"), col("cluster"),
             col("codes").as("c_old"), col("scale").as("s_old"))
           .join(probeSide(batchSigs), Seq("cluster"))

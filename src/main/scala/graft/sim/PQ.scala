@@ -2,6 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** Product-quantization codebook: `codebooks(s)(c)` is centroid `c` of
   * subspace `s`, in integer micro-units (the [[Cluster.quantize]] scale),
@@ -148,8 +149,7 @@ object PQ {
                  nProbe: Int = 4, shortlist: Int = 64): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(k > 0 && shortlist >= k, "need shortlist >= k > 0")
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    def cos(a: Column, b: Column) = call_function("graft_cosine", a, b)
+    def cos(a: Column, b: Column) = GraftFunctions.cosine(a, b)
 
     val c = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).cast("array<double>").as("__cv"))

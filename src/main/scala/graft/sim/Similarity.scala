@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import scala.jdk.CollectionConverters._
+import graft.functions.GraftFunctions
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`). Extension beyond the reference surface (SURVEY §7.6).
@@ -33,17 +34,12 @@ object Similarity {
   def l2Norm(a: Column): Column =
     sqrt(aggregate(transform(a, x => x * x), lit(0.0d), (acc, v) => acc + v))
 
+  /** Composed reference form. Operators use the fused native
+    * [[graft.functions.GraftFunctions.cosine]]: identical double semantics
+    * (same sequential accumulation order), one codegen'd loop instead of
+    * three interpreted HOF walks. */
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (l2Norm(a) * l2Norm(b))
-
-  /** Native fused form ([[graft.functions.CosineSimilarity]]) — identical
-    * double semantics to [[cosine]] (same sequential accumulation order),
-    * one codegen'd loop instead of three interpreted HOF walks. Requires
-    * the session's function registry. */
-  private def cosineFast(spark: org.apache.spark.sql.SparkSession)(a: Column, b: Column): Column = {
-    graft.functions.GraftFunctions.register(spark)
-    call_function("graft_cosine", a, b)
-  }
 
   /** Exact top-k by cosine for each query vector. `queries` must be small
     * (it is broadcast); corpus side streams — no corpus shuffle until the
@@ -58,7 +54,7 @@ object Similarity {
     val scored = c.crossJoin(q)
       .where(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine_sim",
-        round(cosineFast(corpus.sparkSession)(col("__cv"), col("__qv")), 6))
+        round(GraftFunctions.cosine(col("__cv"), col("__qv")), 6))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine_sim").desc, col("neighbor_id"))
     scored.withColumn("__rn", row_number().over(w)).where(col("__rn") <= k)
@@ -100,7 +96,7 @@ object Similarity {
     val scored = v.crossJoin(a)
       .where(col(idCol) =!= col("__aid"))
       .withColumn("__sim",
-        round(cosineFast(df.sparkSession)(col("__v"), col("__av")), 6))
+        round(GraftFunctions.cosine(col("__v"), col("__av")), 6))
     val w = Window.partitionBy(col(idCol))
       .orderBy(col("__sim").desc, col("__aid"))
     scored.withColumn("__rn", row_number().over(w))
@@ -136,7 +132,7 @@ object Similarity {
     val scored = c.crossJoin(q)
       .where(col("neighbor_label") =!= col("__qlabel"))
       .withColumn("cosine_sim",
-        round(cosineFast(corpus.sparkSession)(col("__cv"), col("__qv")), 6))
+        round(GraftFunctions.cosine(col("__cv"), col("__qv")), 6))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine_sim").desc, col("neighbor_id"))
     scored.withColumn("__rn", row_number().over(w)).where(col("__rn") <= k)
@@ -269,29 +265,13 @@ object Similarity {
         col("col.id").as("neighbor_id"), col("col.sq").as("sim_q_int"))
   }
 
-  /** SRP-LSH bucket key: sign bits of `nBits` seeded random hyperplane
-    * projections, packed into a long. Hyperplane components are derived
-    * deterministically from xxhash64(seed, dim-index) — no stored model. */
-  def srpKey(vec: Column, dim: Int, nBits: Int, tableSeed: Int): Column = {
-    val bits = (0 until nBits).map { bit =>
-      // pseudo-random ±1 hyperplane h[j] = sign(hash(table, bit, j))
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), lit(dim - 1)),
-          (x, j) => x * when(pmod(xxhash64(lit(tableSeed), lit(bit), j), lit(2)) === 0, 1.0).otherwise(-1.0)),
-        lit(0.0d), (acc, v) => acc + v)
-      when(proj > 0, shiftleft(lit(1L), bit)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
-
   /** All-tables SRP bucketing in one native pass ([[graft.functions.SrpKeys]]). */
   private def srpBucketed(df: DataFrame, id: String, vecCol: String,
                           outId: String, outVec: String,
                           nBits: Int, nTables: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col(id).as(outId), col(vecCol).cast("array<double>").as(outVec))
       .select(col(outId), col(outVec),
-        posexplode(call_function("graft_srp_keys", col(outVec), lit(nBits), lit(nTables)))
+        posexplode(GraftFunctions.srpKeys(col(outVec), nBits, nTables))
           .as(Seq("__t", "__key")))
   }
 
@@ -309,7 +289,7 @@ object Similarity {
     val cand = c.join(q, Seq("__t", "__key"))
       .where(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine_sim",
-        round(cosineFast(corpus.sparkSession)(col("__cv"), col("__qv")), 6))
+        round(GraftFunctions.cosine(col("__cv"), col("__qv")), 6))
       .select(col("query_id"), col("neighbor_id"), col("cosine_sim"))
       .dropDuplicates("query_id", "neighbor_id")
     val w = Window.partitionBy(col("query_id"))
@@ -348,7 +328,7 @@ object Similarity {
   private[graft] def assignIdx(df: DataFrame, vecCol: String, outCol: String,
                                centroids: Seq[Seq[Double]]): DataFrame = {
     require(centroids.nonEmpty, "need at least one centroid")
-    val cos = cosineFast(df.sparkSession) _
+    val cos = GraftFunctions.cosine _
     val cLit = array(centroids.map(v => array(v.map(lit(_)): _*)): _*)
     df.withColumn("__sims", transform(cLit, cc => cos(col(vecCol), cc)))
       .withColumn(outCol,
@@ -384,7 +364,7 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, queryIdCol: String,
               k: Int = 10, nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
-    val cos = cosineFast(corpus.sparkSession) _
+    val cos = GraftFunctions.cosine _
     val c = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).cast("array<double>").as("__cv"))
     val (cents, centDf) = collectCentroids(c, nCentroids, "centroid_id", "__centroid")
@@ -435,7 +415,7 @@ object Similarity {
                k: Int = 10, nCoarse: Int = 4, nFinePerCell: Int = 4,
                probeCoarse: Int = 2, probeFine: Int = 4): DataFrame = {
     val spark = corpus.sparkSession
-    val cos = cosineFast(spark) _
+    val cos = GraftFunctions.cosine _
     val c = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).cast("array<double>").as("__cv"))
     // level 1: coarse cells — literal picks, map-only corpus assignment
@@ -527,7 +507,7 @@ object Similarity {
       // cosine + threshold BEFORE the pair-dedup (see lshTopK note): the
       // distinct aggregates scalar rows of passing pairs only
       .withColumn("cosine_sim",
-        round(cosineFast(corpus.sparkSession)(col("v_a"), col("v_b")), 6))
+        round(GraftFunctions.cosine(col("v_a"), col("v_b")), 6))
       .where(col("cosine_sim") >= threshold)
       .select("id_a", "id_b", "cosine_sim")
       .dropDuplicates("id_a", "id_b")
@@ -579,7 +559,7 @@ object Similarity {
     require(dims.nonEmpty, "seed set must be non-empty")
     val proto = array(dims.toIndexedSeq.map(lit(_)): _*)
     val scored = df.withColumn("proto_sim",
-      round(cosineFast(df.sparkSession)(col(vecCol).cast("array<double>"), proto), 6))
+      round(GraftFunctions.cosine(col(vecCol).cast("array<double>"), proto), 6))
     graft.ops.Filters.topFractionByGroupExact(
         scored.withColumn("__g", lit(1)), "__g", "proto_sim", fraction, idCol)
       .drop("__g")

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** Trainable hashed-bag-of-words quality classifier — the fastText-shaped
   * linear scorer every large-scale pipeline runs to label documents
@@ -34,15 +35,14 @@ object Classifier {
   def trainNbWeights(df: DataFrame, textCol: String, labelCol: String,
                      buckets: Int): DataFrame = {
     require(buckets > 0, "buckets must be positive")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val flag = col(labelCol).cast("boolean")
     // token bucketing via the native unigram kernel (bit-identical md5
     // gate; see DsirBuckets doc) — the per-token Column md5 chain it
     // replaced dominated the classifier entries' runtime
     val stream = df
       .withColumn("__toks", Dedup.tokensNeCol(col(textCol)))
-      .select(explode(call_function("graft_token_buckets", col("__toks"),
-        lit(buckets))).as("bucket"), flag.as("__pos"))
+      .select(explode(GraftFunctions.tokenBuckets(col("__toks"), buckets)).as("bucket"),
+        flag.as("__pos"))
     val counts = stream.groupBy("bucket").agg(
       count(when(col("__pos"), 1)).as("n_pos"),
       count(when(!col("__pos"), 1)).as("n_neg"))
@@ -71,11 +71,10 @@ object Classifier {
     * The model is broadcast — it is `buckets` rows by construction. */
   def scoreDocs(df: DataFrame, weights: DataFrame, textCol: String,
                 idCol: String, buckets: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val perDoc = df
       .withColumn("__toks", Dedup.tokensNeCol(col(textCol)))
-      .select(col(idCol), explode(call_function("graft_token_buckets",
-        col("__toks"), lit(buckets))).as("bucket"))
+      .select(col(idCol),
+        explode(GraftFunctions.tokenBuckets(col("__toks"), buckets)).as("bucket"))
       .join(broadcast(weights.select("bucket", "w_micro")), Seq("bucket"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("__n"), sum("w_micro").as("__s"))

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** Deduplication kit for training-data pipelines: exact, MinHash+LSH,
   * SimHash, n-gram Jaccard, embedding-cosine near-dup. Extension beyond the
@@ -167,7 +168,7 @@ object Dedup {
     * bit-identical to [[tokensColReference]]; TextSimSpec pins the
     * equivalence differentially. */
   private[graft] def tokensCol(text: Column, keepAccents: Boolean = true): Column =
-    graft.functions.GraftFunctions.tokens(text, keepAccents, dropEmpty = false)
+    GraftFunctions.tokens(text, keepAccents, dropEmpty = false)
 
   /** Partition count for the kernel fan-out exchanges: the session's
     * shuffle parallelism, PINNED as an explicit count — a bare
@@ -183,7 +184,7 @@ object Dedup {
     * `filter(tokensCol(_), t ≠ "")` HOF of the feature-stream callers
     * (Dsir/Classifier/UnigramLM/BigramLM/InvertedIndex). */
   private[graft] def tokensNeCol(text: Column, keepAccents: Boolean = true): Column =
-    graft.functions.GraftFunctions.tokens(text, keepAccents, dropEmpty = true)
+    GraftFunctions.tokens(text, keepAccents, dropEmpty = true)
 
   /** READABLE REFERENCE FORM of the tokenizer semantics (spec-pinned
     * against the kernel; not used on any hot path). */
@@ -198,15 +199,6 @@ object Dedup {
     array_distinct(transform(
       sequence(lit(0), greatest(size(tokens) - n, lit(0))),
       i => concat_ws(" ", slice(tokens, i + 1, lit(n)))))
-
-  /** Word n-grams of normalized text, distinct per doc. READABLE REFERENCE
-    * FORM of the gram semantics (same contract as [[minHashSignature]]) —
-    * hot paths use the native [[graft.functions.NgramHashes]] kernel,
-    * which is also immune to the `InferFiltersFromGenerate` per-element
-    * re-tokenization trap this HOF form falls into under an explode (see
-    * [[docNovelty]]). */
-  def wordNgrams(text: Column, n: Int = 3): Column =
-    ngramsFromTokens(tokensCol(text), n)
 
   // ------------------------------------------------------ minhash + LSH
 
@@ -247,7 +239,6 @@ object Dedup {
                      numHashes: Int, bands: Int,
                      fanOut: Boolean = true): DataFrame = {
     val rowsPerBand = numHashes / bands
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // Fan the kernel stage out on the id key BEFORE tokenize/hash: fused
     // to the scan, the kernels inherit the INPUT LAYOUT's parallelism —
     // one unsplittable file (single parquet row group) serializes the
@@ -257,15 +248,15 @@ object Dedup {
     // shuffles these ops already pay, at any scale.
     (if (fanOut) df.repartition(fanOutParts(df), col(idCol)) else df)
       .withColumn("__tokens", tokensCol(col(textCol)))
-      .withColumn("__gh", call_function("graft_ngram_hashes", col("__tokens"), lit(3)))
-      .withColumn("__sig", call_function("graft_minhash_long", col("__gh"), lit(numHashes)))
+      .withColumn("__gh", GraftFunctions.ngramHashes(col("__tokens"), 3))
+      .withColumn("__sig", GraftFunctions.minhashLong(col("__gh"), numHashes))
       .select(col(idCol).as("__id"), col("__sig"),
         explode(bandKeys(col("__sig"), bands, rowsPerBand)).as("__band"))
       .select(col("__id"), col("__sig"), col("__band.band"), col("__band.key"))
   }
 
   private def estJaccard(numHashes: Int): Column =
-    call_function("graft_eq_positions", col("sig_a"), col("sig_b"))
+    GraftFunctions.eqPositions(col("sig_a"), col("sig_b"))
       .cast("double") / lit(numHashes)
 
   /** MinHash-LSH near-dedup: shingle → minhash → band → bucket-join →
@@ -358,13 +349,12 @@ object Dedup {
   private[graft] def preppedKernelFrame(df: DataFrame, textCol: String,
                                         idCol: String, n: Int,
                                         w: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val toks = df.repartition(fanOutParts(df), col(idCol))
       .withColumn("__tokens", tokensCol(col(textCol)))
     val cols = Seq(col(idCol).as("__id"),
-      call_function("graft_ngram_hashes", col("__tokens"), lit(n)).as("__gh")) ++
+      GraftFunctions.ngramHashes(col("__tokens"), n).as("__gh")) ++
       (if (w > 0)
-        Seq(call_function("graft_winnow_hashes", col("__tokens"), lit(n), lit(w)).as("__fp"))
+        Seq(GraftFunctions.winnowHashes(col("__tokens"), n, w).as("__fp"))
       else Nil)
     toks.select(cols: _*).localCheckpoint()
   }
@@ -396,7 +386,7 @@ object Dedup {
     val rowsPerBand = numHashes / bands
     val bd = prepped
       .withColumn("__sig",
-        call_function("graft_minhash_long", col("__gh"), lit(numHashes)))
+        GraftFunctions.minhashLong(col("__gh"), numHashes))
       .select(col("__id"), col("__sig"),
         explode(bandKeys(col("__sig"), bands, rowsPerBand)).as("__band"))
       .select(col("__id"), col("__sig"), col("__band.band"), col("__band.key"))
@@ -415,7 +405,7 @@ object Dedup {
     cand.join(ga.hint("shuffle_hash"), Seq("id_a"))
       .join(gb.hint("shuffle_hash"), Seq("id_b"))
       .withColumn("jaccard",
-        floor(call_function("graft_jaccard_sorted", col("g_a"), col("g_b")) * 10000.0 + 0.5)
+        floor(GraftFunctions.jaccardSorted(col("g_a"), col("g_b")) * 10000.0 + 0.5)
           / 10000.0)
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
@@ -440,9 +430,8 @@ object Dedup {
   def contaminationReport(corpus: DataFrame, textCol: String, idCol: String,
                           benchmark: DataFrame, benchTextCol: String,
                           n: Int = 5, minOverlap: Int = 1): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     def gramHashes(c: String): Column =
-      call_function("graft_ngram_hashes", tokensCol(col(c)), lit(n))
+      GraftFunctions.ngramHashes(tokensCol(col(c)), n)
     val benchGrams = broadcast(
       benchmark.select(explode(gramHashes(benchTextCol)).as("__g")).distinct())
     corpus
@@ -685,11 +674,10 @@ object Dedup {
     * pure overhead). */
   private[graft] def withSignature(df: DataFrame, textCol: String, numHashes: Int,
                                    fanOutIdCol: Option[String] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     fanOutIdCol.fold(df)(id => df.repartition(fanOutParts(df), col(id)))
       .withColumn("__tokens", tokensCol(col(textCol)))
-      .withColumn("__gh", call_function("graft_ngram_hashes", col("__tokens"), lit(3)))
-      .withColumn("__sig", call_function("graft_minhash_long", col("__gh"), lit(numHashes)))
+      .withColumn("__gh", GraftFunctions.ngramHashes(col("__tokens"), 3))
+      .withColumn("__sig", GraftFunctions.minhashLong(col("__gh"), numHashes))
       .drop("__tokens", "__gh")
   }
 
@@ -725,7 +713,7 @@ object Dedup {
         col("__b.band").as("band"), col("__b.key").as("key"))
       .join(probeSide(batchBands), Seq("band", "key"))
       .withColumn("__sim",
-        call_function("graft_eq_positions", col("sig_new"), col("sig_b"))
+        GraftFunctions.eqPositions(col("sig_new"), col("sig_b"))
           .cast("double") / lit(numHashes))
       .where(col("__sim") >= threshold)
       .select(col("new_id"), col("old_id"))
@@ -859,11 +847,10 @@ object Dedup {
 
   def simhashPairs(df: DataFrame, textCol: String, idCol: String,
                    maxHamming: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // fan the kernel off the scan (see banded)
     val withSh = df.repartition(fanOutParts(df), col(idCol))
       .withColumn("__sh",
-        call_function("graft_simhash", tokensCol(col(textCol), keepAccents = false)))
+        GraftFunctions.simhash(tokensCol(col(textCol), keepAccents = false)))
       .select(col(idCol).as("__id"), col("__sh"))
     val chunked = withSh.select(col("__id"), col("__sh"),
       simhashChunks(col("__sh"), maxHamming).as("__c"))
@@ -886,13 +873,11 @@ object Dedup {
   def seedSimhashes(store: graft.store.TableStore, shTable: String,
                     corpus: DataFrame, textCol: String, idCol: String,
                     buckets: Int = 0, appendOnly: Boolean = false): Unit = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // corpus-seed path: fan the simhash kernel off the (often
     // single-split) scan — the withSignature fan-out rationale (r16)
     val rows = corpus.repartition(fanOutParts(corpus), col(idCol))
       .select(col(idCol).cast("long").as("id"),
-        call_function("graft_simhash",
-          tokensCol(col(textCol), keepAccents = false)).as("sh"))
+        GraftFunctions.simhash(tokensCol(col(textCol), keepAccents = false)).as("sh"))
     putSeed(store, shTable, rows, buckets, appendOnly)
   }
 
@@ -929,12 +914,10 @@ object Dedup {
                          registerSurvivors: Boolean = true,
                          appendOnly: Boolean = false,
                          broadcastMaxProbeDocs: Long = 65536): DataFrame = {
-    graft.functions.GraftFunctions.register(batch.sparkSession)
     // pinned: one simhash pass feeds probe + self-join + returned frame,
     // and the broadcast gate's count is then cheap
     val bsh = batch.withColumn("__sh",
-      call_function("graft_simhash",
-        tokensCol(col(textCol), keepAccents = false)))
+      GraftFunctions.simhash(tokensCol(col(textCol), keepAccents = false)))
       .localCheckpoint()
     val useBroadcast = bsh.count() <= broadcastMaxProbeDocs
     def probeSide(df: DataFrame): DataFrame =
@@ -946,9 +929,8 @@ object Dedup {
         col("__c.chunk").as("chunk"), col("__c.key").as("key"))
     val corpusDupIds =
       if (store.exists(shTable)) {
-        val stored = store.read(shTable)
-        graft.functions.GraftFunctions.register(stored.sparkSession)
-        val hits = stored.select(col("id").as("old_id"), col("sh").as("sh_b"),
+        val hits = store.read(shTable)
+          .select(col("id").as("old_id"), col("sh").as("sh_b"),
             simhashChunks(col("sh"), maxHamming).as("__c"))
           .select(col("old_id"), col("sh_b"),
             col("__c.chunk").as("chunk"), col("__c.key").as("key"))
@@ -1116,7 +1098,7 @@ object Dedup {
       .join(gb.hint("shuffle_hash"), Seq("id_b"))
       // fixed-point round (tie-free across engines; see Queries.detRound4)
       .withColumn("jaccard",
-        floor(call_function("graft_jaccard_sorted", col("g_a"), col("g_b")) * 10000.0 + 0.5)
+        floor(GraftFunctions.jaccardSorted(col("g_a"), col("g_b")) * 10000.0 + 0.5)
           / 10000.0)
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
@@ -1196,7 +1178,7 @@ object Dedup {
     cand.join(ga.hint("shuffle_hash"), Seq("id_a"))
       .join(gb.hint("shuffle_hash"), Seq("id_b"))
       .withColumn("__c",
-        call_function("graft_sorted_intersect", col("g_a"), col("g_b"))
+        GraftFunctions.sortedIntersect(col("g_a"), col("g_b"))
           .cast("double") / size(col("g_a")))
       .where(col("__c") >= threshold)
       .withColumn("containment", floor(col("__c") * 10000.0 + 0.5) / 10000.0)
@@ -1382,7 +1364,7 @@ object Dedup {
     cand.join(ga.hint("shuffle_hash"), Seq("id_a"))
       .join(gb.hint("shuffle_hash"), Seq("id_b"))
       .withColumn("__c",
-        call_function("graft_sorted_intersect", col("g_a"), col("g_b"))
+        GraftFunctions.sortedIntersect(col("g_a"), col("g_b"))
           .cast("double") / size(col("g_a")))
       .where(col("__c") >= threshold)
       .withColumn("containment", floor(col("__c") * 10000.0 + 0.5) / 10000.0)
@@ -1481,13 +1463,12 @@ object Dedup {
                     n: Int = 3, buckets: Int = 0,
                     appendOnly: Boolean = false,
                     mergeDf: Boolean = true): Unit = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // one fanned-out kernel pass (see seedContainmentTables): the
     // repartition lifts tokenize+ngram off the (often single-split) scan
     val prepped = corpus.repartition(fanOutParts(corpus), col(idCol))
       .withColumn("__tokens", tokensCol(col(textCol)))
       .select(col(idCol).cast("long").as("id"),
-        call_function("graft_ngram_hashes", col("__tokens"), lit(n)).as("grams"))
+        GraftFunctions.ngramHashes(col("__tokens"), n).as("grams"))
       .withColumn("sz", size(col("grams")))
     seedContainmentTables(store, postingsTable, dfTable, gramsTable,
       prepped, keysCol = "grams", "gram", buckets, appendOnly, mergeDf)
@@ -1515,13 +1496,12 @@ object Dedup {
                       n: Int = 3, w: Int = 8, buckets: Int = 0,
                       appendOnly: Boolean = false,
                       mergeDf: Boolean = true): Unit = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // one fanned-out kernel pass (see seedContainmentTables)
     val prepped = corpus.repartition(fanOutParts(corpus), col(idCol))
       .withColumn("__tokens", tokensCol(col(textCol)))
       .select(col(idCol).cast("long").as("id"),
-        call_function("graft_ngram_hashes", col("__tokens"), lit(n)).as("grams"),
-        call_function("graft_winnow_hashes", col("__tokens"), lit(n), lit(w)).as("__keys"))
+        GraftFunctions.ngramHashes(col("__tokens"), n).as("grams"),
+        GraftFunctions.winnowHashes(col("__tokens"), n, w).as("__keys"))
       .withColumn("sz", size(col("grams")))
     seedContainmentTables(store, fpTable, dfTable, gramsTable,
       prepped, keysCol = "__keys", "fp", buckets, appendOnly, mergeDf)
@@ -1652,16 +1632,11 @@ object Dedup {
                              broadcastMaxProbeDocs: Long = 65536,
                              maxProbeCandidatesPerPosting: Long = 64,
                              excludeCorpusIds: Option[DataFrame] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(batch.sparkSession)
-    // the verify join is ROOTED at a store-read frame, whose session can
-    // differ from the batch's (foreachBatch hands a CLONED session) — the
-    // kernel must resolve under the analyzing session too
     val gramsStore = store.read(gramsTable)
-    graft.functions.GraftFunctions.register(gramsStore.sparkSession)
     val prepped = batch
       .withColumn("__tokens", tokensCol(col(textCol)))
       .select(col(idCol).cast("long").as("probe_id"),
-        call_function("graft_ngram_hashes", col("__tokens"), lit(n)).as("__gh"))
+        GraftFunctions.ngramHashes(col("__tokens"), n).as("__gh"))
       .localCheckpoint()
     // MEASURED broadcast gate (the r12 carry-join pattern, found again at
     // sf10 stream volumes): broadcasting a batch collects it to the
@@ -1739,7 +1714,7 @@ object Dedup {
       .dropDuplicates("probe_id", "id")
       .join(probeSide(prepped), Seq("probe_id"))
       .withColumn("__c",
-        call_function("graft_sorted_intersect", col("__gh"), col("grams"))
+        GraftFunctions.sortedIntersect(col("__gh"), col("grams"))
           .cast("double") / size(col("__gh")))
       .where(col("__c") >= threshold)
       .withColumn("containment", floor(col("__c") * 10000.0 + 0.5) / 10000.0)
@@ -1791,16 +1766,12 @@ object Dedup {
                                    minCandidateBudget: Long = 2000000L,
                                    broadcastMaxProbeDocs: Long = 65536,
                                    excludeCorpusIds: Option[DataFrame] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(batch.sparkSession)
-    // kernels must also resolve under the session that analyzes the
-    // store-read frames (foreachBatch hands a CLONED session — inv. 10c)
     val gramsStore = store.read(gramsTable)
-    graft.functions.GraftFunctions.register(gramsStore.sparkSession)
     val prepped = batch
       .withColumn("__tokens", tokensCol(col(textCol)))
       .select(col(idCol).cast("long").as("probe_id"),
-        call_function("graft_ngram_hashes", col("__tokens"), lit(n)).as("__gh"),
-        call_function("graft_winnow_hashes", col("__tokens"), lit(n), lit(w)).as("__fp"))
+        GraftFunctions.ngramHashes(col("__tokens"), n).as("__gh"),
+        GraftFunctions.winnowHashes(col("__tokens"), n, w).as("__fp"))
       .localCheckpoint()
     val useBroadcast = prepped.count() <= broadcastMaxProbeDocs
     def probeSide(df: DataFrame): DataFrame =
@@ -1852,7 +1823,7 @@ object Dedup {
       .dropDuplicates("probe_id", "id")
       .join(probeSide(prepped.select(col("probe_id"), col("__gh"))), Seq("probe_id"))
       .withColumn("__c",
-        call_function("graft_sorted_intersect", col("__gh"), col("grams"))
+        GraftFunctions.sortedIntersect(col("__gh"), col("grams"))
           .cast("double") / size(col("__gh")))
       .where(col("__c") >= threshold)
       .withColumn("containment", floor(col("__c") * 10000.0 + 0.5) / 10000.0)
@@ -1952,11 +1923,10 @@ object Dedup {
     * projection barrier alone does NOT stop). */
   def docNovelty(df: DataFrame, textCol: String, idCol: String,
                  n: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val pairs = df.select(col(idCol), col(textCol))
       .withColumn("__tokens", tokensCol(col(textCol)))
       .select(col(idCol),
-        explode(call_function("graft_ngram_hashes", col("__tokens"), lit(n)))
+        explode(GraftFunctions.ngramHashes(col("__tokens"), n))
           .as("__gram"))
     val first = pairs.groupBy(col("__gram"))
       .agg(min(col(idCol)).as("__first"))
@@ -2012,11 +1982,10 @@ object Dedup {
                         n: Int = 3): DataFrame = {
     // native gram-hash kernel for the same reasons as [[docNovelty]]:
     // identity-only consumers + immunity to the Generate-filter inlining
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val grams = df.select(col(groupCol), col(textCol))
       .withColumn("__tokens", tokensCol(col(textCol)))
       .select(col(groupCol),
-        explode(call_function("graft_ngram_hashes", col("__tokens"), lit(n)))
+        explode(GraftFunctions.ngramHashes(col("__tokens"), n))
           .as("__gram"))
       .distinct()
     val totals = grams.groupBy(col(groupCol)).agg(count(lit(1)).as("__n"))

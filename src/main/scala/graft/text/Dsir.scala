@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** Data Selection via Importance Resampling (DSIR, Xie et al. 2023): score
   * every raw document by how much its hashed-n-gram profile looks like a
@@ -70,12 +71,10 @@ object Dsir {
     * exploded gram) cost ~4× the rest of the DSIR entries at sf0.1. */
   private def bucketStream(df: DataFrame, textCol: String,
                            keepCols: Seq[String], buckets: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("__toks",
         Dedup.tokensNeCol(col(textCol)))
       .select(keepCols.map(col) :+
-        explode(call_function("graft_dsir_buckets", col("__toks"),
-          lit(buckets))).as("bucket"): _*)
+        explode(GraftFunctions.dsirBuckets(col("__toks"), buckets)).as("bucket"): _*)
   }
 
   /** Raw gram-occurrence counts per bucket, densified to ALL `buckets`

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** Gopher-style repetition quality filters (Rae et al. 2021, "Scaling
   * Language Models", appendix A1.1): documents dominated by repeated lines
@@ -58,8 +59,7 @@ object Repetition {
     * Scale: MAP-ONLY, zero shuffle. */
   def scrubAdjacentRepeats(df: DataFrame, textCol: String,
                            idCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    val sc = call_function("graft_scrub_repeats", col(textCol).cast("string"))
+    val sc = GraftFunctions.scrubRepeats(col(textCol).cast("string"))
     df.withColumn("__sc", sc)
       // null text → "" scrubbed / null n_removed: the contract of the HOF
       // form (concat_ws over a null array is ""; size(null) is null)
@@ -223,9 +223,7 @@ object Repetition {
   def withNgramRepetition(df: DataFrame, textCol: String, idCol: String,
                           topN: Int = 2, dupN: Int = 3): DataFrame = {
     require(topN >= 1 && dupN >= 1, "gram sizes must be >= 1")
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    val st = call_function("graft_repetition_stats",
-      Dedup.tokensCol(col(textCol)), lit(topN), lit(dupN))
+    val st = GraftFunctions.repetitionStats(Dedup.tokensCol(col(textCol)), topN, dupN)
     df.withColumn("__rep", st)
       .withColumn(s"top_${topN}gram_char_frac",
         coalesce(detRound4(col("__rep.top_cover")

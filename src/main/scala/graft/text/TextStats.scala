@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** Text-analysis kit for large-scale training-data pipelines: token
   * counting, quality scoring, language ID, document fingerprinting.
@@ -241,9 +242,8 @@ object TextStats {
     * struct output is staged behind a ≥3-reference projection barrier so
     * CollapseProject cannot duplicate the kernel call. */
   def withCompressionSignals(df: DataFrame, textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("__ce",
-        call_function("graft_char_entropy", col(textCol).cast("string")))
+        GraftFunctions.charEntropy(col(textCol).cast("string")))
       .withColumn("n_chars", col("__ce.n_chars"))
       .withColumn("n_distinct_chars", col("__ce.n_distinct_chars"))
       .withColumn("entropy_nats_x1e6", col("__ce.entropy_nats_x1e6"))
@@ -257,26 +257,11 @@ object TextStats {
     * spec-verified (no cross-engine oracle replays zlib's bitstream; the
     * oracle-checked form is [[withCompressionSignals]]). Map-only. */
   def withDeflateRatio(df: DataFrame, textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("deflate_bytes",
-        call_function("graft_deflate_len", col(textCol).cast("string")))
+        GraftFunctions.deflateLen(col(textCol).cast("string")))
       .withColumn("__obytes", greatest(octet_length(col(textCol)), lit(1)).cast("long"))
       .withColumn("deflate_ratio_x10000",
         expr("CAST((CAST(deflate_bytes AS BIGINT) * 10000) DIV __obytes AS BIGINT)"))
       .drop("__obytes")
   }
-
-  /** All stats in one projection. */
-  def withTextStats(df: DataFrame, textCol: String): DataFrame =
-    df.select(col("*"),
-      tokenCountWs(col(textCol)).as("n_tokens_ws"),
-      tokenCountBpe(col(textCol)).as("n_tokens_bpe"),
-      charCount(col(textCol)).as("n_chars_m"),
-      punctRatio(col(textCol)).as("punct_ratio"),
-      upperRatio(col(textCol)).as("upper_ratio"),
-      meanWordLen(col(textCol)).as("mean_word_len"),
-      stopwordRatio(col(textCol)).as("stopword_ratio"),
-      qualityScore(col(textCol)).as("quality_score"),
-      langId(col(textCol)).as("lang_pred"),
-      fingerprint(col(textCol)).as("doc_fingerprint"))
 }

@@ -288,15 +288,99 @@ class ScaleFunctionsSpec extends AnyFunSuite {
     }
   }
 
+  /** Every SQL-visible kernel: (name, typed builder, by-name arguments). */
+  private lazy val bloomBytes = {
+    val bf = org.apache.spark.util.sketch.BloomFilter.create(100, 0.01)
+    bf.putLong(7L)
+    val out = new java.io.ByteArrayOutputStream()
+    bf.writeTo(out)
+    out.toByteArray
+  }
+  private lazy val kernels: Seq[(String, org.apache.spark.sql.Column, Seq[org.apache.spark.sql.Column])] = {
+    import GraftFunctions._
+    Seq(
+      ("graft_cosine", cosine($"v", $"w"), Seq($"v", $"w")),
+      ("graft_minhash", minhash($"toks", 8), Seq($"toks", lit(8))),
+      ("graft_simhash", simhash($"toks"), Seq($"toks")),
+      ("graft_jaccard_sorted", jaccardSorted($"g", $"h"), Seq($"g", $"h")),
+      ("graft_sorted_intersect", sortedIntersect($"g", $"h"), Seq($"g", $"h")),
+      ("graft_ngram_hashes", ngramHashes($"toks", 3), Seq($"toks", lit(3))),
+      ("graft_minhash_long", minhashLong($"g", 8), Seq($"g", lit(8))),
+      ("graft_srp_keys", srpKeys($"v", 4, 2), Seq($"v", lit(4), lit(2))),
+      ("graft_eq_positions", eqPositions($"g", $"h"), Seq($"g", $"h")),
+      ("graft_bloom_might_contain", bloomMightContain($"n", bloomBytes),
+        Seq($"n", lit(bloomBytes))),
+      ("graft_topk", topK($"text", 2, 4), Seq($"text", lit(2), lit(4))),
+      ("graft_scrub_repeats", scrubRepeats($"text"), Seq($"text")),
+      ("graft_char_entropy", charEntropy($"text"), Seq($"text")),
+      ("graft_dsir_buckets", dsirBuckets($"toks", 64), Seq($"toks", lit(64))),
+      ("graft_token_buckets", tokenBuckets($"toks", 64), Seq($"toks", lit(64))),
+      ("graft_repetition_stats", repetitionStats($"toks", 2, 3),
+        Seq($"toks", lit(2), lit(3))),
+      ("graft_deflate_len", deflateLen($"text"), Seq($"text")),
+      ("graft_bootstrap_weights", bootstrapWeights($"text", 4, "42"),
+        Seq($"text", lit(4), lit("42"))),
+      ("graft_cms_buckets", cmsBuckets($"text", 4, 3), Seq($"text", lit(4), lit(3))),
+      ("graft_winnow_hashes", winnowHashes($"toks", 3, 8), Seq($"toks", lit(3), lit(8))))
+  }
+
   test("GraftExtensions injects the function at session build") {
-    // extension wiring resolves the same descriptor the registry path uses
-    val (ident, info, builder) = GraftFunctions.cosineDescriptor
-    assert(ident.funcName == "graft_cosine" && info != null)
-    val arr = org.apache.spark.sql.catalyst.expressions.Literal.create(
-      Array(1.0, 2.0),
-      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))
-    val e = builder(Seq(arr, arr))
-    assert(e.isInstanceOf[graft.functions.CosineSimilarity])
+    // the extension and register install the SAME descriptor table, and
+    // the spec's kernel table covers exactly that name set
+    val injected = scala.collection.mutable.Buffer.empty[GraftFunctions.Descriptor]
+    val ext = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: GraftFunctions.Descriptor): Unit = {
+        injected += f
+        super.injectFunction(f)
+      }
+    }
+    new graft.functions.GraftExtensions()(ext)
+    assert(injected.toSeq == GraftFunctions.descriptors)
+    val names = GraftFunctions.descriptors.map(_._1.funcName)
+    assert(names.distinct.size == names.size)
+    assert(names.toSet == kernels.map(_._1).toSet)
+    // register: the same names, idempotent per registry
+    val fresh = spark.newSession()
+    assert(names.forall(n => !fresh.catalog.functionExists(n)))
+    GraftFunctions.register(fresh)
+    GraftFunctions.register(fresh)
+    assert(names.forall(n => fresh.catalog.functionExists(n)))
+  }
+
+  test("typed kernel builders analyse to the by-name function's expression, every kernel") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
+    GraftFunctions.register(spark)
+    val df = Seq((Seq("a", "b", "a"), Seq(1L, 3L), Seq(3L, 4L),
+        Seq(1.0, 2.0), Seq(2.0, 1.0), "x yy x", 7L))
+      .toDF("toks", "g", "h", "v", "w", "text", "n")
+    def analysed(name: String, c: org.apache.spark.sql.Column): Expression = {
+      val framed = if (name == "graft_topk") df.agg(c.as("__k")) else df.select(c.as("__k"))
+      framed.queryExecution.analyzed.expressions
+        .collectFirst { case a: Alias if a.name == "__k" => a.child }.get
+    }
+    for ((name, typed, args) <- kernels) {
+      val byName = analysed(name, call_function(name, args: _*))
+      assert(analysed(name, typed).canonicalized == byName.canonicalized, name)
+    }
+  }
+
+  test("operator code wires kernels by expression: no by-name graft lookup " +
+      "or register call outside graft/functions") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root (no $root)")
+    val banned = Seq("call_function(\"graft_", "expr(\"graft_", "GraftFunctions.register(")
+    val kernelsDir = root.resolve("graft/functions")
+    val files = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !p.startsWith(kernelsDir)).toSeq
+    assert(files.nonEmpty)
+    val hits = for {
+      p: Path <- files
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if banned.exists(line.contains)
+    } yield s"$p:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("by-name kernel wiring found:\n", "\n", ""))
   }
 
   // ---- IVF ANN ----

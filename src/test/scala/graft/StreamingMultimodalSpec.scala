@@ -719,6 +719,66 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       .toSeq == Seq(1L, 3L)) // the no-crash outcome, exactly
   }
 
+  /** Runs [[Streaming.nearDupIngestGate]] over two file triggers with the
+    * store and the arrivals on a session whose function registry never saw
+    * a graft kernel (`maxFilesPerTrigger = 1`; trigger 2 resends a
+    * trigger-1 row under a new id). Returns the clean table's ids. */
+  private def gateOnFreshSession(method: String, valueCol: String,
+      triggers: org.apache.spark.sql.SparkSession =>
+        (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame),
+      centroids: Seq[Seq[Long]] = Nil): Seq[Long] = {
+    val fresh = spark.newSession()
+    assert(!fresh.catalog.functionExists("graft_eq_positions"))
+    val (t1, t2) = triggers(fresh)
+    val dir = Files.createTempDirectory(s"graft_nd_fresh_$method").toString
+    t1.coalesce(1).write.mode("append").parquet(dir)
+    val old = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 120000)
+    java.nio.file.Files.list(java.nio.file.Paths.get(dir)).forEach(p =>
+      java.nio.file.Files.setLastModifiedTime(p, old))
+    t2.coalesce(1).write.mode("append").parquet(dir)
+    val store = new TableStore(fresh,
+      Files.createTempDirectory(s"graft_nd_fresh_${method}_st").toString)
+    val q = Streaming.nearDupIngestGate(
+      fresh.readStream.schema(t1.schema)
+        .option("maxFilesPerTrigger", 1).parquet(dir),
+      valueCol, "doc_id", store, "sigs", "clean",
+      Files.createTempDirectory(s"graft_nd_fresh_${method}_cp").toString,
+      method = method, centroids = centroids)
+    assert(q.awaitTermination(120000), "gate did not finish")
+    store.read("clean").select("doc_id").as[Long].collect().sorted.toSeq
+  }
+
+  private def textTriggers(s: org.apache.spark.sql.SparkSession) = {
+    import s.implicits._
+    val fox = "the quick brown fox jumps over the lazy dog and runs far away home"
+    (Seq((1L, fox),
+        (2L, "completely different content about spark query engines and shuffles"))
+        .toDF("doc_id", "text"),
+      Seq((3L, fox), // resend of 1
+        (4L, "a wholly novel page on streaming state stores and watermarks today"))
+        .toDF("doc_id", "text"))
+  }
+
+  for (method <- Seq("minhash", "simhash"))
+    test(s"nearDupIngestGate ($method) on a fresh session: the trigger-2 " +
+        "resend is gated out, no unresolved kernel") {
+      assert(gateOnFreshSession(method, "text", textTriggers) == Seq(1L, 2L, 4L))
+    }
+
+  test("nearDupIngestGate (embedding) on a fresh session: the trigger-2 " +
+      "resend is gated out, no unresolved kernel") {
+    val cents = Seq(Seq(1000000L, 0L, 0L, 0L), Seq(0L, 1000000L, 0L, 0L))
+    def vecs(s: org.apache.spark.sql.SparkSession) = {
+      import s.implicits._
+      (Seq((1L, Seq(1.0, 0.01, 0.0, 0.0)), (2L, Seq(0.01, 1.0, 0.0, 0.0)))
+          .toDF("doc_id", "vec"),
+        Seq((3L, Seq(1.0, 0.01, 0.0, 0.0)), // resend of 1
+          (4L, Seq(0.6, 0.0, 0.8, 0.0))).toDF("doc_id", "vec"))
+    }
+    assert(gateOnFreshSession("embedding", "vec", vecs, cents) == Seq(1L, 2L, 4L))
+  }
+
   // ---- multimodal plumbing ----
 
   private lazy val assets = Multimodal.toAssets(

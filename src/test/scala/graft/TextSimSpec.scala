@@ -230,6 +230,27 @@ class TextSimSpec extends AnyFunSuite {
     assert(out2.where($"dup_of_corpus").count() == 1)
   }
 
+  test("minhashIncremental: store on a session whose registry never saw a " +
+      "kernel, batch on another — the corpus probe still resolves") {
+    // the stored signatures are read (and the probe plan analysed) under
+    // the store's session; the kernels must not depend on its registry
+    val fresh = spark.newSession()
+    assert(!fresh.catalog.functionExists("graft_eq_positions"))
+    val store = new graft.store.TableStore(fresh,
+      java.nio.file.Files.createTempDirectory("graft_inc_mh_fresh").toString)
+    Dedup.seedMinhashSignatures(store, "s", docs.withColumnRenamed("doc_id", "id"),
+      "text", "id")
+    assert(!fresh.catalog.functionExists("graft_eq_positions"))
+    val batch = Seq(
+      (10L, "the quick brown fox jumps over the lazy dog and runs far away home"), // resend of 1
+      (11L, "entirely novel subject matter regarding distributed columnar executions maybe"))
+      .toDF("id", "text")
+    val out = Dedup.minhashIncremental(store, "s", batch, "text", "id",
+        registerSurvivors = false)
+      .select("id", "dup_of_corpus").as[(Long, Boolean)].collect().toSet
+    assert(out == Set((10L, true), (11L, false)))
+  }
+
   test("minhash corpus probe is map-only: zero shuffle Exchanges on the stored side") {
     val store = new graft.store.TableStore(spark,
       java.nio.file.Files.createTempDirectory("graft_inc_mh0").toString)
