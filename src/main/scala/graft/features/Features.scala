@@ -522,53 +522,20 @@ object Features {
     * form of this rewrite ranked via `Window.partitionBy(__part)`, which
     * re-shuffled every row a second time because Catalyst can't see that
     * range partitioning already co-locates `__part`). The exact global
-    * rank comes from the range-partition topology
-    * ([[graft.text.Packing.chunkAssignments]]): range-partition on the
-    * (score desc, tie) key, sort WITHIN partitions, read the local rank
-    * off `monotonically_increasing_id`'s low 33 bits (the id is
-    * `partitionIndex·2³³ + rowOffset`, assigned in post-sort stream
-    * order — the SQL zipWithIndex idiom; exact while a partition holds
-    * < 2³³ rows, which a sortable partition always does), then add
-    * broadcast per-partition count offsets. The bucket is ntile
-    * ARITHMETIC on (rank, n) — bit-identical to the window `ntile`
-    * (first n mod b buckets get one extra row). The only global window
-    * runs over #partitions count rows. `tieCol` must make the order
-    * total (unique), as before. Ranks stay exact up to 2^53 rows (the
-    * double-division floor); the rollup is an nBuckets-row aggregate. */
+    * rank is [[rankedSlices]]' row-position rank; the bucket is ntile
+    * ARITHMETIC on (rank, n) ([[ntileOf]]) — bit-identical to the window
+    * `ntile`. The only global window runs over #slices count rows.
+    * `tieCol` must make the order total (unique), as before. Ranks stay
+    * exact up to 2^53 rows (the double-division floor); the rollup is an
+    * nBuckets-row aggregate. */
   def liftTable(df: DataFrame, scoreCol: String, labelCol: String,
                 nBuckets: Int, tieCol: String): DataFrame = {
     require(nBuckets > 1, "need nBuckets > 1")
-    val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
-    // localCheckpoint pins ONE materialization of the sampled range
-    // partitioning AND the nondeterministic per-row ids — `ranged` feeds
-    // both the offsets and the rank subtrees (CLAUDE.md invariant 7)
-    val ranged = df
-      .select(col(scoreCol).as("__s"), col(tieCol).as("__t"),
-        col(labelCol).cast("boolean").as("__y"))
-      .repartitionByRange(nParts, col("__s").desc, col("__t"))
-      .sortWithinPartitions(col("__s").desc, col("__t"))
-      .withColumn("__part", spark_partition_id())
-      .withColumn("__lrk",
-        (monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)) + 1L))
-      .localCheckpoint()
-    val offsets = broadcast(
-      ranged.groupBy("__part").agg(count(lit(1)).as("__pc"))
-        .withColumn("__offset", coalesce(
-          sum("__pc").over(Window.orderBy("__part")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("__n", sum("__pc").over(Window.partitionBy()))
-        .select("__part", "__offset", "__n"))
-    val ranked = ranged.join(offsets, Seq("__part"))
-      .withColumn("__rk", col("__offset") + col("__lrk"))
-    // ntile(b) of rank rk over n rows: first (n mod b) buckets hold
-    // ceil(n/b) rows, the rest floor(n/b)
-    val qz = floor(col("__n") / nBuckets).cast("long")
-    val rem = col("__n") % nBuckets
-    val cut = rem * (qz + 1)
-    val bucket = when(col("__rk") <= cut,
-        floor((col("__rk") - 1) / (qz + 1)) + 1)
-      .otherwise(rem + floor((col("__rk") - cut - 1) / greatest(qz, lit(1L))) + 1)
-    val bucketed = ranked.select(bucket.cast("int").as("bucket"), col("__y"))
+    val bucketed = rankedSlices(
+        df.select(col(scoreCol).as("__s"), col(tieCol).as("__t"),
+          col(labelCol).cast("boolean").as("__y")),
+        Seq(col("__s").desc, col("__t")))
+      .select(ntileOf(nBuckets).as("bucket"), col("__y"))
     val perBucket = bucketed.groupBy(col("bucket"))
       .agg(count(lit(1)).as("n"), count(when(col("__y"), 1)).as("n_pos"))
     val totals = perBucket.agg(
@@ -584,44 +551,44 @@ object Features {
       .select("bucket", "n", "n_pos", "pos_rate", "cum_lift")
   }
 
+  /** The exact 1-based global rank `__rk` of every row under `order`
+    * (a TOTAL order) next to the row count `__rows_total`, with no
+    * single-partition sort: [[graft.ops.Scale.rangeSlices]] sorted within
+    * slices, the slice-local rank read off `monotonically_increasing_id`'s
+    * low 33 bits (the id is `partitionIndex·2³³ + rowOffset`, assigned in
+    * stream order over the pinned slices — the SQL zipWithIndex idiom;
+    * exact while a slice holds < 2³³ rows, which a sortable partition
+    * always does), plus [[graft.ops.Scale.sliceOffsets]]' count of the
+    * earlier slices. */
+  private def rankedSlices(df: DataFrame, order: Seq[Column]): DataFrame =
+    graft.ops.Scale.sliceOffsets(
+        graft.ops.Scale.rangeSlices(df, order, sorted = true)
+          .withColumn("__lrk",
+            monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)) + 1L),
+        Seq("__rows" -> count(lit(1))))
+      .withColumn("__rk", col("__rows_before") + col("__lrk"))
+
+  /** ntile(b) of rank `__rk` over `__rows_total` rows, as arithmetic: the
+    * first (n mod b) buckets hold ceil(n/b) rows, the rest floor(n/b). */
+  private def ntileOf(nBuckets: Int): Column = {
+    val qz = floor(col("__rows_total") / nBuckets).cast("long")
+    val rem = col("__rows_total") % nBuckets
+    val cut = rem * (qz + 1)
+    when(col("__rk") <= cut, floor((col("__rk") - 1) / (qz + 1)) + 1)
+      .otherwise(rem + floor((col("__rk") - cut - 1) / greatest(qz, lit(1L))) + 1)
+      .cast("int")
+  }
+
   /** One exact-ntile scoring pass over a keyed frame: rows ranked by
     * `sortExprs` (must be a TOTAL order — include a unique tie-break)
     * into `nBuckets` equal-frequency buckets, returned as
-    * `(keyCol, out)`. Same scale topology as [[liftTable]] (range
-    * partition → local sort → zipWithIndex rank → broadcast offsets →
-    * ntile ARITHMETIC on (rank, n)): no single-partition sort, one
-    * full-data exchange, bit-identical to window `ntile`. */
+    * `(keyCol, out)`. Same scale topology as [[liftTable]]: no
+    * single-partition sort, one full-data exchange, bit-identical to
+    * window `ntile`. */
   private def ntileScore(df: DataFrame, keyCol: String,
                          sortExprs: Seq[Column], nBuckets: Int,
-                         out: String): DataFrame = {
-    val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
-    // localCheckpoint pins ONE materialization of the sampled range
-    // partitioning + per-row ids: `ranged` feeds both the offsets and
-    // the rank subtrees (CLAUDE.md invariant 7)
-    val ranged = df
-      .repartitionByRange(nParts, sortExprs: _*)
-      .sortWithinPartitions(sortExprs: _*)
-      .withColumn("__part", spark_partition_id())
-      .withColumn("__lrk",
-        (monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)) + 1L))
-      .localCheckpoint()
-    val offsets = broadcast(
-      ranged.groupBy("__part").agg(count(lit(1)).as("__pc"))
-        .withColumn("__offset", coalesce(
-          sum("__pc").over(Window.orderBy("__part")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("__n", sum("__pc").over(Window.partitionBy()))
-        .select("__part", "__offset", "__n"))
-    val ranked = ranged.join(offsets, Seq("__part"))
-      .withColumn("__rk", col("__offset") + col("__lrk"))
-    val qz = floor(col("__n") / nBuckets).cast("long")
-    val rem = col("__n") % nBuckets
-    val cut = rem * (qz + 1)
-    val bucket = when(col("__rk") <= cut,
-        floor((col("__rk") - 1) / (qz + 1)) + 1)
-      .otherwise(rem + floor((col("__rk") - cut - 1) / greatest(qz, lit(1L))) + 1)
-    ranked.select(col(keyCol), bucket.cast("int").as(out))
-  }
+                         out: String): DataFrame =
+    rankedSlices(df, sortExprs).select(col(keyCol), ntileOf(nBuckets).as(out))
 
   /** RFM segmentation — the classic retail feature trio. Per customer:
     * `recency_days` (days from the last order to `asOfDate`),
@@ -667,18 +634,17 @@ object Features {
     * distribution-drift gate PSI can't provide when bins would hide the
     * shift. `ks = max_v |F_a(v) − F_b(v)|` over every observed value,
     * computed without a global sort: value-keyed per-group counts (one
-    * aggregate), then the distributed prefix-sum topology
-    * ([[graft.text.Packing.chunkAssignments]] / [[liftTable]]): range
-    * partition by value, LOCAL cumulative windows per partition, plus
-    * broadcast per-partition offsets. The CDF gap is kept integral —
+    * aggregate), then the distributed prefix sum over value buckets
+    * ([[graft.ops.Scale.orderedBuckets]] + [[graft.ops.Scale.sliceOffsets]]
+    * + LOCAL cumulative windows per bucket). The CDF gap is kept integral —
     * `|cum_a·n_b − cum_b·n_a|` as DECIMAL(38,0), exact up to 10¹⁹-row
     * samples — and only the final micro-unit division truncates:
     * `ks_micros = max_gap·10⁶ div (n_a·n_b)`. Output: one row
     * `(n_a, n_b, ks_micros)`.
     *
     * Scale: two exchanges total over the VALUE-DISTINCT aggregate (the
-    * groupBy and the range partition), windows only within partitions,
-    * the offset table is #partitions rows, and the final max is a scalar
+    * groupBy and the bucket windows), windows only within buckets, the
+    * offset table is #buckets rows, and the final max is a scalar
     * aggregate. No single-partition window over the data. */
   def ksStatistic(df: DataFrame, valueCol: String, groupCol: String,
                   aLabel: String, bLabel: String): DataFrame = {
@@ -695,8 +661,8 @@ object Features {
 
   /** Exact robust statistics — nearest-rank quartiles, IQR, and Tukey
     * 1.5·IQR outlier-fence counts, all in exact cents WITHOUT a global
-    * sort: value-distinct counts → the range-partition prefix-sum
-    * topology → quartile `q_p = min v : cum(v) ≥ ⌈p·n/100⌉` as one
+    * sort: value-distinct counts → the [[ksStatistic]] prefix sum over
+    * value buckets → quartile `q_p = min v : cum(v) ≥ ⌈p·n/100⌉` as one
     * conditional aggregate, fences compared doubled
     * (`2v < 2·q1 − 3·IQR`) so 1.5×IQR never leaves the integers. One
     * row: `(n, q1_cents, median_cents, q3_cents, iqr_cents,
@@ -705,34 +671,20 @@ object Features {
     *
     * Scale: same contract as [[ksStatistic]]/[[graft.ops.Stats.giniCoefficient]]
     * — two exchanges over the value-DISTINCT table (pinned once, it
-    * feeds both the quartile and the fence subtrees), 1-row quartile
-    * broadcast, scalar rollups. */
+    * feeds the bounds, offsets, cumsum and fence subtrees), 1-row
+    * quartile broadcast, scalar rollups. */
   def robustStats(df: DataFrame, valueCol: String): DataFrame = {
     val d0 = "decimal(38,0)"
-    val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
     val v = df.select(
         expr(s"CAST(CAST($valueCol AS decimal(18,2)) * 100 AS $d0)").as("__v"))
       .where(col("__v").isNotNull)
       .groupBy("__v").agg(count(lit(1)).as("__c"))
-    // deterministic ordered buckets (see medianOfCounts, r15); the
-    // count table itself is pinned once — it feeds the bounds, offsets
-    // and cumsum subtrees
-    val ranged = graft.ops.Scale.orderedBuckets(v.localCheckpoint(), "__v", 4 * nParts)
-    val offsets = broadcast(ranged.groupBy("__part")
-      .agg(sum("__c").as("__pc"))
-      .withColumn("__offset", coalesce(
-        sum("__pc").over(Window.orderBy("__part")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__n", sum("__pc").over(Window.partitionBy()))
-      .select("__part", "__offset", "__n"))
-    val local = Window.partitionBy("__part").orderBy("__v")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val cum = ranged.join(offsets, Seq("__part"))
-      .withColumn("__cum", sum("__c").over(local) + col("__offset"))
+    val ranged = graft.ops.Scale.orderedBuckets(v.localCheckpoint(), "__v")
+    val cum = cumulativeCounts(ranged)
     def q(p: Int): Column =
-      min(when(expr(s"__cum >= ($p * __n + 99) div 100"), col("__v")))
+      min(when(expr(s"__cum >= ($p * __c_total + 99) div 100"), col("__v")))
         .cast("long")
-    val quarts = broadcast(cum.agg(max("__n").as("n"), q(25).as("q1_cents"),
+    val quarts = broadcast(cum.agg(max("__c_total").as("n"), q(25).as("q1_cents"),
       q(50).as("median_cents"), q(75).as("q3_cents")))
     ranged.crossJoin(quarts)
       .groupBy("n", "q1_cents", "median_cents", "q3_cents")
@@ -781,29 +733,22 @@ object Features {
       .select(col("n"), col("median_cents"), col("mad_cents"))
   }
 
-  /** Nearest-rank median of a `(__v, __c)` count table via the
-    * range-partition prefix-sum topology — 1 row `(n, med)`. */
-  private def medianOfCounts(counts: DataFrame): DataFrame = {
-    val nParts = counts.sparkSession.sessionState.conf.numShufflePartitions
-    // deterministic ordered buckets replace repartitionByRange +
-    // spark_partition_id (r15): no range-sampling pass, no invariant-7
-    // localCheckpoint — the bucket is a pure monotone function of __v,
-    // so the offsets and cumsum subtrees recompute it freely
-    val ranged = graft.ops.Scale.orderedBuckets(counts, "__v", 4 * nParts)
-    val offsets = broadcast(ranged.groupBy("__part")
-      .agg(sum("__c").as("__pc"))
-      .withColumn("__offset", coalesce(
-        sum("__pc").over(Window.orderBy("__part")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__n", sum("__pc").over(Window.partitionBy()))
-      .select("__part", "__offset", "__n"))
+  /** Nearest-rank median of a `(__v, __c)` count table (pinned by the
+    * caller) — 1 row `(n, med)`. */
+  private def medianOfCounts(counts: DataFrame): DataFrame =
+    cumulativeCounts(graft.ops.Scale.orderedBuckets(counts, "__v"))
+      .agg(max("__c_total").cast("long").as("n"),
+        min(when(expr("__cum >= (50 * __c_total + 99) div 100"), col("__v")))
+          .cast("long").as("med"))
+
+  /** `(__v, __c)` bucketed count rows with the global running count
+    * `__cum` in value order and the total `__c_total` — the
+    * [[graft.ops.Scale.sliceOffsets]] prefix sum over value buckets. */
+  private def cumulativeCounts(ranged: DataFrame): DataFrame = {
     val local = Window.partitionBy("__part").orderBy("__v")
       .rowsBetween(Window.unboundedPreceding, 0)
-    ranged.join(offsets, Seq("__part"))
-      .withColumn("__cum", sum("__c").over(local) + col("__offset"))
-      .agg(max("__n").cast("long").as("n"),
-        min(when(expr("__cum >= (50 * __n + 99) div 100"), col("__v")))
-          .cast("long").as("med"))
+    graft.ops.Scale.sliceOffsets(ranged, Seq("__c" -> sum("__c")))
+      .withColumn("__cum", sum("__c").over(local) + col("__c_before"))
   }
 
   /** Config-driven drift battery — the one-call reference-vs-current
@@ -852,7 +797,7 @@ object Features {
     * to 10¹⁹. One truncating micro-unit division at the end.
     *
     * Scale: identical topology to [[ksStatistic]] — value-distinct
-    * aggregate, range-partition prefix sums, scalar rollup. */
+    * aggregate, value-bucket prefix sums, scalar rollup. */
   def cramerVonMises(df: DataFrame, valueCol: String, groupCol: String,
                      aLabel: String, bLabel: String): DataFrame = {
     val dec38 = "decimal(38,0)"
@@ -874,10 +819,9 @@ object Features {
   /** Shared two-sample scaffold of [[ksStatistic]] / [[mannWhitney]]:
     * one row per DISTINCT observed value with per-cohort counts
     * `(__ca, __cb)`, global value-ordered cumulative counts
-    * `(__cuma, __cumb)`, and cohort totals `(__na, __nb)` — built with
-    * the distributed prefix-sum topology (range partition by value,
-    * LOCAL cumulative windows, broadcast per-partition offsets), so no
-    * window ever sees a single global partition. */
+    * `(__cuma, __cumb)`, and cohort totals `(__na, __nb)` — built by
+    * [[cdfFromCounts]], so no window ever sees a single global
+    * partition. */
   private def twoSampleCdf(df: DataFrame, valueCol: String, groupCol: String,
                            aLabel: String, bLabel: String): DataFrame =
     cdfFromCounts(df
@@ -907,28 +851,18 @@ object Features {
           .as("ks_micros"))
   }
 
+  /** The two-cohort CDF over a `(__v, __ca, __cb)` count table: the
+    * table is pinned once for the bounds, offsets and cumsum subtrees,
+    * value-bucketed and prefix-summed per cohort. */
   private def cdfFromCounts(v: DataFrame): DataFrame = {
-    val nParts = v.sparkSession.sessionState.conf.numShufflePartitions
-    // deterministic ordered buckets (see medianOfCounts, r15); the count
-    // table is pinned once for the bounds/offsets/cumsum subtrees
-    val ranged = graft.ops.Scale.orderedBuckets(v.localCheckpoint(), "__v", 4 * nParts)
-    val offsets = broadcast(
-      ranged.groupBy("__part")
-        .agg(sum("__ca").as("__pa"), sum("__cb").as("__pb"))
-        .withColumn("__oa", coalesce(
-          sum("__pa").over(Window.orderBy("__part")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("__ob", coalesce(
-          sum("__pb").over(Window.orderBy("__part")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("__na", sum("__pa").over(Window.partitionBy()))
-        .withColumn("__nb", sum("__pb").over(Window.partitionBy()))
-        .select("__part", "__oa", "__ob", "__na", "__nb"))
     val local = Window.partitionBy("__part").orderBy("__v")
       .rowsBetween(Window.unboundedPreceding, 0)
-    ranged.join(offsets, Seq("__part"))
-      .withColumn("__cuma", sum("__ca").over(local) + col("__oa"))
-      .withColumn("__cumb", sum("__cb").over(local) + col("__ob"))
+    graft.ops.Scale.sliceOffsets(graft.ops.Scale.orderedBuckets(v.localCheckpoint(), "__v"),
+        Seq("__ca" -> sum("__ca"), "__cb" -> sum("__cb")))
+      .withColumnRenamed("__ca_total", "__na")
+      .withColumnRenamed("__cb_total", "__nb")
+      .withColumn("__cuma", sum("__ca").over(local) + col("__ca_before"))
+      .withColumn("__cumb", sum("__cb").over(local) + col("__cb_before"))
   }
 
   /** Exact Mann–Whitney U (Wilcoxon rank-sum) two-sample test — the
@@ -944,7 +878,7 @@ object Features {
     * inputs (an empty cohort, or every observation tied).
     *
     * Scale: identical topology to [[ksStatistic]] — value-distinct
-    * aggregate, range-partition prefix sums, scalar rollup. */
+    * aggregate, value-bucket prefix sums, scalar rollup. */
   def mannWhitney(df: DataFrame, valueCol: String, groupCol: String,
                   aLabel: String, bLabel: String): DataFrame = {
     val dec38 = "decimal(38,0)"

@@ -513,15 +513,13 @@ object Filters {
     *
     * Scale: the within-group md5-order running sum is NOT one window per
     * group (a language at 100 TB is one un-splittable task) — it is the
-    * two-phase grouped prefix SUM: range-repartition on (group, md5key),
-    * per-(partition, group) unit totals → a bounded offset table
-    * broadcast back, one partition-local window. The allocation itself
-    * rides [[unimaxAllocation]] (k-row driver greedy) and joins back as
-    * a broadcast. */
+    * grouped prefix sum of [[Scale.rangeSlices]] + [[Scale.sliceOffsets]]
+    * over (group, md5key) slices. The allocation itself rides
+    * [[unimaxAllocation]] (k-row driver greedy) and joins back as a
+    * broadcast. */
   def unimaxRepetitionPlan(df: DataFrame, groupCol: String, unitsCol: String,
                            budgetFracX100: Int, capX100: Int,
-                           keyCols: Seq[String], salt: Int = 42,
-                           partitions: Int = 0): DataFrame = {
+                           keyCols: Seq[String], salt: Int = 42): DataFrame = {
     require(keyCols.nonEmpty, "keyCols must be non-empty")
     val alloc = broadcast(
       unimaxAllocation(df, groupCol, unitsCol, budgetFracX100, capX100)
@@ -529,34 +527,21 @@ object Filters {
           .otherwise(expr("alloc_units div n_units")))
         .withColumn("__rem", col("alloc_units") - col("__full") * col("n_units"))
         .select(col(groupCol), col("__full"), col("__rem")))
-    val nParts = if (partitions > 0) partitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
     val keyed = df.withColumn("__h",
       md5(concat_ws("|", keyCols.map(col) :+ lit(salt.toString): _*)))
-    // one pinned materialization of the sampled range partitioning
-    // (CLAUDE.md invariant 7)
-    val ranged = keyed.repartitionByRange(nParts,
-        (col(groupCol) +: col("__h") +: keyCols.map(col)): _*)
-      .withColumn("__part", spark_partition_id())
-      .localCheckpoint()
-    val offsets = broadcast(
-      ranged.groupBy("__part", groupCol)
-        .agg(sum(col(unitsCol).cast("long")).as("__psum"))
-        .withColumn("__offset", coalesce(
-          sum("__psum").over(Window.partitionBy(groupCol).orderBy("__part")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("__part"), col(groupCol), col("__offset")))
+    val sliced = Scale.rangeSlices(keyed, col(groupCol) +: col("__h") +: keyCols.map(col))
+    val units = col(unitsCol).cast("long")
     val localW = Window.partitionBy(col("__part"), col(groupCol))
       .orderBy(col("__h") +: keyCols.map(col): _*)
       .rowsBetween(Window.unboundedPreceding, -1)
-    ranged.join(offsets, Seq("__part", groupCol))
+    Scale.sliceOffsets(sliced, Seq("__units" -> sum(units)), groupBy = Seq(groupCol))
       .withColumn("__cb",
-        col("__offset") + coalesce(sum(col(unitsCol).cast("long")).over(localW), lit(0L)))
+        col("__units_before") + coalesce(sum(units).over(localW), lit(0L)))
       .join(alloc, Seq(groupCol))
       .withColumn("n_repeats",
         (col("__full") + when(col("__cb") < col("__rem"), 1L).otherwise(0L))
           .cast("long"))
-      .drop("__part", "__offset", "__h", "__cb", "__full", "__rem")
+      .drop("__part", "__units_before", "__units_total", "__h", "__cb", "__full", "__rem")
   }
 
   def temperatureSample(df: DataFrame, groupCol: String, c: Double,

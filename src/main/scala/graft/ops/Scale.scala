@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Scale utilities: skew-salted joins, bucketed co-located joins, and
@@ -104,16 +105,15 @@ object Scale {
     * (median / CDF / gini / lorenz / quartiles): adds an INT `__part`
     * column that is a MONOTONE function of the numeric `valueCol` —
     * linear interpolation of the value against its broadcast (min, max)
-    * bounds into `buckets` buckets. This serves exactly the role
-    * `repartitionByRange + spark_partition_id` played (an ordered
-    * partition of the value domain for per-bucket local windows +
-    * broadcast offset cumsum) WITHOUT its three fixed costs: the range
-    * sampling pass, the nondeterministic partition ids, and the
-    * invariant-7 `localCheckpoint` those ids force when the frame feeds
-    * two subtrees (measured r15: sampling + checkpoint jobs were most of
-    * q_feat_mad's 3.3 s at sf0.1 — the data itself is a value-distinct
-    * count table). The bucket expression is deterministic, so both
-    * consuming subtrees may recompute it freely.
+    * bounds into 4 buckets per shuffle partition. This serves exactly the
+    * role [[rangeSlices]] plays (an ordered partition of the value domain
+    * for [[sliceOffsets]] + per-bucket local windows) WITHOUT its three
+    * fixed costs: the range sampling pass, the nondeterministic partition
+    * ids, and the invariant-7 `localCheckpoint` those ids force (measured
+    * r15: sampling + checkpoint jobs were most of q_feat_mad's 3.3 s at
+    * sf0.1 — the data itself is a value-distinct count table). The
+    * bucket expression is deterministic, so both consuming subtrees may
+    * recompute it freely.
     *
     * Monotone and SKEW-RESILIENT (r16; VERDICT r15 #5): interpolation
     * runs in the signed-log domain — `m(v) = sign(v)·ln(1+|v|)`, strictly
@@ -122,22 +122,19 @@ object Scale {
     * interpolation collapsed to ~1 effective bucket when one value sat
     * orders of magnitude above the mass; in log domain a 10^12 outlier
     * over a 10^3 mass still leaves ~25 % of the buckets on the mass).
-    * Still not row-balanced: true `buckets`-quantile boundaries were
-    * tried first r16 and REJECTED — they require an EXTRA eager
-    * approx_percentile job per call (boundaries must be plan literals:
-    * a per-subtree re-aggregated sketch could merge partials in a
-    * different order and bucket the same value differently across the
-    * offsets/cumsum subtrees), and interleaved sf0.1 A/B showed the
-    * structural extra job never paying for itself (stats-family deltas
-    * stayed inside the box's ±15 % drift; see OPTIMIZATION_r16.md). The
-    * log transform buys the worst-case fix with NO extra pass. Never
-    * wrong, only parallelism:
+    * Still not row-balanced: true quantile boundaries were tried first
+    * r16 and REJECTED — they require an EXTRA eager approx_percentile job
+    * per call (boundaries must be plan literals: a per-subtree
+    * re-aggregated sketch could merge partials in a different order and
+    * bucket the same value differently across the offsets/cumsum
+    * subtrees), and interleaved sf0.1 A/B showed the structural extra job
+    * never paying for itself (stats-family deltas stayed inside the box's
+    * ±15 % drift; see OPTIMIZATION_r16.md). The log transform buys the
+    * worst-case fix with NO extra pass. Never wrong, only parallelism:
     * equal values share a bucket by construction (pure deterministic
-    * function of v and the broadcast bounds — both consuming subtrees may
-    * recompute it freely). Pass `buckets` ≈ 4× the shuffle parallelism;
-    * values must be non-null. */
-  def orderedBuckets(df: DataFrame, valueCol: String, buckets: Int): DataFrame = {
-    require(buckets > 0, "buckets must be positive")
+    * function of v and the broadcast bounds). Values must be non-null. */
+  def orderedBuckets(df: DataFrame, valueCol: String): DataFrame = {
+    val buckets = 4 * df.sparkSession.sessionState.conf.numShufflePartitions
     def m(c: Column): Column = signum(c) * log1p(abs(c))
     val v = m(col(valueCol).cast("double"))
     val bounds = broadcast(df.agg(
@@ -149,6 +146,51 @@ object Scale {
             floor((v - col("__lo")) / (col("__hi") - col("__lo")) * buckets),
             lit(buckets - 1L)).cast("int")))
       .drop("__lo", "__hi")
+  }
+
+  /** Range slices for the distributed prefix sum — the two-phase scan of
+    * Blelloch ("Prefix Sums and Their Applications", 1990), never one
+    * unpartitioned window that serializes the data through a single
+    * task: `repartitionByRange` on `order` into the session's shuffle
+    * partitions (slices hold contiguous ranges, so slice order ⊂ global
+    * order), rows tagged with their INT slice `__part` and, when
+    * `sorted`, sorted by `order` within it (for a row-position rank read
+    * off the stream).
+    *
+    * Pinned with `localCheckpoint`: the range boundaries are SAMPLED and
+    * `spark_partition_id` is no function of the row, so the offsets and
+    * the local subtree must read ONE materialization — correctness never
+    * rests on exchange reuse. This is the one place a sampled range
+    * partitioning is pinned. */
+  def rangeSlices(df: DataFrame, order: Seq[Column], sorted: Boolean = false): DataFrame = {
+    val ranged = df.repartitionByRange(
+      df.sparkSession.sessionState.conf.numShufflePartitions, order: _*)
+    (if (sorted) ranged.sortWithinPartitions(order: _*) else ranged)
+      .withColumn("__part", spark_partition_id())
+      .localCheckpoint()
+  }
+
+  /** The offsets phase of the distributed prefix sum over a sliced frame
+    * ([[rangeSlices]] or [[orderedBuckets]]): each named aggregate of
+    * `sums` per (`__part`, `groupBy`…) slice, a #slices(×groups)-row
+    * table holding, per name, `<name>_before` — its total over the
+    * group's EARLIER slices (0 for the first) — and `<name>_total`, the
+    * group's grand total, broadcast and joined back on the slice keys.
+    * The only global windows run over that table; a slice-local running
+    * window plus `<name>_before` is the global prefix, independent of
+    * where the slice boundaries fall. */
+  def sliceOffsets(sliced: DataFrame, sums: Seq[(String, Column)],
+                   groupBy: Seq[String] = Nil): DataFrame = {
+    require(sums.nonEmpty, "sliceOffsets needs at least one sum")
+    val keys = "__part" +: groupBy
+    val group = Window.partitionBy(groupBy.map(col): _*)
+    val earlier = group.orderBy("__part").rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = sliced.groupBy(keys.map(col): _*)
+      .agg(sums.head._2.as(sums.head._1), sums.tail.map { case (n, c) => c.as(n) }: _*)
+      .select(keys.map(col) ++
+        sums.map { case (n, _) => coalesce(sum(n).over(earlier), lit(0)).as(s"${n}_before") } ++
+        sums.map { case (n, _) => sum(n).over(group).as(s"${n}_total") }: _*)
+    sliced.join(broadcast(offsets), keys)
   }
 
   /** Spread a CPU-bound stage (native digest kernels: bootstrap weights,

@@ -313,34 +313,25 @@ object Stats {
     * `(keyCols…, p_micros, p_rank, padj_micros, is_discovery)`.
     *
     * Scale: the family table is metric-dimension-sized, but the plan
-    * never assumes it — ranking uses the range-partition topology (ONE
-    * range exchange, partition-LOCAL windows, broadcast per-partition
-    * offsets for rank / count-above and a broadcast per-partition suffix
-    * min for padj); the `k*` cut is a 1-row aggregate broadcast back. */
+    * never assumes it — ranks are the prefix count of
+    * [[Scale.rangeSlices]] (sorted) + [[Scale.sliceOffsets]], and padj's
+    * suffix min is the same scan reversed: a slice-local reverse min plus
+    * a broadcast min over the later slices; the `k*` cut is a 1-row
+    * aggregate broadcast back. */
   def bhDiscoveries(df: DataFrame, pMicrosCol: String, keyCols: Seq[String],
                     qMicros: Long): DataFrame = {
     require(keyCols.nonEmpty, "keyCols must be non-empty")
     require(qMicros > 0 && qMicros < 1000000L, "qMicros in (0, 1e6)")
     val d0 = "decimal(38,0)"
-    val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
     val sortExprs = col("__p").asc +: keyCols.map(col(_).asc)
-    val ranged = df
-      .select(col(pMicrosCol).cast("long").as("__p") +: keyCols.map(col): _*)
-      .repartitionByRange(nParts, sortExprs: _*)
-      .sortWithinPartitions(sortExprs: _*)
-      .withColumn("__part", spark_partition_id())
-      .localCheckpoint()
-    val offsets = broadcast(ranged.groupBy("__part")
-      .agg(count(lit(1)).as("__pc"))
-      .withColumn("__offset", coalesce(
-        sum("__pc").over(Window.orderBy("__part")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__m", sum("__pc").over(Window.partitionBy()))
-      .select("__part", "__offset", "__m"))
+    val sliced = Scale.rangeSlices(
+      df.select(col(pMicrosCol).cast("long").as("__p") +: keyCols.map(col): _*),
+      sortExprs, sorted = true)
     val local = Window.partitionBy("__part").orderBy(sortExprs: _*)
       .rowsBetween(Window.unboundedPreceding, 0)
-    val ranked = ranged.join(offsets, Seq("__part"))
-      .withColumn("__rk", sum(lit(1L)).over(local) + col("__offset"))
+    val ranked = Scale.sliceOffsets(sliced, Seq("__rows" -> count(lit(1))))
+      .withColumnRenamed("__rows_total", "__m")
+      .withColumn("__rk", sum(lit(1L)).over(local) + col("__rows_before"))
       .withColumn("__term", least(lit(1000000L),
         expr(s"(CAST(__p AS $d0) * __m) div CAST(__rk AS $d0)")
           .cast("long")))
@@ -462,8 +453,8 @@ object Stats {
     * "how unequal is the spend / token-count / document-length
     * distribution" — exactly, WITHOUT a global sort of the data. The
     * value-distinct aggregate collapses the corpus to one row per
-    * distinct value (map-side combine), the range-partition prefix-sum
-    * topology orders the value dimension, and the tied-block rank-sum
+    * distinct value (map-side combine), a prefix sum over value buckets
+    * orders the value dimension, and the tied-block rank-sum
     * identity `Σ_block i = c·prev + c(c+1)/2` keeps every term integral:
     * `G = (2·Σ x·ranksum(x) − (n+1)·Σx·c) / (n·Σx·c)` in cent-scaled
     * DECIMAL(38,0), one truncating micro-unit division at the end.
@@ -471,30 +462,21 @@ object Stats {
     * empty input or an all-zero total.
     *
     * Scale: same contract as [[graft.features.Features.ksStatistic]] —
-    * two exchanges over the value-DISTINCT table, partition-local
-    * windows, #partitions-row broadcast offsets, scalar rollup. */
+    * two exchanges over the value-DISTINCT table (pinned once: it feeds
+    * the bounds, offsets and cumsum subtrees), [[Scale.orderedBuckets]] +
+    * [[Scale.sliceOffsets]] prefix sums, scalar rollup. */
   def giniCoefficient(df: DataFrame, valueCol: String): DataFrame = {
     val d0 = "decimal(38,0)"
-    val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
     val v = df.select(
         expr(s"CAST(CAST($valueCol AS decimal(18,2)) * 100 AS $d0)")
           .as("__v"))
       .where(col("__v") >= 0)
       .groupBy("__v").agg(count(lit(1)).cast(d0).as("__c"))
-    // deterministic ordered buckets (see Features.medianOfCounts, r15);
-    // the count table is pinned once for the bounds/offsets/cumsum subtrees
-    val ranged = Scale.orderedBuckets(v.localCheckpoint(), "__v", 4 * nParts)
-    val offsets = broadcast(ranged.groupBy("__part")
-      .agg(sum("__c").as("__pc"))
-      .withColumn("__offset", coalesce(
-        sum("__pc").over(Window.orderBy("__part")
-          .rowsBetween(Window.unboundedPreceding, -1)),
-        lit(java.math.BigDecimal.ZERO).cast(d0)))
-      .select("__part", "__offset"))
     val local = Window.partitionBy("__part").orderBy("__v")
       .rowsBetween(Window.unboundedPreceding, 0)
-    ranged.join(offsets, Seq("__part"))
-      .withColumn("__prev", sum("__c").over(local) + col("__offset")
+    Scale.sliceOffsets(Scale.orderedBuckets(v.localCheckpoint(), "__v"),
+        Seq("__c" -> sum("__c")))
+      .withColumn("__prev", sum("__c").over(local) + col("__c_before")
         - col("__c"))
       .withColumn("__ranksum",
         expr("__c * __prev + (__c * (__c + 1)) div 2"))
@@ -518,45 +500,31 @@ object Stats {
     * decile, perfect equality reads `k_d/n`.
     *
     * Scale: the [[giniCoefficient]] topology — value-distinct aggregate,
-    * range-partition prefix sums (count AND wealth), then a 10-row
-    * broadcast decile dim joined on the boundary condition; one row
-    * matches per decile. */
+    * prefix sums of count AND wealth, then a 10-row broadcast decile dim
+    * joined on the boundary condition; one row matches per decile. */
   def lorenzCurve(df: DataFrame, valueCol: String): DataFrame = {
     val d0 = "decimal(38,0)"
-    val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
     val v = df.select(
         expr(s"CAST(CAST($valueCol AS decimal(18,2)) * 100 AS $d0)")
           .as("__v"))
       .where(col("__v") >= 0)
       .groupBy("__v").agg(count(lit(1)).cast(d0).as("__c"))
-    // deterministic ordered buckets (see Features.medianOfCounts, r15);
-    // the count table is pinned once for the bounds/offsets/cumsum subtrees
-    val ranged = Scale.orderedBuckets(v.localCheckpoint(), "__v", 4 * nParts)
-    val offsets = broadcast(ranged.groupBy("__part")
-      .agg(sum("__c").as("__pc"), sum(expr("__v * __c")).as("__pw"))
-      .withColumn("__oc", coalesce(
-        sum("__pc").over(Window.orderBy("__part")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0).cast(d0)))
-      .withColumn("__ow", coalesce(
-        sum("__pw").over(Window.orderBy("__part")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0).cast(d0)))
-      .withColumn("__n", sum("__pc").over(Window.partitionBy()))
-      .withColumn("__t", sum("__pw").over(Window.partitionBy()))
-      .select("__part", "__oc", "__ow", "__n", "__t"))
+    val wealth = expr("__v * __c")
     val local = Window.partitionBy("__part").orderBy("__v")
       .rowsBetween(Window.unboundedPreceding, 0)
-    val cum = ranged.join(offsets, Seq("__part"))
-      .withColumn("__cum", sum("__c").over(local) + col("__oc"))
-      .withColumn("__cumw", sum(expr("__v * __c")).over(local) + col("__ow"))
+    val cum = Scale.sliceOffsets(Scale.orderedBuckets(v.localCheckpoint(), "__v"),
+        Seq("__c" -> sum("__c"), "__w" -> sum(wealth)))
+      .withColumn("__cum", sum("__c").over(local) + col("__c_before"))
+      .withColumn("__cumw", sum(wealth).over(local) + col("__w_before"))
     val deciles = broadcast(
       df.sparkSession.range(1, 11).select(col("id").cast("int").as("decile")))
     cum.join(deciles,
-        expr("__cum >= (decile * __n + 9) div 10 AND " +
-          "__cum - __c < (decile * __n + 9) div 10"))
+        expr("__cum >= (decile * __c_total + 9) div 10 AND " +
+          "__cum - __c < (decile * __c_total + 9) div 10"))
       .select(col("decile"),
-        expr("CAST((decile * __n + 9) div 10 AS bigint)").as("n_cum"),
-        expr("CASE WHEN __t > 0 THEN CAST(((__cumw - " +
-          "(__cum - (decile * __n + 9) div 10) * __v) * 1000000) div __t " +
+        expr("CAST((decile * __c_total + 9) div 10 AS bigint)").as("n_cum"),
+        expr("CASE WHEN __w_total > 0 THEN CAST(((__cumw - " +
+          "(__cum - (decile * __c_total + 9) div 10) * __v) * 1000000) div __w_total " +
           "AS bigint) END").as("wealth_share_micros"))
   }
 

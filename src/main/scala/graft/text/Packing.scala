@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Scale
+
 /** Training-example packing: the concat-and-chunk preparation step of
   * GPT-style pretraining — documents are concatenated in a deterministic
   * order and the token stream is cut into fixed-size context windows; each
@@ -11,19 +13,15 @@ import org.apache.spark.sql.functions._
   * spans. Downstream, (chunk_first..chunk_last) IS the map from documents
   * to training examples (and its inverse drives per-example provenance).
   *
-  * Scale: a global running sum is NOT computed with one unpartitioned
-  * window (that serializes the corpus through a single task). Instead the
-  * classic two-phase distributed prefix sum:
-  *   1. range-repartition on the order column (partitions hold contiguous
-  *      ranges, so per-partition order ⊂ global order);
-  *   2. per-partition token totals → a PARTITIONS-sized table whose own
-  *      running sum (driver-scale window) yields each partition's global
-  *      starting offset, broadcast back;
-  *   3. one partition-local window adds local prefix + partition offset.
-  * Every stage is bounded: the only full pass is the partition-local
-  * window sort, which range partitioning has already clustered. The
-  * output is independent of the partition count (offsets depend only on
-  * the global order, not on where the range boundaries fall).
+  * Scale: a global running sum or rank is NOT computed with one
+  * unpartitioned window (that serializes the corpus through a single
+  * task). Every operator here is the distributed prefix sum of
+  * [[graft.ops.Scale.rangeSlices]] + [[graft.ops.Scale.sliceOffsets]]:
+  * range slices on the operator's order, per-slice totals → a
+  * slices-sized offset table broadcast back, one slice-local window. The
+  * only full pass is the slice-local window sort, which range
+  * partitioning has already clustered, and the output is independent of
+  * the shuffle-partition count.
   */
 object Packing {
 
@@ -33,33 +31,18 @@ object Packing {
     * collapses to `chunk_first`). `orderCol` must be globally unique — it
     * defines the concatenation order. */
   def chunkAssignments(df: DataFrame, orderCol: String, tokenCountCol: String,
-                       chunkTokens: Int, partitions: Int = 0): DataFrame = {
+                       chunkTokens: Int): DataFrame = {
     require(chunkTokens > 0, s"chunkTokens must be positive, got $chunkTokens")
-    val nParts = if (partitions > 0) partitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
-    // localCheckpoint pins ONE materialization of the (sampled) range
-    // partitioning: `ranged` feeds both the offsets subtree and the probe
-    // subtree, and without pinning, a plan change that defeats exchange
-    // reuse could re-sample different range boundaries per subtree —
-    // making __part disagree between the two and corrupting offsets
-    val ranged = df.repartitionByRange(nParts, col(orderCol))
-      .withColumn("__part", spark_partition_id())
-      .localCheckpoint()
-    val offsets = broadcast(
-      ranged.groupBy("__part").agg(sum(col(tokenCountCol)).as("__psum"))
-        .withColumn("__offset", coalesce(
-          sum("__psum").over(Window.orderBy("__part")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("__part", "__offset"))
+    val sliced = Scale.rangeSlices(df, Seq(col(orderCol)))
     val localW = Window.partitionBy("__part").orderBy(col(orderCol))
     val chunk: Column => Column = t => floor(t / chunkTokens)
-    ranged.join(offsets, Seq("__part"))
+    Scale.sliceOffsets(sliced, Seq("__tok" -> sum(col(tokenCountCol))))
       .withColumn("tok_start",
-        col("__offset") + sum(col(tokenCountCol)).over(localW) - col(tokenCountCol))
+        col("__tok_before") + sum(col(tokenCountCol)).over(localW) - col(tokenCountCol))
       .withColumn("chunk_first", chunk(col("tok_start")))
       .withColumn("chunk_last",
         greatest(chunk(col("tok_start") + col(tokenCountCol) - 1), chunk(col("tok_start"))))
-      .drop("__part", "__offset")
+      .drop("__part", "__tok_before", "__tok_total")
   }
 
   /** Deterministic global shuffle + fixed-shard export assignment: the
@@ -79,39 +62,24 @@ object Packing {
     * sharded export for a data loader is part of this engine's extended
     * training-data scope.
     *
-    * Scale: a global rank is NOT one unpartitioned window. Same two-phase
-    * prefix sum as [[chunkAssignments]], but counting ROWS: range-
-    * repartition on the hash key (contiguous hash ranges per partition),
-    * per-partition counts → a partitions-sized offset table broadcast
-    * back, one partition-local window. The md5 key is uniform by
-    * construction, so the range partitioning is skew-free regardless of
-    * the id distribution. */
+    * Scale: a global rank is NOT one unpartitioned window — the
+    * [[chunkAssignments]] prefix sum counting ROWS, sliced on the hash
+    * key. The md5 key is uniform by construction, so the range slices are
+    * skew-free regardless of the id distribution. */
   def shardAssignments(df: DataFrame, idCol: String, nShards: Int,
-                       salt: Int = 42, partitions: Int = 0): DataFrame = {
+                       salt: Int = 42): DataFrame = {
     require(nShards > 0, s"nShards must be positive, got $nShards")
-    val nParts = if (partitions > 0) partitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
     // (key, id) ordering: md5 collisions are negligible but the id
     // tie-break makes the order a total one by construction
     val keyed = df.withColumn("__k",
       md5(concat_ws("|", col(idCol), lit(salt.toString))))
-    // one pinned materialization — the offsets and probe subtrees must
-    // see the SAME sampled range boundaries (CLAUDE.md invariant 7)
-    val ranged = keyed.repartitionByRange(nParts, col("__k"), col(idCol))
-      .withColumn("__part", spark_partition_id())
-      .localCheckpoint()
-    val offsets = broadcast(
-      ranged.groupBy("__part").agg(count(lit(1)).as("__pcnt"))
-        .withColumn("__offset", coalesce(
-          sum("__pcnt").over(Window.orderBy("__part")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("__part", "__offset"))
+    val sliced = Scale.rangeSlices(keyed, Seq(col("__k"), col(idCol)))
     val localW = Window.partitionBy("__part").orderBy(col("__k"), col(idCol))
-    ranged.join(offsets, Seq("__part"))
-      .withColumn("__rank0", col("__offset") + row_number().over(localW) - 1)
+    Scale.sliceOffsets(sliced, Seq("__rows" -> count(lit(1))))
+      .withColumn("__rank0", col("__rows_before") + row_number().over(localW) - 1)
       .withColumn("shard", pmod(col("__rank0"), lit(nShards.toLong)).cast("int"))
       .withColumn("shard_pos", expr(s"__rank0 div ${nShards}L"))
-      .drop("__part", "__offset", "__k", "__rank0")
+      .drop("__part", "__rows_before", "__rows_total", "__k", "__rank0")
   }
 
   /** Materialize a [[shardAssignments]] placement as JSONL shard files —
@@ -175,10 +143,8 @@ object Packing {
     * is ceil(doc_tokens / chunkTokens) + 1 rows per doc, the manifest's
     * inherent size; no extra shuffle. */
   def chunkManifest(df: DataFrame, orderCol: String, tokenCountCol: String,
-                    chunkTokens: Int, partitions: Int = 0): DataFrame = {
-    val assigned = chunkAssignments(df, orderCol, tokenCountCol,
-      chunkTokens, partitions)
-    assigned
+                    chunkTokens: Int): DataFrame =
+    chunkAssignments(df, orderCol, tokenCountCol, chunkTokens)
       .where(col(tokenCountCol) > 0)
       .select(col(orderCol), col(tokenCountCol), col("tok_start"),
         explode(sequence(col("chunk_first"), col("chunk_last"))).as("chunk_id"))
@@ -188,7 +154,6 @@ object Packing {
         least(col("tok_start") + col(tokenCountCol) - col("chunk_id") * chunkTokens,
           lit(chunkTokens.toLong)))
       .drop("tok_start")
-  }
 
   /** Length-bucketed batching: the padding-efficient alternative to
     * [[chunkAssignments]] for sequence-level training (SFT / encoder
@@ -218,20 +183,15 @@ object Packing {
     *
     * Scale: within-bucket rank is NOT one window per bucket (O(log) bucket
     * count ⇒ a handful of tasks would each sort a corpus-sized slice).
-    * Same two-phase prefix rank as [[shardAssignments]], generalized per
-    * group: range-repartition on (bucket, id), per-(partition, bucket)
-    * counts → a (partitions × buckets)-sized offset table broadcast back,
-    * one partition-local window. Output independent of partition count. */
+    * The [[shardAssignments]] prefix rank grouped per bucket: slices on
+    * (bucket, id), offsets per (slice, bucket). */
   def lengthBuckets(df: DataFrame, idCol: String, tokenCountCol: String,
                     minBucket: Int = 16, maxBucket: Int = 1024,
-                    maxTokensPerBatch: Int = 8192,
-                    partitions: Int = 0): DataFrame = {
+                    maxTokensPerBatch: Int = 8192): DataFrame = {
     require(minBucket > 0 && maxBucket >= minBucket,
       s"need 0 < minBucket <= maxBucket, got $minBucket/$maxBucket")
     val ladder = Iterator.iterate(minBucket)(_ * 2)
       .takeWhile(_ < maxBucket).toSeq :+ maxBucket
-    val nParts = if (partitions > 0) partitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
     // null token counts coalesce to 0 (→ the smallest bucket, fully padded)
     // rather than a null bucket_len, which would silently vanish through
     // the inner offset join — every input row is represented in the output
@@ -242,24 +202,14 @@ object Packing {
         filter(array(ladder.map(lit): _*), c => c >= eff).getItem(0))
       .withColumn("pad_tokens", (col("bucket_len") - eff).cast("int"))
       .withColumn("truncated", n > maxBucket)
-    // one pinned materialization — offsets and probe subtrees must see the
-    // SAME sampled range boundaries (CLAUDE.md invariant 7)
-    val ranged = staged.repartitionByRange(nParts, col("bucket_len"), col(idCol))
-      .withColumn("__part", spark_partition_id())
-      .localCheckpoint()
-    val offsets = broadcast(
-      ranged.groupBy("__part", "bucket_len").agg(count(lit(1)).as("__pcnt"))
-        .withColumn("__offset", coalesce(
-          sum("__pcnt").over(Window.partitionBy("bucket_len").orderBy("__part")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("__part", "bucket_len", "__offset"))
+    val sliced = Scale.rangeSlices(staged, Seq(col("bucket_len"), col(idCol)))
     val localW = Window.partitionBy("__part", "bucket_len").orderBy(col(idCol))
-    ranged.join(offsets, Seq("__part", "bucket_len"))
+    Scale.sliceOffsets(sliced, Seq("__rows" -> count(lit(1))), groupBy = Seq("bucket_len"))
       .withColumn("seq_in_bucket",
-        col("__offset") + row_number().over(localW) - 1)
+        col("__rows_before") + row_number().over(localW) - 1)
       .withColumn("batch_in_bucket",
         expr(s"seq_in_bucket div greatest(1, $maxTokensPerBatch div bucket_len)"))
-      .drop("__part", "__offset")
+      .drop("__part", "__rows_before", "__rows_total")
   }
 
   /** Curriculum ordering index: the GLOBAL 0-based training position of
@@ -272,28 +222,14 @@ object Packing {
     *
     * Scale: a plain `row_number` over an unpartitioned window serializes
     * the corpus through ONE task — this is the [[shardAssignments]]
-    * two-phase prefix rank instead: range-repartition on (score, id),
-    * per-partition counts → a partitions-sized offset table broadcast
-    * back, one partition-local window. One pinned materialization of the
-    * sampled range partitioning (CLAUDE.md invariant 7). */
-  def curriculumOrder(df: DataFrame, idCol: String, scoreCol: String,
-                      partitions: Int = 0): DataFrame = {
-    val nParts = if (partitions > 0) partitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(nParts, col(scoreCol), col(idCol))
-      .withColumn("__part", spark_partition_id())
-      .localCheckpoint()
-    val offsets = broadcast(
-      ranged.groupBy("__part").agg(count(lit(1)).as("__pcnt"))
-        .withColumn("__offset", coalesce(
-          sum("__pcnt").over(Window.orderBy("__part")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("__part", "__offset"))
-    val localW = Window.partitionBy("__part").orderBy(col(scoreCol), col(idCol))
-    ranged.join(offsets, Seq("__part"))
+    * prefix rank sliced on (score, id) instead. */
+  def curriculumOrder(df: DataFrame, idCol: String, scoreCol: String): DataFrame = {
+    val order = Seq(col(scoreCol), col(idCol))
+    val localW = Window.partitionBy("__part").orderBy(order: _*)
+    Scale.sliceOffsets(Scale.rangeSlices(df, order), Seq("__rows" -> count(lit(1))))
       .withColumn("curriculum_pos",
-        col("__offset") + row_number().over(localW) - 1)
-      .drop("__part", "__offset")
+        col("__rows_before") + row_number().over(localW) - 1)
+      .drop("__part", "__rows_before", "__rows_total")
   }
 
   /** Per-document overlapping sliding windows: cut each document's unit

@@ -51,9 +51,9 @@ class CurateSpec extends AnyFunSuite {
       (1 to 10).map(i => ("b", 10L + i, 10L)) ++
       (1 to 10).map(i => ("c", 100L + i, 100L))
     val df = rows.toDF("g", "id", "units")
-    def run(parts: Int) = Filters.unimaxRepetitionPlan(df, "g", "units",
-        budgetFracX100 = 50, capX100 = 120, keyCols = Seq("id"),
-        partitions = parts)
+    def run(parts: Int) = Filters.unimaxRepetitionPlan(
+        TestSpark.withShufflePartitions(df, parts), "g", "units",
+        budgetFracX100 = 50, capX100 = 120, keyCols = Seq("id"))
       .select("id", "n_repeats").as[(Long, Long)].collect().sortBy(_._1).toSeq
     val one = run(1)
     assert(run(7) == one)

@@ -3,8 +3,6 @@ package graft
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types._
 
 import graft.store.{FeatureRegistry, FeatureStore, SchemaDiff, TableStore}
@@ -15,30 +13,6 @@ class StoreSpec extends AnyFunSuite {
 
   private def freshStore() =
     new TableStore(spark, Files.createTempDirectory("graft_store").toString)
-
-  /** `body`'s result and the number of Spark jobs it launched on this
-    * thread: a listener counts job starts tagged with a fresh job group,
-    * read after the listener bus has drained. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"store-spec-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "StoreSpec job count")
-    try {
-      val r = body
-      TestBus.drain(sc)
-      (r, n.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("schema diff classifies NEW / MISSING / TYPE_CHANGED") {
     val stored = StructType.fromDDL("a INT, b STRING, c DOUBLE")
@@ -558,7 +532,7 @@ class StoreSpec extends AnyFunSuite {
       .toDF("id", "month", "amt", "tag"), primaryKeys = Seq("id"), partitionBy = Seq("month"))
     store.setProperties("plain", Map("team" -> "graft"))
     reg.registerTable("plain", store.meta("plain").get.schema, Seq("k"), Nil)
-    val (_, metaJobs) = jobsOf {
+    val (_, metaJobs) = TestSpark.jobsOf {
       store.meta("plain"); store.meta("hive")
       store.exists("plain"); store.exists("absent")
       store.currentVersion("hive")
@@ -566,7 +540,7 @@ class StoreSpec extends AnyFunSuite {
       reg.getTable("plain")
     }
     assert(metaJobs == 0)
-    val (_, readJobs) = jobsOf {
+    val (_, readJobs) = TestSpark.jobsOf {
       store.read("plain"); store.read("hive")
       store.readVersion("plain", store.currentVersion("plain"))
     }

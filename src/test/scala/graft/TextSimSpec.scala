@@ -292,7 +292,8 @@ class TextSimSpec extends AnyFunSuite {
 
   test("chunkAssignments: exact prefix offsets, independent of partition count") {
     val d = (1L to 100L).map(i => (i, (i % 7 + 1).toInt)).toDF("id", "n_tok")
-    def run(parts: Int) = Packing.chunkAssignments(d, "id", "n_tok", 16, partitions = parts)
+    def run(parts: Int) = Packing.chunkAssignments(
+        TestSpark.withShufflePartitions(d, parts), "id", "n_tok", 16)
       .select("id", "tok_start", "chunk_first", "chunk_last")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(_._1).toSeq
@@ -310,7 +311,7 @@ class TextSimSpec extends AnyFunSuite {
 
   test("chunkManifest: spans tile chunks exactly and sum to each doc's tokens") {
     val d = (1L to 100L).map(i => (i, (i % 7).toInt)).toDF("id", "n_tok")
-    val m = Packing.chunkManifest(d, "id", "n_tok", 16, partitions = 5)
+    val m = Packing.chunkManifest(TestSpark.withShufflePartitions(d, 5), "id", "n_tok", 16)
       .select("id", "chunk_id", "start_in_chunk", "end_in_chunk")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq
@@ -353,7 +354,8 @@ class TextSimSpec extends AnyFunSuite {
 
   test("shardAssignments: md5-order placement, balanced shards, layout independent") {
     val d = (1L to 103L).toDF("id")
-    def run(parts: Int) = Packing.shardAssignments(d, "id", nShards = 8, partitions = parts)
+    def run(parts: Int) = Packing.shardAssignments(
+        TestSpark.withShufflePartitions(d, parts), "id", nShards = 8)
       .select("id", "shard", "shard_pos")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .sortBy(_._1).toSeq
@@ -404,9 +406,8 @@ class TextSimSpec extends AnyFunSuite {
       10, 20, 40, 80, 16, 32, 64, 2, 63, 50)
     val d = counts.zipWithIndex.map { case (n, i) => ((i + 1).toLong, n) }
       .toDF("id", "n_tok")
-    def run(parts: Int) = Packing.lengthBuckets(d, "id", "n_tok",
-        minBucket = 16, maxBucket = 64, maxTokensPerBatch = 256,
-        partitions = parts)
+    def run(parts: Int) = Packing.lengthBuckets(TestSpark.withShufflePartitions(d, parts),
+        "id", "n_tok", minBucket = 16, maxBucket = 64, maxTokensPerBatch = 256)
       .select("id", "bucket_len", "seq_in_bucket", "batch_in_bucket",
         "pad_tokens", "truncated")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
@@ -1014,7 +1015,7 @@ class TextSimSpec extends AnyFunSuite {
       .map { case ((i, _), pos) => i -> pos.toLong }.toMap
     assert(out == expected)
     // independent of the number of range partitions
-    val out3 = Packing.curriculumOrder(df, "id", "score", partitions = 3)
+    val out3 = Packing.curriculumOrder(TestSpark.withShufflePartitions(df, 3), "id", "score")
       .select("id", "curriculum_pos").as[(Long, Long)].collect().toMap
     assert(out3 == expected)
   }
