@@ -1,6 +1,11 @@
 package graft.pipelines
 
+import java.util.concurrent.{ExecutionException, Executors}
+import scala.util.Try
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 import graft.store.{FeatureRegistry, FeatureStore, Registration, TableStore}
 import graft.validate.{Monitor, SourceCheck, Validation}
@@ -45,7 +50,17 @@ object Runner {
   final case class PipelineResult(table: String, rows: Long, version: Int,
                                   validationPassed: Boolean)
 
-  /** Run the five pipelines in reference DAG order, validate, save, register. */
+  /** Run the five pipelines as the reference's two job chains, each in DAG
+    * order, validate, save, register. The chains run at the same time, on
+    * two threads of a pool that lives for this call; each worker starts
+    * with the caller's Spark local properties (job group, scheduler and
+    * tracing properties), so its jobs are attributed to the caller.
+    *
+    * A failure stops the rest of its own chain; the other chain still runs
+    * to its end. Then the first failure in reference order is rethrown,
+    * with a failure of the other chain attached as suppressed. Results come
+    * back in reference order: demographic, credit_risk, holding_products,
+    * payment_behavior, transactions. */
   def run(spark: SparkSession, sources: Map[String, DataFrame], store: TableStore,
           params: Params = Params(),
           today: java.time.LocalDate = java.time.LocalDate.now()): Seq[PipelineResult] = {
@@ -53,80 +68,108 @@ object Runner {
     // source battery before any pipeline logic (utils.py:1174-1291)
     SourceCheck.requireSources(sources,
       Seq("clientes", "buro_credito", "productos", "pagos", "transacciones"))
-    val outputs = Seq(
+    def step(table: String, sourceName: String)(build: => DataFrame): () => PipelineResult =
+      () => runPipeline(spark, store, params, today, table, sourceName, build)
+    val chains = Seq(
       // workspace A DAG: demographic → credit_risk
-      ("fs_cus_demographic", "clientes",
-        () => Pipelines.demographic(sources("clientes"), params.startDate, endDate)),
-      ("fs_cus_credit_risk", "buro_credito",
-        () => Pipelines.creditRisk(sources("buro_credito"))),
+      Seq(
+        step("fs_cus_demographic", "clientes")(
+          Pipelines.demographic(sources("clientes"), params.startDate, endDate)),
+        step("fs_cus_credit_risk", "buro_credito")(
+          Pipelines.creditRisk(sources("buro_credito")))),
       // workspace B DAG: holding → payment_behavior → transactions
-      ("fs_cus_holding_products", "productos",
-        () => Pipelines.holdingProducts(sources("productos"))),
-      ("fs_cus_payment_behavior", "pagos",
-        () => Pipelines.paymentBehavior(sources("pagos"))),
-      ("fs_cus_transactions", "transacciones",
-        () => Pipelines.transactions(sources("transacciones"))))
+      Seq(
+        step("fs_cus_holding_products", "productos")(
+          Pipelines.holdingProducts(sources("productos"))),
+        step("fs_cus_payment_behavior", "pagos")(Pipelines.paymentBehavior(sources("pagos"))),
+        step("fs_cus_transactions", "transacciones")(
+          Pipelines.transactions(sources("transacciones")))))
 
-    outputs.map { case (table, sourceName, mk) =>
-      val df = mk().cache() // R6: cache across validate + write
+    // a chain's results up to its first failure, and that failure
+    def runChain(chain: Seq[() => PipelineResult]): (Seq[PipelineResult], Option[Throwable]) = {
+      val done = Seq.newBuilder[PipelineResult]
       try {
-        // cross-check vs previously saved snapshot (monitor.py:327-470)
-        val alreadySaved = store.exists(table)
-        val mismatches =
-          if (!alreadySaved) Nil
-          else Validation.crossCheckHistorical(
-            df, store.read(table), "tpk_release_dt", "tpk_release_dt")
-        // divergent months are expected on incremental refresh; only a
-        // SHRINKING month is a hard failure
-        val shrinking = mismatches.count(m => m.sourceCnt < m.targetCnt)
-        val passed = shrinking == 0
-        // save only when validations pass (or are explicitly ignored); a
-        // save failure is recorded, not swallowed
-        var saveReport: Option[FeatureStore.SaveReport] = None
-        var saveError: Option[Throwable] = None
-        if (passed || params.omitValidationErrors) {
-          try saveReport = Some(FeatureStore.save(store, table, df,
-            primaryKeys = Seq("pk_customer", "tpk_release_dt"),
-            timestampKeys = Seq("tpk_release_dt"),
-            description = s"graft feature table $table",
-            forceOverwrite = params.forceOverwrite,
-            overwriteSchema = params.overwriteSchema,
-            policy = if (params.omitValidationErrors) FeatureStore.IgnoreMissing
-              else FeatureStore.FailOnMissing,
-            // registration reads lineage from TBLPROPERTIES like the
-            // reference's get_metadata; it rides the save's commit
-            properties = params.registry.fold(Map.empty[String, String])(_ =>
-              Map("graft.sourceTables" -> sourceName))))
-          catch { case scala.util.control.NonFatal(e) => saveError = Some(e) }
-        }
-        // register the run's validations BEFORE aborting, so failed runs
-        // leave a trace in the monitor tables (monitor.py:566-663)
-        params.monitorTables.foreach { case (summaryTable, detailTable) =>
-          val reg = Monitor.registerValidation(
-            java.sql.Timestamp.valueOf(today.atStartOfDay()),
-            database = None, tableName = table, tableType = "historical",
-            layer = "ingestion", successfullySaved = saveReport.isDefined,
-            outcomes = Map("CROSS_CHECKING" -> Monitor.Outcome(
-              Some(if (passed) "SUCCESS" else "FAIL"),
-              if (passed) None else Some(s"$shrinking shrinking month(s)"),
-              Map("mismatched_months" -> mismatches.size.toString,
-                "shrinking_months" -> shrinking.toString))),
-            ignoreValidations =
-              if (params.omitValidationErrors) Set("CROSS_CHECKING") else Set.empty,
-            alreadySaved = alreadySaved)
-          Monitor.save(spark, store, summaryTable, detailTable, reg)
-        }
-        saveError.foreach(e => throw e)
-        // post-task registration (feature_store_register.py: a task that
-        // reaches TERMINATED/SUCCESS gets its feature tables registered)
-        if (saveReport.isDefined) params.registry.foreach { reg =>
-          Registration.registerFeatureTable(store, reg, table)
-        }
-        if (!passed && !params.omitValidationErrors)
-          sys.error(s"cross-check failed for $table ($shrinking shrinking month(s))")
-        PipelineResult(table, store.read(table).count(),
-          saveReport.map(_.version).getOrElse(store.currentVersion(table)), passed)
-      } finally df.unpersist()
+        chain.foreach(s => done += s())
+        (done.result(), None)
+      } catch { case NonFatal(e) => (done.result(), Some(e)) }
     }
+    val pool = Executors.newFixedThreadPool(chains.size, (r: Runnable) => {
+      val t = new Thread(r, "graft-runner-chain")
+      t.setDaemon(true)
+      t
+    })
+    try {
+      val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val outcomes = chains
+        .map(chain => SQLExecution.withThreadLocalCaptured(session, pool)(runChain(chain)))
+        // only a fatal error escapes runChain; it fails its whole chain
+        .map(f => try f.get() catch { case e: ExecutionException => (Nil, Some(e.getCause)) })
+      outcomes.flatMap(_._2) match {
+        case first +: others =>
+          others.foreach(first.addSuppressed)
+          throw first
+        case _ => outcomes.flatMap(_._1)
+      }
+    } finally pool.shutdown()
+  }
+
+  /** One pipeline: cross-check against the saved table, save, register. */
+  private def runPipeline(spark: SparkSession, store: TableStore, params: Params,
+                          today: java.time.LocalDate, table: String, sourceName: String,
+                          build: => DataFrame): PipelineResult = {
+    // cross-check vs previously saved snapshot (monitor.py:327-470): only
+    // then do two queries (the cross-check and the upsert) read the frame,
+    // so only then is it cached; a first write reads it once
+    val alreadySaved = store.exists(table)
+    val df = if (alreadySaved) build.cache() else build
+    try {
+      val mismatches =
+        if (!alreadySaved) Nil
+        else Validation.crossCheckHistorical(
+          df, store.read(table), "tpk_release_dt", "tpk_release_dt")
+      // divergent months are expected on incremental refresh; only a
+      // SHRINKING month is a hard failure
+      val shrinking = mismatches.count(m => m.sourceCnt < m.targetCnt)
+      val passed = shrinking == 0
+      // save only when validations pass (or are explicitly ignored); a
+      // save failure is recorded, not swallowed
+      val saved: Option[Try[FeatureStore.SaveReport]] =
+        if (!passed && !params.omitValidationErrors) None
+        else Some(Try(FeatureStore.save(store, table, df,
+          primaryKeys = Seq("pk_customer", "tpk_release_dt"),
+          timestampKeys = Seq("tpk_release_dt"),
+          description = s"graft feature table $table",
+          forceOverwrite = params.forceOverwrite,
+          overwriteSchema = params.overwriteSchema,
+          policy = if (params.omitValidationErrors) FeatureStore.IgnoreMissing
+            else FeatureStore.FailOnMissing,
+          // registration reads lineage from TBLPROPERTIES like the
+          // reference's get_metadata; it rides the save's commit
+          properties = params.registry.fold(Map.empty[String, String])(_ =>
+            Map("graft.sourceTables" -> sourceName)))))
+      // register the run's validations BEFORE aborting, so failed runs
+      // leave a trace in the monitor tables (monitor.py:566-663)
+      params.monitorTables.foreach { case (summaryTable, detailTable) =>
+        val reg = Monitor.registerValidation(
+          java.sql.Timestamp.valueOf(today.atStartOfDay()),
+          database = None, tableName = table, tableType = "historical",
+          layer = "ingestion", successfullySaved = saved.exists(_.isSuccess),
+          outcomes = Map("CROSS_CHECKING" -> Monitor.Outcome(
+            Some(if (passed) "SUCCESS" else "FAIL"),
+            if (passed) None else Some(s"$shrinking shrinking month(s)"),
+            Map("mismatched_months" -> mismatches.size.toString,
+              "shrinking_months" -> shrinking.toString))),
+          ignoreValidations =
+            if (params.omitValidationErrors) Set("CROSS_CHECKING") else Set.empty,
+          alreadySaved = alreadySaved)
+        Monitor.save(spark, store, summaryTable, detailTable, reg)
+      }
+      val report = saved.map(_.get) // a failed save throws here
+        .getOrElse(sys.error(s"cross-check failed for $table ($shrinking shrinking month(s))"))
+      // post-task registration (feature_store_register.py: a task that
+      // reaches TERMINATED/SUCCESS gets its feature tables registered)
+      params.registry.foreach(reg => Registration.registerFeatureTable(store, reg, table))
+      PipelineResult(table, report.rows, report.version, passed)
+    } finally if (alreadySaved) df.unpersist()
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -95,7 +95,7 @@ final class TableStore(spark: SparkSession, root: String) {
 
   // ------------------------------------------------------------- metadata
 
-  import TableStore.Meta
+  import TableStore.{Committed, Meta}
 
   /** Publish `m` as the table's committed metadata (atomic replace). */
   private def writeMeta(table: String, m: Meta): Meta = {
@@ -293,16 +293,26 @@ final class TableStore(spark: SparkSession, root: String) {
         mergeSchema, overwriteSchema, expectedVersion, buckets, partitionBy)
     }
 
+  /** `write` applied to `df`, and the number of rows it wrote, counted on
+    * the write itself with `Dataset.observe`: no second pass over the data.
+    * The metric arrives through a query listener once the write's query
+    * has ended; `get` waits for it. */
+  private def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = Observation()
+    write(df.observe(rows, count(lit(1)).as("rows")))
+    rows.get("rows").asInstanceOf[Long]
+  }
+
   /** [[overwrite]] from `current`, the metadata the caller read under the
     * table's write lock; `properties` are added to the committed ones.
-    * Returns the committed metadata. */
+    * Returns the committed metadata and the rows written. */
   private[store] def commitOverwrite(
       table: String, current: Option[Meta], df: DataFrame,
       primaryKeys: Seq[String] = Nil, timestampKeys: Seq[String] = Nil,
       description: String = "", mergeSchema: Boolean = false,
       overwriteSchema: Boolean = false, expectedVersion: Option[Int] = None,
       buckets: Int = 0, partitionBy: Seq[String] = Nil,
-      properties: Map[String, String] = Map.empty): Meta = {
+      properties: Map[String, String] = Map.empty): Committed = {
     checkExpected(table, current.map(_.version), expectedVersion)
     val out = current match {
       case Some(m) =>
@@ -330,14 +340,14 @@ final class TableStore(spark: SparkSession, root: String) {
     val pcols = if (partitionBy.nonEmpty) partitionBy else current.map(_.partitionCols).getOrElse(Nil)
     require(nb == 0 || pcols.isEmpty,
       s"$table: bucketed and hive-partitioned layouts are mutually exclusive")
-    writeSnapshot(table, out, v, nb, pks, partitionCols = pcols)
+    val rows = countedWrite(out)(writeSnapshot(table, _, v, nb, pks, partitionCols = pcols))
     commitGuard(table, current.map(_.version))
-    writeMeta(table, Meta(v, out.schema.json, pks,
+    Committed(writeMeta(table, Meta(v, out.schema.json, pks,
       if (timestampKeys.nonEmpty) timestampKeys else current.map(_.timestampKeys).getOrElse(Nil),
       nb,
       if (description.nonEmpty) description else current.map(_.description).getOrElse(""),
       current.map(_.properties).getOrElse(Map.empty) ++ properties,
-      pcols))
+      pcols)), rows)
   }
 
   /** S8 — upsert by primary key (MERGE whenMatchedUpdate +
@@ -356,7 +366,7 @@ final class TableStore(spark: SparkSession, root: String) {
   private[store] def commitUpsert(table: String, current: Option[Meta], df: DataFrame,
                                   primaryKeys: Seq[String] = Nil,
                                   expectedVersion: Option[Int] = None,
-                                  properties: Map[String, String] = Map.empty): Meta =
+                                  properties: Map[String, String] = Map.empty): Committed =
     current match {
       case None =>
         require(primaryKeys.nonEmpty, "first write needs primaryKeys")
@@ -368,11 +378,11 @@ final class TableStore(spark: SparkSession, root: String) {
         require(pks.nonEmpty, s"$table has no primary keys; cannot upsert")
         val merged = mergedForUpsert(table, df, pks, m)
         val v = m.version + 1
-        writeSnapshot(table, merged, v, m.buckets, pks, shuffleToBuckets = false,
-          partitionCols = m.partitionCols)
+        val rows = countedWrite(merged)(writeSnapshot(table, _, v, m.buckets, pks,
+          shuffleToBuckets = false, partitionCols = m.partitionCols))
         commitGuard(table, Some(m.version))
-        writeMeta(table, m.copy(version = v, schemaJson = merged.schema.json,
-          properties = m.properties ++ properties))
+        Committed(writeMeta(table, m.copy(version = v, schemaJson = merged.schema.json,
+          properties = m.properties ++ properties)), rows)
     }
 
   /** Build the post-merge frame for an upsert (exposed for plan-shape
@@ -613,6 +623,10 @@ object TableStore {
     lazy val schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
   }
 
+  /** A committed write: the metadata it published and the rows its
+    * snapshot holds. */
+  private[store] final case class Committed(meta: Meta, rows: Long)
+
   /** `_meta.json` layout; the field names are the on-disk format. */
   private[store] def encode(m: Meta): ObjectNode = {
     val o = MetaJson.obj().put("version", m.version).put("schemaJson", m.schemaJson)
@@ -639,7 +653,11 @@ object FeatureStore {
   case object FailOnMissing extends MissingColumnPolicy
   case object IgnoreMissing extends MissingColumnPolicy
 
-  final case class SaveReport(table: String, version: Int, diff: Option[SchemaDiff])
+  /** `rows` is the committed snapshot's row count, counted by the write
+    * that produced it (an upsert's count includes the stored rows the
+    * batch did not touch). */
+  final case class SaveReport(table: String, version: Int, rows: Long,
+                              diff: Option[SchemaDiff])
 
   /** Validate `df` against the stored schema, then overwrite (new or
     * forced) or upsert. One metadata read under the table's write lock;
@@ -669,6 +687,6 @@ object FeatureStore {
           store.commitOverwrite(table, current, df, primaryKeys, timestampKeys, description,
             mergeSchema = true, overwriteSchema = overwriteSchema, properties = props)
         else store.commitUpsert(table, current, df, primaryKeys, properties = props)
-      SaveReport(table, committed.version, diff)
+      SaveReport(table, committed.meta.version, committed.rows, diff)
     }
 }

@@ -22,19 +22,32 @@ object Validation {
 
   /** Historical cross-check (`monitor.py:327-470`): per-month row counts of
     * source vs previously-saved target; any divergent month is a finding.
-    * One count-aggregation per side + a broadcastable outer join on month. */
+    * Ascending by month, null months first.
+    *
+    * One aggregation over the union of both sides' months, tagged by side:
+    * one shuffle, at most #months result rows. The mismatch filter and the
+    * order run on the driver over those rows. A null month never matches
+    * across sides (an outer join on month keeps each side's null group
+    * apart), so its per-side counts come out as separate findings, the
+    * source's first. */
   def crossCheckHistorical(source: DataFrame, target: DataFrame,
                            sourceDate: String, targetDate: String): Seq[CountMismatch] = {
-    val s = source.groupBy(col(sourceDate).cast("date").as("month_dt"))
-      .agg(count(lit(1)).as("source_cnt"))
-    val t = target.groupBy(col(targetDate).cast("date").as("month_dt"))
-      .agg(count(lit(1)).as("target_cnt"))
-    s.join(t, Seq("month_dt"), "outer").na.fill(0)
-      .where(col("source_cnt") =!= col("target_cnt"))
-      .orderBy("month_dt")
+    def months(df: DataFrame, date: String, isSource: Boolean) =
+      df.select(col(date).cast("date").as("month_dt"), lit(isSource).as("is_source"))
+    val counts = months(source, sourceDate, isSource = true)
+      .unionByName(months(target, targetDate, isSource = false))
+      .groupBy("month_dt")
+      .agg(count(when(col("is_source"), 1)).as("source_cnt"),
+        count(when(!col("is_source"), 1)).as("target_cnt"))
       .collect()
-      .map(r => CountMismatch(String.valueOf(r.getAs[java.sql.Date]("month_dt")),
-        r.getAs[Long]("source_cnt"), r.getAs[Long]("target_cnt"))).toSeq
+      .map(r => (Option(r.getDate(0)), r.getLong(1), r.getLong(2)))
+    counts.toSeq.sortBy(_._1.map(_.getTime)).flatMap {
+      case (None, s, t) =>
+        Seq(CountMismatch("null", s, 0L), CountMismatch("null", 0L, t)).filter(m =>
+          m.sourceCnt + m.targetCnt > 0)
+      case (Some(d), s, t) if s != t => Seq(CountMismatch(d.toString, s, t))
+      case _ => Nil
+    }
   }
 
   /** Dimensional cross-check (`monitor.py:472-520`): total counts within a

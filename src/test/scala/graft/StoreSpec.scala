@@ -620,4 +620,56 @@ class StoreSpec extends AnyFunSuite {
     assert(r2.version == 1 && r2.diff.get.newColumns == Seq("b"))
     assert(store.read("fs").count() == 2)
   }
+
+  test("SaveReport.rows is the committed snapshot's row count, counted by its write") {
+    val store = freshStore()
+    val pks = Seq("pk", "ts")
+    def save(t: String, df: org.apache.spark.sql.DataFrame, force: Boolean = false) =
+      FeatureStore.save(store, t, df, pks, Seq("ts"), forceOverwrite = force,
+        policy = FeatureStore.IgnoreMissing)
+    def matchesRead(r: FeatureStore.SaveReport): Unit =
+      assert(r.rows == store.read(r.table).count(), r)
+    // a first overwrite
+    val first = save("rc", (1 to 6).map(i => (i, "2024-01", i * 1.0)).toDF("pk", "ts", "a"))
+    assert(first.rows == 6)
+    matchesRead(first)
+    // an upsert whose batch lacks keys the table keeps: the stored rows
+    // outnumber the batch (one key updated, one inserted)
+    val up = save("rc", Seq((2, "2024-01", 9.0), (7, "2024-01", 7.0)).toDF("pk", "ts", "a"))
+    assert(up.version == 1 && up.rows == 7)
+    matchesRead(up)
+    // a mergeSchema-padded overwrite: stored column `a` is null-padded
+    val padded = save("rc", Seq((1, "2024-02", 5), (2, "2024-02", 6)).toDF("pk", "ts", "b"),
+      force = true)
+    assert(padded.rows == 2 && store.read("rc").columns.toSeq == Seq("pk", "ts", "a", "b"))
+    matchesRead(padded)
+    // bucketed and hive-partitioned tables: the write is a catalog table
+    // or a partitioned one, and still counted
+    val batch = (1 to 5).map(i => (i, s"2024-0${i % 2 + 1}", i * 2.0)).toDF("pk", "ts", "a")
+    store.overwrite("rcb", batch.where($"pk" <= 3), primaryKeys = pks, buckets = 2)
+    store.overwrite("rcp", batch.where($"pk" <= 3), primaryKeys = pks, partitionBy = Seq("ts"))
+    Seq("rcb", "rcp").foreach { t =>
+      val r = save(t, batch.where($"pk" >= 2))
+      assert(r.rows == 5, t)
+      matchesRead(r)
+    }
+    // 0-row frames, under a timeout: an observation that never completes
+    // fails the spec instead of hanging it
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    def bounded[T](body: => T): T = Await.result(Future(body), 2.minutes)
+    val none = Seq.empty[(Int, String, Double)].toDF("pk", "ts", "a")
+    val emptyFirst = bounded(save("rc0", none))
+    assert(emptyFirst.rows == 0)
+    matchesRead(emptyFirst)
+    val emptyFiltered = bounded(save("rc0", (1 to 3).map(i => (i, "2024-01", 1.0))
+      .toDF("pk", "ts", "a").where($"pk" > 10), force = true))
+    assert(emptyFiltered.version == 1 && emptyFiltered.rows == 0)
+    matchesRead(emptyFiltered)
+    // an empty batch upserted into a full table leaves its rows
+    val emptyUpsert = bounded(save("rc", none.select($"pk", $"ts", $"a".cast("int").as("b"))))
+    assert(emptyUpsert.rows == 2)
+    matchesRead(emptyUpsert)
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 
 import graft.datagen.BankingDataGen
 import graft.pipelines.Runner
@@ -45,6 +46,62 @@ class ValidationRunnerSpec extends AnyFunSuite {
     val mismatches = Validation.crossCheckHistorical(src, tgtShrunk, "d", "d")
     assert(mismatches.map(_.monthDt) == Seq("2024-01-01", "2024-03-01"))
     assert(mismatches.head.sourceCnt == 2 && mismatches.head.targetCnt == 1)
+  }
+
+  /** The outer-join formulation of the historical cross-check, kept as the
+    * reference for the one-pass aggregation: one count per side, a full
+    * outer join on month, zero-filled, divergent months in month order. */
+  private def outerJoinCrossCheck(source: DataFrame, target: DataFrame,
+                                  sourceDate: String, targetDate: String)
+      : Seq[Validation.CountMismatch] = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val s = source.groupBy(col(sourceDate).cast("date").as("month_dt"))
+      .agg(count(lit(1)).as("source_cnt"))
+    val t = target.groupBy(col(targetDate).cast("date").as("month_dt"))
+      .agg(count(lit(1)).as("target_cnt"))
+    s.join(t, Seq("month_dt"), "outer").na.fill(0)
+      .where(col("source_cnt") =!= col("target_cnt"))
+      .orderBy("month_dt")
+      .collect()
+      .map(r => Validation.CountMismatch(String.valueOf(r.getAs[java.sql.Date]("month_dt")),
+        r.getAs[Long]("source_cnt"), r.getAs[Long]("target_cnt"))).toSeq
+  }
+
+  test("crossCheckHistorical equals the outer-join formulation, null months included") {
+    import org.apache.spark.sql.functions.{col, lit}
+    def side(months: Option[String]*): DataFrame =
+      months.zipWithIndex.toDF("d", "x").select(col("d").cast("timestamp").as("d"), col("x"))
+    val jan = Some("2024-01-01 00:00:00")
+    val feb = Some("2024-02-01 00:00:00")
+    val mar = Some("2024-03-01 00:00:00")
+    val dec = Some("2023-12-01 00:00:00")
+    val base = side(jan, jan, feb, mar, mar, mar)
+    val cases = Seq(
+      "equal sides" -> (base, base),
+      "diverging sides" -> (base, side(jan, feb, feb, mar)),
+      "month only in the source" -> (side(dec, jan, feb), side(jan, feb)),
+      "month only in the target" -> (side(jan), side(dec, jan, mar)),
+      "empty source" -> (base.where(lit(false)), base),
+      "empty target" -> (base, base.where(lit(false))),
+      "null months in the source" -> (side(None, None, jan), side(jan)),
+      "null months in the target" -> (side(jan), side(jan, None)),
+      "null months on both sides, equal counts" -> (side(None, jan), side(None, jan)),
+      "null months on both sides" -> (side(None, None, feb, dec), side(None, mar, feb)),
+      "months out of order" -> (side(mar, dec, jan, feb, mar), side(feb, jan, jan, dec)))
+    cases.foreach { case (name, (src, tgt)) =>
+      val got = Validation.crossCheckHistorical(src, tgt, "d", "d")
+      // the outer join keeps each side's null month apart and sorts them
+      // first; between the two it has no order, the one-pass form puts
+      // the source's first
+      val (nulls, dated) = outerJoinCrossCheck(src, tgt, "d", "d").partition(_.monthDt == "null")
+      assert(got == nulls.sortBy(_.sourceCnt == 0) ++ dated, name)
+      val months = got.map(_.monthDt).filter(_ != "null")
+      assert(months == months.sorted, s"$name: not ascending")
+      assert(got.dropWhile(_.monthDt == "null").forall(_.monthDt != "null"), name)
+    }
+    assert(Validation.crossCheckHistorical(base, base, "d", "d").isEmpty)
+    assert(Validation.crossCheckHistorical(side(None, jan), side(None, jan), "d", "d") == Seq(
+      Validation.CountMismatch("null", 1, 0), Validation.CountMismatch("null", 0, 1)))
   }
 
   test("schemasValidation: one-projection cast/rename incl. yyyy-mm-qq repair") {
@@ -337,6 +394,60 @@ class ValidationRunnerSpec extends AnyFunSuite {
     assert(e2.schema == store.meta("fs_cus_payment_behavior").get.schema)
     assert(e2.dataSources == Seq("pagos"))
     assert(registry.tables.size == 5)
+  }
+
+  private val chainA = Seq("fs_cus_demographic", "fs_cus_credit_risk")
+  private val chainB = Seq("fs_cus_holding_products", "fs_cus_payment_behavior",
+    "fs_cus_transactions")
+
+  test("Runner runs the two reference chains at once; a failure stops only its own chain") {
+    val store = new TableStore(spark, Files.createTempDirectory("graft_chains").toString)
+    val sources = BankingDataGen.all(spark, n = 30, months = 12)
+    val today = java.time.LocalDate.of(2024, 7, 15)
+    val params = Runner.Params(startDate = "2023-06-01")
+    val (r1, jobs) = TestSpark.jobsOf(Runner.run(spark, sources, store, params, today))
+    // every job runs on a worker (the caller's source check launches
+    // none), so a count means the caller's job group reached the workers
+    assert(jobs > 0)
+    assert(r1.map(_.table) == chainA ++ chainB) // reference order
+    r1.foreach(r => assert(r.rows == store.read(r.table).count(), r))
+    def versions() = (chainA ++ chainB).map(t => t -> store.currentVersion(t)).toMap
+    // holding (the head of chain B) fails its cross-check: payment and
+    // transactions are not saved, chain A runs to its end
+    val v1 = versions()
+    val shrunk = sources.updated("productos", sources("productos").where("id_cliente % 2 = 0"))
+    val e = intercept[RuntimeException](Runner.run(spark, shrunk, store, params, today))
+    assert(e.getMessage.contains("cross-check failed for fs_cus_holding_products"), e)
+    assert(e.getSuppressed.isEmpty)
+    val v2 = versions()
+    chainA.foreach(t => assert(v2(t) == v1(t) + 1, t))
+    chainB.foreach(t => assert(v2(t) == v1(t), t))
+    // both chains fail: the first failure in reference order (chain A's
+    // credit_risk) is thrown, chain B's holding failure rides as suppressed
+    val both = shrunk.updated("buro_credito", sources("buro_credito").where("id_cliente % 2 = 0"))
+    val e2 = intercept[RuntimeException](Runner.run(spark, both, store, params, today))
+    assert(e2.getMessage.contains("cross-check failed for fs_cus_credit_risk"), e2)
+    assert(e2.getSuppressed.map(_.getMessage).toSeq.exists(
+      _.contains("cross-check failed for fs_cus_holding_products")))
+    val v3 = versions()
+    assert(v3("fs_cus_demographic") == v2("fs_cus_demographic") + 1)
+    (chainA.tail ++ chainB).foreach(t => assert(v3(t) == v2(t), t))
+  }
+
+  test("Runner job counts: a backfill and a refresh on a small input") {
+    // a session of its own: conf set by other suites on the shared session
+    // never reaches these plans
+    val s = spark.newSession()
+    val store = new TableStore(s, Files.createTempDirectory("graft_runjobs").toString)
+    val sources = BankingDataGen.all(s, n = 20, months = 12)
+    val today = java.time.LocalDate.of(2024, 7, 15)
+    val params = Runner.Params(startDate = "2023-06-01")
+    val (_, backfill) = TestSpark.jobsOf(Runner.run(s, sources, store, params, today))
+    val (_, refresh) = TestSpark.jobsOf(Runner.run(s, sources, store, params, today))
+    // the row count rides the write, the cross-check is one aggregation and
+    // a first write's frame is not cached; a changed count is a plan change
+    // and needs its own measurement
+    assert((backfill, refresh) == (12, 32))
   }
 
   test("resolveEndDate: 'actual' becomes first of current month") {
