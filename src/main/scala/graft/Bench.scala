@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: every SparkEntry query on SPARK_GRAFT_SF_DIR plus the
   * five banking feature pipelines at the reference's data scale
   * (10k customers × 24 months, `dummy_data_generation.py:29-30`). Prints
@@ -10,38 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // shuffle partitions default to the core count; at the larger
-      // scale factors (sf1/sf10 scaling runs) override so a partition's
-      // shuffle-hash build side still fits executor memory — the same
-      // partitions-vs-memory sizing a 1000-executor cluster does
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // split single-file scans: the testdata tables are one parquet file
-      // each, and the default 128m maxPartitionBytes puts every CPU-bound
-      // text kernel on ONE core — smaller splits restore the multi-split
-      // parallelism a real many-file 100 TB layout gets for free
-      // (env-tunable for A/B runs)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "4m"))
-      // AQE coalescing floor, env-tunable for A/B runs. MEASURED r15 and
-      // left at the Spark default: 64k re-spread the ~1.8 MB stat-table
-      // shuffles (q_stat_lorenz 2.5 -> 1.7 s) but DOUBLED the iterative
-      // join family back-to-back on a quiet box (q_graph_pagerank
-      // 3.3 -> 6.3 s, q_graph_degree 1.3 -> 2.2 s) — many-stage queries
-      // pay per-task scheduling on every tiny exchange. Net across the
-      // suite: negative; the stat entries were instead fixed structurally
-      // (Scale.orderedBuckets).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART_SIZE", "1m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.obs.GraftSession.local()
     // JVM/codegen + parquet-reader warmup so the first measured query
     // doesn't absorb one-time class-loading cost
     spark.range(1000000).selectExpr("sum(id)").collect()

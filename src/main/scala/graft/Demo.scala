@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Executable end-to-end showcase of the feature-store flow:
   * seeded banking datagen → the five pipelines (reference DAG order) →
   * validation → versioned TableStore persistence with registration →
@@ -14,15 +12,7 @@ object Demo {
     val storeDir = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft_demo").toString)
     val n = args.lift(1).map(_.toInt).getOrElse(1000)
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors().toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.obs.GraftSession.local()
 
     val store = new graft.store.TableStore(spark, storeDir)
     val sources = graft.datagen.BankingDataGen.all(spark, n)

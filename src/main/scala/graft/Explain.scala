@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection tool: prints the formatted physical plan for the named
   * queries (or a default set of scale-critical ones). Usage:
   *   runMain graft.Explain [sfDir] [queryName...]
@@ -16,13 +14,7 @@ object Explain {
         "q_cluster_assign", "q_sem_dedup", "q_text_inverted",
         "q_fs_training_set", "q_feat_corr",
         "q_er_fuzzy_join", "q_sim_ivfadc_topk", "q_sketch_hll_union")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.obs.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_EXPLAIN_DIR: also write each plan to <dir>/<name>.txt —
     // the round's plans/ evidence files, without pane-scraping sbt output.

@@ -2,7 +2,7 @@ package graft.datagen
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.sim.{Cluster, IvfIndex, Similarity}
@@ -149,16 +149,7 @@ object IvfDriftMeasure {
     val nProbe = if (args.length > 4) args(4).toInt else 4
     val mode = if (args.length > 5) args(5) else "translate"
     require(mode == "translate" || mode == "newblob", s"unknown mode $mode")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.obs.GraftSession.local()
     val work = Files.createTempDirectory("graft_ivf_drift").toString
     val store = new TableStore(spark, s"$work/store")
 

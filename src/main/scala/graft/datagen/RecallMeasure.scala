@@ -1,6 +1,6 @@
 package graft.datagen
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.text.Dedup
@@ -81,16 +81,7 @@ object RecallMeasure {
     // fingerprints vs Σ df²·keys corpus-wide), so its recall is measured
     // separately, not inferred
     val incLeg = args.length > 6 && args(6) == "inc"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.obs.GraftSession.local()
 
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
       .select("doc_id", "text")

@@ -1,6 +1,6 @@
 package graft.datagen
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-factor escalation generator: replicate the driver's sf0.1 testdata
@@ -134,16 +134,7 @@ object ScaleUp {
       s"factor=$factor outside [1, 100] — keys past 999,999,999 widen the " +
         "%09d name format and break fixed-width name consumers; scale in " +
         "one pass from the base sf0.1 with factor <= 100")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.obs.GraftSession.local()
 
     def read(t: String): DataFrame = spark.read.parquet(s"$srcDir/$t.parquet")
     def write(df: => DataFrame, t: String): Unit = if (tables(t)) {

@@ -2,7 +2,7 @@ package graft.datagen
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.store.TableStore
@@ -79,16 +79,7 @@ object StreamAnchor {
     // leg: the compacting trigger absorbs the corpus rewrite, the others
     // stay batch-bounded
     val compactEvery = if (args.length > 5) args(5).toInt else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.obs.GraftSession.local()
     val work = Files.createTempDirectory("graft_stream_anchor").toString
 
     val store = new TableStore(spark, s"$work/store")

@@ -24,6 +24,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Reads of the current version pass the schema it records to the Parquet
   * reader, so building the frame needs no footer-inference job either.
   *
+  * Every operation that writes a version — [[overwrite]], [[upsert]],
+  * [[append]], [[appendFiles]], [[replaceWhere]], [[replacePartitions]],
+  * [[compact]] and [[FeatureStore.save]] — goes through the one commit
+  * point, `commit`: lock → read the metadata → write `v=N+1` → guard →
+  * publish. An operation supplies only what is its own (schema policy,
+  * merge, predicate, partition listing, pruning). The snapshot's layout
+  * (bucketed, hive-partitioned or plain) is chosen in one place,
+  * `writeSnapshot`, from the metadata being committed.
+  *
   * Reference semantics delivered:
   *  - upsert-by-PK (`notebooks/utils.py:1748-1758` MERGE) = union incoming
   *    with current, window-dedup by PK preferring the incoming row — ONE
@@ -69,7 +78,7 @@ final class TableStore(spark: SparkSession, root: String) {
 
   /** Process-wide write serialization + commit-time lost-update detection
     * — see the class-doc concurrency contract. Reentrant (a JVM monitor). */
-  private[store] def withWriteLock[T](table: String)(body: => T): T = {
+  private def withWriteLock[T](table: String)(body: => T): T = {
     val key = Paths.get(root).toAbsolutePath.normalize.toString + "#" + table
     TableStore.writeLocks.computeIfAbsent(key, _ => new Object)
       .synchronized(body)
@@ -92,10 +101,11 @@ final class TableStore(spark: SparkSession, root: String) {
   private def versionDir(table: String, v: Int): Path =
     tableDir(table).resolve(s"v=$v")
   private def metaPath(table: String): Path = tableDir(table).resolve("_meta.json")
+  private def noSuchTable(table: String): Nothing = sys.error(s"no such table: $table")
 
   // ------------------------------------------------------------- metadata
 
-  import TableStore.{Committed, Meta}
+  import TableStore.Meta
 
   /** Publish `m` as the table's committed metadata (atomic replace). */
   private def writeMeta(table: String, m: Meta): Meta = {
@@ -113,16 +123,37 @@ final class TableStore(spark: SparkSession, root: String) {
 
   def setProperties(table: String, props: Map[String, String]): Unit =
     withWriteLock(table) {
-      val m = meta(table).getOrElse(sys.error(s"no such table: $table"))
+      val m = meta(table).getOrElse(noSuchTable(table))
       // metadata-delta minimization (utils.py:1482-1487): only rewrite on change
       if (props.toSet.subsetOf(m.properties.toSet)) ()
       else writeMeta(table, m.copy(properties = m.properties ++ props))
     }
 
+  /** The one commit point for every operation that writes a version.
+    * Under the table's write lock it reads the committed metadata once
+    * (None for a new table), checks `expectedVersion`, and clears what an
+    * uncommitted writer left at the next version's dir: phantom rows that
+    * an appending write would absorb, and partial hardlinks that a retry's
+    * `createLink` would trip over. `body` then writes the snapshot for
+    * version `v` and returns the metadata to publish, with its own
+    * result. Last, the guard re-reads the pointer and `_meta.json` is
+    * published. */
+  private[store] def commit[R](table: String, expectedVersion: Option[Int] = None)(
+      body: (Option[Meta], Int) => (Meta, R)): (Meta, R) = withWriteLock(table) {
+    val current = meta(table)
+    checkExpected(table, current.map(_.version), expectedVersion)
+    val v = current.fold(0)(_.version + 1)
+    deleteRecursively(versionDir(table, v))
+    val (next, result) = body(current, v)
+    require(next.version == v, s"$table: a commit of v=$v published v=${next.version}")
+    commitGuard(table, current.map(_.version))
+    (writeMeta(table, next), result)
+  }
+
   // ----------------------------------------------------------------- read
 
   def read(table: String): DataFrame =
-    readCurrent(table, meta(table).getOrElse(sys.error(s"no such table: $table")))
+    readCurrent(table, meta(table).getOrElse(noSuchTable(table)))
 
   /** Time travel (S13): read any retained snapshot. Bucketed snapshots are
     * read through their catalog entry so the scan reports the PK hash
@@ -150,22 +181,18 @@ final class TableStore(spark: SparkSession, root: String) {
       .parquet(versionDir(table, version).toString)
   }
 
-  /** Append-only log write: current ∪ rows as a new snapshot version
-    * (creates the table on first call). NOTE this is a snapshot store —
-    * "append" rewrites the table; intended for validation/monitoring logs
-    * (rows per run, not data volume). For data-volume appends use
-    * [[appendFiles]]. */
-  def append(table: String, df: DataFrame): Unit = withWriteLock(table) {
-    val current = meta(table)
-    commitOverwrite(table, current,
-      current.fold(df)(m => readCurrent(table, m).unionByName(df)))
+  /** Append-only log write for validation/monitoring logs: creates the
+    * table by [[overwrite]] on the first call, then appends by
+    * [[appendFiles]] — O(batch) written per call. */
+  def append(table: String, df: DataFrame): Unit = commit(table) { (current, v) =>
+    if (current.isEmpty) overwritten(table, df)(current, v)
+    else filesAppended(table, df)(current, v)
   }
 
-  /** FILE-LEVEL append: the new snapshot version is hardlinks of every
-    * previous data file plus `df`'s files written alongside — O(batch)
-    * data written + O(files) inode links, never a table rewrite (the
-    * [[append]] above unions-and-rewrites; [[upsert]] rewrites too). This
-    * is the log-structured form a per-trigger streaming ingest needs:
+  /** FILE-LEVEL append: the new snapshot version is `df`'s files plus
+    * hardlinks of every previous data file — O(batch) data written +
+    * O(files) inode links, never a table rewrite ([[upsert]] rewrites).
+    * This is the log-structured form a per-trigger streaming ingest needs:
     * measured r13 (`datagen.StreamAnchor` at sf1), the containment ingest
     * gate's per-trigger cost was INDEX-sized under upsert re-seeding
     * (~32–48 s per 10k-doc trigger, growing with the accumulated corpus)
@@ -182,53 +209,52 @@ final class TableStore(spark: SparkSession, root: String) {
     * preserved: hardlinked files survive source-version pruning via inode
     * refcounts, exactly like [[replacePartitions]].
     *
-    * Hive-partitioned form (r15, the streaming-IVF ingest shape): every
-    * previous partition dir's files are hardlinked into the matching new
-    * dir and the batch appends with `partitionBy` — O(batch) data +
-    * O(files) links, partition pruning intact, untouched partitions share
-    * inodes with the previous version. Contrast [[replacePartitions]],
-    * which REPLACES the touched partitions' contents. */
-  def appendFiles(table: String, df: DataFrame): Unit = withWriteLock(table) {
-    val m = meta(table).getOrElse(sys.error(s"no such table: $table"))
+    * Hive-partitioned form (r15, the streaming-IVF ingest shape): the
+    * batch is written with the table's `partitionBy` and every previous
+    * partition dir's files are hardlinked into the matching new dir —
+    * O(batch) data + O(files) links, partition pruning intact, untouched
+    * partitions share inodes with the previous version. Contrast
+    * [[replacePartitions]], which REPLACES the touched partitions'
+    * contents. */
+  def appendFiles(table: String, df: DataFrame): Unit =
+    commit(table)(filesAppended(table, df))
+
+  /** The [[appendFiles]] body. */
+  private def filesAppended(table: String, df: DataFrame)(
+      current: Option[Meta], v: Int): (Meta, Unit) = {
+    val m = current.getOrElse(noSuchTable(table))
     require(m.buckets == 0,
       s"$table: appendFiles supports plain or hive-partitioned snapshots; " +
         "bucketed tables upsert (catalog-registered file layout)")
     val d = SchemaDiff.diff(m.schema, df.schema)
     require(d.isCompatible,
       s"$table: appendFiles needs the stored schema exactly (${d.describe})")
-    val v = m.version + 1
-    val newDir = versionDir(table, v)
-    val oldDir = versionDir(table, m.version)
-    // clobber any uncommitted v=N dir first — a crashed appendFiles
-    // leaves partial hardlinks (a retry's createLink would throw
-    // FileAlreadyExists), and a crashed OVERWRITE leaves orphan rows
-    // that mode("append") below would silently commit; every other
-    // writer gets this for free from mode("overwrite") (r13 review
-    // finding; see the StoreSpec crash-consistency test)
-    if (Files.exists(newDir)) deleteRecursively(newDir)
-    Files.createDirectories(newDir)
-    // hardlink the previous version's data files, preserving any hive
-    // partition dir structure (walk stops at regular files)
-    def linkInto(src: Path, dst: Path): Unit =
-      Files.list(src).iterator().asScala.foreach { f =>
-        val name = f.getFileName.toString
-        if (Files.isDirectory(f) && name.contains("=")) {
-          val sub = dst.resolve(name)
-          Files.createDirectories(sub)
-          linkInto(f, sub)
-        } else if (Files.isRegularFile(f) && !name.startsWith("_"))
-          Files.createLink(dst.resolve(name), f)
-      }
-    linkInto(oldDir, newDir)
+    val next = m.copy(version = v)
     // column order normalized to the stored schema; writer part-file names
     // are UUID-fresh, so they never collide with the linked files
-    val out = df.select(m.schema.fieldNames.toIndexedSeq.map(col): _*)
-    if (m.partitionCols.nonEmpty)
-      out.write.mode("append").partitionBy(m.partitionCols: _*)
-        .parquet(newDir.toString)
-    else out.write.mode("append").parquet(newDir.toString)
-    commitGuard(table, Some(m.version))
-    writeMeta(table, m.copy(version = v))
+    writeSnapshot(table, df.select(m.schema.fieldNames.toIndexedSeq.map(col): _*), next)
+    linkFiles(versionDir(table, m.version), versionDir(table, v))
+    (next, ())
+  }
+
+  /** Hardlink the data files under `from` into the same relative place
+    * under `to`, walking hive partition dirs (`col=value`) and leaving out
+    * the partition dirs named in `skip` (paths relative to `from`). Job
+    * markers (`_SUCCESS`) and their checksums belong to the writer of
+    * `to`, not to the data. */
+  private def linkFiles(from: Path, to: Path, skip: Set[String] = Set.empty): Unit = {
+    def walk(dir: Path): Unit = {
+      val target = to.resolve(from.relativize(dir).toString)
+      Files.createDirectories(target)
+      Files.list(dir).iterator().asScala.foreach { f =>
+        val name = f.getFileName.toString
+        if (Files.isDirectory(f)) {
+          if (name.contains("=") && !skip(from.relativize(f).toString)) walk(f)
+        } else if (!name.startsWith("_") && !name.startsWith("._"))
+          Files.createLink(target.resolve(name), f)
+      }
+    }
+    walk(from)
   }
 
   /** Catalog identifier for a bucketed snapshot — scoped by a store-root
@@ -237,14 +263,18 @@ final class TableStore(spark: SparkSession, root: String) {
   private def catalogName(table: String, version: Int): String =
     f"graft_${math.abs(root.hashCode)}%x_${table}_v$version"
 
-  /** Write one immutable snapshot. With `buckets > 0` the snapshot is a
-    * catalog-registered EXTERNAL bucketed table at the version dir: the
-    * files stay in the store layout, and readers via [[readVersion]] get a
-    * scan whose output partitioning is `hash(pks) % buckets` — so the next
-    * upsert's window/anti-join over the STORED side needs no Exchange.
-    * That is the production pattern for a 100 TB feature table: the big
-    * side is written hash-placed once and every later merge only shuffles
-    * the incoming batch.
+  /** Write `df` as the snapshot of `next.version`, in the layout `next`
+    * records — the one place that chooses between bucketed,
+    * hive-partitioned and plain.
+    *
+    * With `buckets > 0` the snapshot is a catalog-registered EXTERNAL
+    * bucketed table at the version dir: the files stay in the store
+    * layout, and readers via [[readVersion]] get a scan whose output
+    * partitioning is `hash(pks) % buckets` — so the next upsert's
+    * window/anti-join over the STORED side needs no Exchange. That is the
+    * production pattern for a 100 TB feature table: the big side is
+    * written hash-placed once and every later merge only shuffles the
+    * incoming batch.
     *
     * `shuffleToBuckets` controls file layout, NOT correctness: the bucketed
     * writer splits every task's rows into per-bucket files regardless of
@@ -255,23 +285,22 @@ final class TableStore(spark: SparkSession, root: String) {
     * the write would re-shuffle the whole table and undo the anti-join
     * topology's point. Extra per-task bucket files are reconciled by
     * [[compact]]. */
-  private def writeSnapshot(table: String, df: DataFrame, v: Int,
-                            buckets: Int, pks: Seq[String],
-                            shuffleToBuckets: Boolean = true,
-                            partitionCols: Seq[String] = Nil): Unit = {
-    if (buckets > 0 && pks.nonEmpty) {
-      val in = if (shuffleToBuckets) df.repartition(buckets, pks.map(col): _*) else df
+  private def writeSnapshot(table: String, df: DataFrame, next: Meta,
+                            shuffleToBuckets: Boolean = true): Unit = {
+    val dir = versionDir(table, next.version).toString
+    val pks = next.primaryKeys
+    if (next.buckets > 0 && pks.nonEmpty) {
+      val in = if (shuffleToBuckets) df.repartition(next.buckets, pks.map(col): _*) else df
       in.write.mode("overwrite").format("parquet")
-        .option("path", versionDir(table, v).toString)
-        .bucketBy(buckets, pks.head, pks.tail: _*)
+        .option("path", dir)
+        .bucketBy(next.buckets, pks.head, pks.tail: _*)
         .sortBy(pks.head, pks.tail: _*)
-        .saveAsTable(catalogName(table, v))
-    } else if (partitionCols.nonEmpty)
+        .saveAsTable(catalogName(table, next.version))
+    } else if (next.partitionCols.nonEmpty)
       // hive-layout snapshot: reads prune partition dirs on the partition
       // predicate (the date-partitioned 100 TB feature-table layout)
-      df.write.mode("overwrite").partitionBy(partitionCols: _*)
-        .parquet(versionDir(table, v).toString)
-    else df.write.mode("overwrite").parquet(versionDir(table, v).toString)
+      df.write.mode("overwrite").partitionBy(next.partitionCols: _*).parquet(dir)
+    else df.write.mode("overwrite").parquet(dir)
   }
 
   def currentVersion(table: String): Int =
@@ -288,10 +317,8 @@ final class TableStore(spark: SparkSession, root: String) {
                 overwriteSchema: Boolean = false,
                 expectedVersion: Option[Int] = None,
                 buckets: Int = 0, partitionBy: Seq[String] = Nil): Unit =
-    withWriteLock(table) {
-      commitOverwrite(table, meta(table), df, primaryKeys, timestampKeys, description,
-        mergeSchema, overwriteSchema, expectedVersion, buckets, partitionBy)
-    }
+    commit(table, expectedVersion)(overwritten(table, df, primaryKeys, timestampKeys,
+      description, mergeSchema, overwriteSchema, buckets, partitionBy))
 
   /** `write` applied to `df`, and the number of rows it wrote, counted on
     * the write itself with `Dataset.observe`: no second pass over the data.
@@ -303,17 +330,18 @@ final class TableStore(spark: SparkSession, root: String) {
     rows.get("rows").asInstanceOf[Long]
   }
 
-  /** [[overwrite]] from `current`, the metadata the caller read under the
-    * table's write lock; `properties` are added to the committed ones.
-    * Returns the committed metadata and the rows written. */
-  private[store] def commitOverwrite(
-      table: String, current: Option[Meta], df: DataFrame,
+  /** The [[overwrite]] body: the schema policy applied to `df` against
+    * `current`, and the keys and layout from the arguments or else from
+    * `current`; `properties` are added to the committed ones. Returns the
+    * metadata to publish and the rows written. */
+  private[store] def overwritten(
+      table: String, df: DataFrame,
       primaryKeys: Seq[String] = Nil, timestampKeys: Seq[String] = Nil,
       description: String = "", mergeSchema: Boolean = false,
-      overwriteSchema: Boolean = false, expectedVersion: Option[Int] = None,
-      buckets: Int = 0, partitionBy: Seq[String] = Nil,
-      properties: Map[String, String] = Map.empty): Committed = {
-    checkExpected(table, current.map(_.version), expectedVersion)
+      overwriteSchema: Boolean = false, buckets: Int = 0,
+      partitionBy: Seq[String] = Nil,
+      properties: Map[String, String] = Map.empty)(
+      current: Option[Meta], v: Int): (Meta, Long) = {
     val out = current match {
       case Some(m) =>
         val d = SchemaDiff.diff(m.schema, df.schema)
@@ -334,20 +362,18 @@ final class TableStore(spark: SparkSession, root: String) {
           sys.error(s"schema mismatch for $table (${d.describe}); pass mergeSchema or overwriteSchema")
       case None => df
     }
-    val v = current.map(_.version + 1).getOrElse(0)
-    val pks = if (primaryKeys.nonEmpty) primaryKeys else current.map(_.primaryKeys).getOrElse(Nil)
     val nb = if (buckets > 0) buckets else current.map(_.buckets).getOrElse(0)
     val pcols = if (partitionBy.nonEmpty) partitionBy else current.map(_.partitionCols).getOrElse(Nil)
     require(nb == 0 || pcols.isEmpty,
       s"$table: bucketed and hive-partitioned layouts are mutually exclusive")
-    val rows = countedWrite(out)(writeSnapshot(table, _, v, nb, pks, partitionCols = pcols))
-    commitGuard(table, current.map(_.version))
-    Committed(writeMeta(table, Meta(v, out.schema.json, pks,
+    val next = Meta(v, out.schema.json,
+      if (primaryKeys.nonEmpty) primaryKeys else current.map(_.primaryKeys).getOrElse(Nil),
       if (timestampKeys.nonEmpty) timestampKeys else current.map(_.timestampKeys).getOrElse(Nil),
       nb,
       if (description.nonEmpty) description else current.map(_.description).getOrElse(""),
       current.map(_.properties).getOrElse(Map.empty) ++ properties,
-      pcols)), rows)
+      pcols)
+    (next, countedWrite(out)(writeSnapshot(table, _, next)))
   }
 
   /** S8 — upsert by primary key (MERGE whenMatchedUpdate +
@@ -357,33 +383,25 @@ final class TableStore(spark: SparkSession, root: String) {
     * `utils.py:1727-1737`). Idempotent: replaying a batch yields the same
     * table. */
   def upsert(table: String, df: DataFrame, primaryKeys: Seq[String] = Nil,
-             expectedVersion: Option[Int] = None): Unit = withWriteLock(table) {
-    commitUpsert(table, meta(table), df, primaryKeys, expectedVersion)
-  }
+             expectedVersion: Option[Int] = None): Unit =
+    commit(table, expectedVersion)(upserted(table, df, primaryKeys))
 
-  /** [[upsert]] from `current`, read under the table's write lock, as
-    * [[commitOverwrite]]. */
-  private[store] def commitUpsert(table: String, current: Option[Meta], df: DataFrame,
-                                  primaryKeys: Seq[String] = Nil,
-                                  expectedVersion: Option[Int] = None,
-                                  properties: Map[String, String] = Map.empty): Committed =
-    current match {
-      case None =>
-        require(primaryKeys.nonEmpty, "first write needs primaryKeys")
-        checkExpected(table, None, expectedVersion)
-        commitOverwrite(table, None, df, primaryKeys, properties = properties)
-      case Some(m) =>
-        checkExpected(table, Some(m.version), expectedVersion)
-        val pks = if (primaryKeys.nonEmpty) primaryKeys else m.primaryKeys
-        require(pks.nonEmpty, s"$table has no primary keys; cannot upsert")
-        val merged = mergedForUpsert(table, df, pks, m)
-        val v = m.version + 1
-        val rows = countedWrite(merged)(writeSnapshot(table, _, v, m.buckets, pks,
-          shuffleToBuckets = false, partitionCols = m.partitionCols))
-        commitGuard(table, Some(m.version))
-        Committed(writeMeta(table, m.copy(version = v, schemaJson = merged.schema.json,
-          properties = m.properties ++ properties)), rows)
-    }
+  /** The [[upsert]] body, as [[overwritten]]; a first write overwrites. */
+  private[store] def upserted(table: String, df: DataFrame,
+                              primaryKeys: Seq[String] = Nil,
+                              properties: Map[String, String] = Map.empty)(
+      current: Option[Meta], v: Int): (Meta, Long) = current match {
+    case None =>
+      require(primaryKeys.nonEmpty, "first write needs primaryKeys")
+      overwritten(table, df, primaryKeys, properties = properties)(None, v)
+    case Some(m) =>
+      val pks = if (primaryKeys.nonEmpty) primaryKeys else m.primaryKeys
+      require(pks.nonEmpty, s"$table has no primary keys; cannot upsert")
+      val merged = mergedForUpsert(table, df, pks, m)
+      val next = m.copy(version = v, schemaJson = merged.schema.json,
+        properties = m.properties ++ properties)
+      (next, countedWrite(merged)(writeSnapshot(table, _, next, shuffleToBuckets = false)))
+  }
 
   /** Build the post-merge frame for an upsert (exposed for plan-shape
     * specs). Two formulations with identical semantics — prefer the
@@ -400,7 +418,7 @@ final class TableStore(spark: SparkSession, root: String) {
   private[graft] def mergedForUpsert(table: String, df: DataFrame,
                                      pks: Seq[String], m: Meta): DataFrame = {
     if (m.buckets > 0) {
-      val current = read(table)
+      val current = readCurrent(table, m)
       // implicit ALTER ADD COLUMNS on both sides (utils.py:1727-1737)
       val curTypes = current.schema.map(f => f.name -> f.dataType).toMap
       val incTypes = df.schema.map(f => f.name -> f.dataType).toMap
@@ -420,7 +438,7 @@ final class TableStore(spark: SparkSession, root: String) {
         .join(incDedup.select(pks.map(col): _*), pks, "left_anti")
         .unionByName(incDedup)
     } else {
-      val current = read(table).withColumn("__src", lit(0))
+      val current = readCurrent(table, m).withColumn("__src", lit(0))
       val incoming = df.withColumn("__src", lit(1))
       val unioned = current.unionByName(incoming, allowMissingColumns = true)
       val dataCols = unioned.columns.filterNot(c => c == "__src" || pks.contains(c))
@@ -440,16 +458,15 @@ final class TableStore(spark: SparkSession, root: String) {
 
   /** S9 — replaceWhere: rewrite only the rows NOT matching the predicate,
     * union the incoming batch (partition-scoped overwrite semantics,
-    * `storage_operations.py:161-202`). */
+    * `storage_operations.py:161-202`), in the table's layout. */
   def replaceWhere(table: String, df: DataFrame, predicate: String): Unit =
-    withWriteLock(table) {
-      val m = meta(table).getOrElse(sys.error(s"no such table: $table"))
-      val kept = read(table).where(s"NOT ($predicate)")
-      val out = kept.unionByName(df, allowMissingColumns = true)
-      val v = m.version + 1
-      writeSnapshot(table, out, v, m.buckets, m.primaryKeys)
-      commitGuard(table, Some(m.version))
-      writeMeta(table, m.copy(version = v, schemaJson = out.schema.json))
+    commit(table) { (current, v) =>
+      val m = current.getOrElse(noSuchTable(table))
+      val out = readCurrent(table, m).where(s"NOT ($predicate)")
+        .unionByName(df, allowMissingColumns = true)
+      val next = m.copy(version = v, schemaJson = out.schema.json)
+      writeSnapshot(table, out, next)
+      (next, ())
     }
 
   /** Change-data view between two snapshot versions: one row per primary
@@ -465,7 +482,7 @@ final class TableStore(spark: SparkSession, root: String) {
     * of row width, and on a bucketed table both sides are pre-placed so
     * the join is zero-Exchange. */
   def diffVersions(table: String, vOld: Int, vNew: Int): DataFrame = {
-    val m = meta(table).getOrElse(sys.error(s"no such table: $table"))
+    val m = meta(table).getOrElse(noSuchTable(table))
     require(m.primaryKeys.nonEmpty, s"$table has no primary keys to diff by")
     val pks = m.primaryKeys
     // hash the SHARED payload columns (sorted, so column order is
@@ -514,74 +531,55 @@ final class TableStore(spark: SparkSession, root: String) {
     * hive-escaped values (spaces etc.) match by construction — both
     * versions' dir names come from the same Spark writer encoding. */
   def replacePartitions(table: String, df: DataFrame): Unit =
-    withWriteLock(table) {
-    val m = meta(table).getOrElse(sys.error(s"no such table: $table"))
-    require(m.partitionCols.nonEmpty,
-      s"$table is not hive-partitioned; use overwrite/replaceWhere")
-    require(df.columns.toSet == m.schema.fieldNames.toSet,
-      s"$table: replacePartitions needs the stored schema (mixed-schema " +
-        s"partitions would corrupt reads); got ${df.columns.mkString(",")}")
-    val pcols = m.partitionCols
-    val v = m.version + 1
-    val newDir = versionDir(table, v)
-    val oldDir = versionDir(table, m.version)
-    df.write.mode("overwrite").partitionBy(pcols: _*).parquet(newDir.toString)
-    def partitionDirs(base: Path, depth: Int): Seq[Path] =
-      if (depth == 0) Seq(base)
-      else Files.list(base).iterator().asScala.toSeq
-        .filter(p => Files.isDirectory(p) && p.getFileName.toString.contains("="))
-        .flatMap(p => partitionDirs(p, depth - 1))
-    // the touched partitions, in hive dir encoding (col=value/col2=value2),
-    // read back from what the writer ACTUALLY produced — a nondeterministic
-    // df cannot drift between "decide touched" and "write"
-    val touched = partitionDirs(newDir, pcols.size)
-      .map(p => newDir.relativize(p).toString).toSet
-    // hardlink every untouched partition's files from the previous version
-    partitionDirs(oldDir, pcols.size).foreach { pdir =>
-      val rel = oldDir.relativize(pdir).toString
-      if (!touched.contains(rel)) {
-        val target = newDir.resolve(rel)
-        Files.createDirectories(target)
-        Files.list(pdir).iterator().asScala
-          .filter(f => Files.isRegularFile(f) && !f.getFileName.toString.startsWith("_"))
-          .foreach(f => Files.createLink(target.resolve(f.getFileName.toString), f))
-      }
-    }
-    commitGuard(table, Some(m.version))
-    writeMeta(table, m.copy(version = v))
+    commit(table) { (current, v) =>
+      val m = current.getOrElse(noSuchTable(table))
+      require(m.partitionCols.nonEmpty,
+        s"$table is not hive-partitioned; use overwrite/replaceWhere")
+      require(df.columns.toSet == m.schema.fieldNames.toSet,
+        s"$table: replacePartitions needs the stored schema (mixed-schema " +
+          s"partitions would corrupt reads); got ${df.columns.mkString(",")}")
+      val next = m.copy(version = v)
+      writeSnapshot(table, df, next)
+      val newDir = versionDir(table, v)
+      def partitionDirs(base: Path, depth: Int): Seq[Path] =
+        if (depth == 0) Seq(base)
+        else Files.list(base).iterator().asScala.toSeq
+          .filter(p => Files.isDirectory(p) && p.getFileName.toString.contains("="))
+          .flatMap(p => partitionDirs(p, depth - 1))
+      // the touched partitions, in hive dir encoding (col=value/col2=value2),
+      // read back from what the writer ACTUALLY produced — a nondeterministic
+      // df cannot drift between "decide touched" and "write"
+      val touched = partitionDirs(newDir, m.partitionCols.size)
+        .map(p => newDir.relativize(p).toString).toSet
+      linkFiles(versionDir(table, m.version), newDir, skip = touched)
+      (next, ())
     }
 
   /** S12 — compaction: rewrite current version with `n` files and prune
     * versions older than `retain`. */
   def compact(table: String, n: Int = 1, retain: Int = 2): Unit =
     withWriteLock(table) {
-    val m = meta(table).getOrElse(sys.error(s"no such table: $table"))
-    val v = m.version + 1
-    // bucketed tables keep their bucket count (that IS the file layout);
-    // hive-partitioned tables keep their dir layout — a flat rewrite here
-    // would silently break partition pruning AND the next
-    // replacePartitions (which hardlinks "untouched" partitions from the
-    // previous version's dirs: none exist in a flat snapshot, so every
-    // untouched row would be dropped — the r15 StoreSpec regression);
-    // hashing on the partition cols lands each value in one task → one
-    // file per partition dir
-    if (m.buckets > 0) writeSnapshot(table, read(table), v, m.buckets, m.primaryKeys)
-    else if (m.partitionCols.nonEmpty)
-      read(table).repartition(n, m.partitionCols.map(col): _*)
-        .write.mode("overwrite").partitionBy(m.partitionCols: _*)
-        .parquet(versionDir(table, v).toString)
-    else read(table).repartition(n).write.mode("overwrite")
-      .parquet(versionDir(table, v).toString)
-    commitGuard(table, Some(m.version))
-    writeMeta(table, m.copy(version = v))
-    val dir = tableDir(table)
-    Files.list(dir).iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith("v="))
-      .filter(p => p.getFileName.toString.drop(2).toInt <= v - retain)
-      .foreach { p =>
-        spark.sql(s"DROP TABLE IF EXISTS ${catalogName(table, p.getFileName.toString.drop(2).toInt)}")
-        deleteRecursively(p)
+      val (m, _) = commit(table) { (current, v) =>
+        val m = current.getOrElse(noSuchTable(table))
+        val in = readCurrent(table, m)
+        // writeSnapshot keeps the layout: a bucketed table is re-hashed to
+        // one file per bucket; a hive-partitioned one is hashed on its
+        // partition cols, so each value lands in one task → one file per
+        // partition dir
+        val next = m.copy(version = v)
+        writeSnapshot(table,
+          if (m.buckets > 0) in
+          else if (m.partitionCols.isEmpty) in.repartition(n)
+          else in.repartition(n, m.partitionCols.map(col): _*), next)
+        (next, ())
       }
+      Files.list(tableDir(table)).iterator().asScala
+        .filter(p => p.getFileName.toString.startsWith("v="))
+        .filter(p => p.getFileName.toString.drop(2).toInt <= m.version - retain)
+        .foreach { p =>
+          spark.sql(s"DROP TABLE IF EXISTS ${catalogName(table, p.getFileName.toString.drop(2).toInt)}")
+          deleteRecursively(p)
+        }
     }
 
   /** Optimistic concurrency (the Delta `txnVersion` face): a writer that
@@ -623,10 +621,6 @@ object TableStore {
     lazy val schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
   }
 
-  /** A committed write: the metadata it published and the rows its
-    * snapshot holds. */
-  private[store] final case class Committed(meta: Meta, rows: Long)
-
   /** `_meta.json` layout; the field names are the on-disk format. */
   private[store] def encode(m: Meta): ObjectNode = {
     val o = MetaJson.obj().put("version", m.version).put("schemaJson", m.schemaJson)
@@ -660,17 +654,17 @@ object FeatureStore {
                               diff: Option[SchemaDiff])
 
   /** Validate `df` against the stored schema, then overwrite (new or
-    * forced) or upsert. One metadata read under the table's write lock;
-    * the `graft.*` key properties and the caller's `properties` ride the
-    * data commit, so a save writes `_meta.json` once. */
+    * forced) or upsert, as one [[TableStore]] commit: the checks run on
+    * the metadata the commit read under the table's write lock, and the
+    * `graft.*` key properties and the caller's `properties` ride the data
+    * commit, so a save writes `_meta.json` once. */
   def save(store: TableStore, table: String, df: DataFrame,
            primaryKeys: Seq[String], timestampKeys: Seq[String],
            description: String = "", forceOverwrite: Boolean = false,
            overwriteSchema: Boolean = false,
            policy: MissingColumnPolicy = FailOnMissing,
            properties: Map[String, String] = Map.empty): SaveReport =
-    store.withWriteLock(table) {
-      val current = store.meta(table)
+    store.commit(table) { (current, v) =>
       val diff = current.map(m => SchemaDiff.diff(m.schema, df.schema))
       diff.foreach { d =>
         if (d.missingColumns.nonEmpty && policy == FailOnMissing && !overwriteSchema)
@@ -682,11 +676,11 @@ object FeatureStore {
         "graft.primaryKeys" -> primaryKeys.mkString(","),
         "graft.timestampKeys" -> timestampKeys.mkString(","),
         "graft.description" -> description)
-      val committed =
+      val (next, rows) =
         if (forceOverwrite || current.isEmpty)
-          store.commitOverwrite(table, current, df, primaryKeys, timestampKeys, description,
-            mergeSchema = true, overwriteSchema = overwriteSchema, properties = props)
-        else store.commitUpsert(table, current, df, primaryKeys, properties = props)
-      SaveReport(table, committed.meta.version, committed.rows, diff)
-    }
+          store.overwritten(table, df, primaryKeys, timestampKeys, description,
+            mergeSchema = true, overwriteSchema = overwriteSchema, properties = props)(current, v)
+        else store.upserted(table, df, primaryKeys, properties = props)(current, v)
+      (next, SaveReport(table, v, rows, diff))
+    }._2
 }

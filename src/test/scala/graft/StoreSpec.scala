@@ -246,30 +246,52 @@ class StoreSpec extends AnyFunSuite {
   }
 
   test("appendFiles is crash-retryable and never absorbs an orphan dir") {
-    val root = Files.createTempDirectory("graft_store_afc")
-    val store = new TableStore(spark, root.toString)
-    store.overwrite("af", Seq((1, "a")).toDF("pk", "v"), primaryKeys = Seq("pk"))
-    // a crashed OVERWRITE's orphan at the next version: its phantom rows
-    // must NOT ride into the committed append (mode("append") into a
-    // dirty dir would keep them)
-    Seq((99, "ORPHAN")).toDF("pk", "v").write
-      .parquet(root.resolve("af").resolve("v=1").toString)
-    store.appendFiles("af", Seq((2, "b")).toDF("pk", "v"))
-    assert(store.read("af").orderBy("pk").as[(Int, String)].collect().toSeq ==
-      Seq((1, "a"), (2, "b")))
-    // a crashed APPENDFILES' partial hardlinks at the next version: the
-    // retry must not throw FileAlreadyExists on re-linking
-    import scala.jdk.CollectionConverters._
-    val v1 = root.resolve("af").resolve("v=1")
-    val v2 = root.resolve("af").resolve("v=2")
-    Files.createDirectories(v2)
-    Files.list(v1).iterator().asScala
-      .filter(f => Files.isRegularFile(f) && !f.getFileName.toString.startsWith("_"))
-      .take(1)
-      .foreach(f => Files.createLink(v2.resolve(f.getFileName.toString), f))
-    store.appendFiles("af", Seq((3, "c")).toDF("pk", "v")) // the retry
-    assert(store.read("af").orderBy("pk").as[(Int, String)].collect().toSeq ==
-      Seq((1, "a"), (2, "b"), (3, "c")))
+    // every version writer, on every layout it supports, against what a
+    // writer killed before its commit leaves at the next version: a
+    // crashed overwrite's phantom rows, and a crashed appendFiles' partial
+    // hardlinks (a retry's createLink would throw FileAlreadyExists;
+    // mode("append") into the dirty dir would keep the phantom)
+    val base = (1L to 6L).map(i => (i, (i % 3 + 1).toInt, i * 1.0)).toDF("id", "month", "amt")
+    val batch = Seq((7L, 1, 7.0)).toDF("id", "month", "amt")
+    def create(layout: String, s: TableStore, t: String): Unit = layout match {
+      case "plain" => s.overwrite(t, base, primaryKeys = Seq("id"))
+      case "bucketed" => s.overwrite(t, base, primaryKeys = Seq("id"), buckets = 2)
+      case "hive" => s.overwrite(t, base, primaryKeys = Seq("id"), partitionBy = Seq("month"))
+    }
+    val all = Seq("plain", "bucketed", "hive")
+    // (entry point, layouts it supports, the op, rows after it)
+    val ops = Seq[(String, Seq[String], (TableStore, String) => Unit, Long)](
+      ("overwrite", all, (s, t) => s.overwrite(t, batch), 1),
+      ("upsert", all, (s, t) => s.upsert(t, batch), 7),
+      ("append", Seq("plain", "hive"), (s, t) => s.append(t, batch), 7),
+      ("appendFiles", Seq("plain", "hive"), (s, t) => s.appendFiles(t, batch), 7),
+      ("replaceWhere", all, (s, t) => s.replaceWhere(t, batch, "month = 1"), 5),
+      ("replacePartitions", Seq("hive"), (s, t) => s.replacePartitions(t, batch), 5),
+      ("compact", all, (s, t) => s.compact(t, n = 1, retain = 2), 6),
+      ("FeatureStore.save", all, (s, t) =>
+        FeatureStore.save(s, t, batch, Seq("id"), Nil), 7))
+    for ((op, supported, run, rows) <- ops; layout <- supported) {
+      val root = Files.createTempDirectory("graft_store_orphan")
+      val store = new TableStore(spark, root.toString)
+      val t = "o"
+      create(layout, store, t)
+      val (v0, v1) = (root.resolve(t).resolve("v=0"), root.resolve(t).resolve("v=1"))
+      val phantom = Seq((99L, 1, -99.0)).toDF("id", "month", "amt").write
+      if (layout == "hive") phantom.partitionBy("month").parquet(v1.toString)
+      else phantom.parquet(v1.toString)
+      // one data file of v=0 linked at its own relative path under v=1
+      val linked = Files.walk(v0).iterator().asScala
+        .find(f => Files.isRegularFile(f) && f.getFileName.toString.startsWith("part-")).get
+      val dst = v1.resolve(v0.relativize(linked).toString)
+      Files.createDirectories(dst.getParent)
+      Files.createLink(dst, linked)
+      val what = s"$op on a $layout table"
+      run(store, t)
+      assert(store.currentVersion(t) == 1, what)
+      val out = store.read(t)
+      assert(out.where($"id" === 99L).count() == 0, s"$what: a phantom row surfaced")
+      assert(out.count() == rows, what)
+    }
   }
 
   test("crash consistency: a snapshot dir without the _meta.json commit is " +
@@ -396,6 +418,32 @@ class StoreSpec extends AnyFunSuite {
     assert(after.where(col("month") === 1).count() == 30)  // NOT silently dropped
     assert(after.where(col("month") === 3).count() == 30)
     assert(after.count() == 61)
+  }
+
+  test("replaceWhere keeps the hive partition layout — replacePartitions " +
+      "after replaceWhere keeps untouched rows") {
+    import org.apache.spark.sql.functions.col
+    val root = Files.createTempDirectory("graft_store_rwh")
+    val store = new TableStore(spark, root.toString)
+    val df = (1L to 90L).map(i => (i, (i % 3 + 1).toInt, i * 1.0)).toDF("id", "month", "amt")
+    store.overwrite("pw", df, primaryKeys = Seq("id"), partitionBy = Seq("month"))
+    store.replaceWhere("pw", Seq((9000L, 1, -1.0)).toDF("id", "month", "amt"), "month = 1")
+    assert(store.read("pw").count() == 61)
+    store.replacePartitions("pw", Seq((9100L, 2, -9.0)).toDF("id", "month", "amt"))
+    val after = store.read("pw")
+    assert(after.count() == 32)
+    assert(after.where(col("month") === 1).count() == 1)
+    assert(after.where(col("month") === 2).count() == 1)   // replaced wholesale
+    assert(after.where(col("month") === 3).count() == 30)  // NOT silently dropped
+    // the replaceWhere snapshot has hive dirs, and a month filter reads one
+    val v1 = root.resolve("pw").resolve("v=1")
+    assert(Files.list(v1).iterator().asScala.filter(Files.isDirectory(_))
+      .map(_.getFileName.toString).toSet == Set("month=1", "month=2", "month=3"))
+    val scan = store.readVersion("pw", 1).where(col("month") === 3)
+      .queryExecution.executedPlan.collectLeaves()
+      .collectFirst { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
+      .getOrElse(fail("no file scan"))
+    assert(scan.selectedPartitions.partitionCount == 1, scan.metadata("PartitionFilters"))
   }
 
   test("replaceWhere rewrites only the matching slice") {
@@ -671,5 +719,41 @@ class StoreSpec extends AnyFunSuite {
     val emptyUpsert = bounded(save("rc", none.select($"pk", $"ts", $"a".cast("int").as("b"))))
     assert(emptyUpsert.rows == 2)
     matchesRead(emptyUpsert)
+  }
+
+  test("one commit protocol: writeMeta, commitGuard and the version bump appear " +
+      "only inside TableStore.commit") {
+    val src = java.nio.file.Paths.get("src/main/scala/graft/store/TableStore.scala")
+    assert(Files.isRegularFile(src), s"run from the repo root (no $src)")
+    val lines = Files.readAllLines(src).asScala.toIndexedSeq
+    /** The lines of the member defined on the line containing `head`, up to
+      * the next line at member indentation (its closing brace). */
+    def member(head: String): Range = {
+      val start = lines.indexWhere(_.contains(head))
+      assert(start >= 0, s"no `$head` in $src")
+      start to lines.indexWhere(l => l.startsWith("  ") && !l.startsWith("   "), start + 1)
+    }
+    val commit = member("def commit[")
+    // setProperties publishes metadata without writing a version
+    val setProperties = member("def setProperties(")
+    val protocol = Seq("writeMeta(", "commitGuard(")
+    val bump = """version\s*\+\s*1|versionDir\([^)]*\+\s*1""".r
+    val code = lines.zipWithIndex.filterNot { case (l, _) =>
+      val t = l.trim
+      Seq("*", "/**", "//").exists(t.startsWith) ||
+        Seq("def writeMeta(", "def commitGuard(").exists(t.contains)
+    }
+    val hits = code.collect {
+      case (l, i) if (protocol.exists(l.contains) || bump.findFirstIn(l).isDefined) &&
+          !commit.contains(i) && !(setProperties.contains(i) && l.contains("writeMeta(")) =>
+        s"$src:${i + 1}: ${l.trim}"
+    }
+    assert(hits.isEmpty, hits.mkString(
+      "version commit steps outside TableStore.commit (run the op's body through commit):\n",
+      "\n", ""))
+    // and commit runs each step once
+    (protocol :+ "version + 1").foreach { step =>
+      assert(code.count { case (l, i) => commit.contains(i) && l.contains(step) } == 1, step)
+    }
   }
 }
