@@ -33,11 +33,12 @@ import graft.streaming.Streaming
   * [legs: all|containment|neardup|ks|killrestart] [gate: exact|banded]` —
   * the `killrestart` leg (r15) measures the EXACTLY-ONCE claim end-to-end:
   * it runs the containment gate with an injected crash at the worst point
-  * of trigger 1 (after the seed log + index appends, before the clean
-  * commit — `Streaming.crashHook`), restarts the query from its real
-  * checkpoint, and asserts the clean table AND the df table equal a
-  * parallel no-crash control run, reporting per-trigger costs of all
-  * three query incarnations. The legs selector
+  * of trigger 1 (after the index appends, before the clean commit —
+  * `Streaming.crashHook`), restarts the query from its real checkpoint,
+  * and asserts the clean table AND the df table equal a parallel
+  * no-crash control run (the replay reads the index before its txn and
+  * re-writes nothing), reporting per-trigger costs of all three query
+  * incarnations. The legs selector
   * exists because the sf10 campaign needs the KS gate measured on its own
   * (r13: the containment leg's guard trip aborted the whole run before
   * the KS leg started), and `banded` anchors the winnowed-fingerprint
@@ -90,10 +91,11 @@ object StreamAnchor {
         .select("doc_id", "text")
       val docDir = s"$work/docs"
       stage(docs, "doc_id", batches, docDir)
-      // the production gate: append-only index seeding + replay-guarded
-      // clean appends — per-trigger cost must stay BATCH-bounded (the r13
-      // before-number, upsert re-seeding, grew with the accumulated index:
-      // 32–48 s per 10k-doc trigger; bench/stream_anchor_sf1_upsert_r13.json)
+      // the production gate: append-only index seeding + clean appends
+      // through the trigger's txn view — per-trigger cost must stay
+      // BATCH-bounded (the r13 before-number, upsert re-seeding, grew with
+      // the accumulated index: 32–48 s per 10k-doc trigger;
+      // bench/stream_anchor_sf1_upsert_r13.json)
       val qc = Streaming.containmentIngestGate(
         spark.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", 1).parquet(docDir),

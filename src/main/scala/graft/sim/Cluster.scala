@@ -242,19 +242,16 @@ object Cluster {
     * shuffled. Within-batch resolution self-joins only the batch on the
     * cluster key. Kept rows' signatures register (PK id) so the next
     * batch sees them — default PK upsert (a corpus-sized snapshot
-    * rewrite per call; streaming callers use
-    * [[graft.streaming.Streaming.nearDupIngestGate]] with
-    * `method = "embedding"` or `appendOnly = true`).
+    * rewrite per call); streaming callers pass `appendOnly = true` and a
+    * txn view, as [[graft.text.Dedup.minhashIncremental]] describes
+    * ([[graft.streaming.Streaming.nearDupIngestGate]] with
+    * `method = "embedding"`).
     *
-    * `excludeCorpusIds` is the at-least-once replay hook (the
-    * [[graft.text.Dedup.containmentIncremental]] contract, verbatim).
     * Returns the batch plus `dup_of_corpus` and `kept`. */
   def embeddingIncremental(store: graft.store.TableStore, sigTable: String,
                            batch: DataFrame, vecCol: String, idCol: String,
                            centroids: Seq[Seq[Long]],
                            threshold: Double = 0.95,
-                           excludeCorpusIds: Option[DataFrame] = None,
-                           registerSurvivors: Boolean = true,
                            appendOnly: Boolean = false,
                            broadcastMaxProbeDocs: Long = 65536): DataFrame = {
     // pinned: one assign+quantize pass feeds the corpus probe, the batch
@@ -273,18 +270,14 @@ object Cluster {
     val simGate = (cA: Column, sA: Column, cB: Column, sB: Column) =>
       round(GraftFunctions.cosine(deq(cA, sA), deq(cB, sB)), 6) >= threshold
     val corpusDupIds =
-      if (store.exists(sigTable)) {
-        val hits = store.read(sigTable)
+      if (store.exists(sigTable))
+        store.read(sigTable)
           .select(col("id").as("old_id"), col("cluster"),
             col("codes").as("c_old"), col("scale").as("s_old"))
           .join(probeSide(batchSigs), Seq("cluster"))
           .where(simGate(col("c_new"), col("s_new"), col("c_old"), col("s_old")))
-        // replay exclusion — the containmentIncremental contract, verbatim
-        excludeCorpusIds.fold(hits)(ex => hits.join(
-            probeSide(ex.select(col("id").cast("long").as("old_id"))),
-            Seq("old_id"), "left_anti"))
           .select(col("new_id")).distinct().withColumn("__cd", lit(true))
-      } else batchSigs.select(col("new_id")).limit(0).withColumn("__cd", lit(true))
+      else batchSigs.select(col("new_id")).limit(0).withColumn("__cd", lit(true))
     // within-batch greedy resolution (semanticDupPairs rule), batch-sized
     val bb = batchSigs.repartition(col("cluster"))
     val a = bb.select(col("cluster"), col("new_id").as("id_a"),
@@ -302,11 +295,9 @@ object Cluster {
       .withColumn("dup_of_corpus", coalesce(col("__cd"), lit(false)))
       .withColumn("kept", !col("dup_of_corpus") && coalesce(col("__bd"), lit(false)) === false)
       .localCheckpoint() // one materialization for store write + caller (inv. 7)
-    if (registerSurvivors)
-      graft.text.Dedup.putSeed(store, sigTable, flagged.where(col("kept"))
-        .select(col("new_id").as("id"), col("__cluster").as("cluster"),
-          col("__codes").as("codes"), col("__scale").as("scale")),
-        buckets = 0, appendOnly = appendOnly)
+    val kept = flagged.where(col("kept")).select(col("new_id").as("id"),
+      col("__cluster").as("cluster"), col("__codes").as("codes"), col("__scale").as("scale"))
+    if (!kept.isEmpty) graft.text.Dedup.putSeed(store, sigTable, kept, buckets = 0, appendOnly)
     flagged.drop("new_id", "__cluster", "__codes", "__scale", "__cd", "__bd")
   }
 }

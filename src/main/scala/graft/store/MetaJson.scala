@@ -43,6 +43,11 @@ private[store] object MetaJson {
     }
     def intOr(name: String, default: Int): Int =
       if (field(name).isEmpty) default else int(name)
+    def long(name: String): Long = field(name) match {
+      case Some(n) if n.canConvertToLong && n.isIntegralNumber => n.longValue
+      case Some(_) => fail(name, "a long")
+      case None => throw new IllegalArgumentException(s"missing field '$name'")
+    }
     def str(name: String): String = field(name) match {
       case Some(n) if n.isTextual => n.textValue
       case Some(_) => fail(name, "a string")
@@ -53,6 +58,11 @@ private[store] object MetaJson {
     def strings(name: String): Seq[String] = field(name).fold(Seq.empty[String]) { n =>
       if (!n.isArray || !n.elements.asScala.forall(_.isTextual)) fail(name, "a string array")
       n.elements.asScala.map(_.textValue).toSeq
+    }
+    /** A nested object; None when absent. */
+    def objOpt(name: String): Option[Fields] = field(name).map { n =>
+      if (!n.isObject) fail(name, "an object")
+      new Fields(n)
     }
     def stringMap(name: String): Map[String, String] = field(name).fold(Map.empty[String, String]) { n =>
       if (!n.isObject || !n.elements.asScala.forall(_.isTextual)) fail(name, "a string map")

@@ -4,7 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -32,6 +35,29 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * merge, predicate, partition listing, pruning). The snapshot's layout
   * (bucketed, hive-partitioned or plain) is chosen in one place,
   * `writeSnapshot`, from the metadata being committed.
+  *
+  * == Transactions (exactly-once streaming writes) ==
+  *
+  * `_meta.json` may carry one transaction id, `txn` holding `(app,
+  * batch, version)`: Delta's `txn` action (app id + version). A `foreachBatch`
+  * trigger opens `store.txn(checkpoint, batchId)`, a view over the same
+  * root and write locks, and does all its reads and writes through it:
+  *
+  *  - a write through the view stamps `(app, batch, v)` in the `Meta` it
+  *    commits, so the id commits atomically with the data; a write to a
+  *    table that already holds `(app, ≥ batch)` is a no-op, and a second
+  *    write through one view to one table raises (a programming error,
+  *    not a replay);
+  *  - `exists` and `read` through the view see each table as it was
+  *    before this txn: a table holding `(app, batch)` committed at `v`
+  *    reads as version `v − 1`, or as absent when `v = 0`;
+  *  - a table holding another app's txn raises: batch ids are only
+  *    monotonic within one checkpoint.
+  *
+  * A replayed trigger therefore reads what the first attempt read and
+  * skips what it already wrote. `commit` is the one place that stamps a
+  * txn; every later write carries the table's txn forward. A table no
+  * view wrote has no `txn` field.
   *
   * Reference semantics delivered:
   *  - upsert-by-PK (`notebooks/utils.py:1748-1758` MERGE) = union incoming
@@ -61,7 +87,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    no lost update), and writers to different tables don't contend.
   *    This is the two-foreachBatch-gates-one-Spark-app case: gates may
   *    share a store as long as their TABLES are disjoint (they are — each
-  *    gate owns its index/clean/seedlog prefix), and even a misconfigured
+  *    gate owns its index and clean tables), and even a misconfigured
   *    shared table degrades to serialized commits, not corruption.
   *  - '''Cross process''': the monitor cannot reach another JVM. Each
   *    commit re-reads the meta pointer under the lock immediately before
@@ -74,7 +100,41 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    unlimited — snapshots are immutable). `expectedVersion` remains the
   *    caller-level optimistic-CAS face on overwrite/upsert.
   */
-final class TableStore(spark: SparkSession, root: String) {
+final class TableStore private (spark: SparkSession, root: String,
+                                scope: Option[TableStore.TxnScope]) {
+
+  import TableStore.Meta
+
+  def this(spark: SparkSession, root: String) = this(spark, root, None)
+
+  /** A view of this store under the transaction `(app, batch)` — see the
+    * class doc. A streaming gate opens one per trigger, with its
+    * checkpoint and batch id. */
+  def txn(app: String, batch: Long): TableStore =
+    new TableStore(spark, root, Some(new TableStore.TxnScope(app, batch)))
+
+  /** True when this view's transaction, or a later batch of its app, is
+    * already in `table` (metadata only; always false outside a view).
+    * Raises when the table holds another app's txn. */
+  def committed(table: String): Boolean = meta(table).exists(held(table, _))
+
+  private def held(table: String, m: Meta): Boolean = scope.exists { s =>
+    m.txn.exists { t =>
+      if (t.app != s.app)
+        throw new IllegalStateException(
+          s"table '$table' was accumulated under checkpoint '${t.app}' but this " +
+            s"query runs under '${s.app}' — batchIds are only monotonic within " +
+            "one checkpoint, so a replay cannot be told from new data. Resume " +
+            "with the original checkpoint dir, or start fresh tables.")
+      t.batch >= s.batch
+    }
+  }
+
+  /** The version this view reads: the committed one, or the one before
+    * this view's txn when the table holds it (None: the txn created it). */
+  private def visibleVersion(table: String, m: Meta): Option[Int] =
+    m.txn.filter(t => held(table, m) && scope.exists(_.batch == t.batch))
+      .fold(Option(m.version))(t => Some(t.version - 1).filter(_ >= 0))
 
   /** Process-wide write serialization + commit-time lost-update detection
     * — see the class-doc concurrency contract. Reentrant (a JVM monitor). */
@@ -105,8 +165,6 @@ final class TableStore(spark: SparkSession, root: String) {
 
   // ------------------------------------------------------------- metadata
 
-  import TableStore.Meta
-
   /** Publish `m` as the table's committed metadata (atomic replace). */
   private def writeMeta(table: String, m: Meta): Meta = {
     MetaJson.publish(metaPath(table), TableStore.encode(m))
@@ -119,7 +177,7 @@ final class TableStore(spark: SparkSession, root: String) {
   def meta(table: String): Option[Meta] =
     MetaJson.read(metaPath(table))(TableStore.decode)
 
-  def exists(table: String): Boolean = meta(table).isDefined
+  def exists(table: String): Boolean = meta(table).flatMap(visibleVersion(table, _)).isDefined
 
   def setProperties(table: String, props: Map[String, String]): Unit =
     withWriteLock(table) {
@@ -131,29 +189,44 @@ final class TableStore(spark: SparkSession, root: String) {
 
   /** The one commit point for every operation that writes a version.
     * Under the table's write lock it reads the committed metadata once
-    * (None for a new table), checks `expectedVersion`, and clears what an
-    * uncommitted writer left at the next version's dir: phantom rows that
-    * an appending write would absorb, and partial hardlinks that a retry's
-    * `createLink` would trip over. `body` then writes the snapshot for
-    * version `v` and returns the metadata to publish, with its own
-    * result. Last, the guard re-reads the pointer and `_meta.json` is
-    * published. */
+    * (None for a new table). Through a txn view, a second write to the
+    * table raises and a table already holding the txn makes the commit a
+    * no-op (None). Otherwise it checks `expectedVersion` and clears what
+    * an uncommitted writer left at the next version's dir: phantom rows
+    * that an appending write would absorb, and partial hardlinks that a
+    * retry's `createLink` would trip over. `body` then writes the
+    * snapshot for version `v` and returns the metadata to publish, with
+    * its own result. Last, the guard re-reads the pointer and `_meta.json`
+    * is published with the view's txn stamped, or the table's carried
+    * forward. */
   private[store] def commit[R](table: String, expectedVersion: Option[Int] = None)(
-      body: (Option[Meta], Int) => (Meta, R)): (Meta, R) = withWriteLock(table) {
+      body: (Option[Meta], Int) => (Meta, R)): Option[(Meta, R)] = withWriteLock(table) {
     val current = meta(table)
-    checkExpected(table, current.map(_.version), expectedVersion)
-    val v = current.fold(0)(_.version + 1)
-    deleteRecursively(versionDir(table, v))
-    val (next, result) = body(current, v)
-    require(next.version == v, s"$table: a commit of v=$v published v=${next.version}")
-    commitGuard(table, current.map(_.version))
-    (writeMeta(table, next), result)
+    scope.foreach { s =>
+      if (!s.written.add(table))
+        throw new IllegalStateException(
+          s"$table: a second write through the txn view (${s.app}, ${s.batch})")
+    }
+    if (current.exists(held(table, _))) None
+    else {
+      checkExpected(table, current.map(_.version), expectedVersion)
+      val v = current.fold(0)(_.version + 1)
+      deleteRecursively(versionDir(table, v))
+      val (next, result) = body(current, v)
+      require(next.version == v, s"$table: a commit of v=$v published v=${next.version}")
+      commitGuard(table, current.map(_.version))
+      val txn = scope.map(s => TableStore.Txn(s.app, s.batch, v)).orElse(current.flatMap(_.txn))
+      Some((writeMeta(table, next.copy(txn = txn)), result))
+    }
   }
 
   // ----------------------------------------------------------------- read
 
-  def read(table: String): DataFrame =
-    readCurrent(table, meta(table).getOrElse(noSuchTable(table)))
+  def read(table: String): DataFrame = {
+    val m = meta(table).getOrElse(noSuchTable(table))
+    visibleVersion(table, m).fold(noSuchTable(table))(v =>
+      if (v == m.version) readCurrent(table, m) else readVersion(table, v))
+  }
 
   /** Time travel (S13): read any retained snapshot. Bucketed snapshots are
     * read through their catalog entry so the scan reports the PK hash
@@ -320,20 +393,22 @@ final class TableStore(spark: SparkSession, root: String) {
     commit(table, expectedVersion)(overwritten(table, df, primaryKeys, timestampKeys,
       description, mergeSchema, overwriteSchema, buckets, partitionBy))
 
-  /** `write` applied to `df`, and the number of rows it wrote, counted on
-    * the write itself with `Dataset.observe`: no second pass over the data.
-    * The metric arrives through a query listener once the write's query
-    * has ended; `get` waits for it. */
-  private def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
-    val rows = Observation()
-    write(df.observe(rows, count(lit(1)).as("rows")))
-    rows.get("rows").asInstanceOf[Long]
+  /** Rows in the snapshot of `version`, summed from its Parquet footers on
+    * the driver: no Spark job, and no query listener. */
+  private[store] def snapshotRows(table: String, version: Int): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    Files.walk(versionDir(table, version)).iterator().asScala
+      .filter(f => Files.isRegularFile(f) && f.toString.endsWith(".parquet"))
+      .map { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f.toUri), conf))
+        try r.getRecordCount finally r.close()
+      }.sum
   }
 
   /** The [[overwrite]] body: the schema policy applied to `df` against
     * `current`, and the keys and layout from the arguments or else from
     * `current`; `properties` are added to the committed ones. Returns the
-    * metadata to publish and the rows written. */
+    * metadata to publish. */
   private[store] def overwritten(
       table: String, df: DataFrame,
       primaryKeys: Seq[String] = Nil, timestampKeys: Seq[String] = Nil,
@@ -341,7 +416,7 @@ final class TableStore(spark: SparkSession, root: String) {
       overwriteSchema: Boolean = false, buckets: Int = 0,
       partitionBy: Seq[String] = Nil,
       properties: Map[String, String] = Map.empty)(
-      current: Option[Meta], v: Int): (Meta, Long) = {
+      current: Option[Meta], v: Int): (Meta, Unit) = {
     val out = current match {
       case Some(m) =>
         val d = SchemaDiff.diff(m.schema, df.schema)
@@ -373,7 +448,7 @@ final class TableStore(spark: SparkSession, root: String) {
       if (description.nonEmpty) description else current.map(_.description).getOrElse(""),
       current.map(_.properties).getOrElse(Map.empty) ++ properties,
       pcols)
-    (next, countedWrite(out)(writeSnapshot(table, _, next)))
+    (next, writeSnapshot(table, out, next))
   }
 
   /** S8 — upsert by primary key (MERGE whenMatchedUpdate +
@@ -390,7 +465,7 @@ final class TableStore(spark: SparkSession, root: String) {
   private[store] def upserted(table: String, df: DataFrame,
                               primaryKeys: Seq[String] = Nil,
                               properties: Map[String, String] = Map.empty)(
-      current: Option[Meta], v: Int): (Meta, Long) = current match {
+      current: Option[Meta], v: Int): (Meta, Unit) = current match {
     case None =>
       require(primaryKeys.nonEmpty, "first write needs primaryKeys")
       overwritten(table, df, primaryKeys, properties = properties)(None, v)
@@ -400,7 +475,7 @@ final class TableStore(spark: SparkSession, root: String) {
       val merged = mergedForUpsert(table, df, pks, m)
       val next = m.copy(version = v, schemaJson = merged.schema.json,
         properties = m.properties ++ properties)
-      (next, countedWrite(merged)(writeSnapshot(table, _, next, shuffleToBuckets = false)))
+      (next, writeSnapshot(table, merged, next, shuffleToBuckets = false))
   }
 
   /** Build the post-merge frame for an upsert (exposed for plan-shape
@@ -559,7 +634,7 @@ final class TableStore(spark: SparkSession, root: String) {
     * versions older than `retain`. */
   def compact(table: String, n: Int = 1, retain: Int = 2): Unit =
     withWriteLock(table) {
-      val (m, _) = commit(table) { (current, v) =>
+      commit(table) { (current, v) =>
         val m = current.getOrElse(noSuchTable(table))
         val in = readCurrent(table, m)
         // writeSnapshot keeps the layout: a bucketed table is re-hashed to
@@ -572,14 +647,15 @@ final class TableStore(spark: SparkSession, root: String) {
           else if (m.partitionCols.isEmpty) in.repartition(n)
           else in.repartition(n, m.partitionCols.map(col): _*), next)
         (next, ())
+      }.foreach { case (m, _) =>
+        Files.list(tableDir(table)).iterator().asScala
+          .filter(p => p.getFileName.toString.startsWith("v="))
+          .filter(p => p.getFileName.toString.drop(2).toInt <= m.version - retain)
+          .foreach { p =>
+            spark.sql(s"DROP TABLE IF EXISTS ${catalogName(table, p.getFileName.toString.drop(2).toInt)}")
+            deleteRecursively(p)
+          }
       }
-      Files.list(tableDir(table)).iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith("v="))
-        .filter(p => p.getFileName.toString.drop(2).toInt <= m.version - retain)
-        .foreach { p =>
-          spark.sql(s"DROP TABLE IF EXISTS ${catalogName(table, p.getFileName.toString.drop(2).toInt)}")
-          deleteRecursively(p)
-        }
     }
 
   /** Optimistic concurrency (the Delta `txnVersion` face): a writer that
@@ -609,6 +685,14 @@ object TableStore {
   private val writeLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
+  /** The transaction of a txn view, and the tables written through it. */
+  private final class TxnScope(val app: String, val batch: Long) {
+    val written: java.util.Set[String] = java.util.concurrent.ConcurrentHashMap.newKeySet()
+  }
+
+  /** A committed transaction id: `app` wrote batch `batch` as `version`. */
+  final case class Txn(app: String, batch: Long, version: Int)
+
   final case class Meta(
       version: Int,
       schemaJson: String,
@@ -617,7 +701,8 @@ object TableStore {
       buckets: Int,
       description: String,
       properties: Map[String, String],
-      partitionCols: Seq[String] = Nil) {
+      partitionCols: Seq[String] = Nil,
+      txn: Option[Txn] = None) {
     lazy val schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
   }
 
@@ -630,12 +715,17 @@ object TableStore {
     MetaJson.putStrings(o, "partitionCols", m.partitionCols)
     o.put("description", m.description)
     MetaJson.putStringMap(o, "properties", m.properties)
+    m.txn.foreach { t =>
+      o.putObject("txn").put("app", t.app).put("batch", t.batch).put("version", t.version)
+    }
+    o
   }
 
   private[store] def decode(f: MetaJson.Fields): Meta = Meta(
     f.int("version"), f.str("schemaJson"), f.strings("primaryKeys"),
     f.strings("timestampKeys"), f.intOr("buckets", 0), f.strOr("description", ""),
-    f.stringMap("properties"), f.strings("partitionCols"))
+    f.stringMap("properties"), f.strings("partitionCols"),
+    f.objOpt("txn").map(t => Txn(t.str("app"), t.long("batch"), t.int("version"))))
 }
 
 /** The feature-store face of [[TableStore]]: validate → save → register,
@@ -647,9 +737,9 @@ object FeatureStore {
   case object FailOnMissing extends MissingColumnPolicy
   case object IgnoreMissing extends MissingColumnPolicy
 
-  /** `rows` is the committed snapshot's row count, counted by the write
-    * that produced it (an upsert's count includes the stored rows the
-    * batch did not touch). */
+  /** `rows` is the committed snapshot's row count, read from the footers
+    * of the files the write produced (an upsert's count includes the
+    * stored rows the batch did not touch). */
   final case class SaveReport(table: String, version: Int, rows: Long,
                               diff: Option[SchemaDiff])
 
@@ -676,11 +766,15 @@ object FeatureStore {
         "graft.primaryKeys" -> primaryKeys.mkString(","),
         "graft.timestampKeys" -> timestampKeys.mkString(","),
         "graft.description" -> description)
-      val (next, rows) =
+      val (next, _) =
         if (forceOverwrite || current.isEmpty)
           store.overwritten(table, df, primaryKeys, timestampKeys, description,
             mergeSchema = true, overwriteSchema = overwriteSchema, properties = props)(current, v)
         else store.upserted(table, df, primaryKeys, properties = props)(current, v)
-      (next, SaveReport(table, v, rows, diff))
-    }._2
+      (next, SaveReport(table, v, store.snapshotRows(table, v), diff))
+    }.fold {
+      // a txn view's replay: report the snapshot that holds the txn
+      val m = store.meta(table).get
+      SaveReport(table, m.version, store.snapshotRows(table, m.version), None)
+    }(_._2)
 }

@@ -17,9 +17,9 @@ import graft.store.TableStore
 object Streaming {
 
   /** HARNESS fault injection for the ingest gates: invoked with
-    * (cleanTable, batchId) after the seed log + index appends, BEFORE the
-    * clean commit — the worst-case crash point of the gate protocol (the
-    * index holds this batch, the guard does not). `datagen.StreamAnchor`'s
+    * (cleanTable, batchId) after the index appends, BEFORE the clean
+    * commit — the worst-case crash point of the gate protocol (the index
+    * holds this batch's txn, the clean table does not). `datagen.StreamAnchor`'s
     * kill-restart leg and the crash-replay specs throw from here to turn
     * the exactly-once claim into an end-to-end measurement through the
     * real checkpoint-restart machinery; default no-op, never set in
@@ -184,7 +184,18 @@ object Streaming {
     *
     * Scale: per trigger the stream pays one batch-sized aggregate plus
     * a value-dimension merge + prefix-sum — raw history is NEVER
-    * re-read; the state is the value-distinct count table. */
+    * re-read; the state is the value-distinct count table.
+    *
+    * Exactly-once under foreachBatch's at-least-once contract: a crash
+    * between the counts commit and the checkpoint's offset commit replays
+    * the batch, and a sum-merge applied twice would double-count the
+    * distribution. The merge is written through `store.txn(checkpoint,
+    * batchId)`, so `(checkpoint, batchId)` commits atomically with the
+    * counts, and a trigger whose txn the counts table already holds
+    * reports without merging (a metadata check, no Spark job). Counts
+    * accumulated under another checkpoint fail fast: batch ids are only
+    * monotonic within one checkpoint. Spec: StreamingMultimodalSpec
+    * "kill-and-restart". */
   def incrementalKsGate(stream: DataFrame, valueCol: String,
                         refCounts: DataFrame,
                         store: TableStore, countsTable: String,
@@ -195,62 +206,18 @@ object Streaming {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // EXACTLY-ONCE under foreachBatch's at-least-once contract: a
-        // crash between the counts commit and the checkpoint's offset
-        // commit REPLAYS this batch on restart, and a sum-merge applied
-        // twice double-counts the distribution (the delta-merge is the
-        // one non-idempotent write in the store layer — upserts dedup by
-        // PK, this must dedup by BATCH). The applied batch id rides ON
-        // the counts rows, so it commits atomically with the merge
-        // (TableStore.overwrite's commit point is the single meta-pointer
-        // write); a replayed batch id short-circuits to report-only.
-        // Spec: StreamingMultimodalSpec "kill-and-restart" (r11).
-        // The replay guard is keyed by (checkpoint, batchId) — batchIds
-        // restart from 0 under a FRESH checkpoint dir, so a bare
-        // `applied_batch >= batchId` check against a table accumulated
-        // under an older checkpoint would silently DROP every new batch
-        // (r11 advice: data loss, no error). A checkpoint mismatch is a
-        // contract violation either way (continue = double-count the
-        // history, skip = drop data) → fail fast with the remediation.
-        // Legacy tables written before the guard columns existed are
-        // schema-checked, not blindly read (AnalysisException otherwise).
-        val existing = if (store.exists(countsTable))
-          Some(store.read(countsTable)) else None
-        existing.filter(_.columns.contains("applied_ckpt")).foreach { t =>
-          val ck = t.agg(max("applied_ckpt")).head()
-          if (!ck.isNullAt(0) && ck.getString(0) != checkpoint)
-            throw new IllegalStateException(
-              s"counts table '$countsTable' was accumulated under " +
-                s"checkpoint '${ck.getString(0)}' but this query runs " +
-                s"under '$checkpoint' — batchIds are only monotonic " +
-                "within one checkpoint, so the replay guard cannot " +
-                "distinguish replays from new data. Resume with the " +
-                "original checkpoint dir, or start a fresh counts table.")
-        }
-        val alreadyApplied = existing
-          .filter(_.columns.contains("applied_batch"))
-          .exists { t =>
-            val r = t.agg(max("applied_batch")).head()
-            !r.isNullAt(0) && r.getLong(0) >= batchId
-          }
-        if (!alreadyApplied) {
+        val tx = store.txn(checkpoint, batchId)
+        if (!tx.committed(countsTable)) {
           val bc = batch.groupBy(col(valueCol).cast("double").as("value"))
             .agg(count(lit(1)).as("cur_count"))
-          val merged = existing match {
-            case Some(t) => t.select("value", "cur_count")
-              .unionByName(bc)
-              .groupBy("value").agg(sum("cur_count").as("cur_count"))
-            case None => bc
-          }
-          store.overwrite(countsTable,
-            merged.withColumn("applied_batch", lit(batchId))
-              .withColumn("applied_ckpt", lit(checkpoint)),
-            mergeSchema = true)
+          tx.overwrite(countsTable,
+            if (!tx.exists(countsTable)) bc
+            else tx.read(countsTable).unionByName(bc)
+              .groupBy("value").agg(sum("cur_count").as("cur_count")))
         }
-        val acc = store.read(countsTable).select("value", "cur_count")
         val joined = refCounts
           .select(col("value"), col("ref_count"))
-          .join(acc, Seq("value"), "full_outer")
+          .join(store.read(countsTable), Seq("value"), "full_outer")
         onReport(graft.features.Features.ksFromCounts(
           joined, "value", "ref_count", "cur_count"))
       }
@@ -273,36 +240,21 @@ object Streaming {
     * index (measured 32–48 s per 10k-doc trigger at sf1 → batch-sized
     * after this change); the df table delta-merge rewrite is vocab-sized.
     *
-    * Exactly-once where it matters, duplicate-tolerant elsewhere (the
-    * [[incrementalKsGate]] pattern): `cleanTable` rows ride
-    * `(applied_ckpt, applied_batch)` — its append commits atomically with
-    * the guard via the store's single meta-pointer write, so a replayed
-    * batch short-circuits to a no-op BEFORE any write. A crash between
-    * the index appends and the clean commit replays the index seeding —
-    * postings/grams duplicates are tolerated by the probe (verify slice
-    * dedups per id) and the df delta-merge is SKIPPED on replay (`mergeDf
-    * = false` once the seed log shows this batch already started seeding:
-    * re-merging would inflate df by one batch, which the exact probe
-    * shrugs off but the banded index's recall-bearing df cap does not —
-    * r14 advice; the skip errs recall-safe, at worst a self-healing
-    * one-batch undercount) — AND the
-    * replayed probe runs against an index already holding this batch's
-    * own docs: a SEED LOG (`<cleanTable>__seedlog`, committed BEFORE any
-    * index append) records which ids each (checkpoint, batch) seeded, and
-    * the replayed probe excludes exactly those corpus ids
-    * (`excludeCorpusIds`), so batch-internal containment pairs (a quote
-    * and its source arriving together, or two identical docs) keep their
-    * no-crash outcome on replay instead of anti-joining each other out —
-    * and a doc legitimately re-sent in a LATER batch still self-matches
-    * at 1.0 and is gated (r13 advice; both directions spec'd). ID
-    * CONTRACT: stream ids must be unique except for verbatim resends —
-    * a same-id arrival with DIFFERENT text that clears the gate appends
-    * a second row under that id (appendFiles does not dedup; treat ids
-    * as content-stable keys, or route updates through the upsert-based
-    * [[streamIntoStore]]). The clean
-    * output stays exactly-once while the index degrades by at most one
-    * batch of duplicate bytes. A checkpoint mismatch fails fast (batchIds
-    * are only monotonic within one checkpoint).
+    * Exactly-once: every read and write of a trigger goes through
+    * `store.txn(checkpoint, batchId)`. A trigger whose txn the clean table
+    * already holds is skipped (a metadata check). A replay after a crash
+    * between the index appends and the clean commit probes each index as
+    * of the version before this batch's txn, so batch-internal pairs (a
+    * quote and its source arriving together) keep their no-crash outcome,
+    * while a doc re-sent in a LATER batch still self-matches at 1.0 and
+    * is gated; the index appends and the df merge it already committed
+    * are no-ops, so df counts each batch exactly once. ID CONTRACT: stream
+    * ids must be unique except for verbatim resends — a same-id arrival
+    * with DIFFERENT text that clears the gate appends a second row under
+    * that id (appendFiles does not dedup; treat ids as content-stable
+    * keys, or route updates through the upsert-based [[streamIntoStore]]).
+    * Tables accumulated under another checkpoint fail fast (batch ids are
+    * only monotonic within one checkpoint).
     *
     * `banded = true` switches index and probe to the WINNOWED-fingerprint
     * forms ([[graft.text.Dedup.seedWinnowIndex]] /
@@ -315,22 +267,17 @@ object Streaming {
     * winnowing recall contract (contiguous runs ≥ w+n−1 tokens,
     * deterministic modulo the df cap).
     *
-    * `compactEvery > 0` runs store compaction over the four
-    * append-accumulating tables (postings, gram arrays, seed log, clean)
-    * every that-many batches — the LSM-style maintenance leg: file-level
+    * `compactEvery > 0` runs store compaction over the three
+    * append-accumulating tables (postings, gram arrays, clean) every
+    * that-many batches — the LSM-style maintenance leg: file-level
     * appends add one file per table per trigger, and after thousands of
     * triggers listing + footer reads dominate the probe's map-only scans.
     * Compaction rewrites the accumulated table (corpus-sized — the very
     * cost appendFiles avoids per trigger), so the amortized extra cost is
-    * O(corpus / compactEvery) per trigger; it runs AFTER the clean commit,
-    * so a crash mid-compaction replays into the alreadyApplied short-
-    * circuit and the next compaction boundary retries — maintenance is
-    * best-effort, never correctness-bearing (seed-log/guard reads are
-    * version-agnostic). The per-trigger seed-log read is cheap either
-    * way: uncompacted, its `applied_batch = batchId` filter pushes down
-    * and single-batch appended files skip on footer min/max; compacted,
-    * it degrades to the same narrow two-column corpus scan the clean
-    * table's replay-guard aggregate already pays. */
+    * O(corpus / compactEvery) per trigger; it runs on the base store AFTER
+    * the clean commit, carries each table's txn forward, and a crash
+    * mid-compaction replays into the skipped trigger — maintenance is
+    * best-effort, never correctness-bearing. */
   def containmentIngestGate(arrivals: DataFrame, textCol: String,
                             idCol: String, store: TableStore,
                             postingsTable: String, dfTable: String,
@@ -344,137 +291,52 @@ object Streaming {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!replayApplied(store, cleanTable, checkpoint, batchId)) {
-          val seedLog = cleanTable + "__seedlog"
-          val excl = seedLogExclusion(store, seedLog, checkpoint, batchId)
+        val tx = store.txn(checkpoint, batchId)
+        if (!tx.committed(cleanTable)) {
           val kept =
-            if (!store.exists(postingsTable)) batch
+            if (!tx.exists(postingsTable)) batch
             else {
               val contained = (if (banded)
                   graft.text.Dedup.containmentIncrementalBanded(
-                    store, postingsTable, dfTable, gramsTable,
+                    tx, postingsTable, dfTable, gramsTable,
                     batch, textCol, idCol, n = n, w = w,
-                    threshold = threshold, dfCap = dfCap,
-                    excludeCorpusIds = excl)
+                    threshold = threshold, dfCap = dfCap)
                 else
                   graft.text.Dedup.containmentIncremental(
-                    store, postingsTable, dfTable, gramsTable,
-                    batch, textCol, idCol, n = n, threshold = threshold,
-                    excludeCorpusIds = excl))
+                    tx, postingsTable, dfTable, gramsTable,
+                    batch, textCol, idCol, n = n, threshold = threshold))
                 .select(col("probe_id").as(idCol)).distinct()
               batch.join(contained, Seq(idCol), "left_anti")
             }
-          // pin ONE evaluation: the seed log, index seed, and clean
-          // append must see the same survivor set (a nondeterministic-
-          // source batch re-planned twice could drift) — and the probe
-          // must finish BEFORE the seed log commits below
+          // pin ONE evaluation: the index seed and the clean append must
+          // see the same survivor set (a nondeterministic-source batch
+          // re-planned twice could drift)
           val keptP = kept.select(col(idCol), col(textCol)).localCheckpoint()
           if (!keptP.isEmpty) {
-            // a crashed earlier attempt of THIS batch may already have
-            // delta-merged its df counts — re-merging would inflate df by
-            // one batch, and for the WINNOW index the df cap is
-            // recall-bearing (an inflated fp can cross dfCap and silently
-            // lose pairs beyond the measured contract, r14 advice). The
-            // seed log committing before any index append means "log rows
-            // exist for this batch" detects every crash point past the
-            // first write; skipping errs recall-safe (possible one-batch
-            // UNDERcount if the crash preceded the merge — keys look
-            // rarer, more candidates probed, self-healing).
-            // (missing df table = the crash preceded EVERY index write,
-            // even on replay — the merge then must run as a first write)
-            val isReplay = excl.exists(e => !e.isEmpty) && store.exists(dfTable)
-            appendSeedLog(store, seedLog, keptP, idCol, checkpoint, batchId)
             if (banded)
-              graft.text.Dedup.seedWinnowIndex(store, postingsTable,
+              graft.text.Dedup.seedWinnowIndex(tx, postingsTable,
                 dfTable, gramsTable, keptP, textCol, idCol, n = n, w = w,
-                appendOnly = true, mergeDf = !isReplay)
+                appendOnly = true)
             else
-              graft.text.Dedup.seedGramIndex(store, postingsTable, dfTable,
-                gramsTable, keptP, textCol, idCol, n = n, appendOnly = true,
-                mergeDf = !isReplay)
+              graft.text.Dedup.seedGramIndex(tx, postingsTable, dfTable,
+                gramsTable, keptP, textCol, idCol, n = n, appendOnly = true)
             crashHook(cleanTable, batchId)
-            appendGuarded(store, cleanTable, keptP, idCol, checkpoint, batchId)
+            appendClean(tx, cleanTable, keptP, idCol)
           }
           maybeCompact(store, compactEvery, batchId, batch,
-            Seq(postingsTable, gramsTable, seedLog, cleanTable))
+            Seq(postingsTable, gramsTable, cleanTable))
         }
       }
       .start()
 
-  /** Shared foreachBatch replay guard of the ingest gates: ONE combined
-    * aggregate over the clean table's two narrow guard columns (parquet
-    * pruning keeps the scan cheap); a checkpoint mismatch fails fast
-    * (batchIds are only monotonic within one checkpoint — a bare
-    * `>= batchId` check against a table accumulated under an older
-    * checkpoint would silently drop every new batch); legacy tables
-    * without the guard columns are schema-checked, not blindly
-    * aggregated. Returns true when this batch already committed. */
-  private def replayApplied(store: TableStore, cleanTable: String,
-                            checkpoint: String, batchId: Long): Boolean = {
-    val guard = (if (store.exists(cleanTable)) Some(store.read(cleanTable))
-      else None)
-      .filter(t => t.columns.contains("applied_ckpt") &&
-        t.columns.contains("applied_batch"))
-      .map(t => t.agg(max("applied_ckpt"), max("applied_batch")).head())
-    guard.filter(!_.isNullAt(0)).foreach { g =>
-      if (g.getString(0) != checkpoint)
-        throw new IllegalStateException(
-          s"clean table '$cleanTable' was accumulated under " +
-            s"checkpoint '${g.getString(0)}' but this query runs " +
-            s"under '$checkpoint' — resume with the original " +
-            "checkpoint dir, or start a fresh clean table.")
-    }
-    guard.exists(g => !g.isNullAt(1) && g.getLong(1) >= batchId)
-  }
-
-  /** The ids a CRASHED earlier attempt of THIS (checkpoint, batch) already
-    * seeded — the replayed probe excludes exactly them so the survivor set
-    * equals the no-crash one (`excludeCorpusIds` on the incremental
-    * probes). */
-  private def seedLogExclusion(store: TableStore, seedLog: String,
-                               checkpoint: String,
-                               batchId: Long): Option[DataFrame] =
-    if (!store.exists(seedLog)) None
-    else Some(store.read(seedLog)
-      .where(col("applied_ckpt") === checkpoint &&
-        col("applied_batch") === batchId)
-      .select(col("id")))
-
-  /** SEED LOG FIRST: commit "this batch seeded these ids" before any index
-    * append, so a crash anywhere after this point replays with the
-    * exclusion set already in place (a log write with no seed behind it is
-    * a harmless no-op exclusion — the corpus holds no such rows yet). */
-  private def appendSeedLog(store: TableStore, seedLog: String,
-                            keptP: DataFrame, idCol: String,
-                            checkpoint: String, batchId: Long): Unit = {
-    val logRows = keptP.select(col(idCol).cast("long").as("id"))
-      .withColumn("applied_batch", lit(batchId))
-      .withColumn("applied_ckpt", lit(checkpoint))
-    if (store.exists(seedLog)) store.appendFiles(seedLog, logRows)
-    // NO primary keys: log entries are NOT id-unique across batches (a
-    // same-id different-text arrival kept in a later batch appends a
-    // second row) — declaring PK id would let any future PK-reconciling
-    // path collapse rows and mis-scope a replay exclusion (r14 advice).
-    // The log's true identity is the whole (id, applied_ckpt,
-    // applied_batch) row; it is append-only by construction.
-    else store.overwrite(seedLog, logRows)
-  }
-
-  /** Clean-output append with the (checkpoint, batchId) replay guard
-    * riding its rows — commits atomically with the store's single
-    * meta-pointer write. */
-  private def appendGuarded(store: TableStore, cleanTable: String,
-                            keptP: DataFrame, idCol: String,
-                            checkpoint: String, batchId: Long): Unit = {
-    val guarded = keptP
-      .withColumn("applied_batch", lit(batchId))
-      .withColumn("applied_ckpt", lit(checkpoint))
-    if (store.exists(cleanTable)) store.appendFiles(cleanTable, guarded)
-    else store.overwrite(cleanTable, guarded, primaryKeys = Seq(idCol))
-  }
+  /** The gates' clean-output append, through the trigger's txn view. */
+  private def appendClean(tx: TableStore, cleanTable: String,
+                          kept: DataFrame, idCol: String): Unit =
+    if (tx.exists(cleanTable)) tx.appendFiles(cleanTable, kept)
+    else tx.overwrite(cleanTable, kept, primaryKeys = Seq(idCol))
 
   /** Best-effort file-count maintenance AFTER the clean commit (a crash
-    * here replays into the alreadyApplied no-op) — see the compactEvery
+    * here replays into the skipped trigger) — see the compactEvery
     * Scaladoc for the amortization math. */
   private def maybeCompact(store: TableStore, compactEvery: Int,
                            batchId: Long, batch: DataFrame,
@@ -489,11 +351,11 @@ object Streaming {
     * near-duplicate probe instead of containment — each arriving
     * micro-batch is probed against the persisted signature store, corpus
     * near-dups AND within-batch near-dups (greedy smaller-id-wins, the
-    * batch dedup rule — deterministic, so replays agree) are dropped,
-    * survivors seed the store APPEND-ONLY (O(batch) written per trigger;
-    * the probes are duplicate-tolerant by construction) and append to
-    * `cleanTable` under the same (checkpoint, batchId) replay guard, seed
-    * log, and `compactEvery` maintenance as the containment gate.
+    * batch dedup rule — deterministic, so replays agree) are dropped;
+    * the probe registers the survivors' signatures APPEND-ONLY (O(batch)
+    * written per trigger) and they append to `cleanTable`, all through
+    * the trigger's txn view, with the same exactly-once protocol and
+    * `compactEvery` maintenance as the containment gate.
     *
     * `method = "minhash"`: banding candidates at `1 − (1 − j^r)^b` recall,
     * estimated-Jaccard `threshold` — the web-scale near-dedup default
@@ -528,47 +390,29 @@ object Streaming {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!replayApplied(store, cleanTable, checkpoint, batchId)) {
-          val seedLog = cleanTable + "__seedlog"
-          val excl = seedLogExclusion(store, seedLog, checkpoint, batchId)
-          // registerSurvivors = false: the gate owns write ORDER (seed log
-          // must commit before any signature append) and write ECONOMICS
-          // (append-only, not the probe's default PK upsert)
+        val tx = store.txn(checkpoint, batchId)
+        if (!tx.committed(cleanTable)) {
           val flagged = method match {
             case "minhash" =>
-              graft.text.Dedup.minhashIncremental(store, sigTable, batch,
+              graft.text.Dedup.minhashIncremental(tx, sigTable, batch,
                 textCol, idCol, numHashes = numHashes, bands = bands,
-                threshold = threshold, excludeCorpusIds = excl,
-                registerSurvivors = false)
+                threshold = threshold, appendOnly = true)
             case "simhash" =>
-              graft.text.Dedup.simhashIncremental(store, sigTable, batch,
-                textCol, idCol, maxHamming = maxHamming,
-                excludeCorpusIds = excl, registerSurvivors = false)
+              graft.text.Dedup.simhashIncremental(tx, sigTable, batch,
+                textCol, idCol, maxHamming = maxHamming, appendOnly = true)
             case _ =>
-              graft.sim.Cluster.embeddingIncremental(store, sigTable, batch,
+              graft.sim.Cluster.embeddingIncremental(tx, sigTable, batch,
                 textCol, idCol, centroids, threshold = threshold,
-                excludeCorpusIds = excl, registerSurvivors = false)
+                appendOnly = true)
           }
-          val keptP = flagged.where(col("kept"))
-            .select(col(idCol), col(textCol)).localCheckpoint()
-          if (!keptP.isEmpty) {
-            appendSeedLog(store, seedLog, keptP, idCol, checkpoint, batchId)
-            method match {
-              case "minhash" =>
-                graft.text.Dedup.seedMinhashSignatures(store, sigTable, keptP,
-                  textCol, idCol, numHashes = numHashes, appendOnly = true)
-              case "simhash" =>
-                graft.text.Dedup.seedSimhashes(store, sigTable, keptP,
-                  textCol, idCol, appendOnly = true)
-              case _ =>
-                graft.sim.Cluster.seedEmbeddingSignatures(store, sigTable,
-                  keptP, textCol, idCol, centroids, appendOnly = true)
-            }
+          // flagged is pinned by the probe, which registered the kept rows
+          val kept = flagged.where(col("kept")).select(col(idCol), col(textCol))
+          if (!kept.isEmpty) {
             crashHook(cleanTable, batchId)
-            appendGuarded(store, cleanTable, keptP, idCol, checkpoint, batchId)
+            appendClean(tx, cleanTable, kept, idCol)
           }
           maybeCompact(store, compactEvery, batchId, batch,
-            Seq(sigTable, seedLog, cleanTable))
+            Seq(sigTable, cleanTable))
         }
       }
       .start()

@@ -736,22 +736,22 @@ object Dedup {
     * shuffled hash joins), and only qualifying hits reach a shuffle. The
     * corpus is never re-read, re-tokenized, re-signed, or shuffled.
     * Within-batch resolution self-joins only the batch. Kept rows'
-    * signatures register (PK id) so the next batch sees them — by default
-    * via PK upsert, which REWRITES the corpus-sized signature snapshot
-    * every call: fine for occasional batch ingests, the measured r13
-    * per-trigger trap for streaming callers. Streaming callers route
-    * through [[graft.streaming.Streaming.nearDupIngestGate]] (which owns
-    * write order + replay exclusion) or pass `appendOnly = true` for
+    * signatures register (PK id) so the next batch sees them; an empty
+    * kept set writes nothing. By default registration is a PK upsert,
+    * which REWRITES the corpus-sized signature snapshot every call: fine
+    * for occasional batch ingests, the measured r13 per-trigger trap for
+    * streaming callers. Streaming callers pass `appendOnly = true` for
     * O(batch) file-level registration (appends do not dedup — the probes
-    * tolerate duplicate signature rows, but guard replays upstream).
+    * tolerate duplicate signature rows) and a txn view as `store`, as
+    * [[graft.streaming.Streaming.nearDupIngestGate]] does: a replayed
+    * batch then probes the signatures as they were before it, and its
+    * registration is a no-op.
     *
     * Returns the batch plus `dup_of_corpus` and `kept`. */
   def minhashIncremental(store: graft.store.TableStore, sigTable: String,
                          batch: DataFrame, textCol: String, idCol: String,
                          numHashes: Int = 64, bands: Int = 16,
                          threshold: Double = 0.8, buckets: Int = 0,
-                         excludeCorpusIds: Option[DataFrame] = None,
-                         registerSurvivors: Boolean = true,
                          appendOnly: Boolean = false,
                          broadcastMaxProbeDocs: Long = 65536): DataFrame = {
     // pinned: the signature pass feeds the corpus probe, the batch
@@ -762,16 +762,11 @@ object Dedup {
       if (useBroadcast) broadcast(df) else df.hint("shuffle_hash")
     val batchBands = minhashBandsOfSigned(bsig, idCol, numHashes, bands)
     val corpusDupIds =
-      if (store.exists(sigTable)) {
-        val hits = minhashCorpusCandidates(store.read(sigTable), batchBands,
-          numHashes, bands, threshold, probeSide)
-        // replay exclusion (the containmentIncremental contract): remove
-        // the corpus docs an at-least-once caller knows THIS batch seeded
-        excludeCorpusIds.fold(hits)(ex => hits.join(
-            probeSide(ex.select(col("id").cast("long").as("old_id"))),
-            Seq("old_id"), "left_anti"))
+      if (store.exists(sigTable))
+        minhashCorpusCandidates(store.read(sigTable), batchBands,
+            numHashes, bands, threshold, probeSide)
           .select(col("new_id")).distinct().withColumn("__cd", lit(true))
-      } else batchBands.select(col("new_id")).limit(0).withColumn("__cd", lit(true))
+      else batchBands.select(col("new_id")).limit(0).withColumn("__cd", lit(true))
     // within-batch greedy resolution (minhashLsh rule), batch-sized
     val bb = batchBands.repartition(col("band"), col("key"))
     val a = bb.select(col("band"), col("key"), col("new_id").as("id_a"), col("sig_new").as("sig_a"))
@@ -788,10 +783,8 @@ object Dedup {
       .withColumn("dup_of_corpus", coalesce(col("__cd"), lit(false)))
       .withColumn("kept", !col("dup_of_corpus") && coalesce(col("__bd"), lit(false)) === false)
       .localCheckpoint() // one materialization for store write + caller (inv. 7)
-    if (registerSurvivors)
-      putSeed(store, sigTable, flagged.where(col("kept"))
-        .select(col("new_id").as("id"), col("__sig").as("sig")),
-        buckets, appendOnly)
+    val kept = flagged.where(col("kept")).select(col("new_id").as("id"), col("__sig").as("sig"))
+    if (!kept.isEmpty) putSeed(store, sigTable, kept, buckets, appendOnly)
     flagged.drop("new_id", "__sig", "__cd", "__bd")
   }
 
@@ -901,17 +894,14 @@ object Dedup {
     * is never re-read, re-tokenized, or shuffled. Within-batch
     * resolution self-joins only the batch. Kept rows' simhashes register
     * (PK id) so the next batch sees them — default PK upsert (a
-    * corpus-sized snapshot rewrite per call; streaming callers use
-    * [[graft.streaming.Streaming.nearDupIngestGate]] or `appendOnly =
-    * true` for O(batch) registration, duplicate rows tolerated by the
-    * probe — see [[minhashIncremental]]).
+    * corpus-sized snapshot rewrite per call); streaming callers pass
+    * `appendOnly = true` and a txn view, as [[minhashIncremental]]
+    * describes.
     *
     * Returns the batch plus `dup_of_corpus` and `kept`. */
   def simhashIncremental(store: graft.store.TableStore, shTable: String,
                          batch: DataFrame, textCol: String, idCol: String,
                          maxHamming: Int = 3, buckets: Int = 0,
-                         excludeCorpusIds: Option[DataFrame] = None,
-                         registerSurvivors: Boolean = true,
                          appendOnly: Boolean = false,
                          broadcastMaxProbeDocs: Long = 65536): DataFrame = {
     // pinned: one simhash pass feeds probe + self-join + returned frame,
@@ -928,20 +918,16 @@ object Dedup {
       .select(col("new_id"), col("sh_new"),
         col("__c.chunk").as("chunk"), col("__c.key").as("key"))
     val corpusDupIds =
-      if (store.exists(shTable)) {
-        val hits = store.read(shTable)
+      if (store.exists(shTable))
+        store.read(shTable)
           .select(col("id").as("old_id"), col("sh").as("sh_b"),
             simhashChunks(col("sh"), maxHamming).as("__c"))
           .select(col("old_id"), col("sh_b"),
             col("__c.chunk").as("chunk"), col("__c.key").as("key"))
           .join(probeSide(batchChunks), Seq("chunk", "key"))
           .where(hammingDist(col("sh_new"), col("sh_b")) <= maxHamming)
-        // replay exclusion — the containmentIncremental contract, verbatim
-        excludeCorpusIds.fold(hits)(ex => hits.join(
-            probeSide(ex.select(col("id").cast("long").as("old_id"))),
-            Seq("old_id"), "left_anti"))
           .select(col("new_id")).distinct().withColumn("__cd", lit(true))
-      } else batchChunks.select(col("new_id")).limit(0).withColumn("__cd", lit(true))
+      else batchChunks.select(col("new_id")).limit(0).withColumn("__cd", lit(true))
     // within-batch greedy resolution (simhashPairs rule), batch-sized
     val bb = batchChunks.repartition(col("chunk"), col("key"))
     val a = bb.select(col("chunk"), col("key"), col("new_id").as("id_a"), col("sh_new").as("sh_a"))
@@ -957,10 +943,8 @@ object Dedup {
       .withColumn("dup_of_corpus", coalesce(col("__cd"), lit(false)))
       .withColumn("kept", !col("dup_of_corpus") && coalesce(col("__bd"), lit(false)) === false)
       .localCheckpoint() // one materialization for store write + caller (inv. 7)
-    if (registerSurvivors)
-      putSeed(store, shTable, flagged.where(col("kept"))
-        .select(col("new_id").as("id"), col("__sh").as("sh")),
-        buckets, appendOnly)
+    val kept = flagged.where(col("kept")).select(col("new_id").as("id"), col("__sh").as("sh"))
+    if (!kept.isEmpty) putSeed(store, shTable, kept, buckets, appendOnly)
     flagged.drop("new_id", "__sh", "__cd", "__bd")
   }
 
@@ -1450,19 +1434,18 @@ object Dedup {
     * seed instead of a corpus-sized snapshot rewrite, the per-trigger
     * economics a streaming ingest needs (measured r13: index-sized →
     * batch-sized per trigger at sf1). The trade: appends do not dedup,
-    * so an at-least-once REPLAY duplicates the batch's postings and gram
-    * arrays. [[containmentIncremental]] is duplicate-tolerant by
+    * so seeding the same documents twice duplicates their postings and
+    * gram arrays. [[containmentIncremental]] is duplicate-tolerant by
     * construction (candidates distinct on (probe_id, id); the verify
-    * slice dedups gram rows per id), and df inflation is the documented
-    * performance-only skew — so replayed seeds degrade nothing but a few
-    * bytes; exactly-once consumers guard replays upstream (see
+    * slice dedups gram rows per id). A streaming caller seeds through a
+    * txn view ([[graft.store.TableStore.txn]]), so a replayed batch's
+    * appends and df merge are no-ops (see
     * [[graft.streaming.Streaming.containmentIngestGate]]). */
   def seedGramIndex(store: graft.store.TableStore, postingsTable: String,
                     dfTable: String, gramsTable: String,
                     corpus: DataFrame, textCol: String, idCol: String,
                     n: Int = 3, buckets: Int = 0,
-                    appendOnly: Boolean = false,
-                    mergeDf: Boolean = true): Unit = {
+                    appendOnly: Boolean = false): Unit = {
     // one fanned-out kernel pass (see seedContainmentTables): the
     // repartition lifts tokenize+ngram off the (often single-split) scan
     val prepped = corpus.repartition(fanOutParts(corpus), col(idCol))
@@ -1471,7 +1454,7 @@ object Dedup {
         GraftFunctions.ngramHashes(col("__tokens"), n).as("grams"))
       .withColumn("sz", size(col("grams")))
     seedContainmentTables(store, postingsTable, dfTable, gramsTable,
-      prepped, keysCol = "grams", "gram", buckets, appendOnly, mergeDf)
+      prepped, keysCol = "grams", "gram", buckets, appendOnly)
   }
 
   /** Seed the persisted WINNOWED containment index for
@@ -1494,8 +1477,7 @@ object Dedup {
                       dfTable: String, gramsTable: String,
                       corpus: DataFrame, textCol: String, idCol: String,
                       n: Int = 3, w: Int = 8, buckets: Int = 0,
-                      appendOnly: Boolean = false,
-                      mergeDf: Boolean = true): Unit = {
+                      appendOnly: Boolean = false): Unit = {
     // one fanned-out kernel pass (see seedContainmentTables)
     val prepped = corpus.repartition(fanOutParts(corpus), col(idCol))
       .withColumn("__tokens", tokensCol(col(textCol)))
@@ -1504,31 +1486,22 @@ object Dedup {
         GraftFunctions.winnowHashes(col("__tokens"), n, w).as("__keys"))
       .withColumn("sz", size(col("grams")))
     seedContainmentTables(store, fpTable, dfTable, gramsTable,
-      prepped, keysCol = "__keys", "fp", buckets, appendOnly, mergeDf)
+      prepped, keysCol = "__keys", "fp", buckets, appendOnly)
   }
 
   /** Shared seeding body of [[seedGramIndex]] / [[seedWinnowIndex]]:
     * postings = `__keys` exploded under `keyName`, df delta-merged by
-    * sum, gram arrays upserted/appended by id.
-    *
-    * `mergeDf = false` skips the df delta-merge — the at-least-once
-    * REPLAY hook (r14 advice): a replayed seeding that merged its counts
-    * again would inflate df by one batch, and while the exact probe's
-    * "df skew is performance-only" claim holds (prefix CHOICE is
-    * order-free), the winnow index's df CAP is recall-bearing — an
-    * inflated fingerprint df can cross dfCap/effCap and silently lose
-    * pairs beyond the measured recall contract. Skipping on replay errs
-    * in the recall-SAFE direction: if the crashed attempt never reached
-    * the df merge, df undercounts by one batch (keys look rarer → MORE
-    * candidates probed, never fewer), bounded and self-healing as later
-    * batches merge normally. */
+    * sum, gram arrays upserted/appended by id. Through a txn view each of
+    * the three writes applies at most once per batch: a replayed seeding
+    * would otherwise inflate df by one batch, and the winnow index's df
+    * CAP is recall-bearing (an inflated fingerprint df can cross
+    * dfCap/effCap and silently lose pairs). */
   private def seedContainmentTables(store: graft.store.TableStore,
                                     postingsTable: String, dfTable: String,
                                     gramsTable: String, prepped: DataFrame,
                                     keysCol: String,
                                     keyName: String, buckets: Int,
-                                    appendOnly: Boolean,
-                                    mergeDf: Boolean = true): Unit = {
+                                    appendOnly: Boolean): Unit = {
     require(!(appendOnly && buckets > 0),
       "appendOnly seeding needs plain snapshots (buckets = 0): bucketed " +
         "layouts carry catalog file metadata that file appends would skew")
@@ -1557,18 +1530,14 @@ object Dedup {
     // invariant 9 exists to prevent (recall would survive — prefix choice
     // is order-free — but the scale contract would silently void). The
     // merged table is vocab-sized, so the per-batch rewrite is bounded by
-    // the vocabulary, not the corpus. mergeDf = false (replay hook) skips
-    // it — see the method Scaladoc for why inflation is the lossy direction.
-    if (mergeDf) {
-      val batchDf = postings.groupBy(keyName).agg(count(lit(1)).as("df"))
-      if (store.exists(dfTable))
-        store.overwrite(dfTable,
-          store.read(dfTable).unionByName(batchDf)
-            .groupBy(keyName).agg(sum("df").as("df")))
-      else store.overwrite(dfTable, batchDf,
-        primaryKeys = Seq(keyName), buckets = buckets)
-    } else require(store.exists(dfTable),
-      "mergeDf = false needs an existing df table (replay-only hook)")
+    // the vocabulary, not the corpus.
+    val batchDf = postings.groupBy(keyName).agg(count(lit(1)).as("df"))
+    if (store.exists(dfTable))
+      store.overwrite(dfTable,
+        store.read(dfTable).unionByName(batchDf)
+          .groupBy(keyName).agg(sum("df").as("df")))
+    else store.overwrite(dfTable, batchDf,
+      primaryKeys = Seq(keyName), buckets = buckets)
     put(gramsTable, mat.select("id", "grams", "sz"), Seq("id"))
     // nothing references the pin past this call — free its blocks NOW
     // instead of waiting for the ContextCleaner (r15 advice: a per-trigger
@@ -1596,19 +1565,12 @@ object Dedup {
     * ordered batch→corpus; batch-internal pairs are out of scope by
     * construction (the batch only probes the store).
     *
-    * `excludeCorpusIds` (one `id` column) removes those CORPUS docs from
-    * the candidate side — the replay hook for at-least-once callers: a
-    * replayed batch can probe an index already holding its OWN docs
-    * (crash between index seed and downstream commit), and without the
-    * exclusion every previously-seeded doc self-matches at containment
-    * 1.0 AND batch-internal containment pairs (a quote and its source
-    * arriving together) surface on replay only — silent divergence from
-    * the no-crash run (r13 review + r13 advice). Callers pass exactly the
-    * ids THIS batch already seeded ([[graft.streaming.Streaming
-    * .containmentIngestGate]] tracks them in a seed log); a doc
-    * legitimately re-sent in a LATER batch still self-matches at 1.0 and
-    * is correctly flagged as contained — a blanket self-pair exclusion
-    * (the r13 interim fix) would silently wave such duplicates through.
+    * An at-least-once caller probes through a txn view
+    * ([[graft.store.TableStore.txn]]): a replayed batch then reads each
+    * index as of the version before its own seeding, so its previously
+    * seeded docs neither self-match nor hide batch-internal pairs, while
+    * a doc re-sent in a LATER batch still self-matches at 1.0 and is
+    * flagged (a blanket self-pair exclusion would wave it through).
     *
     * Topology (every corpus table streams MAP-ONLY, every shuffle batch-
     * or collision-sized): the batch signs once (pinned — prefix and
@@ -1630,8 +1592,7 @@ object Dedup {
                              batch: DataFrame, textCol: String, idCol: String,
                              n: Int = 3, threshold: Double = 0.8,
                              broadcastMaxProbeDocs: Long = 65536,
-                             maxProbeCandidatesPerPosting: Long = 64,
-                             excludeCorpusIds: Option[DataFrame] = None): DataFrame = {
+                             maxProbeCandidatesPerPosting: Long = 64): DataFrame = {
     val gramsStore = store.read(gramsTable)
     val prepped = batch
       .withColumn("__tokens", tokensCol(col(textCol)))
@@ -1693,22 +1654,16 @@ object Dedup {
       }
     }
     val prefix = prefixAll.select(col("gram"), col("probe_id"), col("__sz"))
-    val candRaw = store.read(postingsTable)
+    val cand = store.read(postingsTable)
       .join(probeSide(prefix), Seq("gram"))
       .where(col("sz") >= col("__sz") * threshold - 1e-9)
-    // replay exclusion (batch-sized right side): see Scaladoc — only the
-    // ids the CALLER knows this batch already seeded, never a blanket
-    // self-pair filter
-    val cand = excludeCorpusIds.fold(candRaw)(ex =>
-        candRaw.join(probeSide(ex.select(col("id").cast("long").as("id"))),
-          Seq("id"), "left_anti"))
       .select(col("probe_id"), col("id"))
       .dropDuplicates("probe_id", "id")
     // unrounded gate, rounded presentation — see [[containmentPairs]].
     // dropDuplicates AFTER the candidate join (collision-sized, never a
-    // corpus shuffle): under append-only seeding an at-least-once replay
-    // can leave duplicate gram rows per id — duplicates are bit-identical
-    // (same doc, same grams), so keeping any one is deterministic
+    // corpus shuffle): append-only seeding of the same doc twice leaves
+    // duplicate gram rows per id — duplicates are bit-identical (same
+    // doc, same grams), so keeping any one is deterministic
     gramsStore.select(col("id"), col("grams"))
       .join(probeSide(cand), Seq("id"))
       .dropDuplicates("probe_id", "id")
@@ -1730,8 +1685,8 @@ object Dedup {
     * where the recall-complete probe's candidate volume grows with corpus
     * df and its guard refuses by design (measured r13 at sf10: ~200
     * candidates per batch posting, 2.34B candidates predicted, >70 GB
-    * spill — BASELINE.md r13 addendum). Same output and
-    * `excludeCorpusIds` replay contract as the exact probe; recall is
+    * spill — BASELINE.md r13 addendum). Same output and txn-view
+    * replay contract as the exact probe; recall is
     * [[containmentVerifiedPairs]]' winnowing contract — any contiguous
     * shared run ≥ w+n−1 tokens shares a fingerprint, deterministic MODULO
     * the df cap (quote/subset detection, the workload this op exists
@@ -1764,8 +1719,7 @@ object Dedup {
                                    dfCap: Long = 4096,
                                    candidateBudgetPerPosting: Long = 8,
                                    minCandidateBudget: Long = 2000000L,
-                                   broadcastMaxProbeDocs: Long = 65536,
-                                   excludeCorpusIds: Option[DataFrame] = None): DataFrame = {
+                                   broadcastMaxProbeDocs: Long = 65536): DataFrame = {
     val gramsStore = store.read(gramsTable)
     val prepped = batch
       .withColumn("__tokens", tokensCol(col(textCol)))
@@ -1805,18 +1759,14 @@ object Dedup {
     }
     val kept = withDf.where(col("__df") <= effCap)
       .select(col("fp"), col("probe_id"), col("__sz"))
-    val candRaw = store.read(fpTable)
+    val cand = store.read(fpTable)
       .join(probeSide(kept), Seq("fp"))
       // containment admits one size filter: |A∩B| ≤ |B| ⟹ |B| ≥ t·|A|
       .where(col("sz") >= col("__sz") * threshold - 1e-9)
-    // replay exclusion — the containmentIncremental contract, verbatim
-    val cand = excludeCorpusIds.fold(candRaw)(ex =>
-        candRaw.join(probeSide(ex.select(col("id").cast("long").as("id"))),
-          Seq("id"), "left_anti"))
       .select(col("probe_id"), col("id"))
       .dropDuplicates("probe_id", "id")
     // unrounded gate, rounded presentation; dropDuplicates after the
-    // candidate join tolerates replayed append-only gram rows — identical
+    // candidate join tolerates duplicate append-only gram rows — identical
     // to the exact probe's verify slice
     gramsStore.select(col("id"), col("grams"))
       .join(probeSide(cand), Seq("id"))

@@ -131,7 +131,8 @@ class ClusterSpec extends AnyFunSuite {
       11L -> Seq(0.6, 0.0, 0.8, 0.0),    // novel, cluster 0, cos vs 1 ≈ 0.6
       12L -> Seq(0.61, 0.0, 0.79, 0.0),  // within-batch near-dup of 11
       13L -> Seq(0.0, 0.0, 0.0, 1.0))    // novel, orthogonal to everything
-    val out = Cluster.embeddingIncremental(store, "sigs", batch, "v", "id",
+    // the batch runs as trigger 0 of a stream: through its txn view
+    val out = Cluster.embeddingIncremental(store.txn("ck", 0), "sigs", batch, "v", "id",
         cents, threshold = 0.95)
       .select("id", "dup_of_corpus", "kept")
       .as[(Long, Boolean, Boolean)].collect().toSet
@@ -142,18 +143,19 @@ class ClusterSpec extends AnyFunSuite {
         vecs(20L -> Seq(0.6, 0.01, 0.8, 0.0)), "v", "id", cents, threshold = 0.95)
       .select("dup_of_corpus").as[Boolean].collect().toSeq
     assert(out2 == Seq(true))
-    // replay exclusion: probing again with the ids THIS batch seeded
-    // excluded keeps the no-crash outcome (11/13 survive, not self-matched
-    // out); without exclusion every previously-kept row self-matches at 1.0
-    val excl = Seq(11L, 13L).toDF("id")
-    val replay = Cluster.embeddingIncremental(store, "sigs", batch, "v", "id",
-        cents, threshold = 0.95, excludeCorpusIds = Some(excl),
-        registerSurvivors = false)
+    // replay exclusion: a replay of trigger 0 through a fresh view of its
+    // txn reads the signatures as they were before it, so it keeps the
+    // no-crash outcome (11/13 survive, not self-matched out) and registers
+    // nothing; without the view every previously-kept row self-matches at 1.0
+    val version = store.currentVersion("sigs")
+    val replay = Cluster.embeddingIncremental(store.txn("ck", 0), "sigs", batch, "v", "id",
+        cents, threshold = 0.95)
       .select("id", "dup_of_corpus", "kept")
       .as[(Long, Boolean, Boolean)].collect().toSet
     assert(replay == out)
+    assert(store.currentVersion("sigs") == version)
     val noExcl = Cluster.embeddingIncremental(store, "sigs", batch, "v", "id",
-        cents, threshold = 0.95, registerSurvivors = false)
+        cents, threshold = 0.95)
     assert(noExcl.where(col("kept")).count() == 0) // all self-match at 1.0
   }
 

@@ -60,8 +60,8 @@ class IvfIndexSpec extends AnyFunSuite {
     IvfIndex.assignIncremental(ap, "p",
       df.where(col("vec_id") > 20), "vec_id", "embedding", centroids,
       appendOnly = true)
-    // an at-least-once replay of the second batch — file-level append, no
-    // seed-log guard needed: assignment is deterministic, so the replay
+    // an at-least-once replay of the second batch on the base store (no
+    // txn view): assignment is deterministic, so the replay
     // appends EXACT duplicates and every consumer collapses them by id
     IvfIndex.assignIncremental(ap, "p",
       df.where(col("vec_id") > 20), "vec_id", "embedding", centroids,

@@ -269,7 +269,8 @@ class StoreSpec extends AnyFunSuite {
       ("replacePartitions", Seq("hive"), (s, t) => s.replacePartitions(t, batch), 5),
       ("compact", all, (s, t) => s.compact(t, n = 1, retain = 2), 6),
       ("FeatureStore.save", all, (s, t) =>
-        FeatureStore.save(s, t, batch, Seq("id"), Nil), 7))
+        FeatureStore.save(s, t, batch, Seq("id"), Nil), 7),
+      ("upsert through a txn view", all, (s, t) => s.txn("ck", 0).upsert(t, batch), 7))
     for ((op, supported, run, rows) <- ops; layout <- supported) {
       val root = Files.createTempDirectory("graft_store_orphan")
       val store = new TableStore(spark, root.toString)
@@ -292,6 +293,65 @@ class StoreSpec extends AnyFunSuite {
       assert(out.where($"id" === 99L).count() == 0, s"$what: a phantom row surfaced")
       assert(out.count() == rows, what)
     }
+  }
+
+  test("txn view: stamps on first write, a replay reads the version before its " +
+      "txn and writes nothing, later writes carry the txn forward") {
+    val root = Files.createTempDirectory("graft_store_txn")
+    val store = new TableStore(spark, root.toString)
+    def ints(t: String, s: TableStore = store) = s.read(t).as[Int].collect().sorted.toSeq
+    def txnOf(t: String) = store.meta(t).get.txn
+    store.overwrite("t", Seq(1).toDF("k"), primaryKeys = Seq("k")) // v0, no txn
+    assert(txnOf("t").isEmpty)
+    // batch 0 appends (v1) and creates a table (v0)
+    val b0 = store.txn("ck", 0)
+    assert(!b0.committed("t"))
+    b0.appendFiles("t", Seq(2).toDF("k"))
+    b0.overwrite("made", Seq(5).toDF("k"), primaryKeys = Seq("k"))
+    assert(txnOf("t").contains(TableStore.Txn("ck", 0, 1)))
+    assert(txnOf("made").contains(TableStore.Txn("ck", 0, 0)))
+    // its replay sees each table as it was before the txn, and its writes
+    // are no-ops: the versions do not move
+    val replay = store.txn("ck", 0)
+    assert(replay.committed("t") && replay.committed("made"))
+    assert(replay.exists("t") && ints("t", replay) == Seq(1))
+    assert(!replay.exists("made") && store.exists("made"))
+    intercept[RuntimeException](replay.read("made"))
+    replay.appendFiles("t", Seq(2).toDF("k"))
+    replay.overwrite("made", Seq(6).toDF("k"))
+    assert(store.currentVersion("t") == 1 && ints("t") == Seq(1, 2))
+    assert(store.currentVersion("made") == 0 && ints("made") == Seq(5))
+    // the base store and a later batch read the current version
+    val b1 = store.txn("ck", 1)
+    assert(!b1.committed("t") && !store.committed("t"))
+    assert(ints("t", b1) == Seq(1, 2) && b1.exists("made"))
+    // a base upsert and compact carry the txn forward
+    store.upsert("t", Seq(3).toDF("k"))
+    assert(store.currentVersion("t") == 2 && txnOf("t").contains(TableStore.Txn("ck", 0, 1)))
+    store.compact("t")
+    assert(store.currentVersion("t") == 3 && txnOf("t").contains(TableStore.Txn("ck", 0, 1)))
+    // a later batch stamps its own; an earlier batch's write is then a no-op
+    b1.upsert("t", Seq(4).toDF("k"))
+    assert(txnOf("t").contains(TableStore.Txn("ck", 1, 4)))
+    store.txn("ck", 0).upsert("t", Seq(9).toDF("k"))
+    assert(store.currentVersion("t") == 4 && ints("t") == Seq(1, 2, 3, 4))
+    // a second write through one view is a programming error
+    val second = intercept[IllegalStateException](b1.upsert("t", Seq(7).toDF("k")))
+    assert(second.getMessage.contains("second write"))
+    // another app fails fast on read, write and the metadata check
+    val other = store.txn("fresh", 0)
+    Seq[TableStore => Any](_.read("t"), _.committed("t"),
+        _.upsert("t", Seq(8).toDF("k"))).foreach { op =>
+      val e = intercept[IllegalStateException](op(other))
+      assert(e.getMessage.contains("'ck'") && e.getMessage.contains("'fresh'"), e.getMessage)
+    }
+    assert(store.currentVersion("t") == 4)
+    // the txn is on disk only where a view wrote: other tables keep their bytes
+    store.overwrite("plain", Seq(1).toDF("k"))
+    def metaText(t: String) = Files.readString(root.resolve(t).resolve("_meta.json"))
+    assert(metaText("t").contains("\"txn\":{\"app\":\"ck\",\"batch\":1,\"version\":4}"))
+    assert(!metaText("plain").contains("txn"))
+    assert(new TableStore(spark, root.toString).meta("t") == store.meta("t"))
   }
 
   test("crash consistency: a snapshot dir without the _meta.json commit is " +
@@ -454,6 +514,40 @@ class StoreSpec extends AnyFunSuite {
       "month = '2024-02'")
     val out = store.read("r").orderBy("pk").as[(Int, String, Double)].collect().toSeq
     assert(out == Seq((1, "2024-01", 1.0), (9, "2024-02", 9.0)))
+  }
+
+  test("a failed query after a commit is not re-planned by a listener: no " +
+      "ExecutionListenerBus ERROR") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    // a session of its own: a listener installed on the shared session by
+    // another suite must not decide this case
+    val session = spark.newSession()
+    val store = new TableStore(session, Files.createTempDirectory("graft_store_listener").toString)
+    val rows = session.createDataFrame(Seq(Tuple1(1), Tuple1(2))).toDF("k")
+    store.overwrite("c", rows, primaryKeys = Seq("k"))
+    FeatureStore.save(store, "c", rows, Seq("k"), Nil)
+    store.compact("c", n = 1, retain = 1)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-listener-errors", null, null, true,
+        Array.empty) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.ERROR))
+          errors.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger("org.apache.spark.sql.util.ExecutionListenerBus")
+      .asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try {
+      intercept[Exception](store.readVersion("c", 0).collect()) // pruned
+      org.apache.spark.TestBus.drain(session.sparkContext)
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+    assert(errors.isEmpty, errors.asScala.mkString("\n"))
   }
 
   test("compact prunes old versions but keeps the latest") {
@@ -755,5 +849,35 @@ class StoreSpec extends AnyFunSuite {
     (protocol :+ "version + 1").foreach { step =>
       assert(code.count { case (l, i) => commit.contains(i) && l.contains(step) } == 1, step)
     }
+  }
+
+  test("one replay mechanism: no hand-built exactly-once state in src/main, and " +
+      "a txn is stamped only inside TableStore.commit") {
+    val main = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(main), s"run from the repo root (no $main)")
+    val store = main.resolve("graft/store/TableStore.scala")
+    val storeLines = Files.readAllLines(store).asScala.toIndexedSeq
+    /** Line indices of the member defined on the line containing `head`. */
+    def member(head: String): Range = {
+      val start = storeLines.indexWhere(_.contains(head))
+      assert(start >= 0, s"no `$head` in $store")
+      start to storeLines.indexWhere(l => l.startsWith("  ") && !l.startsWith("   "), start + 1)
+    }
+    // the one place a txn is created (commit) and the one it is decoded
+    val allowed = member("def commit[") ++ member("def decode(")
+    val retired = Seq("applied_batch", "applied_ckpt", "__seedlog", "excludeCorpusIds", "mergeDf")
+    val stamp = """\bTxn\(|\btxn\s*=(?!=)""".r
+    val hits = Files.walk(main).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .sortBy(_.toString).flatMap { f =>
+        Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (l, i) if retired.exists(l.contains) ||
+              (stamp.findFirstIn(l).isDefined && !l.contains("case class Txn(") &&
+                !(f == store && allowed.contains(i))) =>
+            s"$f:${i + 1}: ${l.trim}"
+        }
+      }
+    assert(hits.isEmpty, hits.mkString(
+      "replay state outside the store's txn (write through store.txn(app, batch); " +
+        "only TableStore.commit stamps a txn):\n", "\n", ""))
   }
 }

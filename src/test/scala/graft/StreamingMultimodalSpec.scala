@@ -30,6 +30,24 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     dir
   }
 
+  /** Starts a gate with `Streaming.crashHook` throwing once at batch `at`
+    * (after the index appends, before the clean commit) and expects the
+    * query to die; then restarts it from the same checkpoint and drains. */
+  private def killAndRestart(at: Long)(
+      gate: () => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    Streaming.crashHook = (_, b) =>
+      if (b == at) {
+        Streaming.crashHook = (_, _) => ()
+        sys.error("injected crash between index append and clean commit")
+      }
+    try {
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        gate().awaitTermination(120000)
+      }
+    } finally Streaming.crashHook = (_, _) => ()
+    assert(gate().awaitTermination(120000), "restarted gate did not finish")
+  }
+
   test("streaming tumbling agg over a file source matches the batch result") {
     val stream = Streaming.tumblingAgg(Streaming.eventsStream(spark, eventsDir))
     val q = stream.writeStream.format("memory").queryName("tumbling_test")
@@ -387,17 +405,20 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     arrivals.coalesce(1).write.mode("append").parquet(dir)
     val store = new TableStore(spark,
       Files.createTempDirectory("graft_cg2_st").toString)
+    val cp = Files.createTempDirectory("graft_cg2_cp").toString
     val q = Streaming.containmentIngestGate(
       spark.readStream.schema(pages.schema)
         .option("maxFilesPerTrigger", 1).parquet(dir),
       "text", "doc_id", store, "cpost", "cdf", "cgrams", "clean",
-      Files.createTempDirectory("graft_cg2_cp").toString, threshold = 0.8)
+      cp, threshold = 0.8)
     q.awaitTermination(120000)
     def cleanIds = store.read("clean").select("doc_id")
       .as[Long].collect().sorted.toSeq
     assert(cleanIds == Seq(1L, 2L, 4L)) // the quote (3) was gated out
-    // clean rows carry the replay guard atomically with the append
-    assert(store.read("clean").columns.contains("applied_batch"))
+    // clean holds exactly the arrival columns; the last batch's txn rides
+    // its metadata, committed with the append
+    assert(store.read("clean").columns.toSeq == Seq("doc_id", "text"))
+    assert(store.meta("clean").flatMap(_.txn).map(t => (t.app, t.batch)) == Some((cp, 1L)))
     // a replayed (at-least-once) index seed appends DUPLICATE postings and
     // gram rows; the probe must be duplicate-tolerant: same verdicts, no
     // duplicate pairs
@@ -414,13 +435,11 @@ class StreamingMultimodalSpec extends AnyFunSuite {
 
   test("containmentIngestGate: replay after a crashed index seed does not " +
       "lose the batch — INCLUDING batch-internal contained pairs (r13 advice)") {
-    // the crash window: a previous attempt wrote the seed log AND seeded
-    // the batch into the index (both appendFiles committed) but died
-    // before the clean commit. The replayed probe runs against an index
-    // already holding the batch's own docs — the seed log scopes the
-    // exclusion to exactly those ids, so a quote AND ITS SOURCE arriving
-    // in the same batch keep their no-crash outcome (batch-internal
-    // pairs out of scope) instead of the quote anti-joining out forever
+    // the crash window: the first attempt seeded the batch into the index
+    // but died before the clean commit. The replayed probe reads the index
+    // as of the version before this batch's txn, so a quote AND ITS SOURCE
+    // arriving in the same batch keep their no-crash outcome (batch-
+    // internal pairs out of scope) instead of the quote anti-joining out
     val pages = Seq(
       (1L, (1 to 40).map(i => "word" + i).mkString(" ")),
       (2L, "a separate page about completely unrelated topics and things"),
@@ -431,24 +450,18 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val store = new TableStore(spark,
       Files.createTempDirectory("graft_cg3_st").toString)
     val cp = Files.createTempDirectory("graft_cg3_cp").toString
-    // the crashed attempt's surviving work, in the gate's own order:
-    // seed log first (batchId 0 under this checkpoint), then the index
-    store.overwrite("clean__seedlog",
-      Seq(1L, 2L, 3L).toDF("id")
-        .withColumn("applied_batch", lit(0L))
-        .withColumn("applied_ckpt", lit(cp)),
-      primaryKeys = Seq("id"))
-    graft.text.Dedup.seedGramIndex(store, "cpost", "cdf", "cgrams",
-      pages, "text", "doc_id")
-    val q = Streaming.containmentIngestGate(
-      spark.readStream.schema(pages.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir),
-      "text", "doc_id", store, "cpost", "cdf", "cgrams", "clean",
-      cp, threshold = 0.8)
-    q.awaitTermination(120000)
+    killAndRestart(at = 0) { () =>
+      Streaming.containmentIngestGate(
+        spark.readStream.schema(pages.schema)
+          .option("maxFilesPerTrigger", 1).parquet(dir),
+        "text", "doc_id", store, "cpost", "cdf", "cgrams", "clean",
+        cp, threshold = 0.8)
+    }
+    // the crashed attempt seeded all three docs once; the replay added none
+    assert(store.read("cgrams").count() == 3)
     // all three survive — the no-crash outcome (3 probes nothing OUTSIDE
-    // its own batch); the pre-r14 blanket self-exclusion kept 1 and 2 but
-    // silently lost the quote 3 to its same-batch source on replay
+    // its own batch); a blanket self-exclusion kept 1 and 2 but silently
+    // lost the quote 3 to its same-batch source on replay
     assert(store.read("clean").select("doc_id").as[Long].collect().sorted
       .toSeq == Seq(1L, 2L, 3L))
   }
@@ -612,11 +625,11 @@ class StreamingMultimodalSpec extends AnyFunSuite {
   test("nearDupIngestGate (minhash): crash-replay keeps the no-crash " +
       "outcome — the seeded survivor does not self-match itself out") {
     // one batch: A (1), B (2, near-dup of A — within-batch loser), C (3,
-    // novel). The crashed attempt committed the seed log {1, 3} and the
-    // survivors' signatures, then died before the clean commit. The
-    // replayed probe must exclude {1, 3} from the corpus side — without
-    // it, A self-matches its own seeded signature at est-Jaccard 1.0 and
-    // is silently lost from the clean output forever.
+    // novel). The crashed attempt registered the survivors' signatures
+    // {1, 3}, then died before the clean commit. The replayed probe reads
+    // the signatures as they were before this batch — without that, A
+    // self-matches its own seeded signature at est-Jaccard 1.0 and is
+    // silently lost from the clean output forever.
     val batch = Seq(
       (1L, (1 to 30).map(i => "tok" + i).mkString(" ")),
       (2L, (1 to 30).map(i => "tok" + i).mkString(" ") + " extra"),
@@ -627,19 +640,14 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val store = new TableStore(spark,
       Files.createTempDirectory("graft_nd2_st").toString)
     val cp = Files.createTempDirectory("graft_nd2_cp").toString
-    store.overwrite("clean__seedlog",
-      Seq(1L, 3L).toDF("id")
-        .withColumn("applied_batch", lit(0L))
-        .withColumn("applied_ckpt", lit(cp)),
-      primaryKeys = Seq("id"))
-    graft.text.Dedup.seedMinhashSignatures(store, "sigs",
-      batch.where($"doc_id".isin(1L, 3L)), "text", "doc_id")
-    val q = Streaming.nearDupIngestGate(
-      spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir),
-      "text", "doc_id", store, "sigs", "clean", cp,
-      method = "minhash", threshold = 0.5)
-    q.awaitTermination(120000)
+    killAndRestart(at = 0) { () =>
+      Streaming.nearDupIngestGate(
+        spark.readStream.schema(batch.schema)
+          .option("maxFilesPerTrigger", 1).parquet(dir),
+        "text", "doc_id", store, "sigs", "clean", cp,
+        method = "minhash", threshold = 0.5)
+    }
+    assert(store.read("sigs").select("id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
     assert(store.read("clean").select("doc_id").as[Long].collect().sorted
       .toSeq == Seq(1L, 3L)) // the no-crash outcome, exactly
   }
@@ -682,16 +690,17 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     // a survivor's signature answers the NEXT batch: clone of 4 is flagged
     val probe = graft.sim.Cluster.embeddingIncremental(store, "esigs",
         Seq((9L, Seq(0.6, 0.01, 0.8, 0.0))).toDF("doc_id", "vec"),
-        "vec", "doc_id", cents, threshold = 0.95, registerSurvivors = false)
+        "vec", "doc_id", cents, threshold = 0.95)
     assert(probe.select("dup_of_corpus").as[Boolean].collect().toSeq == Seq(true))
   }
 
   test("nearDupIngestGate (embedding): crash-replay keeps the no-crash " +
-      "outcome via the seed-log exclusion") {
+      "outcome via the txn view") {
     // the minhash crash-replay scenario on the embedding method: the
-    // crashed attempt committed the seed log {1, 3} and the survivors'
-    // signatures, then died before the clean commit — the replayed probe
-    // must exclude exactly those ids or 1 self-matches at cosine 1.0
+    // crashed attempt registered the survivors' signatures {1, 3}, then
+    // died before the clean commit — the replayed probe must read the
+    // signatures as they were before this batch or 1 self-matches at
+    // cosine 1.0
     val cents = Seq(Seq(1000000L, 0L, 0L, 0L), Seq(0L, 1000000L, 0L, 0L))
     val batch = Seq(
       (1L, Seq(1.0, 0.01, 0.0, 0.0)),
@@ -703,18 +712,14 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val store = new TableStore(spark,
       Files.createTempDirectory("graft_nd4_st").toString)
     val cp = Files.createTempDirectory("graft_nd4_cp").toString
-    store.overwrite("clean__seedlog",
-      Seq(1L, 3L).toDF("id")
-        .withColumn("applied_batch", lit(0L))
-        .withColumn("applied_ckpt", lit(cp)))
-    graft.sim.Cluster.seedEmbeddingSignatures(store, "esigs",
-      batch.where($"doc_id".isin(1L, 3L)), "vec", "doc_id", cents)
-    val q = Streaming.nearDupIngestGate(
-      spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir),
-      "vec", "doc_id", store, "esigs", "clean", cp,
-      method = "embedding", threshold = 0.95, centroids = cents)
-    q.awaitTermination(120000)
+    killAndRestart(at = 0) { () =>
+      Streaming.nearDupIngestGate(
+        spark.readStream.schema(batch.schema)
+          .option("maxFilesPerTrigger", 1).parquet(dir),
+        "vec", "doc_id", store, "esigs", "clean", cp,
+        method = "embedding", threshold = 0.95, centroids = cents)
+    }
+    assert(store.read("esigs").select("id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
     assert(store.read("clean").select("doc_id").as[Long].collect().sorted
       .toSeq == Seq(1L, 3L)) // the no-crash outcome, exactly
   }
@@ -1043,8 +1048,8 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     assert(afterCrash == 200L, s"afterCrash=$afterCrash") // batches 0+1 merged
 
     // phase 2: restart from the checkpoint — batch 1 is REPLAYED (its
-    // offset never committed); the applied_batch guard must skip the
-    // double-merge, then batch 2 drains exactly once.
+    // offset never committed); the counts table already holds its txn, so
+    // the merge is skipped, then batch 2 drains exactly once.
     run()
     assert(storedTotal() == 300L,
       "replayed batch double-merged the accumulated distribution")
@@ -1068,12 +1073,43 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     assert(reports.last == want)
   }
 
+  test("a fresh checkpoint over a counts or clean table accumulated under " +
+      "another one fails fast, naming both") {
+    val dir = Files.createTempDirectory("graft_ckmm").toString
+    Seq((1L, "first page about one thing", 1.0), (2L, "another page on another", 2.0))
+      .toDF("doc_id", "text", "value").coalesce(1).write.mode("append").parquet(dir)
+    def src = spark.readStream
+      .schema(org.apache.spark.sql.types.StructType.fromDDL(
+        "doc_id BIGINT, text STRING, value DOUBLE"))
+      .parquet(dir)
+    val store = new TableStore(spark, Files.createTempDirectory("graft_ckmm_st").toString)
+    val refCounts = Seq((1.0, 1L)).toDF("value", "ref_count")
+    def ks(cp: String) = Streaming.incrementalKsGate(src, "value", refCounts, store,
+      "counts", cp, _ => ())
+    def gate(cp: String) = Streaming.containmentIngestGate(src, "text", "doc_id", store,
+      "cpost", "cdf", "cgrams", "clean", cp)
+    for ((name, run) <- Seq[(String, String => org.apache.spark.sql.streaming.StreamingQuery)](
+        ("counts", ks), ("clean", gate))) {
+      val first = Files.createTempDirectory(s"graft_ckmm_${name}_a").toString
+      assert(run(first).awaitTermination(120000))
+      val fresh = Files.createTempDirectory(s"graft_ckmm_${name}_b").toString
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        run(fresh).awaitTermination(120000)
+      }
+      val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case c: IllegalStateException => c }
+      assert(cause.exists(c => c.getMessage.contains(first) && c.getMessage.contains(fresh)),
+        s"$name: ${e.getMessage}")
+    }
+    assert(store.read("counts").count() == 2 && store.read("clean").count() == 2)
+  }
+
   test("containmentIngestGate: kill BETWEEN index append and clean commit, " +
       "restart from checkpoint — clean table AND df table equal the no-crash run") {
     // worst-case crash point end-to-end through the real checkpoint-restart
     // machinery (r14 verdict item 6): the index holds the batch, the clean
     // guard does not. Batch 1 deliberately carries a quote AND its source
-    // together (ids 4/5) — the pair the seed-log exclusion exists for.
+    // together (ids 4/5) — the pair the replay's pre-batch read exists for.
     val a30 = (1 to 30).map(i => "alpha" + i).mkString(" ")
     val b30 = (1 to 30).map(i => "beta" + i).mkString(" ")
     val batches = Seq(
@@ -1109,7 +1145,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       .awaitTermination(120000)
     assert(ctl.read("clean").select("doc_id").as[Long].collect().sorted.toSeq
       == Seq(1L, 2L, 4L, 5L)) // 3 and 6 gated; batch-internal 4/5 both kept
-    // crash run: hook throws once, at batch 1, AFTER seed log + index appends
+    // crash run: hook throws once, at batch 1, AFTER the index appends
     val st = new TableStore(spark, Files.createTempDirectory("graft_kr_s").toString)
     val cp = Files.createTempDirectory("graft_kr_scp").toString
     val dir = stageDir()
@@ -1131,8 +1167,8 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     gate(dir, st, cp).awaitTermination(120000)
     assert(st.read("clean").select("doc_id").as[Long].collect().sorted.toSeq
       == Seq(1L, 2L, 4L, 5L)) // the no-crash outcome, exactly
-    // and the df table was NOT double-merged on the replay (mergeDf skip):
-    // it equals the control's df table key-for-key
+    // and the df table was merged exactly once (the replay's merge is a
+    // no-op through the txn view): it equals the control's key-for-key
     val dfCrash = st.read("cdf").as[(Long, Long)].collect().toMap
     val dfCtl = ctl.read("cdf").as[(Long, Long)].collect().toMap
     assert(dfCrash == dfCtl, "replayed seeding inflated the df table")

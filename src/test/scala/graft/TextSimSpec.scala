@@ -245,8 +245,7 @@ class TextSimSpec extends AnyFunSuite {
       (10L, "the quick brown fox jumps over the lazy dog and runs far away home"), // resend of 1
       (11L, "entirely novel subject matter regarding distributed columnar executions maybe"))
       .toDF("id", "text")
-    val out = Dedup.minhashIncremental(store, "s", batch, "text", "id",
-        registerSurvivors = false)
+    val out = Dedup.minhashIncremental(store, "s", batch, "text", "id")
       .select("id", "dup_of_corpus").as[(Long, Boolean)].collect().toSet
     assert(out == Set((10L, true), (11L, false)))
   }
@@ -816,8 +815,8 @@ class TextSimSpec extends AnyFunSuite {
     assert(exact == bandedP)
   }
 
-  test("containmentIncremental excludeCorpusIds: replay-scoped exclusion, " +
-      "not a blanket self-pair filter (r13 advice)") {
+  test("containmentIncremental through a replay's txn view: the index before " +
+      "the batch, not a blanket self-pair filter (r13 advice)") {
     val corpus = Seq(
       (1L, (1 to 40).map(i => "word" + i).mkString(" ")),
       (2L, "some other page on a completely different unrelated topic"))
@@ -832,19 +831,27 @@ class TextSimSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // NO exclusion (a doc legitimately re-sent in a later batch): the
-    // re-sent duplicate self-matches at 1.0 and IS flagged — a blanket
-    // self-pair filter would wave it through into the clean output
+    // the no-crash probe: the re-sent duplicate self-matches the earlier
+    // corpus doc at 1.0 and IS flagged — a blanket self-pair filter would
+    // wave it through into the clean output
     val plain = rows(Dedup.containmentIncremental(store, "p", "d", "g",
       batch, "text", "doc_id"))
     assert(plain == Set((1L, 1L), (100L, 1L)))
-    // replay exclusion (this batch already seeded doc 1): corpus doc 1
-    // leaves the candidate side entirely — the batch's internal pairs
-    // stay out of scope, matching the no-crash run
-    val excl = rows(Dedup.containmentIncremental(store, "p", "d", "g",
-      batch, "text", "doc_id",
-      excludeCorpusIds = Some(Seq(1L).toDF("id"))))
-    assert(excl == Set.empty)
+    // a crashed attempt of this batch seeded it through its txn view ...
+    Dedup.seedGramIndex(store.txn("ck", 7), "p", "d", "g", batch, "text", "doc_id",
+      appendOnly = true)
+    // ... so the index now also holds the batch's own docs, and the quote
+    // matches itself
+    assert(rows(Dedup.containmentIncremental(store, "p", "d", "g",
+      batch, "text", "doc_id")) == plain + ((100L, 100L)))
+    // the replay's view reads the index as it was before the batch: the
+    // no-crash pairs exactly, and its re-seeding writes nothing
+    val replay = store.txn("ck", 7)
+    assert(rows(Dedup.containmentIncremental(replay, "p", "d", "g",
+      batch, "text", "doc_id")) == plain)
+    val before = Seq("p", "d", "g").map(store.currentVersion)
+    Dedup.seedGramIndex(replay, "p", "d", "g", batch, "text", "doc_id", appendOnly = true)
+    assert(Seq("p", "d", "g").map(store.currentVersion) == before)
   }
 
   test("keepRarestFallback floor admission is bounded: one key at the " +
