@@ -3,6 +3,8 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
+import graft.ops.Pairs
+import graft.text.Dedup
 
 /** Embedding-space clustering and cluster-bucketed semantic dedup —
   * the SemDeDup recipe (Abbas et al., arXiv:2303.09540): cluster the
@@ -147,21 +149,16 @@ object Cluster {
 
   /** Within-cluster near-duplicate pairs (id_a < id_b, cosine ≥
     * threshold) under a FIXED quantized centroid set — the deterministic
-    * SemDeDup pair search. Repartition on the cluster id BEFORE aliasing
-    * the self-join sides so both share one Exchange (the
-    * [[Similarity.cosineDupPairs]] pattern); each pair appears in exactly
-    * one cluster so no pair-dedup aggregation is needed. */
+    * SemDeDup pair search: a [[graft.ops.Pairs.selfJoin]] on the cluster
+    * id. Each pair appears in exactly one cluster, so no pair-dedup
+    * aggregation is needed. */
   def semanticDupPairs(df: DataFrame, idCol: String, vecCol: String,
                        centroids: Seq[Seq[Long]],
                        threshold: Double = 0.95): DataFrame = {
     val b = assignQuantized(df, vecCol, centroids)
       .select(col("cluster"), col(idCol).as("__id"),
         col(vecCol).cast("array<double>").as("__v"))
-      .repartition(col("cluster"))
-    val a = b.select(col("cluster"), col("__id").as("id_a"), col("__v").as("v_a"))
-    val c = b.select(col("cluster"), col("__id").as("id_b"), col("__v").as("v_b"))
-    a.join(c.hint("shuffle_hash"), Seq("cluster"))
-      .where(col("id_a") < col("id_b"))
+    Pairs.selfJoin(b, Seq("cluster"), "__id", Seq("__v" -> "v"))
       .withColumn("cosine_sim",
         round(GraftFunctions.cosine(col("v_a"), col("v_b")), 6))
       .where(col("cosine_sim") >= threshold)
@@ -215,7 +212,7 @@ object Cluster {
                               corpus: DataFrame, vecCol: String, idCol: String,
                               centroids: Seq[Seq[Long]], buckets: Int = 0,
                               appendOnly: Boolean = false): Unit =
-    graft.text.Dedup.putSeed(store, sigTable,
+    Dedup.putSeed(store, sigTable,
       signatureRows(corpus, vecCol, idCol, centroids), buckets, appendOnly)
 
   /** EMBEDDING (SemDeDup) INCREMENTAL near-dedup: flag a new batch
@@ -227,23 +224,14 @@ object Cluster {
     * boundary: a batch doc is a corpus dup iff a stored doc in the SAME
     * coarse cluster has int8-reconstructed cosine ≥ `threshold` (6-dp
     * rounded — the [[semanticDupPairs]] gate); within the batch the
-    * greedy smaller-id-wins rule applies among non-corpus-dup rows (the
-    * [[graft.text.Dedup.minhashIncremental]] decision shape). SemDeDup's
-    * cluster-boundary loss (a near-dup pair split across clusters is
-    * invisible) carries over unchanged — it is the measured q_sem_dedup
-    * trade, not a new one; raise recall with more probing clusters only
-    * by re-seeding under coarser centroids.
-    *
-    * Scale: stored signatures (~dim + 12 bytes/doc) stream MAP-ONLY —
-    * the batch signature table broadcasts while the batch stays under
-    * `broadcastMaxProbeDocs` (larger batches switch every batch-derived
-    * side to shuffled hash joins), only same-cluster candidates reach
-    * the cosine verify, and the corpus is never re-read, re-assigned, or
-    * shuffled. Within-batch resolution self-joins only the batch on the
-    * cluster key. Kept rows' signatures register (PK id) so the next
-    * batch sees them — default PK upsert (a corpus-sized snapshot
-    * rewrite per call); streaming callers pass `appendOnly = true` and a
-    * txn view, as [[graft.text.Dedup.minhashIncremental]] describes
+    * greedy smaller-id-wins rule applies among non-corpus-dup rows.
+    * SemDeDup's cluster-boundary loss (a near-dup pair split across
+    * clusters is invisible) carries over unchanged — it is the measured
+    * q_sem_dedup trade, not a new one; raise recall with more probing
+    * clusters only by re-seeding under coarser centroids. Stored
+    * signatures are ~dim + 12 bytes/doc, and only same-cluster
+    * candidates reach the cosine verify. Topology, registration and the
+    * streaming contract: [[graft.text.Dedup.nearDupIncremental]]
     * ([[graft.streaming.Streaming.nearDupIngestGate]] with
     * `method = "embedding"`).
     *
@@ -252,52 +240,17 @@ object Cluster {
                            batch: DataFrame, vecCol: String, idCol: String,
                            centroids: Seq[Seq[Long]],
                            threshold: Double = 0.95,
-                           appendOnly: Boolean = false,
-                           broadcastMaxProbeDocs: Long = 65536): DataFrame = {
-    // pinned: one assign+quantize pass feeds the corpus probe, the batch
-    // self-join, and the returned frame — and the broadcast gate's count
-    val bsig = Similarity.int8Quantize(
-        assignQuantized(batch, vecCol, centroids),
-        vecCol, as = "__codes", scaleCol = "__scale")
-      .withColumnRenamed("cluster", "__cluster")
-      .localCheckpoint()
-    val useBroadcast = bsig.count() <= broadcastMaxProbeDocs
-    def probeSide(df: DataFrame): DataFrame =
-      if (useBroadcast) broadcast(df) else df.hint("shuffle_hash")
-    val batchSigs = bsig.select(col(idCol).cast("long").as("new_id"),
-      col("__cluster").as("cluster"), col("__codes").as("c_new"),
-      col("__scale").as("s_new"))
-    val simGate = (cA: Column, sA: Column, cB: Column, sB: Column) =>
-      round(GraftFunctions.cosine(deq(cA, sA), deq(cB, sB)), 6) >= threshold
-    val corpusDupIds =
-      if (store.exists(sigTable))
-        store.read(sigTable)
-          .select(col("id").as("old_id"), col("cluster"),
-            col("codes").as("c_old"), col("scale").as("s_old"))
-          .join(probeSide(batchSigs), Seq("cluster"))
-          .where(simGate(col("c_new"), col("s_new"), col("c_old"), col("s_old")))
-          .select(col("new_id")).distinct().withColumn("__cd", lit(true))
-      else batchSigs.select(col("new_id")).limit(0).withColumn("__cd", lit(true))
-    // within-batch greedy resolution (semanticDupPairs rule), batch-sized
-    val bb = batchSigs.repartition(col("cluster"))
-    val a = bb.select(col("cluster"), col("new_id").as("id_a"),
-      col("c_new").as("c_a"), col("s_new").as("s_a"))
-    val b = bb.select(col("cluster"), col("new_id").as("id_b"),
-      col("c_new").as("c_b"), col("s_new").as("s_b"))
-    val batchDupIds = a.join(b.hint("shuffle_hash"), Seq("cluster"))
-      .where(col("id_a") < col("id_b"))
-      .where(simGate(col("c_a"), col("s_a"), col("c_b"), col("s_b")))
-      .select(col("id_b").as("new_id")).distinct().withColumn("__bd", lit(true))
-    val flagged = bsig
-      .withColumn("new_id", col(idCol).cast("long"))
-      .join(probeSide(corpusDupIds), Seq("new_id"), "left")
-      .join(probeSide(batchDupIds), Seq("new_id"), "left")
-      .withColumn("dup_of_corpus", coalesce(col("__cd"), lit(false)))
-      .withColumn("kept", !col("dup_of_corpus") && coalesce(col("__bd"), lit(false)) === false)
-      .localCheckpoint() // one materialization for store write + caller (inv. 7)
-    val kept = flagged.where(col("kept")).select(col("new_id").as("id"),
-      col("__cluster").as("cluster"), col("__codes").as("codes"), col("__scale").as("scale"))
-    if (!kept.isEmpty) graft.text.Dedup.putSeed(store, sigTable, kept, buckets = 0, appendOnly)
-    flagged.drop("new_id", "__cluster", "__codes", "__scale", "__cd", "__bd")
-  }
+                           appendOnly: Boolean = false): DataFrame =
+    Dedup.nearDupIncremental(store, sigTable,
+      Similarity.int8Quantize(
+          assignQuantized(batch, vecCol, centroids),
+          vecCol, as = "__codes", scaleCol = "__scale")
+        .withColumnRenamed("cluster", "__cluster"),
+      idCol,
+      Dedup.NearDupSig(
+        Seq("__cluster" -> "cluster", "__codes" -> "codes", "__scale" -> "scale"),
+        Seq("cluster"), rows => rows,
+        (x, y) => round(GraftFunctions.cosine(deq(x("codes"), x("scale")),
+          deq(y("codes"), y("scale"))), 6) >= threshold),
+      buckets = 0, appendOnly)
 }

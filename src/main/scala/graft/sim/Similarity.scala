@@ -497,13 +497,10 @@ object Similarity {
   def cosineDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
                      dim: Int, threshold: Double = 0.95,
                      nBits: Int = 10, nTables: Int = 4): DataFrame = {
-    // shuffle on the bucket key BEFORE aliasing the self-join sides: both
-    // sides share one Exchange (ReuseExchange) → SRP keys computed once
-    val b = srpBucketed(corpus, idCol, vecCol, "__id", "__v", nBits, nTables)
-      .repartition(col("__t"), col("__key"))
-    val a = b.select(col("__t"), col("__key"), col("__id").as("id_a"), col("__v").as("v_a"))
-    val c = b.select(col("__t"), col("__key"), col("__id").as("id_b"), col("__v").as("v_b"))
-    a.join(c.hint("shuffle_hash"), Seq("__t", "__key")).where(col("id_a") < col("id_b"))
+    // one reused bucket Exchange → SRP keys computed once
+    graft.ops.Pairs.selfJoin(
+        srpBucketed(corpus, idCol, vecCol, "__id", "__v", nBits, nTables),
+        Seq("__t", "__key"), "__id", Seq("__v" -> "v"))
       // cosine + threshold BEFORE the pair-dedup (see lshTopK note): the
       // distinct aggregates scalar rows of passing pairs only
       .withColumn("cosine_sim",

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
+import graft.ops.Pairs
 
 /** Deduplication kit for training-data pipelines: exact, MinHash+LSH,
   * SimHash, n-gram Jaccard, embedding-cosine near-dup. Extension beyond the
@@ -202,22 +203,6 @@ object Dedup {
 
   // ------------------------------------------------------ minhash + LSH
 
-  /** REFERENCE FORM ONLY — superseded on every hot path by the native
-    * [[graft.functions.MinHashLong]] kernel (HOFs are CodegenFallback);
-    * kept as the readable spec of the signature semantics. Do not use in
-    * pipelines.
-    *
-    * MinHash signature of a shingle/ngram array: for each of `numHashes`
-    * seeded permutations take min over xxhash64(shingle, seed). The
-    * empty-guard doubles as the second `grams` reference that stops
-    * CollapseProject from inlining the grams computation into the per-seed
-    * lambda. */
-  def minHashSignature(grams: Column, numHashes: Int = 64): Column =
-    when(size(grams) > 0,
-      transform(sequence(lit(0), lit(numHashes - 1)),
-        seed => array_min(transform(grams, g => xxhash64(g, seed)))))
-      .otherwise(array_repeat(lit(Long.MaxValue), numHashes))
-
   /** LSH band keys: split the signature into `bands` bands of `rowsPerBand`
     * and hash each band — docs sharing ANY band key are candidates. */
   def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
@@ -259,6 +244,11 @@ object Dedup {
     GraftFunctions.eqPositions(col("sig_a"), col("sig_b"))
       .cast("double") / lit(numHashes)
 
+  /** Band-bucket candidate pairs `(band, key, id_a, sig_a, id_b, sig_b)`
+    * of a [[banded]] frame, `id_a < id_b`, once per shared band. */
+  private def bandPairs(bd: DataFrame): DataFrame =
+    Pairs.selfJoin(bd, Seq("band", "key"), "__id", Seq("__sig" -> "sig"))
+
   /** MinHash-LSH near-dedup: shingle → minhash → band → bucket-join →
     * greedy resolution: a doc is dropped iff ANY bucket contains a smaller
     * id whose estimated Jaccard ≥ threshold.
@@ -266,17 +256,10 @@ object Dedup {
     * Returns the deduplicated DataFrame (original columns). */
   def minhashLsh(df: DataFrame, textCol: String, idCol: String,
                  numHashes: Int = 64, bands: Int = 16,
-                 shingleSize: Int = 5, threshold: Double = 0.8): DataFrame = {
-    // shuffle on the bucket key BEFORE aliasing the two self-join sides:
-    // both sides then hang off one identical Exchange subtree, ReuseExchange
-    // dedups it, and the signature pipeline runs ONCE instead of twice
-    val bd = banded(df, textCol, idCol, numHashes, bands)
-      .repartition(col("band"), col("key"))
-    val a = bd.select(col("band"), col("key"), col("__id").as("id_a"), col("__sig").as("sig_a"))
-    val b = bd.select(col("band"), col("key"), col("__id").as("id_b"), col("__sig").as("sig_b"))
+                 threshold: Double = 0.8): DataFrame = {
     // estimate Jaccard BEFORE the distinct so the pair shuffle carries
     // scalars, not 64-element signature arrays
-    val dupIds = a.join(b.hint("shuffle_hash"), Seq("band", "key")).where(col("id_a") < col("id_b"))
+    val dupIds = bandPairs(banded(df, textCol, idCol, numHashes, bands))
       .withColumn("__sim", estJaccard(numHashes))
       .where(col("__sim") >= threshold)
       .select(col("id_b").as("__dup")).distinct()
@@ -288,12 +271,7 @@ object Dedup {
   def minhashPairs(df: DataFrame, textCol: String, idCol: String,
                    numHashes: Int = 64, bands: Int = 16,
                    threshold: Double = 0.8): DataFrame = {
-    // pre-shuffle before aliasing → one reused Exchange (see minhashLsh)
-    val bd = banded(df, textCol, idCol, numHashes, bands)
-      .repartition(col("band"), col("key"))
-    val a = bd.select(col("band"), col("key"), col("__id").as("id_a"), col("__sig").as("sig_a"))
-    val b = bd.select(col("band"), col("key"), col("__id").as("id_b"), col("__sig").as("sig_b"))
-    a.join(b.hint("shuffle_hash"), Seq("band", "key")).where(col("id_a") < col("id_b"))
+    bandPairs(banded(df, textCol, idCol, numHashes, bands))
       .withColumn("jaccard_est", estJaccard(numHashes))
       // threshold BEFORE the pair-dedup: the estimate is a pure function of
       // the pair, so this is equivalent — and the distinct aggregates only
@@ -390,25 +368,10 @@ object Dedup {
       .select(col("__id"), col("__sig"),
         explode(bandKeys(col("__sig"), bands, rowsPerBand)).as("__band"))
       .select(col("__id"), col("__sig"), col("__band.band"), col("__band.key"))
-      .repartition(col("band"), col("key"))
-    val a = bd.select(col("band"), col("key"),
-      col("__id").as("id_a"), col("__sig").as("sig_a"))
-    val b = bd.select(col("band"), col("key"),
-      col("__id").as("id_b"), col("__sig").as("sig_b"))
-    val cand = a.join(b.hint("shuffle_hash"), Seq("band", "key"))
-      .where(col("id_a") < col("id_b"))
+    val cand = bandPairs(bd)
       .where(estJaccard(numHashes) >= candidateEst)
       .select("id_a", "id_b").distinct()
-    val arrays = prepped.repartition(col("__id"))
-    val ga = arrays.select(col("__id").as("id_a"), col("__gh").as("g_a"))
-    val gb = arrays.select(col("__id").as("id_b"), col("__gh").as("g_b"))
-    cand.join(ga.hint("shuffle_hash"), Seq("id_a"))
-      .join(gb.hint("shuffle_hash"), Seq("id_b"))
-      .withColumn("jaccard",
-        floor(GraftFunctions.jaccardSorted(col("g_a"), col("g_b")) * 10000.0 + 0.5)
-          / 10000.0)
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    verifiedJaccard(cand, prepped, threshold)
   }
 
   // ----------------------------------------------------- decontamination
@@ -681,101 +644,89 @@ object Dedup {
       .drop("__tokens", "__gh")
   }
 
-  /** Exploded (new_id, sig_new, band, key) band table of a
-    * [[withSignature]]-signed batch — the broadcast probe side of
-    * [[minhashCorpusCandidates]]. */
-  private[graft] def minhashBandsOfSigned(bsig: DataFrame, idCol: String,
-                                          numHashes: Int, bands: Int): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    bsig
-      .select(col(idCol).cast("long").as("new_id"), col("__sig").as("sig_new"),
-        explode(bandKeys(col("__sig"), bands, rowsPerBand)).as("__b"))
-      .select(col("new_id"), col("sig_new"),
-        col("__b.band").as("band"), col("__b.key").as("key"))
+  /** One signature family as [[nearDupIncremental]] probes it — what the
+    * minhash, simhash and embedding probes do NOT share:
+    *  - `sig`: each signature column of the signed batch → its column in
+    *    the stored table;
+    *  - `keys` and `keyed`: the bucket key columns, and how rows in the
+    *    stored schema `(id, sig…)` get them (an explode of band keys or
+    *    simhash chunks; the stored cluster column as it is);
+    *  - `similar`: the verify predicate over two sides' signature columns,
+    *    looked up by stored name. */
+  private[graft] final case class NearDupSig(
+      sig: Seq[(String, String)], keys: Seq[String],
+      keyed: DataFrame => DataFrame,
+      similar: (String => Column, String => Column) => Column) {
+    // the columns `similar` reads; a key column is compared by the join
+    private val compared = sig.map(_._2).filterNot(keys.contains)
+
+    /** Rows in the stored schema → `(<tag>_id, keys…, <col>_<tag>…)`. */
+    def side(rows: DataFrame, tag: String): DataFrame =
+      keyed(rows).select(col("id").as(s"${tag}_id") +:
+        (keys.map(col) ++ compared.map(c => col(c).as(s"${c}_$tag"))): _*)
+
+    /** Corpus-side candidate probe: stored rows stream MAP-ONLY — keyed
+      * narrowly, joined against the probe side of the batch's keyed rows,
+      * verified. Returns the hit `new_id`s PRE-distinct, so the
+      * zero-Exchange property of the stored side is spec-assertable. */
+    def corpusHits(stored: DataFrame, batchKeyed: DataFrame,
+                   probeSide: DataFrame => DataFrame): DataFrame =
+      side(stored, "old").join(probeSide(batchKeyed), keys)
+        .where(similar(c => col(s"${c}_new"), c => col(s"${c}_old")))
+        .select(col("new_id"))
+
+    /** Within-batch near-dups: the LARGER id of each verified pair. */
+    def batchDups(batchKeyed: DataFrame): DataFrame =
+      Pairs.selfJoin(batchKeyed, keys, "new_id", compared.map(c => s"${c}_new" -> c))
+        .where(similar(c => col(s"${c}_a"), c => col(s"${c}_b")))
+        .select(col("id_b").as("new_id"))
   }
 
-  /** Corpus-side candidate probe: stored signatures stream MAP-ONLY —
-    * explode each stored row into its LSH band keys (narrow), probe the
-    * broadcast batch band table, keep pairs whose estimated Jaccard meets
-    * the threshold. Returns (new_id, old_id) hits PRE-distinct so the
-    * zero-Exchange property of the corpus subtree is spec-assertable. */
-  private[graft] def minhashCorpusCandidates(storedSigs: DataFrame,
-                                             batchBands: DataFrame,
-                                             numHashes: Int, bands: Int,
-                                             threshold: Double,
-                                             probeSide: DataFrame => DataFrame =
-                                               broadcast): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    storedSigs
-      .select(col("id").as("old_id"), col("sig").as("sig_b"),
-        explode(bandKeys(col("sig"), bands, rowsPerBand)).as("__b"))
-      .select(col("old_id"), col("sig_b"),
-        col("__b.band").as("band"), col("__b.key").as("key"))
-      .join(probeSide(batchBands), Seq("band", "key"))
-      .withColumn("__sim",
-        GraftFunctions.eqPositions(col("sig_new"), col("sig_b"))
-          .cast("double") / lit(numHashes))
-      .where(col("__sim") >= threshold)
-      .select(col("new_id"), col("old_id"))
-  }
-
-  /** MinHash INCREMENTAL near-dedup: flag a new batch against the persisted
-    * per-doc signature store ([[seedMinhashSignatures]]) — the ingest-time
-    * form of [[minhashLsh]]. Same decision rule at the batch boundary: a
-    * batch doc is a corpus dup iff it shares an LSH band with a stored doc
-    * AND the signature-estimated Jaccard meets `threshold`; within the
-    * batch the greedy smaller-id-wins rule of [[minhashLsh]] applies among
-    * non-corpus-dup rows.
+  /** The incremental near-dup probe behind [[minhashIncremental]],
+    * [[simhashIncremental]] and [[graft.sim.Cluster.embeddingIncremental]]:
+    * flag a new batch (`signed`: the batch plus its signature columns)
+    * against the persisted per-doc signature table, each probe passing
+    * only its [[NearDupSig]]. A batch doc is `dup_of_corpus` iff it shares
+    * a bucket with a stored doc and `similar` holds; within the batch the
+    * greedy smaller-id-wins rule of [[minhashLsh]] applies among
+    * non-corpus-dup rows. Returns the batch plus `dup_of_corpus` and
+    * `kept`.
     *
-    * Scale: stored signatures (~8·numHashes bytes/doc, ~1/1000 of corpus
-    * text bytes) stream map-only through [[minhashCorpusCandidates]] —
-    * explode to band keys is narrow, the batch band table broadcasts while
-    * the batch stays under `broadcastMaxProbeDocs` (broadcasting collects
-    * to the driver first — the containmentIncremental gate, found at sf10
-    * stream volumes; larger batches switch every batch-derived side to
-    * shuffled hash joins), and only qualifying hits reach a shuffle. The
-    * corpus is never re-read, re-tokenized, re-signed, or shuffled.
-    * Within-batch resolution self-joins only the batch. Kept rows'
-    * signatures register (PK id) so the next batch sees them; an empty
-    * kept set writes nothing. By default registration is a PK upsert,
-    * which REWRITES the corpus-sized signature snapshot every call: fine
-    * for occasional batch ingests, the measured r13 per-trigger trap for
+    * Scale: the batch is signed once and pinned — the corpus probe, the
+    * batch self-join, the returned frame and the [[Pairs.probeSide]]
+    * gate's count all read that one pass. Stored signatures (a small
+    * fraction of corpus text bytes) stream MAP-ONLY through
+    * [[NearDupSig.corpusHits]]: keying is narrow, the batch's keyed rows
+    * are the broadcast (for corpus-sized batches, shuffle-hash) probe
+    * side, and only qualifying hits reach a shuffle. The corpus is never
+    * re-read, re-tokenized, re-signed, or shuffled; within-batch
+    * resolution self-joins only the batch. Kept rows' signatures register
+    * (PK id) through [[putSeed]] so the next batch sees them; an empty kept
+    * set writes nothing. By default registration is a PK upsert, which
+    * REWRITES the corpus-sized signature snapshot every call: fine for
+    * occasional batch ingests, the measured r13 per-trigger trap for
     * streaming callers. Streaming callers pass `appendOnly = true` for
-    * O(batch) file-level registration (appends do not dedup — the probes
-    * tolerate duplicate signature rows) and a txn view as `store`, as
+    * O(batch) file-level registration (appends do not dedup — the probe
+    * tolerates duplicate signature rows) and a txn view as `store`, as
     * [[graft.streaming.Streaming.nearDupIngestGate]] does: a replayed
     * batch then probes the signatures as they were before it, and its
-    * registration is a no-op.
-    *
-    * Returns the batch plus `dup_of_corpus` and `kept`. */
-  def minhashIncremental(store: graft.store.TableStore, sigTable: String,
-                         batch: DataFrame, textCol: String, idCol: String,
-                         numHashes: Int = 64, bands: Int = 16,
-                         threshold: Double = 0.8, buckets: Int = 0,
-                         appendOnly: Boolean = false,
-                         broadcastMaxProbeDocs: Long = 65536): DataFrame = {
-    // pinned: the signature pass feeds the corpus probe, the batch
-    // self-join, and the returned frame — and the broadcast gate's count
-    val bsig = withSignature(batch, textCol, numHashes).localCheckpoint()
-    val useBroadcast = bsig.count() <= broadcastMaxProbeDocs
-    def probeSide(df: DataFrame): DataFrame =
-      if (useBroadcast) broadcast(df) else df.hint("shuffle_hash")
-    val batchBands = minhashBandsOfSigned(bsig, idCol, numHashes, bands)
+    * registration is a no-op. */
+  private[graft] def nearDupIncremental(store: graft.store.TableStore,
+                                        sigTable: String, signed: DataFrame,
+                                        idCol: String, nd: NearDupSig,
+                                        buckets: Int,
+                                        appendOnly: Boolean): DataFrame = {
+    val bsig = signed.localCheckpoint()
+    val probeSide = Pairs.probeSide(bsig)
+    def storedSchema(df: DataFrame, id: Column): DataFrame =
+      df.select(id.as("id") +: nd.sig.map { case (c, s) => col(c).as(s) }: _*)
+    val batchKeyed = nd.side(storedSchema(bsig, col(idCol).cast("long")), "new")
     val corpusDupIds =
       if (store.exists(sigTable))
-        minhashCorpusCandidates(store.read(sigTable), batchBands,
-            numHashes, bands, threshold, probeSide)
-          .select(col("new_id")).distinct().withColumn("__cd", lit(true))
-      else batchBands.select(col("new_id")).limit(0).withColumn("__cd", lit(true))
-    // within-batch greedy resolution (minhashLsh rule), batch-sized
-    val bb = batchBands.repartition(col("band"), col("key"))
-    val a = bb.select(col("band"), col("key"), col("new_id").as("id_a"), col("sig_new").as("sig_a"))
-    val b = bb.select(col("band"), col("key"), col("new_id").as("id_b"), col("sig_new").as("sig_b"))
-    val batchDupIds = a.join(b.hint("shuffle_hash"), Seq("band", "key"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("__sim", estJaccard(numHashes))
-      .where(col("__sim") >= threshold)
-      .select(col("id_b").as("new_id")).distinct().withColumn("__bd", lit(true))
+        nd.corpusHits(store.read(sigTable), batchKeyed, probeSide)
+          .distinct().withColumn("__cd", lit(true))
+      else batchKeyed.select(col("new_id")).limit(0).withColumn("__cd", lit(true))
+    val batchDupIds = nd.batchDups(batchKeyed).distinct().withColumn("__bd", lit(true))
     val flagged = bsig
       .withColumn("new_id", col(idCol).cast("long"))
       .join(probeSide(corpusDupIds), Seq("new_id"), "left")
@@ -783,10 +734,41 @@ object Dedup {
       .withColumn("dup_of_corpus", coalesce(col("__cd"), lit(false)))
       .withColumn("kept", !col("dup_of_corpus") && coalesce(col("__bd"), lit(false)) === false)
       .localCheckpoint() // one materialization for store write + caller (inv. 7)
-    val kept = flagged.where(col("kept")).select(col("new_id").as("id"), col("__sig").as("sig"))
+    val kept = storedSchema(flagged.where(col("kept")), col("new_id"))
     if (!kept.isEmpty) putSeed(store, sigTable, kept, buckets, appendOnly)
-    flagged.drop("new_id", "__sig", "__cd", "__bd")
+    flagged.drop("new_id" +: "__cd" +: "__bd" +: nd.sig.map(_._1): _*)
   }
+
+  /** [[minhashIncremental]]'s signature: the `sig` array, keyed by its LSH
+    * band keys, verified by the signature-estimated Jaccard. */
+  private[graft] def minhashSig(numHashes: Int, bands: Int,
+                                threshold: Double): NearDupSig =
+    NearDupSig(Seq("__sig" -> "sig"), Seq("band", "key"),
+      rows => rows
+        .select(col("id"), col("sig"),
+          explode(bandKeys(col("sig"), bands, numHashes / bands)).as("__b"))
+        .select(col("id"), col("sig"), col("__b.band").as("band"), col("__b.key").as("key")),
+      (x, y) => GraftFunctions.eqPositions(x("sig"), y("sig"))
+        .cast("double") / lit(numHashes) >= threshold)
+
+  /** MinHash INCREMENTAL near-dedup: flag a new batch against the persisted
+    * per-doc signature store ([[seedMinhashSignatures]]) — the ingest-time
+    * form of [[minhashLsh]]. Same decision rule at the batch boundary: a
+    * batch doc is a corpus dup iff it shares an LSH band with a stored doc
+    * AND the signature-estimated Jaccard meets `threshold`; within the
+    * batch the greedy smaller-id-wins rule of [[minhashLsh]] applies among
+    * non-corpus-dup rows. Stored signatures are ~8·numHashes bytes/doc,
+    * ~1/1000 of corpus text bytes. Topology, registration and the
+    * streaming contract: [[nearDupIncremental]].
+    *
+    * Returns the batch plus `dup_of_corpus` and `kept`. */
+  def minhashIncremental(store: graft.store.TableStore, sigTable: String,
+                         batch: DataFrame, textCol: String, idCol: String,
+                         numHashes: Int = 64, bands: Int = 16,
+                         threshold: Double = 0.8, buckets: Int = 0,
+                         appendOnly: Boolean = false): DataFrame =
+    nearDupIncremental(store, sigTable, withSignature(batch, textCol, numHashes),
+      idCol, minhashSig(numHashes, bands, threshold), buckets, appendOnly)
 
   // ------------------------------------------------------------- simhash
 
@@ -809,14 +791,6 @@ object Dedup {
   /** Hamming distance between two 64-bit simhashes. */
   def hammingDist(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** SimHash near-dup pairs: bucket by `maxHamming + 1` bit chunks — a doc
-    * pair within Hamming distance d differs in at most d chunks, so with
-    * d+1 chunks at least one chunk is EQUAL (pigeonhole) and candidate
-    * generation is recall-complete, not probabilistic. The default d=3
-    * gives the classic 4 × 16-bit layout (Manku et al., WWW'07 §3); larger
-    * d narrows the chunk keys (64/(d+1) bits), growing bucket occupancy —
-    * the inherent simhash trade-off, so keep d small at corpus scale.
-    * Full distance is verified within buckets only. */
   /** Exploded (chunk, key) pigeonhole buckets of a 64-bit simhash under
     * `maxHamming`: d+1 chunks, so any pair within Hamming distance d
     * shares at least one EQUAL chunk — recall-complete candidate keys
@@ -838,6 +812,14 @@ object Dedup {
     }: _*))
   }
 
+  /** SimHash near-dup pairs: bucket by `maxHamming + 1` bit chunks — a doc
+    * pair within Hamming distance d differs in at most d chunks, so with
+    * d+1 chunks at least one chunk is EQUAL (pigeonhole) and candidate
+    * generation is recall-complete, not probabilistic. The default d=3
+    * gives the classic 4 × 16-bit layout (Manku et al., WWW'07 §3); larger
+    * d narrows the chunk keys (64/(d+1) bits), growing bucket occupancy —
+    * the inherent simhash trade-off, so keep d small at corpus scale.
+    * Full distance is verified within buckets only. */
   def simhashPairs(df: DataFrame, textCol: String, idCol: String,
                    maxHamming: Int = 3): DataFrame = {
     // fan the kernel off the scan (see banded)
@@ -848,11 +830,7 @@ object Dedup {
     val chunked = withSh.select(col("__id"), col("__sh"),
       simhashChunks(col("__sh"), maxHamming).as("__c"))
       .select(col("__id"), col("__sh"), col("__c.chunk"), col("__c.key"))
-      // pre-shuffle before aliasing → one reused Exchange (see minhashLsh)
-      .repartition(col("chunk"), col("key"))
-    val a = chunked.select(col("chunk"), col("key"), col("__id").as("id_a"), col("__sh").as("sh_a"))
-    val b = chunked.select(col("chunk"), col("key"), col("__id").as("id_b"), col("__sh").as("sh_b"))
-    a.join(b.hint("shuffle_hash"), Seq("chunk", "key")).where(col("id_a") < col("id_b"))
+    Pairs.selfJoin(chunked, Seq("chunk", "key"), "__id", Seq("__sh" -> "sh"))
       .select(col("id_a"), col("id_b"), hammingDist(col("sh_a"), col("sh_b")).as("hamming"))
       // filter before the pair-dedup (hamming is pair-pure; see minhashPairs)
       .where(col("hamming") <= maxHamming)
@@ -883,70 +861,26 @@ object Dedup {
     * pair shares an equal chunk key, so a batch doc is flagged
     * `dup_of_corpus` iff a stored doc is truly within `maxHamming`;
     * within the batch the greedy smaller-id-wins rule applies among
-    * non-corpus-dup rows (the [[minhashIncremental]] decision shape).
-    *
-    * Scale: stored simhashes (8 bytes/doc, ~1/10⁵ of corpus text bytes)
-    * stream MAP-ONLY — the chunk explode is narrow (d+1 rows per stored
-    * doc), the batch chunk table broadcasts while the batch stays under
-    * `broadcastMaxProbeDocs` (larger batches switch every batch-derived
-    * side to shuffled hash joins — the containmentIncremental gate), and
-    * only colliding candidates reach the Hamming verify; the corpus
-    * is never re-read, re-tokenized, or shuffled. Within-batch
-    * resolution self-joins only the batch. Kept rows' simhashes register
-    * (PK id) so the next batch sees them — default PK upsert (a
-    * corpus-sized snapshot rewrite per call); streaming callers pass
-    * `appendOnly = true` and a txn view, as [[minhashIncremental]]
-    * describes.
+    * non-corpus-dup rows. Stored simhashes are 8 bytes/doc (~1/10⁵ of
+    * corpus text bytes) and the chunk explode is narrow (d+1 rows per
+    * stored doc). Topology, registration and the streaming contract:
+    * [[nearDupIncremental]].
     *
     * Returns the batch plus `dup_of_corpus` and `kept`. */
   def simhashIncremental(store: graft.store.TableStore, shTable: String,
                          batch: DataFrame, textCol: String, idCol: String,
                          maxHamming: Int = 3, buckets: Int = 0,
-                         appendOnly: Boolean = false,
-                         broadcastMaxProbeDocs: Long = 65536): DataFrame = {
-    // pinned: one simhash pass feeds probe + self-join + returned frame,
-    // and the broadcast gate's count is then cheap
-    val bsh = batch.withColumn("__sh",
-      GraftFunctions.simhash(tokensCol(col(textCol), keepAccents = false)))
-      .localCheckpoint()
-    val useBroadcast = bsh.count() <= broadcastMaxProbeDocs
-    def probeSide(df: DataFrame): DataFrame =
-      if (useBroadcast) broadcast(df) else df.hint("shuffle_hash")
-    val batchChunks = bsh
-      .select(col(idCol).cast("long").as("new_id"), col("__sh").as("sh_new"),
-        simhashChunks(col("__sh"), maxHamming).as("__c"))
-      .select(col("new_id"), col("sh_new"),
-        col("__c.chunk").as("chunk"), col("__c.key").as("key"))
-    val corpusDupIds =
-      if (store.exists(shTable))
-        store.read(shTable)
-          .select(col("id").as("old_id"), col("sh").as("sh_b"),
-            simhashChunks(col("sh"), maxHamming).as("__c"))
-          .select(col("old_id"), col("sh_b"),
-            col("__c.chunk").as("chunk"), col("__c.key").as("key"))
-          .join(probeSide(batchChunks), Seq("chunk", "key"))
-          .where(hammingDist(col("sh_new"), col("sh_b")) <= maxHamming)
-          .select(col("new_id")).distinct().withColumn("__cd", lit(true))
-      else batchChunks.select(col("new_id")).limit(0).withColumn("__cd", lit(true))
-    // within-batch greedy resolution (simhashPairs rule), batch-sized
-    val bb = batchChunks.repartition(col("chunk"), col("key"))
-    val a = bb.select(col("chunk"), col("key"), col("new_id").as("id_a"), col("sh_new").as("sh_a"))
-    val b = bb.select(col("chunk"), col("key"), col("new_id").as("id_b"), col("sh_new").as("sh_b"))
-    val batchDupIds = a.join(b.hint("shuffle_hash"), Seq("chunk", "key"))
-      .where(col("id_a") < col("id_b"))
-      .where(hammingDist(col("sh_a"), col("sh_b")) <= maxHamming)
-      .select(col("id_b").as("new_id")).distinct().withColumn("__bd", lit(true))
-    val flagged = bsh
-      .withColumn("new_id", col(idCol).cast("long"))
-      .join(probeSide(corpusDupIds), Seq("new_id"), "left")
-      .join(probeSide(batchDupIds), Seq("new_id"), "left")
-      .withColumn("dup_of_corpus", coalesce(col("__cd"), lit(false)))
-      .withColumn("kept", !col("dup_of_corpus") && coalesce(col("__bd"), lit(false)) === false)
-      .localCheckpoint() // one materialization for store write + caller (inv. 7)
-    val kept = flagged.where(col("kept")).select(col("new_id").as("id"), col("__sh").as("sh"))
-    if (!kept.isEmpty) putSeed(store, shTable, kept, buckets, appendOnly)
-    flagged.drop("new_id", "__sh", "__cd", "__bd")
-  }
+                         appendOnly: Boolean = false): DataFrame =
+    nearDupIncremental(store, shTable,
+      batch.withColumn("__sh",
+        GraftFunctions.simhash(tokensCol(col(textCol), keepAccents = false))),
+      idCol,
+      NearDupSig(Seq("__sh" -> "sh"), Seq("chunk", "key"),
+        rows => rows
+          .select(col("id"), col("sh"), simhashChunks(col("sh"), maxHamming).as("__c"))
+          .select(col("id"), col("sh"), col("__c.chunk").as("chunk"), col("__c.key").as("key")),
+        (x, y) => hammingDist(x("sh"), y("sh")) <= maxHamming),
+      buckets, appendOnly)
 
   // ----------------------------------------------------- n-gram jaccard
 
@@ -1062,31 +996,43 @@ object Dedup {
       .withColumn("__rn", row_number().over(rankW))
       .where(col("__rn") <= prefixLen)
       .select(col("__key"), col("__id"), col("__sz"))
-      // pre-shuffle before aliasing → one reused Exchange (see minhashLsh)
-      .repartition(col("__key"))
-    val a = keys.select(col("__key"), col("__id").as("id_a"), col("__sz").as("sz_a"))
-    val b = keys.select(col("__key"), col("__id").as("id_b"), col("__sz").as("sz_b"))
-    val cand = a.join(b.hint("shuffle_hash"), Seq("__key"))
-      .where(col("id_a") < col("id_b") &&
-        // size filter: J ≥ t ⟹ t·max(|A|,|B|) ≤ min(|A|,|B|); the 1e-9
-        // slack keeps exact-boundary pairs (binary overshoot of t·sz)
-        col("sz_a") * threshold <= col("sz_b") + 1e-9 &&
+    val cand = Pairs.selfJoin(keys, Seq("__key"), "__id", Seq("__sz" -> "sz"))
+      // size filter: J ≥ t ⟹ t·max(|A|,|B|) ≤ min(|A|,|B|); the 1e-9
+      // slack keeps exact-boundary pairs (binary overshoot of t·sz)
+      .where(col("sz_a") * threshold <= col("sz_b") + 1e-9 &&
         col("sz_b") * threshold <= col("sz_a") + 1e-9)
       .select("id_a", "id_b").distinct()
-    // fetch gram arrays for surviving candidates only; identical subtrees up
-    // to aliasing → the id-partitioned Exchange is computed once and reused
-    val arrays = prepped.repartition(col("__id"))
-    val ga = arrays.select(col("__id").as("id_a"), col("__gh").as("g_a"))
-    val gb = arrays.select(col("__id").as("id_b"), col("__gh").as("g_b"))
-    cand.join(ga.hint("shuffle_hash"), Seq("id_a"))
-      .join(gb.hint("shuffle_hash"), Seq("id_b"))
-      // fixed-point round (tie-free across engines; see Queries.detRound4)
+    verifiedJaccard(cand, prepped, threshold)
+  }
+
+  /** Exact verification of candidate pairs over a prepped `(__id, __gh)`
+    * frame: gram arrays fetched for the candidates only, sorted-merge
+    * Jaccard in 4-dp fixed point (tie-free across engines; see
+    * Queries.detRound4), gated at `threshold` → `(id_a, id_b, jaccard)`. */
+  private def verifiedJaccard(cand: DataFrame, prepped: DataFrame,
+                              threshold: Double): DataFrame =
+    Pairs.withArrays(cand, prepped, "__id", "__gh")
       .withColumn("jaccard",
         floor(GraftFunctions.jaccardSorted(col("g_a"), col("g_b")) * 10000.0 + 0.5)
           / 10000.0)
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-  }
+
+  /** Gate `pairs` on the containment `|A∩B| / |A|` of gram array `a` in
+    * `b` and add it as `containment`. The gate reads the UNROUNDED ratio:
+    * int/int division is correctly rounded in IEEE, so the comparison
+    * replays bit-exactly in any engine, and it is exactly the predicate
+    * the prefix/size filters are recall-complete for (a rounded gate would
+    * admit true containment down to t − 5e-5 — below the filters'
+    * guarantee, a divergence reachable at ≥20k grams/doc). The 4-dp
+    * rounding is presentation only, applied after the gate. */
+  private def verifiedContainment(pairs: DataFrame, a: String, b: String,
+                                  threshold: Double): DataFrame =
+    pairs
+      .withColumn("__c",
+        GraftFunctions.sortedIntersect(col(a), col(b)).cast("double") / size(col(a)))
+      .where(col("__c") >= threshold)
+      .withColumn("containment", floor(col("__c") * 10000.0 + 0.5) / 10000.0)
 
   /** Asymmetric n-gram CONTAINMENT pairs: ordered pairs `(a, b)`, a ≠ b,
     * with `C(A→B) = |A ∩ B| / |A| ≥ threshold` over word n-gram sets —
@@ -1142,30 +1088,13 @@ object Dedup {
     val probe = grams.join(dfTab, Seq("__key"))
       .withColumn("__rn", row_number().over(rankW))
       .where(col("__rn") <= prefixLen)
-      .select(col("__key"), col("__id").as("id_a"), col("__sz").as("sz_a"))
-    val index = grams
-      .select(col("__key"), col("__id").as("id_b"), col("__sz").as("sz_b"))
-    val cand = probe.join(index.hint("shuffle_hash"), Seq("__key"))
-      .where(col("id_a") =!= col("id_b") &&
-        col("sz_b") >= col("sz_a") * threshold - 1e-9)
+    // probe prefixes against the index of ALL grams, both directions
+    val cand = Pairs.bucketJoin(probe, grams, Seq("__key"), "__id",
+        Seq("__sz" -> "sz"), ordered = true)
+      .where(col("sz_b") >= col("sz_a") * threshold - 1e-9)
       .select("id_a", "id_b").distinct()
-    val arrays = prepped.repartition(col("__id"))
-    val ga = arrays.select(col("__id").as("id_a"), col("__gh").as("g_a"))
-    val gb = arrays.select(col("__id").as("id_b"), col("__gh").as("g_b"))
-    // gate on the UNROUNDED ratio: int/int division is correctly rounded
-    // in IEEE, so the comparison replays bit-exactly in any engine, and
-    // it is exactly the predicate the prefix/size filters are
-    // recall-complete for (a rounded gate would admit true containment
-    // down to t − 5e-5 — below the filters' guarantee, a divergence
-    // reachable at ≥20k grams/doc). The 4-dp rounding is presentation
-    // only, applied after the gate.
-    cand.join(ga.hint("shuffle_hash"), Seq("id_a"))
-      .join(gb.hint("shuffle_hash"), Seq("id_b"))
-      .withColumn("__c",
-        GraftFunctions.sortedIntersect(col("g_a"), col("g_b"))
-          .cast("double") / size(col("g_a")))
-      .where(col("__c") >= threshold)
-      .withColumn("containment", floor(col("__c") * 10000.0 + 0.5) / 10000.0)
+    verifiedContainment(Pairs.withArrays(cand, prepped, "__id", "__gh"),
+        "g_a", "g_b", threshold)
       .select("id_a", "id_b", "containment")
   }
 
@@ -1322,7 +1251,7 @@ object Dedup {
       // broadcast only a bounded key set: rescued keys grow with the
       // number of fully-capped docs on exactly the saturated corpora
       // this flag targets, and an unconditional broadcast collects them
-      // to the driver first (the broadcastMaxProbeDocs failure mode,
+      // to the driver first (the Pairs.probeSide failure mode,
       // r13 advice). The count comes free from the already-collected
       // histogram — no extra job; above the gate, shuffle-hash.
       val keySide =
@@ -1332,26 +1261,14 @@ object Dedup {
         fps.join(keySide, Seq("__key"))
           .select(col("__key"), col("__id"), col("__sz")))
     })
-      // pre-shuffle before aliasing → one reused Exchange (see minhashLsh)
-      .repartition(col("__key"))
-    val a = keep.select(col("__key"), col("__id").as("id_a"), col("__sz").as("sz_a"))
-    val b = keep.select(col("__key"), col("__id").as("id_b"), col("__sz").as("sz_b"))
-    val cand = a.join(b.hint("shuffle_hash"), Seq("__key"))
-      .where(col("id_a") =!= col("id_b") &&
-        // containment admits one size filter: |A∩B| ≤ |B| ⟹ |B| ≥ t·|A|
-        col("sz_b") >= col("sz_a") * threshold - 1e-9)
+    val cand = Pairs.selfJoin(keep, Seq("__key"), "__id", Seq("__sz" -> "sz"),
+        ordered = true)
+      // containment admits one size filter: |A∩B| ≤ |B| ⟹ |B| ≥ t·|A|
+      .where(col("sz_b") >= col("sz_a") * threshold - 1e-9)
       .select("id_a", "id_b").distinct()
-    val arrays = prepped.select(col("__id"), col("__gh")).repartition(col("__id"))
-    val ga = arrays.select(col("__id").as("id_a"), col("__gh").as("g_a"))
-    val gb = arrays.select(col("__id").as("id_b"), col("__gh").as("g_b"))
     // unrounded gate + 4-dp presentation — identical to containmentPairs
-    cand.join(ga.hint("shuffle_hash"), Seq("id_a"))
-      .join(gb.hint("shuffle_hash"), Seq("id_b"))
-      .withColumn("__c",
-        GraftFunctions.sortedIntersect(col("g_a"), col("g_b"))
-          .cast("double") / size(col("g_a")))
-      .where(col("__c") >= threshold)
-      .withColumn("containment", floor(col("__c") * 10000.0 + 0.5) / 10000.0)
+    verifiedContainment(Pairs.withArrays(cand, prepped, "__id", "__gh"),
+        "g_a", "g_b", threshold)
       .select("id_a", "id_b", "containment")
   }
 
@@ -1581,17 +1498,14 @@ object Dedup {
     * missing all p prefix grams bounds `|A∩B| ≤ |A| − p`); the per-doc
     * prefix broadcast-probes the postings index (size-filtered on the
     * stored corpus sz); candidate ids broadcast-probe the gram-array
-    * table; the native sorted-merge kernel verifies exactly. Batches
-    * above `broadcastMaxProbeDocs` switch every batch-derived side to
-    * shuffled hash joins — broadcasting collects to the driver first,
-    * and a corpus-sized batch's gram arrays blow driver limits (measured
-    * r13: ~1 GB over spark.driver.maxResultSize at 100k-doc triggers). */
+    * table; the native sorted-merge kernel verifies exactly. Corpus-sized
+    * batches switch every batch-derived side to shuffled hash joins
+    * ([[graft.ops.Pairs.probeSide]]). */
   def containmentIncremental(store: graft.store.TableStore,
                              postingsTable: String, dfTable: String,
                              gramsTable: String,
                              batch: DataFrame, textCol: String, idCol: String,
                              n: Int = 3, threshold: Double = 0.8,
-                             broadcastMaxProbeDocs: Long = 65536,
                              maxProbeCandidatesPerPosting: Long = 64): DataFrame = {
     val gramsStore = store.read(gramsTable)
     val prepped = batch
@@ -1599,19 +1513,7 @@ object Dedup {
       .select(col(idCol).cast("long").as("probe_id"),
         GraftFunctions.ngramHashes(col("__tokens"), n).as("__gh"))
       .localCheckpoint()
-    // MEASURED broadcast gate (the r12 carry-join pattern, found again at
-    // sf10 stream volumes): broadcasting a batch collects it to the
-    // driver first — a 100k-doc trigger's gram arrays are ~1 GB
-    // serialized and blew spark.driver.maxResultSize in the r13 sf10
-    // StreamAnchor run. Small batches keep the map-only broadcast-probe
-    // topology (corpus tables never shuffle); batches above the gate
-    // switch every batch-derived side to shuffled hash joins — the
-    // corpus postings/gram scans then shuffle once on their join keys,
-    // the right trade when the batch itself is corpus-sized. prepped is
-    // checkpointed, so the gate costs one cheap count.
-    val useBroadcast = prepped.count() <= broadcastMaxProbeDocs
-    def probeSide(df: DataFrame): DataFrame =
-      if (useBroadcast) broadcast(df) else df.hint("shuffle_hash")
+    val probeSide = Pairs.probeSide(prepped)
     val probeGrams = prepped
       .select(col("probe_id"), size(col("__gh")).as("__sz"),
         explode(col("__gh")).as("gram"))
@@ -1653,26 +1555,37 @@ object Dedup {
             "maxProbeCandidatesPerPosting (<= 0 disables).")
       }
     }
-    val prefix = prefixAll.select(col("gram"), col("probe_id"), col("__sz"))
-    val cand = store.read(postingsTable)
-      .join(probeSide(prefix), Seq("gram"))
+    containmentProbeTail(store.read(postingsTable), "gram",
+      prefixAll.select(col("gram"), col("probe_id"), col("__sz")),
+      gramsStore, prepped, threshold, probeSide)
+  }
+
+  /** The shared tail of [[containmentIncremental]] and
+    * [[containmentIncrementalBanded]]: `probe` rows `(key, probe_id,
+    * __sz)` probe the `postings` index `(key, id, sz)`, size-filtered
+    * (containment admits one: |A∩B| ≤ |B| ⟹ |B| ≥ t·|A|) and distinct
+    * per `(probe_id, id)`; the candidates fetch their stored gram arrays
+    * and verify exactly against the pinned batch's `__gh` — unrounded
+    * gate, rounded presentation ([[verifiedContainment]]). The second
+    * dropDuplicates runs AFTER the gram-array join (collision-sized, never
+    * a corpus shuffle): append-only seeding of the same doc twice leaves
+    * duplicate gram rows per id — bit-identical (same doc, same grams),
+    * so keeping any one is deterministic. */
+  private def containmentProbeTail(postings: DataFrame, key: String,
+                                   probe: DataFrame, gramsStore: DataFrame,
+                                   prepped: DataFrame, threshold: Double,
+                                   probeSide: DataFrame => DataFrame): DataFrame = {
+    val cand = postings
+      .join(probeSide(probe), Seq(key))
       .where(col("sz") >= col("__sz") * threshold - 1e-9)
       .select(col("probe_id"), col("id"))
       .dropDuplicates("probe_id", "id")
-    // unrounded gate, rounded presentation — see [[containmentPairs]].
-    // dropDuplicates AFTER the candidate join (collision-sized, never a
-    // corpus shuffle): append-only seeding of the same doc twice leaves
-    // duplicate gram rows per id — duplicates are bit-identical (same
-    // doc, same grams), so keeping any one is deterministic
-    gramsStore.select(col("id"), col("grams"))
-      .join(probeSide(cand), Seq("id"))
-      .dropDuplicates("probe_id", "id")
-      .join(probeSide(prepped), Seq("probe_id"))
-      .withColumn("__c",
-        GraftFunctions.sortedIntersect(col("__gh"), col("grams"))
-          .cast("double") / size(col("__gh")))
-      .where(col("__c") >= threshold)
-      .withColumn("containment", floor(col("__c") * 10000.0 + 0.5) / 10000.0)
+    verifiedContainment(
+        gramsStore.select(col("id"), col("grams"))
+          .join(probeSide(cand), Seq("id"))
+          .dropDuplicates("probe_id", "id")
+          .join(probeSide(prepped.select(col("probe_id"), col("__gh"))), Seq("probe_id")),
+        "__gh", "grams", threshold)
       .select("probe_id", "id", "containment")
   }
 
@@ -1707,7 +1620,7 @@ object Dedup {
     * gram arrays all stream MAP-ONLY (never shuffled, re-read, or
     * re-signed); every shuffle is batch- or candidate-sized; large
     * batches switch broadcast probes to shuffled hash joins
-    * (`broadcastMaxProbeDocs`). Verification is the identical unrounded
+    * ([[graft.ops.Pairs.probeSide]]). Verification is the identical unrounded
     * sorted-intersect gate, so banded-probe pairs ⊆ exact-probe pairs. */
   def containmentIncrementalBanded(store: graft.store.TableStore,
                                    fpTable: String, dfTable: String,
@@ -1718,8 +1631,7 @@ object Dedup {
                                    threshold: Double = 0.8,
                                    dfCap: Long = 4096,
                                    candidateBudgetPerPosting: Long = 8,
-                                   minCandidateBudget: Long = 2000000L,
-                                   broadcastMaxProbeDocs: Long = 65536): DataFrame = {
+                                   minCandidateBudget: Long = 2000000L): DataFrame = {
     val gramsStore = store.read(gramsTable)
     val prepped = batch
       .withColumn("__tokens", tokensCol(col(textCol)))
@@ -1727,9 +1639,7 @@ object Dedup {
         GraftFunctions.ngramHashes(col("__tokens"), n).as("__gh"),
         GraftFunctions.winnowHashes(col("__tokens"), n, w).as("__fp"))
       .localCheckpoint()
-    val useBroadcast = prepped.count() <= broadcastMaxProbeDocs
-    def probeSide(df: DataFrame): DataFrame =
-      if (useBroadcast) broadcast(df) else df.hint("shuffle_hash")
+    val probeSide = Pairs.probeSide(prepped)
     val batchFps = prepped
       .select(col("probe_id"), size(col("__gh")).as("__sz"),
         explode(col("__fp")).as("fp"))
@@ -1757,27 +1667,9 @@ object Dedup {
       cum += d * k
       if (cum <= budget && d <= dfCap) effCap = math.max(effCap, d)
     }
-    val kept = withDf.where(col("__df") <= effCap)
-      .select(col("fp"), col("probe_id"), col("__sz"))
-    val cand = store.read(fpTable)
-      .join(probeSide(kept), Seq("fp"))
-      // containment admits one size filter: |A∩B| ≤ |B| ⟹ |B| ≥ t·|A|
-      .where(col("sz") >= col("__sz") * threshold - 1e-9)
-      .select(col("probe_id"), col("id"))
-      .dropDuplicates("probe_id", "id")
-    // unrounded gate, rounded presentation; dropDuplicates after the
-    // candidate join tolerates duplicate append-only gram rows — identical
-    // to the exact probe's verify slice
-    gramsStore.select(col("id"), col("grams"))
-      .join(probeSide(cand), Seq("id"))
-      .dropDuplicates("probe_id", "id")
-      .join(probeSide(prepped.select(col("probe_id"), col("__gh"))), Seq("probe_id"))
-      .withColumn("__c",
-        GraftFunctions.sortedIntersect(col("__gh"), col("grams"))
-          .cast("double") / size(col("__gh")))
-      .where(col("__c") >= threshold)
-      .withColumn("containment", floor(col("__c") * 10000.0 + 0.5) / 10000.0)
-      .select("probe_id", "id", "containment")
+    containmentProbeTail(store.read(fpTable), "fp",
+      withDf.where(col("__df") <= effCap).select(col("fp"), col("probe_id"), col("__sz")),
+      gramsStore, prepped, threshold, probeSide)
   }
 
   /** Corpus-wide exact block dedup with document reassembly — the

@@ -76,30 +76,6 @@ class ClusterSpec extends AnyFunSuite {
       out.queryExecution.executedPlan.toString)
   }
 
-  test("semanticDupPairs: both self-join sides read ONE reused cluster Exchange") {
-    val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val cents = df.where(col("vec_id") < 4).orderBy("vec_id")
-      .select(Cluster.quantize(col("embedding")).as("q"))
-      .collect().map(_.getSeq[Long](0).toVector).toVector
-    val pairs = Cluster.semanticDupPairs(df, "vec_id", "embedding", cents, threshold = 0.9)
-    pairs.collect()
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    def exchanges(p: SparkPlan): Seq[SparkPlan] = {
-      val self = p match { case e: ShuffleExchangeLike => Seq(e); case _ => Nil }
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case s: QueryStageExec => Seq(s.plan)
-        case other => other.children
-      }
-      self ++ kids.flatMap(exchanges)
-    }
-    val distinct = exchanges(pairs.queryExecution.executedPlan)
-      .map(System.identityHashCode).distinct
-    assert(distinct.size == 1, pairs.queryExecution.executedPlan.toString)
-  }
-
   test("semanticDupPairs finds identical clones within a cluster, no cross-cluster pairs") {
     val df = vecs(
       1L -> Seq(1.0, 0.0), 2L -> Seq(0.0, 1.0),

@@ -255,11 +255,12 @@ class TextSimSpec extends AnyFunSuite {
       java.nio.file.Files.createTempDirectory("graft_inc_mh0").toString)
     Dedup.seedMinhashSignatures(store, "s", docs.withColumnRenamed("doc_id", "id"),
       "text", "id")
-    val batchBands = Dedup.minhashBandsOfSigned(
+    // the shared incremental body's corpus probe, under minhashIncremental's signature
+    val sig = Dedup.minhashSig(numHashes = 64, bands = 16, threshold = 0.5)
+    val batchKeyed = sig.side(
       Dedup.withSignature(Seq((10L, "the quick brown fox jumps over the lazy dog and runs far away"))
-        .toDF("id", "text"), "text", 64), "id", 64, 16)
-    val probe = Dedup.minhashCorpusCandidates(store.read("s"), batchBands,
-      numHashes = 64, bands = 16, threshold = 0.5)
+        .toDF("id", "text"), "text", 64).select($"id", $"__sig".as("sig")), "new")
+    val probe = sig.corpusHits(store.read("s"), batchKeyed, broadcast)
     assert(probe.collect().nonEmpty) // finalize (invariant 8), and it finds doc 1
     // stored signatures stream: explode→broadcast-join→filter is narrow
     assert(graft.ops.Scale.countExchanges(probe) == 0)
