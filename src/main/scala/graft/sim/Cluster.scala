@@ -249,7 +249,7 @@ object Cluster {
       idCol,
       Dedup.NearDupSig(
         Seq("__cluster" -> "cluster", "__codes" -> "codes", "__scale" -> "scale"),
-        Seq("cluster"), rows => rows,
+        Seq("cluster"), identity,
         (x, y) => round(GraftFunctions.cosine(deq(x("codes"), x("scale")),
           deq(y("codes"), y("scale"))), 6) >= threshold),
       buckets = 0, appendOnly)

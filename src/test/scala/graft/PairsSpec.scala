@@ -43,10 +43,18 @@ class PairsSpec extends AnyFunSuite {
   }
 
   test("batch pair generators: one-read shuffle_hash bucket self-join") {
-    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-      .select("doc_id", "text")
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val cents = emb.where(col("vec_id") < 4).orderBy("vec_id")
+    import spark.implicits._
+    val rng = new scala.util.Random(7)
+    // every text with an exact copy, a one-token edit and a half-length
+    // quote, so each generator finds pairs and AQE prunes no join as empty
+    val docs = (0L until 60L).flatMap { i =>
+      val ws = Seq.fill(30)(s"w${rng.nextInt(400)}")
+      Seq(ws, ws, ws.updated(rng.nextInt(30), "edit"), ws.take(15))
+        .zipWithIndex.map { case (t, k) => (4 * i + k, t.mkString(" ")) }
+    }.toDF("doc_id", "text")
+    val emb = (1L to 200L).map(i => (i, Seq.fill(16)(rng.nextGaussian())))
+      .toDF("vec_id", "embedding")
+    val cents = emb.where(col("vec_id") <= 4).orderBy("vec_id")
       .select(Cluster.quantize(col("embedding")).as("q"))
       .collect().map(_.getSeq[Long](0).toVector).toVector
     val cases: Seq[(String, () => DataFrame)] = Seq(
@@ -60,9 +68,9 @@ class PairsSpec extends AnyFunSuite {
       "Dedup.containmentVerifiedPairs" ->
         (() => Dedup.containmentVerifiedPairs(docs, "text", "doc_id", threshold = 0.8)),
       "Similarity.cosineDupPairs" ->
-        (() => Similarity.cosineDupPairs(emb, "vec_id", "embedding", dim = 64, threshold = -1.0)),
+        (() => Similarity.cosineDupPairs(emb, "vec_id", "embedding", dim = 16, threshold = -1.0)),
       "Cluster.semanticDupPairs" ->
-        (() => Cluster.semanticDupPairs(emb, "vec_id", "embedding", cents, threshold = 0.9)))
+        (() => Cluster.semanticDupPairs(emb, "vec_id", "embedding", cents, threshold = -1.0)))
     val runs = cases.map { case (name, op) =>
       val df = op()
       df.collect() // finalize THIS dataset before walking it (invariant 8)
