@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 /** Feature-catalog registry: the in-process analog of the reference's
   * `FeatureStoreClient` surface as used by the registration notebook
   * (`notebooks/feature_store_register.py`): `get_table` / `register_table`
-  * / `drop_table` / `add_data_sources` / `delete_data_sources`.
+  * / `drop_table` / `add_data_sources`.
   *
   * Persistence is one JSON document per table under `<path>/<table>.json`,
   * read and written on the driver through the store's metadata codec
@@ -90,12 +90,6 @@ final class FeatureRegistry(spark: SparkSession, path: String) {
   def addDataSources(table: String, sources: Seq[String]): Unit = {
     val cur = getTable(table).getOrElse(sys.error(s"not registered: $table"))
     put(cur.copy(dataSources = cur.dataSources ++ sources.filterNot(cur.dataSources.contains)))
-  }
-
-  /** `fs.delete_data_sources` (`feature_store_register.py:123-126`). */
-  def deleteDataSources(table: String, sources: Seq[String]): Unit = {
-    val cur = getTable(table).getOrElse(sys.error(s"not registered: $table"))
-    put(cur.copy(dataSources = cur.dataSources.filterNot(sources.contains)))
   }
 }
 

@@ -28,9 +28,9 @@ import graft.ops.Pairs
   */
 object Dedup {
 
-  /** Rescued-fingerprint key sets above this broadcast as a shuffle-hash
-    * side instead (keys are 8-byte longs → ~32 MB at the gate; see the
-    * keepRarestFallback broadcast note). */
+  /** Kept- and rescued-fingerprint key sets (containment candidates) above
+    * this join as a shuffled side instead of a broadcast (8-byte longs →
+    * ~32 MB at the gate; see the keepRarestFallback broadcast note). */
   private val MaxBroadcastRescuedKeys = 4000000L
 
   // ---------------------------------------------------------------- exact
@@ -1149,10 +1149,11 @@ object Dedup {
     * Verification is identical to [[containmentPairs]]: exact
     * `|A∩B| / |A|` via the native sorted-intersect on the full gram
     * arrays of surviving candidates, gated unrounded, 4-dp fixed-point
-    * presented. Scale: postings carry (fingerprint, id, sz) scalars
-    * through ONE fingerprint-keyed shuffle (pre-aliased repartition →
-    * reused Exchange); gram arrays are fetched by id for survivors
-    * only. */
+    * presented. Scale: postings carry their doc's gram array through ONE
+    * fingerprint-keyed shuffle (pre-aliased repartition → reused Exchange)
+    * and candidates verify in the bucket join's condition, so a rejected
+    * candidate is never materialized; only verified pairs shuffle again,
+    * to dedup pairs sharing several fingerprints. */
   def containmentVerifiedPairs(df: DataFrame, textCol: String, idCol: String,
                                n: Int = 3, w: Int = 8,
                                threshold: Double = 0.8,
@@ -1161,8 +1162,8 @@ object Dedup {
                                keepRarestFallback: Boolean = false,
                                minCandidateBudget: Long = 2000000L): DataFrame = {
     // one fanned-out kernel pass, materialized (see ngramJaccardPairs):
-    // the adaptive-cap histogram collect, the fp-posting subtrees and the
-    // verify-arrays subtree all read the checkpointed table
+    // the adaptive-cap histogram collect and the fp-posting subtrees,
+    // which carry the gram arrays, all read the checkpointed table
     containmentVerifiedPairsFromPrepped(
       preppedKernelFrame(df, textCol, idCol, n, w), threshold, dfCap,
       candidateBudgetPerPosting, keepRarestFallback, minCandidateBudget)
@@ -1180,7 +1181,7 @@ object Dedup {
       minCandidateBudget: Long = 2000000L): DataFrame = {
     requirePrepped(prepped, "__id", "__gh", "__fp")
     val fps = prepped
-      .select(col("__id"), size(col("__gh")).as("__sz"),
+      .select(col("__id"), size(col("__gh")).as("__sz"), col("__gh"),
         explode(col("__fp")).as("__key"))
     val dfTab = fps.groupBy("__key").agg(count(lit(1)).as("__df"))
     // Adaptive cap from the df histogram (rows = distinct df VALUES —
@@ -1197,8 +1198,13 @@ object Dedup {
       if (cum <= budget && d <= dfCap) effCap = math.max(effCap, d)
     }
     val capped = math.min(effCap, dfCap)
-    val keepBase = fps.join(dfTab.where(col("__df") <= capped), Seq("__key"))
-      .select(col("__key"), col("__id"), col("__sz"))
+    // semi-join: the postings stream, the kept keys build; the broadcast
+    // gate counts them from the collected histogram (no extra job)
+    val keptKeys = dfTab.where(col("__df") <= capped).select("__key")
+    val nKept = hist.iterator.takeWhile(_._1 <= capped).map(_._2).sum
+    val keepBase = fps.join(
+      if (nKept <= MaxBroadcastRescuedKeys) broadcast(keptKeys) else keptKeys,
+      Seq("__key"), "left_semi")
     // SHORT-PROBE RESCUE (r13, opt-in — closes the measured 4% quote loss
     // of the BASELINE.md r13 recall table): a doc whose EVERY fingerprint
     // is above the cap becomes invisible — at sf1, 12-token quotes whose
@@ -1259,17 +1265,16 @@ object Dedup {
         else rescuedKeys.hint("shuffle_hash")
       keepBase.unionByName(
         fps.join(keySide, Seq("__key"))
-          .select(col("__key"), col("__id"), col("__sz")))
+          .select(col("__id"), col("__sz"), col("__gh"), col("__key")))
     })
-    val cand = Pairs.selfJoin(keep, Seq("__key"), "__id", Seq("__sz" -> "sz"),
-        ordered = true)
+    val cand = Pairs.selfJoin(keep, Seq("__key"), "__id",
+        Seq("__sz" -> "sz", "__gh" -> "g"), ordered = true)
       // containment admits one size filter: |A∩B| ≤ |B| ⟹ |B| ≥ t·|A|
       .where(col("sz_b") >= col("sz_a") * threshold - 1e-9)
-      .select("id_a", "id_b").distinct()
-    // unrounded gate + 4-dp presentation — identical to containmentPairs
-    verifiedContainment(Pairs.withArrays(cand, prepped, "__id", "__gh"),
-        "g_a", "g_b", threshold)
-      .select("id_a", "id_b", "containment")
+    // unrounded gate + 4-dp presentation (as containmentPairs), both in the
+    // join condition; a pair sharing several buckets dedups once verified
+    verifiedContainment(cand, "g_a", "g_b", threshold)
+      .select("id_a", "id_b", "containment").distinct()
   }
 
   /** MEASURED recall of the two banded production candidate generators

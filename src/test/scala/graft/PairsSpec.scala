@@ -2,9 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec,
+  ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.functions._
 
@@ -42,16 +45,31 @@ class PairsSpec extends AnyFunSuite {
     }
   }
 
-  test("batch pair generators: one-read shuffle_hash bucket self-join") {
+  /** Every operator the finalized plan runs: down through query stages,
+    * but not into the exchange a ReusedExchange stands for (it ran once,
+    * where it first appears). */
+  private def ran(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => ran(a.executedPlan)
+    case s: QueryStageExec => ran(s.plan)
+    case _: ReusedExchangeExec => Nil
+    case other => other.children.flatMap(ran)
+  })
+
+  /** Every text with an exact copy, a one-token edit and a half-length
+    * quote, so each generator finds pairs and AQE prunes no join as empty. */
+  private def quoteCorpus(rng: scala.util.Random): DataFrame = {
     import spark.implicits._
-    val rng = new scala.util.Random(7)
-    // every text with an exact copy, a one-token edit and a half-length
-    // quote, so each generator finds pairs and AQE prunes no join as empty
-    val docs = (0L until 60L).flatMap { i =>
+    (0L until 60L).flatMap { i =>
       val ws = Seq.fill(30)(s"w${rng.nextInt(400)}")
       Seq(ws, ws, ws.updated(rng.nextInt(30), "edit"), ws.take(15))
         .zipWithIndex.map { case (t, k) => (4 * i + k, t.mkString(" ")) }
     }.toDF("doc_id", "text")
+  }
+
+  test("batch pair generators: one-read shuffle_hash bucket self-join") {
+    import spark.implicits._
+    val rng = new scala.util.Random(7)
+    val docs = quoteCorpus(rng)
     val emb = (1L to 200L).map(i => (i, Seq.fill(16)(rng.nextGaussian())))
       .toDF("vec_id", "embedding")
     val cents = emb.where(col("vec_id") <= 4).orderBy("vec_id")
@@ -82,6 +100,30 @@ class PairsSpec extends AnyFunSuite {
     assert(runs.map(_._1) == want, runs.collect {
       case ((name, n, shj), plan) if (n, shj) != ((1, true)) => s"$name:\n$plan"
     }.mkString("\n"))
+  }
+
+  test("containmentVerifiedPairs verifies in the bucket: 3 shuffles, none " +
+      "keyed on a doc id, the postings ⋈ kept-keys join runs once") {
+    val df = Dedup.containmentVerifiedPairs(quoteCorpus(new scala.util.Random(7)),
+      "text", "doc_id", threshold = 0.8)
+    assert(df.collect().nonEmpty) // finalize THIS dataset (invariant 8)
+    val ops = ran(df.queryExecution.executedPlan)
+    val plan = df.queryExecution.executedPlan.toString
+    // the df aggregate, the fingerprint bucket (its second side reused)
+    // and the dedup of the verified pairs; no by-id gram-array fetch
+    val shuffles = ops.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size == 3, plan)
+    val byId = shuffles.filter(_.outputPartitioning match {
+      case HashPartitioning(Seq(k), _) =>
+        k.references.map(_.name).toSet.subsetOf(Set("__id", "id_a", "id_b"))
+      case _ => false
+    })
+    assert(byId.isEmpty, plan)
+    assert(ops.count {
+      case j: BaseJoinExec => j.joinType == LeftSemi
+      case _ => false
+    } == 1, plan)
+    assert(selfJoins(df).size == 1, plan)
   }
 
   test("one pair-join core: bucket self-joins, array fetches and the probe " +

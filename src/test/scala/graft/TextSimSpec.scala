@@ -599,6 +599,99 @@ class TextSimSpec extends AnyFunSuite {
     assert(rescued.subsetOf(exact))
   }
 
+  /** Driver-side reference of [[Dedup.containmentVerifiedPairs]] over the
+    * collected prepped kernel rows: the same adaptive df cap and rarest-
+    * fingerprint rescue, then every ordered pair `(a, b)`, a ≠ b, sharing
+    * a kept fingerprint with `|B| ≥ t·|A| − 1e-9` and `|A∩B| / |A| ≥ t`.
+    * Value: (4-dp containment, number of kept fingerprints shared). */
+  private def containmentReference(df: org.apache.spark.sql.DataFrame,
+      threshold: Double, dfCap: Long = 4096, perPosting: Long = 8,
+      minBudget: Long = 2000000L, fallback: Boolean = false)
+      : Map[(Long, Long), (Double, Int)] = {
+    val rows = Dedup.preppedKernelFrame(df, "text", "doc_id", 3, w = 8).collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Long](2)))
+    val grams = rows.map(r => r._1 -> r._2.toSet).toMap
+    val holders = rows.toSeq.flatMap { case (id, _, fp) => fp.map(_ -> id) }
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    val dfOf = holders.map { case (k, ids) => k -> ids.size.toLong }
+    def histOf(keys: Iterable[Long]) = keys.groupBy(dfOf)
+      .map { case (d, ks) => d -> ks.size.toLong }.toSeq.sortBy(_._1)
+    // every df whose cumulative d²·k volume fits the budget
+    def fitting(hist: Seq[(Long, Long)], budget: Long) =
+      hist.scanLeft((0L, 0L)) { case ((_, cum), (d, k)) => (d, cum + d * d * k) }
+        .tail.collect { case (d, cum) if cum <= budget => d }
+    val hist = histOf(dfOf.keys)
+    val budget = math.max(perPosting * hist.map { case (d, k) => d * k }.sum, minBudget)
+    val capped = math.min((hist.head._1 +: fitting(hist, budget).filter(_ <= dfCap)).max,
+      dfCap)
+    val rescued = if (!fallback) Set.empty[Long] else {
+      val cands = rows.collect { case (_, _, fp) if fp.nonEmpty => fp.minBy(k => (dfOf(k), k)) }
+        .filter(k => dfOf(k) > capped && dfOf(k) <= dfCap).toSet
+      val rHist = histOf(cands)
+      val rescueCap = (0L +: fitting(rHist, budget)).max
+      rHist.headOption match {
+        case None => Set.empty[Long]
+        case Some((floor, _)) if rescueCap >= floor => cands.filter(dfOf(_) <= rescueCap)
+        case Some((floor, _)) => cands.filter(dfOf(_) == floor).toSeq.sorted
+          .take(math.max(1L, budget / (floor * floor)).toInt).toSet
+      }
+    }
+    val kept = dfOf.keys.filter(dfOf(_) <= capped) ++ rescued
+    kept.toSeq.flatMap(k => for {
+      a <- holders(k); b <- holders(k) if a != b
+      if grams(b).size >= grams(a).size * threshold - 1e-9
+      c = (grams(a) & grams(b)).size.toDouble / grams(a).size
+      if c >= threshold
+    } yield (a, b, math.floor(c * 10000.0 + 0.5) / 10000.0))
+      .groupBy(p => (p._1, p._2)).map { case (ab, ps) => ab -> (ps.head._3, ps.size) }
+  }
+
+  test("containmentVerifiedPairs ≡ a driver-side reference: multi-fingerprint " +
+      "pairs, size-filter boundary, budget-bound cap, rarest rescue") {
+    val rnd = new scala.util.Random(23)
+    def words(n: Int, tag: String) = Seq.fill(n)(tag + rnd.nextInt(100000))
+    val pages = (1L to 30L).map(i => i -> words(40, "p"))
+    // one-token edits share most of their page's fingerprints
+    val edits = pages.take(10).map { case (i, ws) => (i + 100L, ws.updated(20, "edit")) }
+    // size-filter boundary: 10 trigrams ⊇ 8 trigrams → |B| = 0.8·|A| and
+    // containment exactly 0.8, on a 10-token (= w + n − 1) shared run
+    val edge = Seq(200L -> words(12, "e"))
+    val edgeQuote = Seq(201L -> edge.head._2.take(10))
+    // a boilerplate tail on 16 pages, and 12 identical short docs whose
+    // every fingerprint has df 12: a tight budget caps both
+    val tail = words(12, "b")
+    val boiler = (300L to 315L).map(i => i -> (words(8, "q") ++ tail))
+    val same = words(12, "s")
+    val ident = (400L to 411L).map(_ -> same)
+    val df = (pages ++ edits ++ edge ++ edgeQuote ++ boiler ++ ident)
+      .map { case (i, ws) => (i, ws.mkString(" ")) }.toDF("doc_id", "text")
+    val cases = Seq(
+      ("t=0.8", 0.8, 8L, 2000000L, false),
+      ("t=0.5", 0.5, 8L, 2000000L, false),
+      ("budget-bound", 0.5, 1L, 1L, false),
+      ("budget-bound + fallback", 0.5, 1L, 1L, true))
+    val refs = cases.map { case (name, t, perPosting, minBudget, fb) =>
+      val ref = containmentReference(df, t, perPosting = perPosting,
+        minBudget = minBudget, fallback = fb)
+      val got = Dedup.containmentVerifiedPairs(df, "text", "doc_id", n = 3, w = 8,
+          threshold = t, candidateBudgetPerPosting = perPosting,
+          minCandidateBudget = minBudget, keepRarestFallback = fb)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      assert(got.size == got.distinct.size, name)
+      assert(got.toSet == ref.map { case ((a, b), (c, _)) => (a, b, c) }.toSet,
+        s"$name: got ${got.size}, reference ${ref.size}")
+      name -> ref
+    }.toMap
+    // the fixture exercises what it claims: pairs found in several buckets,
+    // the boundary pair kept, the tight cap losing pairs the rescue restores
+    assert(refs("t=0.8").values.exists(_._2 > 1))
+    assert(refs("t=0.8").get((200L, 201L)).map(_._1).contains(0.8))
+    val (loose, tight) = (refs("t=0.5").keySet, refs("budget-bound").keySet)
+    assert(tight.subsetOf(loose) && tight.size < loose.size)
+    assert(tight.subsetOf(refs("budget-bound + fallback").keySet) &&
+      refs("budget-bound + fallback").size > tight.size)
+  }
+
   test("containment prefix filtering is recall-complete vs brute force (random corpora)") {
     val rnd = new scala.util.Random(7)
     val docs = (1L to 40L).map { i =>
