@@ -48,7 +48,10 @@ object Pairs {
   /** Fetch, for the candidate `pairs` (`id_a`, `id_b`, …), the `array` of
     * each side from `byId` as `g_a`/`g_b` — for surviving candidates only,
     * so arrays never ride the bucket shuffle. `byId` is shuffled on `id`
-    * before aliasing, so both lookups read one reused Exchange. */
+    * before aliasing, so both lookups read one reused Exchange. Its callers
+    * post a doc to many buckets, where a carried array would multiply:
+    * MinHash (one posting per band), `ngramJaccardPairs` (per prefix gram),
+    * `containmentPairs` (every gram on the index side). */
   def withArrays(pairs: DataFrame, byId: DataFrame, id: String,
                  array: String): DataFrame = {
     val arrays = byId.select(col(id), col(array)).repartition(col(id))

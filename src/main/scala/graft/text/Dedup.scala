@@ -1198,13 +1198,17 @@ object Dedup {
       if (cum <= budget && d <= dfCap) effCap = math.max(effCap, d)
     }
     val capped = math.min(effCap, dfCap)
-    // semi-join: the postings stream, the kept keys build; the broadcast
-    // gate counts them from the collected histogram (no extra job)
-    val keptKeys = dfTab.where(col("__df") <= capped).select("__key")
-    val nKept = hist.iterator.takeWhile(_._1 <= capped).map(_._2).sum
-    val keepBase = fps.join(
-      if (nKept <= MaxBroadcastRescuedKeys) broadcast(keptKeys) else keptKeys,
+    // the postings of a key set, as a semi-join: the postings always
+    // stream and the keys build. Broadcast only a bounded key set, counted
+    // from an already-collected histogram (no extra job): an unconditional
+    // broadcast collects the keys to the driver first (the Pairs.probeSide
+    // failure mode, r13 advice); above the gate, shuffle-hash (invariant
+    // 13: the postings, arrays and all, are never sorted)
+    def postingsOf(keys: DataFrame, nKeys: Long): DataFrame = fps.join(
+      if (nKeys <= MaxBroadcastRescuedKeys) broadcast(keys) else keys.hint("shuffle_hash"),
       Seq("__key"), "left_semi")
+    val keepBase = postingsOf(dfTab.where(col("__df") <= capped).select("__key"),
+      hist.iterator.takeWhile(_._1 <= capped).map(_._2).sum)
     // SHORT-PROBE RESCUE (r13, opt-in — closes the measured 4% quote loss
     // of the BASELINE.md r13 recall table): a doc whose EVERY fingerprint
     // is above the cap becomes invisible — at sf1, 12-token quotes whose
@@ -1254,18 +1258,9 @@ object Dedup {
           (rescuedF.where(col("__df") === floorDf)
             .orderBy(col("__key")).limit(admit.toInt).select("__key"), admit)
         }
-      // broadcast only a bounded key set: rescued keys grow with the
-      // number of fully-capped docs on exactly the saturated corpora
-      // this flag targets, and an unconditional broadcast collects them
-      // to the driver first (the Pairs.probeSide failure mode,
-      // r13 advice). The count comes free from the already-collected
-      // histogram — no extra job; above the gate, shuffle-hash.
-      val keySide =
-        if (nRescued <= MaxBroadcastRescuedKeys) broadcast(rescuedKeys)
-        else rescuedKeys.hint("shuffle_hash")
-      keepBase.unionByName(
-        fps.join(keySide, Seq("__key"))
-          .select(col("__id"), col("__sz"), col("__gh"), col("__key")))
+      // rescued keys grow with the number of fully-capped docs on exactly
+      // the saturated corpora this flag targets: the same broadcast gate
+      keepBase.unionByName(postingsOf(rescuedKeys, nRescued))
     })
     val cand = Pairs.selfJoin(keep, Seq("__key"), "__id",
         Seq("__sz" -> "sz", "__gh" -> "g"), ordered = true)
