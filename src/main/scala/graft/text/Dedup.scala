@@ -1266,8 +1266,8 @@ object Dedup {
         Seq("__sz" -> "sz", "__gh" -> "g"), ordered = true)
       // containment admits one size filter: |A∩B| ≤ |B| ⟹ |B| ≥ t·|A|
       .where(col("sz_b") >= col("sz_a") * threshold - 1e-9)
-    // unrounded gate + 4-dp presentation (as containmentPairs), both in the
-    // join condition; a pair sharing several buckets dedups once verified
+    // the size filter and the unrounded gate both land in the join
+    // condition; a pair sharing several buckets dedups once verified
     verifiedContainment(cand, "g_a", "g_b", threshold)
       .select("id_a", "id_b", "containment").distinct()
   }
