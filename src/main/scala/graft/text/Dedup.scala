@@ -28,10 +28,11 @@ import graft.ops.Pairs
   */
 object Dedup {
 
-  /** Kept- and rescued-fingerprint key sets (containment candidates) above
-    * this join as a shuffled side instead of a broadcast (8-byte longs →
-    * ~32 MB at the gate; see the keepRarestFallback broadcast note). */
-  private val MaxBroadcastRescuedKeys = 4000000L
+  /** Both containment key sets, kept and rescued fingerprints, join as a
+    * shuffled side instead of a broadcast above this many keys (8-byte
+    * longs → ~32 MB at the gate; see `postingsOf` in
+    * [[containmentVerifiedPairsFromPrepped]]). */
+  private val MaxBroadcastKeys = 4000000L
 
   // ---------------------------------------------------------------- exact
 
@@ -1182,18 +1183,21 @@ object Dedup {
     requirePrepped(prepped, "__id", "__gh", "__fp")
     val fps = prepped
       .select(col("__id"), size(col("__gh")).as("__sz"), col("__gh"),
-        explode(col("__fp")).as("__key"))
-    val dfTab = fps.groupBy("__key").agg(count(lit(1)).as("__df"))
+        posexplode(col("__fp")).as(Seq("__pos", "__key")))
+    // per key: its df and the array longs its postings would carry; a
+    // doc's first posting also counts its array once (the by-id fetch)
+    val dfTab = fps.groupBy("__key").agg(count(lit(1)).as("__df"),
+      sum(col("__sz")).as("__gs"), sum(when(col("__pos") === 0, col("__sz"))).as("__g1"))
     // Adaptive cap from the df histogram (rows = distinct df VALUES —
     // O(√postings), trivially collectable); see Scaladoc.
-    val hist = dfTab.groupBy("__df").agg(count(lit(1)).as("__k"))
+    val hist = dfTab.groupBy("__df").agg(count(lit(1)), sum("__gs"), coalesce(sum("__g1"), lit(0L)))
       .orderBy("__df").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val postings = hist.iterator.map { case (d, k) => d * k }.sum
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    val postings = hist.iterator.map { case (d, k, _, _) => d * k }.sum
     val budget = math.max(candidateBudgetPerPosting * postings, minCandidateBudget)
     var cum = 0L
     var effCap = if (hist.nonEmpty) hist.head._1 else 1L // rarest df always posts
-    hist.foreach { case (d, k) =>
+    hist.foreach { case (d, k, _, _) =>
       cum += d * d * k
       if (cum <= budget && d <= dfCap) effCap = math.max(effCap, d)
     }
@@ -1205,10 +1209,13 @@ object Dedup {
     // failure mode, r13 advice); above the gate, shuffle-hash (invariant
     // 13: the postings, arrays and all, are never sorted)
     def postingsOf(keys: DataFrame, nKeys: Long): DataFrame = fps.join(
-      if (nKeys <= MaxBroadcastRescuedKeys) broadcast(keys) else keys.hint("shuffle_hash"),
+      if (nKeys <= MaxBroadcastKeys) broadcast(keys) else keys.hint("shuffle_hash"),
       Seq("__key"), "left_semi")
-    val keepBase = postingsOf(dfTab.where(col("__df") <= capped).select("__key"),
-      hist.iterator.takeWhile(_._1 <= capped).map(_._2).sum)
+    // a key posted once pairs with nothing: its posting would carry an
+    // array into the bucket for no candidate
+    val kept = hist.toSeq.collect { case (d, k, g, _) if d >= 2 && d <= capped => (d, k, g) }
+    val keepBase = postingsOf(
+      dfTab.where(col("__df") >= 2 && col("__df") <= capped).select("__key"), kept.map(_._2).sum)
     // SHORT-PROBE RESCUE (r13, opt-in — closes the measured 4% quote loss
     // of the BASELINE.md r13 recall table): a doc whose EVERY fingerprint
     // is above the cap becomes invisible — at sf1, 12-token quotes whose
@@ -1222,18 +1229,19 @@ object Dedup {
     // and dfCap remains the hard ceiling. Deterministic: per-doc min is
     // (df, key)-lexicographic; the cut is a pure function of the
     // histogram.
-    val keep = (if (!keepRarestFallback) keepBase else {
+    val (keep, rescued) = if (!keepRarestFallback) (keepBase, Nil) else {
       val rescuedF = fps.join(dfTab, Seq("__key"))
         .groupBy("__id")
-        .agg(min(struct(col("__df"), col("__key"))).as("__m"))
+        .agg(min(struct(col("__df"), col("__key"), col("__gs"))).as("__m"))
         .where(col("__m.__df") > capped && col("__m.__df") <= dfCap)
-        .select(col("__m.__key").as("__key"), col("__m.__df").as("__df"))
+        .select(col("__m.__key").as("__key"), col("__m.__df").as("__df"),
+          col("__m.__gs").as("__gs"))
         .distinct()
-      val rHist = rescuedF.groupBy("__df").agg(count(lit(1)).as("__k"))
-        .orderBy("__df").collect().map(r => (r.getLong(0), r.getLong(1)))
+      val rHist = rescuedF.groupBy("__df").agg(count(lit(1)), sum("__gs"))
+        .orderBy("__df").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       var rcum = 0L
       var rescueCap = 0L
-      rHist.foreach { case (d, k) =>
+      rHist.foreach { case (d, k, _) =>
         rcum += d * d * k
         if (rcum <= budget) rescueCap = math.max(rescueCap, d)
       }
@@ -1247,29 +1255,40 @@ object Dedup {
       // budget, admit only the max(1, budget/df²) SMALLEST keys at that
       // df (deterministic distributed top-K on the key order), so rescue
       // volume stays ≤ budget + df² by construction.
-      val (rescuedKeys, nRescued) =
-        if (floorDf == 0L) (rescuedF.select("__key"), 0L)
-        else if (rescueCap >= floorDf) {
-          val n = rHist.iterator.takeWhile(_._1 <= rescueCap).map(_._2).sum
-          (rescuedF.where(col("__df") <= rescueCap).select("__key"), n)
-        } else {
+      // (the admitted keys' histogram rows; at the floor, pro rata)
+      val (rescuedKeys, admitted) =
+        if (floorDf == 0L) (rescuedF.select("__key"), Nil)
+        else if (rescueCap >= floorDf)
+          (rescuedF.where(col("__df") <= rescueCap).select("__key"),
+            rHist.toSeq.filter(_._1 <= rescueCap))
+        else {
           val admit = math.min(Int.MaxValue.toLong,
             math.max(1L, budget / math.max(1L, floorDf * floorDf)))
           (rescuedF.where(col("__df") === floorDf)
-            .orderBy(col("__key")).limit(admit.toInt).select("__key"), admit)
+            .orderBy(col("__key")).limit(admit.toInt).select("__key"),
+            Seq((floorDf, admit, rHist.head._3 * admit / rHist.head._2)))
         }
       // rescued keys grow with the number of fully-capped docs on exactly
       // the saturated corpora this flag targets: the same broadcast gate
-      keepBase.unionByName(postingsOf(rescuedKeys, nRescued))
-    })
+      (keepBase.unionByName(postingsOf(rescuedKeys, admitted.map(_._2).sum)), admitted)
+    }
+    // Carry arrays into the bucket only while that ships no more than the
+    // by-id fetch: every doc's array once plus each candidate's two ids. A
+    // long page sharing most of its fingerprints (a near-duplicate) would
+    // carry its array once per shared key, ~2|G|²/(w+1) longs.
+    val carry = (kept ++ rescued).map(_._3).sum <= hist.map(_._4).sum +
+      (kept ++ rescued).map { case (d, k, _) => 2 * k * d * (d - 1) }.sum
     val cand = Pairs.selfJoin(keep, Seq("__key"), "__id",
-        Seq("__sz" -> "sz", "__gh" -> "g"), ordered = true)
+        ("__sz" -> "sz") +: (if (carry) Seq("__gh" -> "g") else Nil), ordered = true)
       // containment admits one size filter: |A∩B| ≤ |B| ⟹ |B| ≥ t·|A|
       .where(col("sz_b") >= col("sz_a") * threshold - 1e-9)
-    // the size filter and the unrounded gate both land in the join
-    // condition; a pair sharing several buckets dedups once verified
-    verifiedContainment(cand, "g_a", "g_b", threshold)
-      .select("id_a", "id_b", "containment").distinct()
+    // carried: the size filter and the unrounded gate both land in the
+    // join condition, and a pair sharing several buckets dedups once
+    // verified; else candidates dedup before the fetch
+    val pairs = verifiedContainment(if (carry) cand else Pairs.withArrays(
+      cand.select("id_a", "id_b").distinct(), prepped, "__id", "__gh"), "g_a", "g_b", threshold)
+      .select("id_a", "id_b", "containment")
+    if (carry) pairs.distinct() else pairs
   }
 
   /** MEASURED recall of the two banded production candidate generators

@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec,
   ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 import graft.sim.{Cluster, Similarity}
 import graft.text.Dedup
@@ -102,27 +103,60 @@ class PairsSpec extends AnyFunSuite {
     }.mkString("\n"))
   }
 
-  test("containmentVerifiedPairs verifies in the bucket: 3 shuffles, none " +
-      "keyed on a doc id, the postings ⋈ kept-keys join runs once") {
-    val df = Dedup.containmentVerifiedPairs(quoteCorpus(new scala.util.Random(7)),
-      "text", "doc_id", threshold = 0.8)
+  /** The finalized plan's shuffles (each once), and those keyed on a doc
+    * id: the by-id gram-array fetch and the candidate dedup. */
+  private def containmentShuffles(docs: DataFrame) = {
+    val df = Dedup.containmentVerifiedPairs(docs, "text", "doc_id", threshold = 0.8)
     assert(df.collect().nonEmpty) // finalize THIS dataset (invariant 8)
     val ops = ran(df.queryExecution.executedPlan)
-    val plan = df.queryExecution.executedPlan.toString
-    // the df aggregate, the fingerprint bucket (its second side reused)
-    // and the dedup of the verified pairs; no by-id gram-array fetch
     val shuffles = ops.collect { case e: ShuffleExchangeExec => e }
-    assert(shuffles.size == 3, plan)
     val byId = shuffles.filter(_.outputPartitioning match {
       case HashPartitioning(Seq(k), _) =>
         k.references.map(_.name).toSet.subsetOf(Set("__id", "id_a", "id_b"))
       case _ => false
     })
+    (df, ops, shuffles, byId, df.queryExecution.executedPlan.toString)
+  }
+
+  test("containmentVerifiedPairs verifies in the bucket: 3 shuffles, none " +
+      "keyed on a doc id, the postings ⋈ kept-keys join runs once") {
+    // short closed-vocabulary docs, the first 20 with a quoted opening:
+    // few shared fingerprints per doc, so the arrays ride the bucket
+    import spark.implicits._
+    val rng = new scala.util.Random(7)
+    val closed = (0L until 200L).map(i => i -> Seq.fill(10 + rng.nextInt(31))(s"v${rng.nextInt(30)}"))
+    val docs = (closed ++ closed.take(20).map { case (i, ws) => (i + 1000L, ws.take(12)) })
+      .map { case (i, ws) => (i, ws.mkString(" ")) }.toDF("doc_id", "text")
+    val (df, ops, shuffles, byId, plan) = containmentShuffles(docs)
+    // the df aggregate, the fingerprint bucket (its second side reused)
+    // and the dedup of the verified pairs; no by-id gram-array fetch
+    assert(shuffles.size == 3, plan)
     assert(byId.isEmpty, plan)
     assert(ops.count {
       case j: BaseJoinExec => j.joinType == LeftSemi
       case _ => false
     } == 1, plan)
+    assert(selfJoins(df).size == 1, plan)
+  }
+
+  test("containmentVerifiedPairs fetches arrays by id where carrying them " +
+      "would ship more: long near-duplicate pages") {
+    import spark.implicits._
+    val rng = new scala.util.Random(7)
+    val pages = (0L until 8L).map(i => i -> Seq.fill(200)(s"p${rng.nextInt(100000)}"))
+    val docs = (pages ++ pages.map { case (i, ws) => (i + 100L, ws.updated(100, "edit")) } :+
+        (200L -> pages.head._2.slice(50, 80)))
+      .map { case (i, ws) => (i, ws.mkString(" ")) }.toDF("doc_id", "text")
+    val (df, _, shuffles, byId, plan) = containmentShuffles(docs)
+    // the bucket carries no array; the fetch and the candidate dedup are
+    // keyed on doc ids
+    val bucket = shuffles.filter(_.outputPartitioning match {
+      case HashPartitioning(Seq(k), _) => k.references.map(_.name).toSet == Set("__key")
+      case _ => false
+    })
+    assert(bucket.nonEmpty, plan)
+    assert(!bucket.exists(_.output.exists(_.dataType.isInstanceOf[ArrayType])), plan)
+    assert(byId.nonEmpty, plan)
     assert(selfJoins(df).size == 1, plan)
   }
 

@@ -665,23 +665,40 @@ class TextSimSpec extends AnyFunSuite {
     val ident = (400L to 411L).map(_ -> same)
     val df = (pages ++ edits ++ edge ++ edgeQuote ++ boiler ++ ident)
       .map { case (i, ws) => (i, ws.mkString(" ")) }.toDF("doc_id", "text")
+    // long pages with one-token-edit copies share most of their
+    // fingerprints, so their arrays are fetched by id; short closed-
+    // vocabulary docs with quoted openings share few, so theirs ride the
+    // bucket
+    val long = (1L to 8L).map(i => i -> words(200, "l"))
+    val longDf = (long ++ long.map { case (i, ws) => (i + 100L, ws.updated(100, "edit")) } :+
+        (200L -> long.head._2.slice(50, 80)))
+      .map { case (i, ws) => (i, ws.mkString(" ")) }.toDF("doc_id", "text")
+    val closed = (0L until 200L).map(i => i -> Seq.fill(10 + rnd.nextInt(31))(s"v${rnd.nextInt(30)}"))
+    val closedDf = (closed ++ closed.take(20).map { case (i, ws) => (i + 1000L, ws.take(12)) })
+      .map { case (i, ws) => (i, ws.mkString(" ")) }.toDF("doc_id", "text")
     val cases = Seq(
-      ("t=0.8", 0.8, 8L, 2000000L, false),
-      ("t=0.5", 0.5, 8L, 2000000L, false),
-      ("budget-bound", 0.5, 1L, 1L, false),
-      ("budget-bound + fallback", 0.5, 1L, 1L, true))
-    val refs = cases.map { case (name, t, perPosting, minBudget, fb) =>
-      val ref = containmentReference(df, t, perPosting = perPosting,
+      ("t=0.8", df, 0.8, 8L, 2000000L, false),
+      ("t=0.5", df, 0.5, 8L, 2000000L, false),
+      ("budget-bound", df, 0.5, 1L, 1L, false),
+      ("budget-bound + fallback", df, 0.5, 1L, 1L, true),
+      ("long pages", longDf, 0.8, 8L, 2000000L, false),
+      ("closed vocabulary", closedDf, 0.8, 8L, 2000000L, false))
+    val runs = cases.map { case (name, corpus, t, perPosting, minBudget, fb) =>
+      val ref = containmentReference(corpus, t, perPosting = perPosting,
         minBudget = minBudget, fallback = fb)
-      val got = Dedup.containmentVerifiedPairs(df, "text", "doc_id", n = 3, w = 8,
+      val out = Dedup.containmentVerifiedPairs(corpus, "text", "doc_id", n = 3, w = 8,
           threshold = t, candidateBudgetPerPosting = perPosting,
           minCandidateBudget = minBudget, keepRarestFallback = fb)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      val got = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
       assert(got.size == got.distinct.size, name)
       assert(got.toSet == ref.map { case ((a, b), (c, _)) => (a, b, c) }.toSet,
         s"$name: got ${got.size}, reference ${ref.size}")
-      name -> ref
-    }.toMap
+      (name -> ref, name -> out.queryExecution.executedPlan.toString.contains("hashpartitioning(__id"))
+    }
+    val refs = runs.map(_._1).toMap
+    val fetched = runs.map(_._2).toMap
+    assert(fetched("long pages") && !fetched("closed vocabulary"), fetched)
+    assert(refs("long pages").nonEmpty && refs("closed vocabulary").nonEmpty)
     // the fixture exercises what it claims: pairs found in several buckets,
     // the boundary pair kept, the tight cap losing pairs the rescue restores
     assert(refs("t=0.8").values.exists(_._2 > 1))
