@@ -46,12 +46,13 @@ object Pairs {
   }
 
   /** Fetch, for the candidate `pairs` (`id_a`, `id_b`, …), the `array` of
-    * each side from `byId` as `g_a`/`g_b` — for surviving candidates only,
-    * so arrays never ride the bucket shuffle. `byId` is shuffled on `id`
-    * before aliasing, so both lookups read one reused Exchange. Its callers
-    * post a doc to many buckets, where a carried array would multiply:
-    * MinHash (one posting per band), `ngramJaccardPairs` (per prefix gram),
-    * `containmentPairs` (every gram on the index side). */
+    * each side from `byId` as `g_a`/`g_b`. `byId` is shuffled on `id`
+    * before aliasing, so both lookups read one reused Exchange: each doc's
+    * array ships once, while a carried one ships once per bucket posting
+    * (|G| longs each). MinHash, `ngramJaccardPairs` and `containmentPairs`
+    * fetch: they post every band, prefix or index gram, singleton buckets
+    * included, and keep no per-bucket counts to price the two ways;
+    * `containmentVerifiedPairs` prices them from its df histogram. */
   def withArrays(pairs: DataFrame, byId: DataFrame, id: String,
                  array: String): DataFrame = {
     val arrays = byId.select(col(id), col(array)).repartition(col(id))

@@ -1150,11 +1150,18 @@ object Dedup {
     * Verification is identical to [[containmentPairs]]: exact
     * `|A∩B| / |A|` via the native sorted-intersect on the full gram
     * arrays of surviving candidates, gated unrounded, 4-dp fixed-point
-    * presented. Scale: postings carry their doc's gram array through ONE
-    * fingerprint-keyed shuffle (pre-aliased repartition → reused Exchange)
-    * and candidates verify in the bucket join's condition, so a rejected
-    * candidate is never materialized; only verified pairs shuffle again,
-    * to dedup pairs sharing several fingerprints. */
+    * presented. Scale: postings on keys with 2 ≤ df ≤ cap either carry
+    * their doc's gram array through the ONE fingerprint-keyed shuffle
+    * (pre-aliased repartition → reused Exchange), candidates verifying in
+    * the bucket join's condition and only verified pairs shuffling again
+    * (to dedup pairs sharing several fingerprints), or carry sizes only
+    * and the distinct candidates fetch arrays by id. A doc carries |G|
+    * longs per kept posting, up to ~2|G|²/(w+1) when every fingerprint is
+    * shared (a long near-duplicate page), so the df aggregate also sums
+    * each key's array longs and the collected histogram picks: carry only
+    * while that ships no more than every doc's array once plus two ids
+    * per candidate. Short docs and unique long pages carry; long
+    * near-duplicate pages fetch. */
   def containmentVerifiedPairs(df: DataFrame, textCol: String, idCol: String,
                                n: Int = 3, w: Int = 8,
                                threshold: Double = 0.8,
@@ -1163,8 +1170,8 @@ object Dedup {
                                keepRarestFallback: Boolean = false,
                                minCandidateBudget: Long = 2000000L): DataFrame = {
     // one fanned-out kernel pass, materialized (see ngramJaccardPairs):
-    // the adaptive-cap histogram collect and the fp-posting subtrees,
-    // which carry the gram arrays, all read the checkpointed table
+    // the adaptive-cap histogram collect, the fp-posting subtrees and any
+    // by-id array fetch all read the checkpointed table
     containmentVerifiedPairsFromPrepped(
       preppedKernelFrame(df, textCol, idCol, n, w), threshold, dfCap,
       candidateBudgetPerPosting, keepRarestFallback, minCandidateBudget)
@@ -1207,15 +1214,20 @@ object Dedup {
     // from an already-collected histogram (no extra job): an unconditional
     // broadcast collects the keys to the driver first (the Pairs.probeSide
     // failure mode, r13 advice); above the gate, shuffle-hash (invariant
-    // 13: the postings, arrays and all, are never sorted)
-    def postingsOf(keys: DataFrame, nKeys: Long): DataFrame = fps.join(
-      if (nKeys <= MaxBroadcastKeys) broadcast(keys) else keys.hint("shuffle_hash"),
-      Seq("__key"), "left_semi")
+    // 13: the postings, arrays and all, are never sorted). Also returns
+    // the array longs the postings side would ship if it carried arrays:
+    // the key set's own, or above the gate every posting's, since the
+    // shuffle then streams all of them
+    def postingsOf(keys: DataFrame, rows: Seq[(Long, Long, Long)]): (DataFrame, Long) = {
+      val small = rows.map(_._2).sum <= MaxBroadcastKeys
+      (fps.join(if (small) broadcast(keys) else keys.hint("shuffle_hash"), Seq("__key"), "left_semi"),
+        if (small) rows.map(_._3).sum else hist.map(_._3).sum)
+    }
     // a key posted once pairs with nothing: its posting would carry an
     // array into the bucket for no candidate
     val kept = hist.toSeq.collect { case (d, k, g, _) if d >= 2 && d <= capped => (d, k, g) }
-    val keepBase = postingsOf(
-      dfTab.where(col("__df") >= 2 && col("__df") <= capped).select("__key"), kept.map(_._2).sum)
+    val (keepBase, keptGs) = postingsOf(
+      dfTab.where(col("__df") >= 2 && col("__df") <= capped).select("__key"), kept)
     // SHORT-PROBE RESCUE (r13, opt-in — closes the measured 4% quote loss
     // of the BASELINE.md r13 recall table): a doc whose EVERY fingerprint
     // is above the cap becomes invisible — at sf1, 12-token quotes whose
@@ -1229,7 +1241,7 @@ object Dedup {
     // and dfCap remains the hard ceiling. Deterministic: per-doc min is
     // (df, key)-lexicographic; the cut is a pure function of the
     // histogram.
-    val (keep, rescued) = if (!keepRarestFallback) (keepBase, Nil) else {
+    val (keep, posted, carried) = if (!keepRarestFallback) (keepBase, kept, keptGs) else {
       val rescuedF = fps.join(dfTab, Seq("__key"))
         .groupBy("__id")
         .agg(min(struct(col("__df"), col("__key"), col("__gs"))).as("__m"))
@@ -1270,14 +1282,13 @@ object Dedup {
         }
       // rescued keys grow with the number of fully-capped docs on exactly
       // the saturated corpora this flag targets: the same broadcast gate
-      (keepBase.unionByName(postingsOf(rescuedKeys, admitted.map(_._2).sum)), admitted)
+      val (rescuedPostings, rescuedGs) = postingsOf(rescuedKeys, admitted)
+      (keepBase.unionByName(rescuedPostings), kept ++ admitted, keptGs + rescuedGs)
     }
-    // Carry arrays into the bucket only while that ships no more than the
-    // by-id fetch: every doc's array once plus each candidate's two ids. A
-    // long page sharing most of its fingerprints (a near-duplicate) would
-    // carry its array once per shared key, ~2|G|²/(w+1) longs.
-    val carry = (kept ++ rescued).map(_._3).sum <= hist.map(_._4).sum +
-      (kept ++ rescued).map { case (d, k, _) => 2 * k * d * (d - 1) }.sum
+    // carry arrays into the bucket only while that ships no more than the
+    // by-id fetch: every doc's array once plus each candidate's two ids
+    val carry =
+      carried <= hist.map(_._4).sum + posted.map { case (d, k, _) => 2 * k * d * (d - 1) }.sum
     val cand = Pairs.selfJoin(keep, Seq("__key"), "__id",
         ("__sz" -> "sz") +: (if (carry) Seq("__gh" -> "g") else Nil), ordered = true)
       // containment admits one size filter: |A∩B| ≤ |B| ⟹ |B| ≥ t·|A|
