@@ -24,7 +24,8 @@ import graft.text.Dedup
   *    recall here is the honest price of the lossy candidate stage),
   *    and organic pairs.
   *
-  * Usage: `runMain graft.datagen.RecallMeasure /tmp/testdata/sf1 /tmp/recall_sf1.json`
+  * Usage: `runMain graft.datagen.RecallMeasure <sfDir> <out.json> [budget]
+  * [bands] [winnowW] [inc]`, e.g. `/tmp/testdata/sf1 /tmp/recall_sf1.json`
   * Planted ids: source + 2,000,000 (contiguous) / + 3,000,000 (scattered)
   * — disjoint from base ids (< 10⁶ per replica) and ScaleUp's r·10⁷
   * replica shifts.
@@ -60,27 +61,23 @@ object RecallMeasure {
     // single high-df fingerprint of ~4% of planted quotes; see BASELINE.md
     // recall table for the budget→recall curve)
     val budget = if (args.length > 2) args(2).toLong else 8L
-    // 4th arg "fallback" turns on the short-probe rescue
-    // (containmentVerifiedPairs keepRarestFallback) — measures how much
-    // of the df-cap recall loss the rescue buys back
-    val fallback = args.length > 3 && args(3) == "fallback"
-    // 5th arg: minhash band count (64 hashes fixed) — the recall knob the
+    // 4th arg: minhash band count (64 hashes fixed) — the recall knob the
     // per-j-band table prices: r = 64/bands rows per band, recall
     // 1 − (1 − j^r)^bands
-    val bands = if (args.length > 4) args(4).toInt else 16
-    // 6th arg: winnowing window w — the containment recall knob (r13
+    val bands = if (args.length > 3) args(3).toInt else 16
+    // 5th arg: winnowing window w — the containment recall knob (r13
     // verdict #4): the guarantee threshold is a contiguous run of
     // w + n − 1 tokens, so shrinking w below chunkLen − n + 1 converts
     // the scattered-chunk class from probabilistic to guaranteed
     // (modulo the df cap), at ~2/(w+1) fingerprint density (cost)
-    val winnowW = if (args.length > 5) args(5).toInt else 8
-    // 7th arg "inc": also measure the INCREMENTAL banded probe
+    val winnowW = if (args.length > 4) args(4).toInt else 8
+    // 6th arg "inc": also measure the INCREMENTAL banded probe
     // (containmentIncrementalBanded over a seeded winnow index) against
     // the exact incremental probe — the banded probe's adaptive cap is a
     // DIFFERENT cut than the batch generator's (Σ df over batch
     // fingerprints vs Σ df²·keys corpus-wide), so its recall is measured
     // separately, not inferred
-    val incLeg = args.length > 6 && args(6) == "inc"
+    val incLeg = args.length > 5 && args(5) == "inc"
     val spark = graft.obs.GraftSession.local()
 
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
@@ -112,8 +109,7 @@ object RecallMeasure {
       n = 3, threshold = 0.8, maxCandidatesPerPosting = 0).localCheckpoint()
     val t0 = System.nanoTime()
     val bandedC = Dedup.containmentVerifiedPairs(aug, "text", "doc_id",
-      n = 3, w = winnowW, threshold = 0.8, candidateBudgetPerPosting = budget,
-      keepRarestFallback = fallback)
+      n = 3, w = winnowW, threshold = 0.8, candidateBudgetPerPosting = budget)
       .select("id_a", "id_b").localCheckpoint()
     // the knob's COST side: wall-clock of the banded generator alone
     // (localCheckpoint materializes it), so the w table prices
@@ -165,7 +161,7 @@ object RecallMeasure {
 
     val json = "{" + rowsJsonStr("minhash_banding_by_jband", jRows) + "," +
       rowsJsonStr("containment_winnow_by_class", cRows) + incJson +
-      s""","winnow_budget_per_posting":$budget,"rarest_fallback":$fallback,""" +
+      s""","winnow_budget_per_posting":$budget,""" +
       s""""minhash_bands":$bands,"winnow_w":$winnowW,""" +
       s""""banded_containment_ms":$bandedMs,"sf_dir":"$srcDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),

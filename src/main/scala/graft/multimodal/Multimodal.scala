@@ -49,11 +49,6 @@ object Multimodal {
         length(col(blobCol).cast("binary")).as("n_bytes"),
         md5(col(blobCol).cast("binary")).as("checksum")).as("meta"))
 
-  /** Shard for balanced decode: hash-repartition on the asset id so skewed
-    * upstream layouts (e.g. per-site crawl files) don't serialize decode. */
-  def shardForDecode(assets: DataFrame, partitions: Int): DataFrame =
-    assets.repartition(partitions, col("asset_id"))
-
   /** Deterministic byte-level fallback decoder for NON-IMAGE media
     * (audio/video codecs the JDK lacks, synthetic fixtures): derives a
     * fixed-size float "feature vector" from the raw bytes. Images take the

@@ -17,23 +17,16 @@ import org.apache.spark.sql.functions._
 object Graph {
 
   /** Directed customer→supplier edge list derived from the order facts:
-    * one edge per DISTINCT (customer, supplier) trading pair, node ids
-    * namespaced `c:`/`s:` so the two key spaces cannot collide. One
-    * shuffle for the orderkey join (lineitem-side partitioned), one for
-    * the distinct. */
-  def tradeEdges(orders: DataFrame, lineitem: DataFrame): DataFrame =
-    tradeEdgesTagged(orders, lineitem).select(
-      decodeTradeNode(col("src")).as("src"),
-      decodeTradeNode(col("dst")).as("dst"))
-
-  /** [[tradeEdges]] with LONG node keys — `c:k → 2k`, `s:k → 2k+1` (the
-    * tag bit keeps the two key spaces disjoint, as the string prefixes
-    * did). Every exchange, sort, hash and aggregate of the centrality
-    * ops downstream then moves 8-byte keys instead of variable-length
-    * strings (guide §2.3 narrower types — measured r15: the 3-iteration
-    * PageRank re-shuffles the edge list every round, so the key width is
-    * paid 3×); [[decodeTradeNode]] restores the public labels at output,
-    * a bijection, so distinct-on-tagged ≡ distinct-on-strings. */
+    * one edge per DISTINCT (customer, supplier) trading pair, with LONG
+    * node keys — `c:k → 2k`, `s:k → 2k+1` (the tag bit keeps the two key
+    * spaces disjoint). One shuffle for the orderkey join (lineitem-side
+    * partitioned), one for the distinct. Every exchange, sort, hash and
+    * aggregate of the centrality ops downstream then moves 8-byte keys
+    * instead of variable-length strings (guide §2.3 narrower types —
+    * measured r15: the 3-iteration PageRank re-shuffles the edge list
+    * every round, so the key width is paid 3×); [[decodeTradeNode]]
+    * restores the public `c:`/`s:` labels at output, a bijection, so
+    * distinct-on-tagged ≡ distinct-on-strings. */
   def tradeEdgesTagged(orders: DataFrame, lineitem: DataFrame): DataFrame =
     orders.join(lineitem, col("o_orderkey") === col("l_orderkey"))
       .select(
@@ -46,15 +39,9 @@ object Graph {
     when(pmod(node, lit(2L)) === 0, concat(lit("c:"), shiftright(node, 1)))
       .otherwise(concat(lit("s:"), shiftright(node, 1)))
 
-  /** Both directions of [[tradeEdges]] — makes the bipartite trade graph
-    * symmetric so rank mass actually circulates (a one-directional
+  /** Both directions of [[tradeEdgesTagged]] — makes the bipartite trade
+    * graph symmetric so rank mass actually circulates (a one-directional
     * bipartite graph reaches its fixed point after a single step). */
-  def bidirectedTradeEdges(orders: DataFrame, lineitem: DataFrame): DataFrame = {
-    val e = tradeEdges(orders, lineitem).localCheckpoint()
-    e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-  }
-
-  /** [[bidirectedTradeEdges]] over the tagged LONG keys. */
   def bidirectedTradeEdgesTagged(orders: DataFrame, lineitem: DataFrame): DataFrame = {
     val e = tradeEdgesTagged(orders, lineitem).localCheckpoint()
     e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))

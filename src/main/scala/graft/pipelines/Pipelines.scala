@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.{Dates, Exprs, TextNorm, Types}
@@ -46,7 +46,7 @@ object Pipelines {
         col("recencia_ultima_transaccion").as("last_transaction_recall"))
     // availability shift +1 month (:77-87)
     val shifted = ingested.withColumn("release_dt",
-      Dates.shiftDate(col("event_dt"), "yyyy-MM", days = 0, months = 1))
+      Dates.releaseDt(col("event_dt")))
     val clean = TextNorm.normalizeTable(shifted)
 
     // aggregations (:595-607) + ratio (:609-613). NOT pre-partitioned on
@@ -95,7 +95,7 @@ object Pipelines {
         col("consultas_buro_12m").as("bureau_inquiries_12m"),
         col("deuda_total_bancos").as("total_banking_debt"))
     val shifted = ingested.withColumn("release_dt",
-      Dates.shiftDate(col("event_dt"), "yyyy-MM", days = 0, months = 1))
+      Dates.releaseDt(col("event_dt")))
     val clean = TextNorm.normalizeTable(shifted)
 
     // grouped agg (:213-261): credits_cnt + {c}_sum + max(categorical).
@@ -146,7 +146,7 @@ object Pipelines {
         Exprs.caseMap(col("calificacion_sistema"),
           Seq("A" -> 1, "B" -> 2, "C" -> 3, "D" -> 4, "E" -> 5), 0).as("rating_num"))
     val shifted = ingested.withColumn("release_dt",
-      Dates.shiftDate(col("event_dt").cast("string"), "yyyy-MM-dd", days = 0, months = 1))
+      Dates.releaseDt(col("event_dt").cast("string"), "yyyy-MM-dd"))
     val clean = TextNorm.normalizeTable(shifted)
 
     // time features (:120-160): month durations, cast int
@@ -205,8 +205,7 @@ object Pipelines {
         col("monto").as("amount"),
         col("total_productos").as("products_cnt"))
     val shifted = ingested.withColumn("release_dt",
-      Dates.shiftDate(col("event_dt").cast("date").cast("string"), "yyyy-MM-dd",
-        days = 0, months = 1))
+      Dates.releaseDt(col("event_dt").cast("date").cast("string"), "yyyy-MM-dd"))
     // textnorm maps product values to the pivot keys: "tarjeta de credito"
     // → "tarjeta_de_credito" (`fs_cus_holding_products.py:607-612`)
     val clean = TextNorm.normalizeTable(shifted)
@@ -311,16 +310,4 @@ object Pipelines {
       "zone_residence", "city", "segment", "cust_code_creation_time_months")
     standardize(timed, features, "cdmg_")
   }
-
-  /** Run all five over generated sources — the orchestrated-job equivalent
-    * (`notebooks_orchestator.py`, task DAG in the config job_resources yml). */
-  def runAll(spark: SparkSession, sources: Map[String, DataFrame],
-             startDate: String = "2023-01-01",
-             endDate: String = graft.datagen.BankingDataGen.AnchorMonth): Map[String, DataFrame] =
-    Map(
-      "fs_cus_demographic" -> demographic(sources("clientes"), startDate, endDate),
-      "fs_cus_credit_risk" -> creditRisk(sources("buro_credito")),
-      "fs_cus_holding_products" -> holdingProducts(sources("productos")),
-      "fs_cus_payment_behavior" -> paymentBehavior(sources("pagos")),
-      "fs_cus_transactions" -> transactions(sources("transacciones")))
 }

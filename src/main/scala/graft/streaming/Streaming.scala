@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
 
 import graft.store.TableStore
 
@@ -25,13 +24,6 @@ object Streaming {
     * real checkpoint-restart machinery; default no-op, never set in
     * production. */
   @volatile private[graft] var crashHook: (String, Long) => Unit = (_, _) => ()
-
-  val eventSchema: StructType = StructType.fromDDL(
-    "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING")
-
-  /** File-source stream of event batches dropped into `dir`. */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(eventSchema).parquet(dir)
 
   /** Tumbling-window aggregation with late-data watermark: the streaming
     * mirror of `Queries.qStreamTumbling`. State is bounded by the

@@ -28,9 +28,9 @@ import graft.ops.Pairs
   */
 object Dedup {
 
-  /** Both containment key sets, kept and rescued fingerprints, join as a
-    * shuffled side instead of a broadcast above this many keys (8-byte
-    * longs → ~32 MB at the gate; see `postingsOf` in
+  /** The kept containment fingerprint keys join as a shuffled side instead
+    * of a broadcast above this many keys (8-byte longs → ~32 MB at the
+    * gate; see the kept-postings semi-join in
     * [[containmentVerifiedPairsFromPrepped]]). */
   private val MaxBroadcastKeys = 4000000L
 
@@ -1124,12 +1124,8 @@ object Dedup {
     * corpus — each missed quote's single fingerprint is shared by
     * 238–757 docs — so the guarantee is "deterministic MODULO the df
     * cap"; scattered sub-guarantee chunks recall 0.935, organic pairs
-    * 0.988. `keepRarestFallback = true` buys most of that 4% back: docs
-    * whose EVERY fingerprint is capped get their rarest fingerprint
-    * posted for all its holders, under a second same-size budget
-    * allocation (volume at most doubles, still O(postings); see the
-    * inline rescue comment). Recall-complete alternatives when exactness
-    * matters: [[containmentPairs]] (budget-guarded) or the persisted
+    * 0.988. Recall-complete alternatives when exactness matters:
+    * [[containmentPairs]] (budget-guarded) or the persisted
     * [[containmentIncremental]] index.
     *
     * The cap is ADAPTIVE, not a constant: on a gram-saturated corpus
@@ -1167,14 +1163,13 @@ object Dedup {
                                threshold: Double = 0.8,
                                dfCap: Long = 4096,
                                candidateBudgetPerPosting: Long = 8,
-                               keepRarestFallback: Boolean = false,
                                minCandidateBudget: Long = 2000000L): DataFrame = {
     // one fanned-out kernel pass, materialized (see ngramJaccardPairs):
     // the adaptive-cap histogram collect, the fp-posting subtrees and any
     // by-id array fetch all read the checkpointed table
     containmentVerifiedPairsFromPrepped(
       preppedKernelFrame(df, textCol, idCol, n, w), threshold, dfCap,
-      candidateBudgetPerPosting, keepRarestFallback, minCandidateBudget)
+      candidateBudgetPerPosting, minCandidateBudget)
   }
 
   /** [[containmentVerifiedPairs]] over an ALREADY-MATERIALIZED
@@ -1185,7 +1180,6 @@ object Dedup {
   private[graft] def containmentVerifiedPairsFromPrepped(
       prepped: DataFrame, threshold: Double,
       dfCap: Long = 4096, candidateBudgetPerPosting: Long = 8,
-      keepRarestFallback: Boolean = false,
       minCandidateBudget: Long = 2000000L): DataFrame = {
     requirePrepped(prepped, "__id", "__gh", "__fp")
     val fps = prepped
@@ -1209,87 +1203,28 @@ object Dedup {
       if (cum <= budget && d <= dfCap) effCap = math.max(effCap, d)
     }
     val capped = math.min(effCap, dfCap)
-    // the postings of a key set, as a semi-join: the postings always
-    // stream and the keys build. Broadcast only a bounded key set, counted
-    // from an already-collected histogram (no extra job): an unconditional
-    // broadcast collects the keys to the driver first (the Pairs.probeSide
-    // failure mode, r13 advice); above the gate, shuffle-hash (invariant
-    // 13: the postings, arrays and all, are never sorted). Also returns
-    // the array longs the postings side would ship if it carried arrays:
-    // the key set's own, or above the gate every posting's, since the
-    // shuffle then streams all of them
-    def postingsOf(keys: DataFrame, rows: Seq[(Long, Long, Long)]): (DataFrame, Long) = {
-      val small = rows.map(_._2).sum <= MaxBroadcastKeys
-      (fps.join(if (small) broadcast(keys) else keys.hint("shuffle_hash"), Seq("__key"), "left_semi"),
-        if (small) rows.map(_._3).sum else hist.map(_._3).sum)
-    }
     // a key posted once pairs with nothing: its posting would carry an
     // array into the bucket for no candidate
     val kept = hist.toSeq.collect { case (d, k, g, _) if d >= 2 && d <= capped => (d, k, g) }
-    val (keepBase, keptGs) = postingsOf(
-      dfTab.where(col("__df") >= 2 && col("__df") <= capped).select("__key"), kept)
-    // SHORT-PROBE RESCUE (r13, opt-in — closes the measured 4% quote loss
-    // of the BASELINE.md r13 recall table): a doc whose EVERY fingerprint
-    // is above the cap becomes invisible — at sf1, 12-token quotes whose
-    // single fingerprint is a common opening (df 238–757) lost their
-    // sources. The fallback rescues each such doc's RAREST fingerprint by
-    // posting it for ALL its holders (both bucket sides must post, or the
-    // quote still misses its source). Volume stays bounded BY
-    // CONSTRUCTION: rescued fingerprints get a SECOND budget allocation
-    // of the same size via the same ascending-df histogram cut (so the
-    // fallback at most doubles candidate volume — still O(postings)),
-    // and dfCap remains the hard ceiling. Deterministic: per-doc min is
-    // (df, key)-lexicographic; the cut is a pure function of the
-    // histogram.
-    val (keep, posted, carried) = if (!keepRarestFallback) (keepBase, kept, keptGs) else {
-      val rescuedF = fps.join(dfTab, Seq("__key"))
-        .groupBy("__id")
-        .agg(min(struct(col("__df"), col("__key"), col("__gs"))).as("__m"))
-        .where(col("__m.__df") > capped && col("__m.__df") <= dfCap)
-        .select(col("__m.__key").as("__key"), col("__m.__df").as("__df"),
-          col("__m.__gs").as("__gs"))
-        .distinct()
-      val rHist = rescuedF.groupBy("__df").agg(count(lit(1)), sum("__gs"))
-        .orderBy("__df").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      var rcum = 0L
-      var rescueCap = 0L
-      rHist.foreach { case (d, k, _) =>
-        rcum += d * d * k
-        if (rcum <= budget) rescueCap = math.max(rescueCap, d)
-      }
-      val floorDf = rHist.headOption.map(_._1).getOrElse(0L)
-      // FLOOR ADMISSION, bounded (r13 advice): the cheapest rescued df
-      // must post SOMETHING — a silent no-op rescue would leave the
-      // caller believing the flag bought recall back — but admitting
-      // EVERY key at the floor df is unbounded in the number of
-      // fully-capped docs (worst case (#keys at floor df) × df², not
-      // df²). When even the floor df's full key set overflows the
-      // budget, admit only the max(1, budget/df²) SMALLEST keys at that
-      // df (deterministic distributed top-K on the key order), so rescue
-      // volume stays ≤ budget + df² by construction.
-      // (the admitted keys' histogram rows; at the floor, pro rata)
-      val (rescuedKeys, admitted) =
-        if (floorDf == 0L) (rescuedF.select("__key"), Nil)
-        else if (rescueCap >= floorDf)
-          (rescuedF.where(col("__df") <= rescueCap).select("__key"),
-            rHist.toSeq.filter(_._1 <= rescueCap))
-        else {
-          val admit = math.min(Int.MaxValue.toLong,
-            math.max(1L, budget / math.max(1L, floorDf * floorDf)))
-          (rescuedF.where(col("__df") === floorDf)
-            .orderBy(col("__key")).limit(admit.toInt).select("__key"),
-            Seq((floorDf, admit, rHist.head._3 * admit / rHist.head._2)))
-        }
-      // rescued keys grow with the number of fully-capped docs on exactly
-      // the saturated corpora this flag targets: the same broadcast gate
-      val (rescuedPostings, rescuedGs) = postingsOf(rescuedKeys, admitted)
-      (keepBase.unionByName(rescuedPostings), kept ++ admitted, keptGs + rescuedGs)
-    }
+    // the kept postings, as a semi-join: the postings always stream and the
+    // keys build. Broadcast only a bounded key set, counted from the
+    // already-collected histogram (no extra job): an unconditional
+    // broadcast collects the keys to the driver first (the Pairs.probeSide
+    // failure mode, r13 advice); above the gate, shuffle-hash (invariant
+    // 13: the postings, arrays and all, are never sorted). The array longs
+    // the postings side would ship if it carried arrays are the kept keys'
+    // own, or above the gate every posting's, since the shuffle then
+    // streams all of them
+    val keys = dfTab.where(col("__df") >= 2 && col("__df") <= capped).select("__key")
+    val small = kept.map(_._2).sum <= MaxBroadcastKeys
+    val keepBase = fps.join(if (small) broadcast(keys) else keys.hint("shuffle_hash"),
+      Seq("__key"), "left_semi")
+    val keptGs = if (small) kept.map(_._3).sum else hist.map(_._3).sum
     // carry arrays into the bucket only while that ships no more than the
     // by-id fetch: every doc's array once plus each candidate's two ids
     val carry =
-      carried <= hist.map(_._4).sum + posted.map { case (d, k, _) => 2 * k * d * (d - 1) }.sum
-    val cand = Pairs.selfJoin(keep, Seq("__key"), "__id",
+      keptGs <= hist.map(_._4).sum + kept.map { case (d, k, _) => 2 * k * d * (d - 1) }.sum
+    val cand = Pairs.selfJoin(keepBase, Seq("__key"), "__id",
         ("__sz" -> "sz") +: (if (carry) Seq("__gh" -> "g") else Nil), ordered = true)
       // containment admits one size filter: |A∩B| ≤ |B| ⟹ |B| ≥ t·|A|
       .where(col("sz_b") >= col("sz_a") * threshold - 1e-9)

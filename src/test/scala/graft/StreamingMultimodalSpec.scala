@@ -30,6 +30,11 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     dir
   }
 
+  /** File-source stream of the event batches dropped into `dir`. */
+  private def eventsStream(dir: String) = spark.readStream
+    .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING")
+    .parquet(dir)
+
   /** Starts a gate with `Streaming.crashHook` throwing once at batch `at`
     * (after the index appends, before the clean commit) and expects the
     * query to die; then restarts it from the same checkpoint and drains. */
@@ -49,7 +54,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
   }
 
   test("streaming tumbling agg over a file source matches the batch result") {
-    val stream = Streaming.tumblingAgg(Streaming.eventsStream(spark, eventsDir))
+    val stream = Streaming.tumblingAgg(eventsStream(eventsDir))
     val q = stream.writeStream.format("memory").queryName("tumbling_test")
       .outputMode("update").start()
     try q.processAllAvailable() finally q.stop()
@@ -65,7 +70,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
 
   test("streaming drift monitor matches its batch mirror and flags planted drift") {
     val base = Seq.fill(10)(0.1)
-    val stream = Streaming.driftMonitor(Streaming.eventsStream(spark, eventsDir),
+    val stream = Streaming.driftMonitor(eventsStream(eventsDir),
       base, "value", lo = 0.0, width = 50.0, window_ = "1 day", watermark = "2 days")
     val q = stream.writeStream.format("memory").queryName("drift_test")
       .outputMode("update").start()
@@ -87,7 +92,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
 
   test("native SpaceSaving aggregate works in a streaming query (complete mode)") {
     val stream = graft.ops.Sketches.topKApprox(
-      Streaming.eventsStream(spark, eventsDir).select($"event_type",
+      eventsStream(eventsDir).select($"event_type",
         ($"user_id" % 10).cast("string").as("item")),
       Seq("event_type"), "item", k = 3, capacity = 64)
     val q = stream.writeStream.format("memory").queryName("topk_test")
@@ -106,7 +111,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
   }
 
   test("streaming sliding-window agg matches the batch sliding windows") {
-    val stream = Streaming.slidingAgg(Streaming.eventsStream(spark, eventsDir),
+    val stream = Streaming.slidingAgg(eventsStream(eventsDir),
       window_ = "1 hour", slide = "30 minutes")
     val q = stream.writeStream.format("memory").queryName("sliding_test")
       .outputMode("update").start()
@@ -125,7 +130,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     // session-window agg only supports APPEND: sessions are emitted once
     // finalized by the watermark, so sessions near the stream tail are
     // (correctly) withheld — compare the emitted prefix against batch.
-    val stream = Streaming.sessionAgg(Streaming.eventsStream(spark, eventsDir),
+    val stream = Streaming.sessionAgg(eventsStream(eventsDir),
       gap = "30 minutes", watermark = "0 seconds")
     val q = stream.writeStream.format("memory").queryName("session_test")
       .outputMode("append").start()
@@ -144,8 +149,8 @@ class StreamingMultimodalSpec extends AnyFunSuite {
 
   test("stream-stream band join matches the equivalent batch join") {
     val joined = Streaming.streamStreamJoin(
-      Streaming.eventsStream(spark, eventsDir),
-      Streaming.eventsStream(spark, eventsDir), bandSeconds = 900)
+      eventsStream(eventsDir),
+      eventsStream(eventsDir), bandSeconds = 900)
     val q = joined.writeStream.format("memory").queryName("ssjoin_test")
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
@@ -160,7 +165,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val dim = Seq((0L, "bronze"), (1L, "silver"), (2L, "gold"))
       .toDF("tier_key", "tier") // user_id % 5 > 2 has no dim row
     val enriched = Streaming.enrichWithDim(
-      Streaming.eventsStream(spark, eventsDir)
+      eventsStream(eventsDir)
         .withColumn("tier_key", $"user_id" % 5), dim, Seq("tier_key"))
     val q = enriched.writeStream.format("memory").queryName("enrich_test")
       .outputMode("append").start()
@@ -185,7 +190,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     ev.coalesce(1).write.mode("overwrite").parquet(dupDir)
     ev.coalesce(1).write.mode("append").parquet(dupDir)
     val dedup = Streaming.dedupWithinWatermark(
-      Streaming.eventsStream(spark, dupDir), Seq("event_id"))
+      eventsStream(dupDir), Seq("event_id"))
     val q = dedup.writeStream.format("memory").queryName("dedup_test")
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
@@ -194,7 +199,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
   }
 
   test("stateful runningPerUser accumulates counts via mapGroupsWithState") {
-    val stream = Streaming.runningPerUser(spark, Streaming.eventsStream(spark, eventsDir))
+    val stream = Streaming.runningPerUser(spark, eventsStream(eventsDir))
     val q = stream.writeStream.format("memory").queryName("running_test")
       .outputMode("update").start()
     try q.processAllAvailable() finally q.stop()
@@ -205,7 +210,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
 
   test("foreachBatch streams into the TableStore idempotently") {
     val store = new TableStore(spark, Files.createTempDirectory("graft_ss").toString)
-    val agg = Streaming.tumblingAgg(Streaming.eventsStream(spark, eventsDir))
+    val agg = Streaming.tumblingAgg(eventsStream(eventsDir))
     val cp = Files.createTempDirectory("graft_cp").toString
     val q = Streaming.streamIntoStore(agg, store, "event_features",
       Seq("win_start", "event_type"), cp)
@@ -800,7 +805,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
   }
 
   test("extractFeatures: mapPartitions decode stage, deterministic output") {
-    val f1 = Multimodal.extractFeatures(Multimodal.shardForDecode(assets, 4), dim = 8)
+    val f1 = Multimodal.extractFeatures(assets.repartition(4, $"asset_id"), dim = 8)
     val f2 = Multimodal.extractFeatures(assets.repartition(2), dim = 8)
     assert(f1.count() == 500)
     val a = f1.orderBy("asset_id").first()

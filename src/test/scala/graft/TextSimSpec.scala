@@ -564,49 +564,14 @@ class TextSimSpec extends AnyFunSuite {
     }
   }
 
-  test("containmentVerifiedPairs keepRarestFallback: fully-capped docs " +
-      "become visible again under a second bounded budget allocation") {
-    val rnd = new scala.util.Random(31)
-    // 12 IDENTICAL short docs: every fingerprint they have carries df=12,
-    // so with a budget that caps df=12 they are fully invisible; 20
-    // unique filler docs supply the df=1 mass that keeps effCap at 1
-    // budget arithmetic (perPosting = 1, floor = 1): the quote docs
-    // contribute k₂ ∈ [1, 3] fingerprints at df = 12, so cumulative df²
-    // mass k₁ + 144·k₂ always exceeds the budget k₁ + 12·k₂ → df = 12 is
-    // capped for ANY k₂; the rescue histogram is {12 → k₂} with mass
-    // 144·k₂ ≤ budget as long as filler fps k₁ ≥ 132·k₂ — 80 filler docs
-    // × 30 tokens yield k₁ ≈ 500 fingerprints, safely above even k₂ = 3
-    val quote = (1 to 12).map(i => "word" + i).mkString(" ")
-    val docs = (1L to 12L).map(i => (i, quote)) ++
-      (100L to 179L).map(i =>
-        (i, Seq.fill(30)("u" + i + "_" + rnd.nextInt(1000000)).mkString(" ")))
-    val df = docs.toDF("doc_id", "text")
-    def run(fallback: Boolean) =
-      Dedup.containmentVerifiedPairs(df, "text", "doc_id",
-          n = 3, w = 8, threshold = 0.8,
-          candidateBudgetPerPosting = 1, minCandidateBudget = 1,
-          keepRarestFallback = fallback)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(run(fallback = false).isEmpty) // capped → invisible
-    val rescued = run(fallback = true)
-    val expect = (for (a <- 1L to 12L; b <- 1L to 12L if a != b)
-      yield (a, b)).toSet
-    assert(rescued == expect) // every identical-doc pair back, both ways
-    // rescue output stays ⊆ the exact reference (shared verify gate)
-    val exact = Dedup.containmentPairs(df, "text", "doc_id",
-        n = 3, threshold = 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(rescued.subsetOf(exact))
-  }
-
   /** Driver-side reference of [[Dedup.containmentVerifiedPairs]] over the
-    * collected prepped kernel rows: the same adaptive df cap and rarest-
-    * fingerprint rescue, then every ordered pair `(a, b)`, a ≠ b, sharing
-    * a kept fingerprint with `|B| ≥ t·|A| − 1e-9` and `|A∩B| / |A| ≥ t`.
+    * collected prepped kernel rows: the same adaptive df cap, then every
+    * ordered pair `(a, b)`, a ≠ b, sharing a kept fingerprint with
+    * `|B| ≥ t·|A| − 1e-9` and `|A∩B| / |A| ≥ t`.
     * Value: (4-dp containment, number of kept fingerprints shared). */
   private def containmentReference(df: org.apache.spark.sql.DataFrame,
       threshold: Double, dfCap: Long = 4096, perPosting: Long = 8,
-      minBudget: Long = 2000000L, fallback: Boolean = false)
+      minBudget: Long = 2000000L)
       : Map[(Long, Long), (Double, Int)] = {
     val rows = Dedup.preppedKernelFrame(df, "text", "doc_id", 3, w = 8).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Long](2)))
@@ -614,29 +579,14 @@ class TextSimSpec extends AnyFunSuite {
     val holders = rows.toSeq.flatMap { case (id, _, fp) => fp.map(_ -> id) }
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
     val dfOf = holders.map { case (k, ids) => k -> ids.size.toLong }
-    def histOf(keys: Iterable[Long]) = keys.groupBy(dfOf)
-      .map { case (d, ks) => d -> ks.size.toLong }.toSeq.sortBy(_._1)
-    // every df whose cumulative d²·k volume fits the budget
-    def fitting(hist: Seq[(Long, Long)], budget: Long) =
-      hist.scanLeft((0L, 0L)) { case ((_, cum), (d, k)) => (d, cum + d * d * k) }
-        .tail.collect { case (d, cum) if cum <= budget => d }
-    val hist = histOf(dfOf.keys)
+    val hist = dfOf.values.groupBy(identity)
+      .map { case (d, ds) => d -> ds.size.toLong }.toSeq.sortBy(_._1)
     val budget = math.max(perPosting * hist.map { case (d, k) => d * k }.sum, minBudget)
-    val capped = math.min((hist.head._1 +: fitting(hist, budget).filter(_ <= dfCap)).max,
-      dfCap)
-    val rescued = if (!fallback) Set.empty[Long] else {
-      val cands = rows.collect { case (_, _, fp) if fp.nonEmpty => fp.minBy(k => (dfOf(k), k)) }
-        .filter(k => dfOf(k) > capped && dfOf(k) <= dfCap).toSet
-      val rHist = histOf(cands)
-      val rescueCap = (0L +: fitting(rHist, budget)).max
-      rHist.headOption match {
-        case None => Set.empty[Long]
-        case Some((floor, _)) if rescueCap >= floor => cands.filter(dfOf(_) <= rescueCap)
-        case Some((floor, _)) => cands.filter(dfOf(_) == floor).toSeq.sorted
-          .take(math.max(1L, budget / (floor * floor)).toInt).toSet
-      }
-    }
-    val kept = dfOf.keys.filter(dfOf(_) <= capped) ++ rescued
+    // every df whose cumulative d²·k volume fits the budget
+    val fitting = hist.scanLeft((0L, 0L)) { case ((_, cum), (d, k)) => (d, cum + d * d * k) }
+      .tail.collect { case (d, cum) if cum <= budget => d }
+    val capped = math.min((hist.head._1 +: fitting.filter(_ <= dfCap)).max, dfCap)
+    val kept = dfOf.keys.filter(dfOf(_) <= capped)
     kept.toSeq.flatMap(k => for {
       a <- holders(k); b <- holders(k) if a != b
       if grams(b).size >= grams(a).size * threshold - 1e-9
@@ -647,7 +597,7 @@ class TextSimSpec extends AnyFunSuite {
   }
 
   test("containmentVerifiedPairs ≡ a driver-side reference: multi-fingerprint " +
-      "pairs, size-filter boundary, budget-bound cap, rarest rescue") {
+      "pairs, size-filter boundary, budget-bound cap") {
     val rnd = new scala.util.Random(23)
     def words(n: Int, tag: String) = Seq.fill(n)(tag + rnd.nextInt(100000))
     val pages = (1L to 30L).map(i => i -> words(40, "p"))
@@ -677,18 +627,17 @@ class TextSimSpec extends AnyFunSuite {
     val closedDf = (closed ++ closed.take(20).map { case (i, ws) => (i + 1000L, ws.take(12)) })
       .map { case (i, ws) => (i, ws.mkString(" ")) }.toDF("doc_id", "text")
     val cases = Seq(
-      ("t=0.8", df, 0.8, 8L, 2000000L, false),
-      ("t=0.5", df, 0.5, 8L, 2000000L, false),
-      ("budget-bound", df, 0.5, 1L, 1L, false),
-      ("budget-bound + fallback", df, 0.5, 1L, 1L, true),
-      ("long pages", longDf, 0.8, 8L, 2000000L, false),
-      ("closed vocabulary", closedDf, 0.8, 8L, 2000000L, false))
-    val runs = cases.map { case (name, corpus, t, perPosting, minBudget, fb) =>
+      ("t=0.8", df, 0.8, 8L, 2000000L),
+      ("t=0.5", df, 0.5, 8L, 2000000L),
+      ("budget-bound", df, 0.5, 1L, 1L),
+      ("long pages", longDf, 0.8, 8L, 2000000L),
+      ("closed vocabulary", closedDf, 0.8, 8L, 2000000L))
+    val runs = cases.map { case (name, corpus, t, perPosting, minBudget) =>
       val ref = containmentReference(corpus, t, perPosting = perPosting,
-        minBudget = minBudget, fallback = fb)
+        minBudget = minBudget)
       val out = Dedup.containmentVerifiedPairs(corpus, "text", "doc_id", n = 3, w = 8,
           threshold = t, candidateBudgetPerPosting = perPosting,
-          minCandidateBudget = minBudget, keepRarestFallback = fb)
+          minCandidateBudget = minBudget)
       val got = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
       assert(got.size == got.distinct.size, name)
       assert(got.toSet == ref.map { case ((a, b), (c, _)) => (a, b, c) }.toSet,
@@ -700,13 +649,14 @@ class TextSimSpec extends AnyFunSuite {
     assert(fetched("long pages") && !fetched("closed vocabulary"), fetched)
     assert(refs("long pages").nonEmpty && refs("closed vocabulary").nonEmpty)
     // the fixture exercises what it claims: pairs found in several buckets,
-    // the boundary pair kept, the tight cap losing pairs the rescue restores
+    // the boundary pair kept, the tight cap losing pairs, and a doc whose
+    // every fingerprint is capped (the identical docs) yielding none
     assert(refs("t=0.8").values.exists(_._2 > 1))
     assert(refs("t=0.8").get((200L, 201L)).map(_._1).contains(0.8))
     val (loose, tight) = (refs("t=0.5").keySet, refs("budget-bound").keySet)
     assert(tight.subsetOf(loose) && tight.size < loose.size)
-    assert(tight.subsetOf(refs("budget-bound + fallback").keySet) &&
-      refs("budget-bound + fallback").size > tight.size)
+    val identPairs = for (a <- 400L to 411L; b <- 400L to 411L if a != b) yield (a, b)
+    assert(identPairs.forall(loose.contains) && !identPairs.exists(tight.contains))
   }
 
   test("containment prefix filtering is recall-complete vs brute force (random corpora)") {
@@ -963,28 +913,6 @@ class TextSimSpec extends AnyFunSuite {
     val before = Seq("p", "d", "g").map(store.currentVersion)
     Dedup.seedGramIndex(replay, "p", "d", "g", batch, "text", "doc_id", appendOnly = true)
     assert(Seq("p", "d", "g").map(store.currentVersion) == before)
-  }
-
-  test("keepRarestFallback floor admission is bounded: one key at the " +
-      "floor df when even the floor overflows the budget") {
-    // two 40-doc identical groups + 100 distinct docs: every group fp has
-    // df 40 (fully capped under the tiny budget), floor df² = 1600 >
-    // budget → the floor admits max(1, budget/df²) = 1 key — exactly ONE
-    // group's pairs come back (the unbounded pre-r14 floor admitted both)
-    val distinct = (1L to 100L).map(i =>
-      (i, (1 to 20).map(j => s"t${i}_$j").mkString(" ")))
-    val groupA = (200L until 240L).map(i =>
-      (i, (1 to 20).map(j => "alpha" + j).mkString(" ")))
-    val groupB = (300L until 340L).map(i =>
-      (i, (1 to 20).map(j => "beta" + j).mkString(" ")))
-    val df = (distinct ++ groupA ++ groupB).toDF("doc_id", "text")
-    val pairs = Dedup.containmentVerifiedPairs(df, "text", "doc_id",
-      threshold = 0.8, candidateBudgetPerPosting = 1,
-      minCandidateBudget = 1, keepRarestFallback = true)
-    // one group of 40 identical docs → 40·39 ordered pairs; both groups
-    // would be 3120 (the bound under test), none would be 0 (the floor's
-    // always-post contract under test)
-    assert(pairs.count() == 40L * 39L)
   }
 
   test("simhashIncremental: within-radius batch docs flagged against the " +
