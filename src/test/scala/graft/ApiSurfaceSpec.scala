@@ -15,12 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * own name. `override`s and `main` are exempt, and so is [[exempt]]. */
 class ApiSurfaceSpec extends AnyFunSuite {
 
-  /** Public defs kept with neither a use nor a COVERAGE.md row, each with
-    * its reason. */
+  /** Public defs kept with neither a use nor a COVERAGE.md row → why. */
   private val exempt = Map(
-    // the AQE-aware exchange counter of the plan-shape specs (CLAUDE.md
-    // invariant 8); the per-unit run record is to call it from src/main
-    "countExchanges" -> "plan-shape counter shared by the specs")
+    "countExchanges" -> ("the AQE-aware exchange counter of the plan-shape " +
+      "specs (CLAUDE.md invariant 8); the per-unit run record is to call it"))
 
   test("every public member def is used in src/main or named in COVERAGE.md") {
     val root = Paths.get("src/main/scala")
