@@ -44,9 +44,10 @@ object Bench {
     // measured r11: q_dsir_score under count() skipped the entire scoring
     // join and anchored at 0.5 s while the real scorer cost ~8 s, so the
     // "warm sibling" 2×-contract comparisons were comparing against a
-    // query that never ran its operator.
-    def materialize(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
+    // query that never ran its operator. The entry is built inside its
+    // scope, so every pin it makes is released when the run ends.
+    def materialize(df: => org.apache.spark.sql.DataFrame): Long =
+      graft.core.Pins.scoped(df.queryExecution.toRdd.count())
 
     // Optional entry filter (comma-separated regexes) for targeted runs —
     // e.g. a scaling check on a handful of new entries shouldn't pay a

@@ -1323,7 +1323,7 @@ object Oracles {
 
     // DSIR importance score replay: same tokenizer as the dedup family,
     // unigrams++bigrams with multiplicity, the portable md5-prefix bucket
-    // gate (Dsir.bucketOf), densified add-1-smoothed bucket counts, and
+    // gate (functions.DsirBuckets), densified add-1-smoothed bucket counts, and
     // the integer decimal-digit-count decade weights — per-doc sums are
     // exact BIGINT so the hash matches bit-for-bit.
     "q_dsir_score" ->

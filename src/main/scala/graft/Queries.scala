@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Dates, Exprs, TextNorm, Types}
+import graft.core.{Dates, Exprs, Pins, TextNorm, Types}
 import graft.ops.{Aggregations, Filters, Graph, Joins, Scd, Selection, Windows}
 import graft.text.{Dedup, TextStats}
 import graft.sim.{Cluster, Similarity}
@@ -820,12 +820,12 @@ object Queries {
     Dedup.recallReportFromPairs(
         stagedEntry(s, "exactContain09|" + dir) {
           Dedup.containmentPairs(corpus, "text", "doc_id",
-            n = 3, threshold = 0.9).localCheckpoint()
+            n = 3, threshold = 0.9)
         },
         Dedup.containmentVerifiedPairsFromPrepped(prepped, threshold = 0.9),
         stagedEntry(s, "exactJaccard09|" + dir) {
           Dedup.ngramJaccardPairs(corpus, "text", "doc_id",
-            n = 3, threshold = 0.9).localCheckpoint()
+            n = 3, threshold = 0.9)
         },
         Dedup.minhashVerifiedPairsFromPrepped(prepped, numHashes = 64,
           bands = 16, threshold = 0.9))
@@ -875,20 +875,21 @@ object Queries {
       _ => new java.util.concurrent.ConcurrentHashMap[String, StagedHolder]())
     val holder = perSession.computeIfAbsent(key, _ => new StagedHolder)
     holder.synchronized {
-      if (holder.df == null) holder.df = compute
+      // the one raw pin: a memo outlives the scope of the entry that built
+      // it, and Pins.pin would release it when that entry ends
+      if (holder.df == null) holder.df = compute.localCheckpoint()
       holder.df
     }
   }
   private def stagedNearDupPairs(s: SparkSession, dir: String): DataFrame =
     stagedEntry(s, "pairs|" + dir) {
       Dedup.ngramJaccardPairs(docsWithNearDups(s, dir), "text", "doc_id",
-        n = 3, threshold = 0.4).localCheckpoint()
+        n = 3, threshold = 0.4)
     }
   private def stagedClusters(s: SparkSession, dir: String): DataFrame = {
     val pairs = stagedNearDupPairs(s, dir) // hoisted dependency (see above)
     stagedEntry(s, "clusters|" + dir) {
       Dedup.duplicateClusters(pairs.where(col("jaccard") >= 0.5))
-        .localCheckpoint()
     }
   }
 
@@ -1143,10 +1144,9 @@ object Queries {
     // scorer runs once, not three times (invariant 7's one-materialization
     // rule; measured 4.6 s → ~1 s at sf0.1). Same call at 100 TB: the
     // checkpoint is linear in docs × 4 scalars vs re-hashing every gram.
-    val scored = graft.text.Dsir.withImportanceScore(docs, w, "text",
+    val scored = Pins.pin(graft.text.Dsir.withImportanceScore(docs, w, "text",
         "doc_id", buckets = 1024)
-      .select("doc_id", "source", "n_grams", "dsir_score")
-      .localCheckpoint()
+      .select("doc_id", "source", "n_grams", "dsir_score"))
     Filters.topFractionByGroupExact(scored, "source", "dsir_score",
         fraction = 0.1, idCol = "doc_id")
       .select("doc_id", "source", "n_grams", "dsir_score")
@@ -1175,10 +1175,9 @@ object Queries {
     // materialize the scored projection once — rankBucketsExact scans its
     // input three times (histogram + whole-tile + straddle); same
     // invariant-7 rationale as qDsirResample (measured 4.6 s → ~1 s)
-    val scored = graft.text.Dsir.withImportanceScore(docs, w, "text",
+    val scored = Pins.pin(graft.text.Dsir.withImportanceScore(docs, w, "text",
         "doc_id", buckets = 1024)
-      .select("doc_id", "lang", "dsir_score")
-      .localCheckpoint()
+      .select("doc_id", "lang", "dsir_score"))
     Filters.rankBucketsExact(scored, "lang", "dsir_score", nBuckets = 3,
         idCol = "doc_id", bucketCol = "tier")
       .select("doc_id", "lang", "dsir_score", "tier")
@@ -2082,14 +2081,13 @@ object Queries {
     * Every stage is string/md5/integer exact, so the oracle chains the
     * four stages' replays verbatim. */
   def qPipeSftPrep(s: SparkSession, dir: String): DataFrame = {
-    val scrubbed = graft.text.Repetition.scrubAdjacentRepeats(
+    // one scrub materialization feeds BOTH the gate subtree and the
+    // payload join — without it each side recomputes the HOF scrub
+    // (curation pipelines persist their cleaned corpus between stages;
+    // this is that stage boundary, measured 3.8 s → 2.2 s at sf0.1)
+    val scrubbed = Pins.pin(graft.text.Repetition.scrubAdjacentRepeats(
         t(s, dir, "documents").select("doc_id", "text"), "text", "doc_id")
-      .select(col("doc_id"), col("text_scrubbed").as("text"))
-      // one scrub materialization feeds BOTH the gate subtree and the
-      // payload join — without it each side recomputes the HOF scrub
-      // (curation pipelines persist their cleaned corpus between stages;
-      // this is that stage boundary, measured 3.8 s → 2.2 s at sf0.1)
-      .localCheckpoint()
+      .select(col("doc_id"), col("text_scrubbed").as("text")))
     val gateIds = TextStats.gopherRules(scrubbed, "text", "doc_id",
         minWords = 20, maxWords = 100000)
       .where(col("r_word_count") && col("r_mean_word_len") &&
@@ -2842,8 +2840,8 @@ object Queries {
     // pass-through) — unpinned, the windowed build ran per subtree. In
     // production dim is a STORED table (re-read, not re-built), so the
     // pin models the real merge input; same rows either way.
-    val dim = Scd.scd2Build(log.where(col("ts") < cutoff), "user_id", "ts",
-      Seq("event_type", "tier"), Seq("event_id")).localCheckpoint()
+    val dim = Pins.pin(Scd.scd2Build(log.where(col("ts") < cutoff), "user_id", "ts",
+      Seq("event_type", "tier"), Seq("event_id")))
     scdShape(Scd.scd2Merge(dim, log.where(col("ts") >= cutoff), "user_id",
         "ts", Seq("event_type", "tier"), Seq("event_id")))
       .orderBy("user_id", "version")

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
 import graft.sim.{Cluster, IvfIndex, Similarity}
 import graft.store.TableStore
 
@@ -153,9 +154,8 @@ object IvfDriftMeasure {
     val work = Files.createTempDirectory("graft_ivf_drift").toString
     val store = new TableStore(spark, s"$work/store")
 
-    val base = spark.read.parquet(s"$srcDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      .localCheckpoint()
+    val base = Pins.pin(spark.read.parquet(s"$srcDir/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding")))
     val model = Cluster.kmeans(base, "vec_id", "embedding", k)
     var cents: Seq[Seq[Long]] =
       model.centroids.map(_.map(x => math.round(x * 1e6)).toVector).toVector
@@ -163,11 +163,10 @@ object IvfDriftMeasure {
 
     val rows = new scala.collection.mutable.ArrayBuffer[String]
     def measure(tag: String, step: Int, queriesFrom: DataFrame): Unit = {
-      val queries = queriesFrom.orderBy("vec_id").limit(50)
+      val queries = Pins.pin(queriesFrom.orderBy("vec_id").limit(50)
         .withColumn("vec_id", col("vec_id") + 9000000L)
         .withColumn("embedding",
-          transform(col("embedding"), x => x + lit(0.0005)))
-        .localCheckpoint()
+          transform(col("embedding"), x => x + lit(0.0005))))
       val rec = recallAtK(store, "p", queries, cents, 10, nProbe)
       val (dr, share) = weightedDrift(store, "p", cents)
       val n = store.read("p").count()
@@ -180,8 +179,8 @@ object IvfDriftMeasure {
 
     var newest = base
     (1 to steps).foreach { g =>
-      newest = (if (mode == "newblob") newBlob(base, g, cents)
-                else jitter(base, g)).localCheckpoint()
+      newest = Pins.pin(if (mode == "newblob") newBlob(base, g, cents)
+                        else jitter(base, g))
       IvfIndex.assignIncremental(store, "p", newest, "vec_id", "embedding", cents)
       measure("frozen", g, newest)
     }

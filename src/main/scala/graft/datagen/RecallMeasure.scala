@@ -3,6 +3,7 @@ package graft.datagen
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
 import graft.text.Dedup
 
 /** Corpus-scale EMPIRICAL recall measurement for the two banded production
@@ -90,29 +91,28 @@ object RecallMeasure {
       .withColumn("doc_id", col("doc_id") + 3000000L)
       .withColumn("text", concat_ws(" ",
         concat(slice(toks, 1, 8), slice(toks, 17, 8), slice(toks, 33, 8))))
-    val aug = docs.unionByName(contiguous).unionByName(scattered)
-      .localCheckpoint()
+    val aug = Pins.pin(docs.unionByName(contiguous).unionByName(scattered))
 
     // ---- minhash banding recall per 0.1-jaccard band (threshold 0.5)
-    val exactJ = Dedup.ngramJaccardPairs(aug, "text", "doc_id",
-      n = 3, threshold = 0.5, maxCandidatesPerPosting = 0).localCheckpoint()
-    val bandedJ = Dedup.minhashVerifiedPairs(aug, "text", "doc_id",
+    val exactJ = Pins.pin(Dedup.ngramJaccardPairs(aug, "text", "doc_id",
+      n = 3, threshold = 0.5, maxCandidatesPerPosting = 0))
+    val bandedJ = Pins.pin(Dedup.minhashVerifiedPairs(aug, "text", "doc_id",
       numHashes = 64, bands = bands, n = 3, threshold = 0.5)
-      .select("id_a", "id_b").localCheckpoint()
+      .select("id_a", "id_b"))
     val jRows = bandTally(exactJ, bandedJ,
       e => e.withColumn("__cls",
         format_string("j_%03d", expr("(cast(jaccard*10000 as bigint) div 1000) * 100"))))
       .collect()
 
     // ---- winnowed containment recall per pair class (threshold 0.8)
-    val exactC = Dedup.containmentPairs(aug, "text", "doc_id",
-      n = 3, threshold = 0.8, maxCandidatesPerPosting = 0).localCheckpoint()
+    val exactC = Pins.pin(Dedup.containmentPairs(aug, "text", "doc_id",
+      n = 3, threshold = 0.8, maxCandidatesPerPosting = 0))
     val t0 = System.nanoTime()
-    val bandedC = Dedup.containmentVerifiedPairs(aug, "text", "doc_id",
+    val bandedC = Pins.pin(Dedup.containmentVerifiedPairs(aug, "text", "doc_id",
       n = 3, w = winnowW, threshold = 0.8, candidateBudgetPerPosting = budget)
-      .select("id_a", "id_b").localCheckpoint()
+      .select("id_a", "id_b"))
     // the knob's COST side: wall-clock of the banded generator alone
-    // (localCheckpoint materializes it), so the w table prices
+    // (the pin materializes it), so the w table prices
     // recall AND the ~2/(w+1)-density posting volume it buys it with
     val bandedMs = (System.nanoTime() - t0) / 1000000L
     val cRows = bandTally(exactC, bandedC,
@@ -137,18 +137,16 @@ object RecallMeasure {
       Dedup.seedGramIndex(store, "p", "d", "g", docs, "text", "doc_id")
       Dedup.seedWinnowIndex(store, "fp", "fd", "g2", docs, "text", "doc_id",
         w = winnowW)
-      val batch = contiguous.unionByName(scattered).localCheckpoint()
-      val exactInc = Dedup.containmentIncremental(store, "p", "d", "g",
+      val batch = Pins.pin(contiguous.unionByName(scattered))
+      val exactInc = Pins.pin(Dedup.containmentIncremental(store, "p", "d", "g",
           batch, "text", "doc_id", threshold = 0.8,
           maxProbeCandidatesPerPosting = 0)
-        .select(col("probe_id").as("id_a"), col("id").as("id_b"))
-        .localCheckpoint()
+        .select(col("probe_id").as("id_a"), col("id").as("id_b")))
       val t1 = System.nanoTime()
-      val bandedInc = Dedup.containmentIncrementalBanded(store, "fp", "fd",
+      val bandedInc = Pins.pin(Dedup.containmentIncrementalBanded(store, "fp", "fd",
           "g2", batch, "text", "doc_id", w = winnowW, threshold = 0.8,
           candidateBudgetPerPosting = budget)
-        .select(col("probe_id").as("id_a"), col("id").as("id_b"))
-        .localCheckpoint()
+        .select(col("probe_id").as("id_a"), col("id").as("id_b")))
       val incMs = (System.nanoTime() - t1) / 1000000L
       val rows = bandTally(exactInc, bandedInc,
         e => e.withColumn("__cls",

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
 import graft.store.TableStore
 import graft.streaming.Streaming
 
@@ -131,8 +132,8 @@ object StreamAnchor {
           (floor(col("value") * 10 + 0.5) / 10).as("v"))
       val evDir = s"$work/events"
       stage(events, "event_id", batches, evDir)
-      val refCounts = events.groupBy(col("v").as("value"))
-        .agg(count(lit(1)).as("ref_count")).localCheckpoint()
+      val refCounts = Pins.pin(events.groupBy(col("v").as("value"))
+        .agg(count(lit(1)).as("ref_count")))
       val qk = Streaming.incrementalKsGate(
         spark.readStream.schema(events.schema)
           .option("maxFilesPerTrigger", 1).parquet(evDir),

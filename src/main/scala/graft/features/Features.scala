@@ -3,6 +3,7 @@ package graft.features
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Pins
 
 /** Feature-engineering math the reference's banking pipelines feed into
   * downstream credit-risk models: column scaling, smoothed target encoding,
@@ -609,13 +610,12 @@ object Features {
                 nBuckets: Int = 5): DataFrame = {
     // one materialization feeds three independent rank subtrees + the
     // final join-back — never recompute the fact-table aggregate 4×
-    val per = orders.groupBy(col(custCol).as("customer"))
+    val per = Pins.pin(orders.groupBy(col(custCol).as("customer"))
       .agg(
         datediff(lit(asOfDate).cast("date"), max(col(dateCol)))
           .cast("long").as("recency_days"),
         count(lit(1)).as("frequency"),
-        sum(dec(col(amountCol))).as("__mon"))
-      .localCheckpoint()
+        sum(dec(col(amountCol))).as("__mon")))
     val r = ntileScore(per, "customer",
       Seq(col("recency_days").asc, col("customer").asc), nBuckets, "r_score")
     val f = ntileScore(per, "customer",
@@ -679,7 +679,7 @@ object Features {
         expr(s"CAST(CAST($valueCol AS decimal(18,2)) * 100 AS $d0)").as("__v"))
       .where(col("__v").isNotNull)
       .groupBy("__v").agg(count(lit(1)).as("__c"))
-    val ranged = graft.ops.Scale.orderedBuckets(v.localCheckpoint(), "__v")
+    val ranged = graft.ops.Scale.orderedBuckets(Pins.pin(v), "__v")
     val cum = cumulativeCounts(ranged)
     def q(p: Int): Column =
       min(when(expr(s"__cum >= ($p * __c_total + 99) div 100"), col("__v")))
@@ -712,11 +712,10 @@ object Features {
     * passes share the [[ksStatistic]] topology contract. */
   def madStats(df: DataFrame, valueCol: String): DataFrame = {
     val d0 = "decimal(38,0)"
-    val counts = df.select(
+    val counts = Pins.pin(df.select(
         expr(s"CAST(CAST($valueCol AS decimal(18,2)) * 100 AS $d0)").as("__v"))
       .where(col("__v").isNotNull)
-      .groupBy("__v").agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
+      .groupBy("__v").agg(count(lit(1)).as("__c")))
     val med1 = broadcast(medianOfCounts(counts)
       .select(col("n"), col("med").as("median_cents")))
     // pinned (r16): medianOfCounts' eager quantile-boundary pass plus its
@@ -724,10 +723,9 @@ object Features {
     // read re-ran the WHOLE first-median topology buried in med1
     // (measured: q_feat_mad 3.1 -> 4.5 s when the r16 quantile bounds
     // landed without this pin; 2.3 s with it)
-    val devs = counts.crossJoin(med1)
+    val devs = Pins.pin(counts.crossJoin(med1)
       .groupBy(expr("abs(__v - median_cents)").as("__v"))
-      .agg(sum("__c").as("__c"))
-      .localCheckpoint()
+      .agg(sum("__c").as("__c")))
     medianOfCounts(devs).select(col("med").as("mad_cents"))
       .crossJoin(med1)
       .select(col("n"), col("median_cents"), col("mad_cents"))
@@ -857,7 +855,7 @@ object Features {
   private def cdfFromCounts(v: DataFrame): DataFrame = {
     val local = Window.partitionBy("__part").orderBy("__v")
       .rowsBetween(Window.unboundedPreceding, 0)
-    graft.ops.Scale.sliceOffsets(graft.ops.Scale.orderedBuckets(v.localCheckpoint(), "__v"),
+    graft.ops.Scale.sliceOffsets(graft.ops.Scale.orderedBuckets(Pins.pin(v), "__v"),
         Seq("__ca" -> sum("__ca"), "__cb" -> sum("__cb")))
       .withColumnRenamed("__ca_total", "__na")
       .withColumnRenamed("__cb_total", "__nb")

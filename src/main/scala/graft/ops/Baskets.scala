@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Pins
 
 /** Market-basket association rules over order line items (extension
   * beyond the reference surface — the co-occurrence analysis every
@@ -85,7 +86,7 @@ object Baskets {
     * broadcasts. Nothing is ever all-pairs over the ITEM universe —
     * only pairs that co-occur in a surviving basket exist. */
   def pairRules(memberships: DataFrame, minPairCount: Long = 2L): DataFrame = {
-    val m = memberships.select(col("basket"), col("item")).localCheckpoint()
+    val m = Pins.pin(memberships.select(col("basket"), col("item")))
     val nBaskets = m.select(countDistinct("basket").as("n_baskets"))
     val itemCounts = m.groupBy(col("item")).agg(count(lit(1)).as("n_item"))
     val pairCounts = m.as("a")

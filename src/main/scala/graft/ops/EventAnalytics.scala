@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Pins
 
 /** Ordered-event analytics over an event stream: funnel step completion
   * and cohort retention — the two rollups every behavioral warehouse
@@ -111,11 +112,10 @@ object EventAnalytics {
     * once. */
   def seasonalNaiveBacktest(events: DataFrame, seriesCol: String,
                             timeCol: String, seasonDays: Int = 7): DataFrame = {
-    val daily = events
+    val daily = Pins.pin(events
       .groupBy(col(seriesCol).as("series"),
         to_date(col(timeCol)).as("day"))
-      .agg(count(lit(1)).as("actual"))
-      .localCheckpoint() // feeds both sides of the shifted self-join
+      .agg(count(lit(1)).as("actual"))) // feeds both sides of the shifted self-join
     val fc = daily.select(col("series"),
       date_add(col("day"), seasonDays).as("day"),
       col("actual").as("forecast"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Pins
 
 /** Graph centrality over relation-derived edge lists (extension beyond
   * the reference surface; sibling of the label-propagation connected
@@ -43,7 +44,7 @@ object Graph {
     * graph symmetric so rank mass actually circulates (a one-directional
     * bipartite graph reaches its fixed point after a single step). */
   def bidirectedTradeEdgesTagged(orders: DataFrame, lineitem: DataFrame): DataFrame = {
-    val e = tradeEdgesTagged(orders, lineitem).localCheckpoint()
+    val e = Pins.pin(tradeEdgesTagged(orders, lineitem))
     e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
   }
 
@@ -89,15 +90,14 @@ object Graph {
                      baseMicros: Long = 1000000L): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     require(dampNum >= 0 && dampNum <= dampDen, "damping must be in [0,1]")
-    val e = edges.select(col("src"), col("dst")).localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
+    val e = Pins.pin(edges.select(col("src"), col("dst")))
+    val nodes = Pins.pin(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
+      .distinct())
     // Out-degree is loop-invariant: bake it onto the edge list ONCE so
     // every round is a single ranks⋈edges join instead of two.
-    val degEdges = e
-      .join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), Seq("src"))
-      .localCheckpoint()
+    val degEdges = Pins.pin(e
+      .join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), Seq("src")))
     val teleport = baseMicros * (dampDen - dampNum) / dampDen
     var ranks = nodes.withColumn("r", lit(baseMicros))
     var i = 0
@@ -123,7 +123,7 @@ object Graph {
       // not exponentially, so the invariant-7 truncation only needs to
       // fire periodically; eager per-round materialization would cost a
       // job per round for nothing.
-      if (i % 5 == 0 && i < iters) ranks = ranks.localCheckpoint()
+      if (i % 5 == 0 && i < iters) ranks = Pins.pin(ranks)
     }
     ranks.withColumnRenamed("r", "rank_micros")
   }
@@ -146,7 +146,7 @@ object Graph {
     * once (from its lowest-rank corner) and credited to all three
     * corners via a map-side-combinable groupBy. No driver state. */
   def triangleStats(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("u"), col("v")).localCheckpoint()
+    val e = Pins.pin(edges.select(col("u"), col("v")))
     val deg = e.select(col("u").as("node"))
       .unionAll(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -158,11 +158,10 @@ object Graph {
     // oriented edge src→dst with rank(src) < rank(dst); carry dst's
     // degree so the wedge join can order out-neighbors by the SAME
     // total (deg, id) rank without re-joining the degree table
-    val oriented = withDeg.select(
+    val oriented = Pins.pin(withDeg.select(
         when(uFirst, col("u")).otherwise(col("v")).as("src"),
         when(uFirst, col("v")).otherwise(col("u")).as("dst"),
-        when(uFirst, col("dv")).otherwise(col("du")).as("ddst"))
-      .localCheckpoint()
+        when(uFirst, col("dv")).otherwise(col("du")).as("ddst")))
     val wedges = oriented.select(col("src"), col("dst").as("x"), col("ddst").as("dx"))
       .join(oriented.select(col("src"), col("dst").as("y"), col("ddst").as("dy")),
         Seq("src"))

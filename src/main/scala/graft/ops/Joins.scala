@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Pins
 
 /** Join operator kit.
   *
@@ -165,10 +166,10 @@ object Joins {
     val nParts = if (partitions > 0) partitions
       else left.sparkSession.sessionState.conf.numShufflePartitions
     val orderCols = keys.map(col) ++ Seq(col("__t"), col("__src"), col("__payload"))
-    val ranged = rTagged.unionByName(lTagged)
+    val sliced = rTagged.unionByName(lTagged)
       .repartitionByRange(nParts, orderCols: _*)
       .withColumn("__slice", spark_partition_id())
-      .localCheckpoint()
+    val ranged = Pins.pin(sliced)
     val localW = Window
       .partitionBy((keys.map(col) :+ col("__slice")): _*)
       .orderBy(col("__t"), col("__src"), col("__payload"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Pins
 
 /** Scale utilities: skew-salted joins, bucketed co-located joins, and
   * partition-layout helpers — the knobs a 1000-executor / 100 TB deployment
@@ -165,9 +166,8 @@ object Scale {
   def rangeSlices(df: DataFrame, order: Seq[Column], sorted: Boolean = false): DataFrame = {
     val ranged = df.repartitionByRange(
       df.sparkSession.sessionState.conf.numShufflePartitions, order: _*)
-    (if (sorted) ranged.sortWithinPartitions(order: _*) else ranged)
-      .withColumn("__part", spark_partition_id())
-      .localCheckpoint()
+    Pins.pin((if (sorted) ranged.sortWithinPartitions(order: _*) else ranged)
+      .withColumn("__part", spark_partition_id()))
   }
 
   /** The offsets phase of the distributed prefix sum over a sliced frame

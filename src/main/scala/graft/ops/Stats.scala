@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Pins
 import graft.functions.GraftFunctions
 
 /** Experiment analysis and resampling statistics (extension beyond the
@@ -34,11 +35,10 @@ object Stats {
     // k-variant-row aggregate, localCheckpoint'ed: it feeds BOTH the
     // output rows and the control filter — without the pin the whole
     // unit-frame aggregation runs twice
-    val per = units.groupBy(col(variantCol).as("variant"))
+    val per = Pins.pin(units.groupBy(col(variantCol).as("variant"))
       .agg(count(lit(1)).as("n_units"),
         count(when(col(convCol).cast("boolean"), 1)).as("n_conv"))
-      .withColumn("rate_micros", expr("(n_conv * 1000000L) div n_units"))
-      .localCheckpoint()
+      .withColumn("rate_micros", expr("(n_conv * 1000000L) div n_units")))
     val ctrl = broadcast(per.where(col("variant") === controlVariant)
       .select(col("n_units").as("__nc"), col("n_conv").as("__cc")))
     val pooled = (col("n_conv") + col("__cc")).cast("double") /
@@ -265,12 +265,11 @@ object Stats {
       xc.as("__x"), yc.as("__y"))
     // k variant rows; feeds the output rows, the global-moment rollup,
     // and the control filter — pin it once (CLAUDE.md invariant 7)
-    val per = base.groupBy("variant")
+    val per = Pins.pin(base.groupBy("variant")
       .agg(count(lit(1)).as("n_units"),
         sum("__x").as("__sx"), sum("__y").as("__sy"),
         sum(expr("__x * __y")).as("__sxy"),
-        sum(expr("__x * __x")).as("__sxx"))
-      .localCheckpoint()
+        sum(expr("__x * __x")).as("__sxx")))
     val glob = broadcast(per.agg(
         sum("n_units").cast(d0).as("__n"), sum("__sx").as("__gx"),
         sum("__sy").as("__gy"), sum("__sxy").as("__gxy"),
@@ -281,7 +280,7 @@ object Stats {
         " END").cast("long"))
       .withColumn("__gmx", expr(s"(__gx * 10000) div __n"))
       .select("__n", "__gmx", "theta_micros"))
-    val adj = per.crossJoin(glob)
+    val adj = Pins.pin(per.crossJoin(glob)
       // cent sums are non-negative: plain div below; the mean DIFFERENCE
       // and the theta product are signed -> signedDiv
       .withColumn("mean_micros",
@@ -291,8 +290,7 @@ object Stats {
       .withColumn("adj_mean_micros", expr("CASE WHEN theta_micros IS NULL " +
         "THEN mean_micros ELSE mean_micros - " +
         signedDiv(s"CAST(theta_micros AS $d0) * __dx", "1000000") +
-        " END").cast("long"))
-      .localCheckpoint()
+        " END").cast("long")))
     val ctrl = broadcast(adj.where(col("variant") === controlVariant)
       .select(col("adj_mean_micros").as("__ctrl_adj")))
     adj.crossJoin(ctrl)
@@ -329,13 +327,12 @@ object Stats {
       sortExprs, sorted = true)
     val local = Window.partitionBy("__part").orderBy(sortExprs: _*)
       .rowsBetween(Window.unboundedPreceding, 0)
-    val ranked = Scale.sliceOffsets(sliced, Seq("__rows" -> count(lit(1))))
+    val ranked = Pins.pin(Scale.sliceOffsets(sliced, Seq("__rows" -> count(lit(1))))
       .withColumnRenamed("__rows_total", "__m")
       .withColumn("__rk", sum(lit(1L)).over(local) + col("__rows_before"))
       .withColumn("__term", least(lit(1000000L),
         expr(s"(CAST(__p AS $d0) * __m) div CAST(__rk AS $d0)")
-          .cast("long")))
-      .localCheckpoint()
+          .cast("long"))))
     // suffix min of __term: partition-local reverse min + broadcast min
     // of every LATER partition's total min
     val partMins = broadcast(ranked.groupBy("__part")
@@ -474,7 +471,7 @@ object Stats {
       .groupBy("__v").agg(count(lit(1)).cast(d0).as("__c"))
     val local = Window.partitionBy("__part").orderBy("__v")
       .rowsBetween(Window.unboundedPreceding, 0)
-    Scale.sliceOffsets(Scale.orderedBuckets(v.localCheckpoint(), "__v"),
+    Scale.sliceOffsets(Scale.orderedBuckets(Pins.pin(v), "__v"),
         Seq("__c" -> sum("__c")))
       .withColumn("__prev", sum("__c").over(local) + col("__c_before")
         - col("__c"))
@@ -512,7 +509,7 @@ object Stats {
     val wealth = expr("__v * __c")
     val local = Window.partitionBy("__part").orderBy("__v")
       .rowsBetween(Window.unboundedPreceding, 0)
-    val cum = Scale.sliceOffsets(Scale.orderedBuckets(v.localCheckpoint(), "__v"),
+    val cum = Scale.sliceOffsets(Scale.orderedBuckets(Pins.pin(v), "__v"),
         Seq("__c" -> sum("__c"), "__w" -> sum(wealth)))
       .withColumn("__cum", sum("__c").over(local) + col("__c_before"))
       .withColumn("__cumw", sum(wealth).over(local) + col("__w_before"))

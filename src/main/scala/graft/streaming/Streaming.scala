@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
+import graft.core.Pins
 import graft.store.TableStore
 
 /** Structured Streaming skin over the engine. The reference is pure batch
@@ -197,21 +198,22 @@ object Streaming {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tx = store.txn(checkpoint, batchId)
-        if (!tx.committed(countsTable)) {
-          val bc = batch.groupBy(col(valueCol).cast("double").as("value"))
-            .agg(count(lit(1)).as("cur_count"))
-          tx.overwrite(countsTable,
-            if (!tx.exists(countsTable)) bc
-            else tx.read(countsTable).unionByName(bc)
-              .groupBy("value").agg(sum("cur_count").as("cur_count")))
+      .foreachBatch { (batch: DataFrame, batchId: Long) => Pins.scoped {
+          val tx = store.txn(checkpoint, batchId)
+          if (!tx.committed(countsTable)) {
+            val bc = batch.groupBy(col(valueCol).cast("double").as("value"))
+              .agg(count(lit(1)).as("cur_count"))
+            tx.overwrite(countsTable,
+              if (!tx.exists(countsTable)) bc
+              else tx.read(countsTable).unionByName(bc)
+                .groupBy("value").agg(sum("cur_count").as("cur_count")))
+          }
+          val joined = refCounts
+            .select(col("value"), col("ref_count"))
+            .join(store.read(countsTable), Seq("value"), "full_outer")
+          onReport(graft.features.Features.ksFromCounts(
+            joined, "value", "ref_count", "cur_count"))
         }
-        val joined = refCounts
-          .select(col("value"), col("ref_count"))
-          .join(store.read(countsTable), Seq("value"), "full_outer")
-        onReport(graft.features.Features.ksFromCounts(
-          joined, "value", "ref_count", "cur_count"))
       }
       .start()
 
@@ -282,41 +284,42 @@ object Streaming {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tx = store.txn(checkpoint, batchId)
-        if (!tx.committed(cleanTable)) {
-          val kept =
-            if (!tx.exists(postingsTable)) batch
-            else {
-              val contained = (if (banded)
-                  graft.text.Dedup.containmentIncrementalBanded(
-                    tx, postingsTable, dfTable, gramsTable,
-                    batch, textCol, idCol, n = n, w = w,
-                    threshold = threshold, dfCap = dfCap)
-                else
-                  graft.text.Dedup.containmentIncremental(
-                    tx, postingsTable, dfTable, gramsTable,
-                    batch, textCol, idCol, n = n, threshold = threshold))
-                .select(col("probe_id").as(idCol)).distinct()
-              batch.join(contained, Seq(idCol), "left_anti")
+      .foreachBatch { (batch: DataFrame, batchId: Long) => Pins.scoped {
+          val tx = store.txn(checkpoint, batchId)
+          if (!tx.committed(cleanTable)) {
+            val kept =
+              if (!tx.exists(postingsTable)) batch
+              else {
+                val contained = (if (banded)
+                    graft.text.Dedup.containmentIncrementalBanded(
+                      tx, postingsTable, dfTable, gramsTable,
+                      batch, textCol, idCol, n = n, w = w,
+                      threshold = threshold, dfCap = dfCap)
+                  else
+                    graft.text.Dedup.containmentIncremental(
+                      tx, postingsTable, dfTable, gramsTable,
+                      batch, textCol, idCol, n = n, threshold = threshold))
+                  .select(col("probe_id").as(idCol)).distinct()
+                batch.join(contained, Seq(idCol), "left_anti")
+              }
+            // pin ONE evaluation: the index seed and the clean append must
+            // see the same survivor set (a nondeterministic-source batch
+            // re-planned twice could drift)
+            val keptP = Pins.pin(kept.select(col(idCol), col(textCol)))
+            if (!keptP.isEmpty) {
+              if (banded)
+                graft.text.Dedup.seedWinnowIndex(tx, postingsTable,
+                  dfTable, gramsTable, keptP, textCol, idCol, n = n, w = w,
+                  appendOnly = true)
+              else
+                graft.text.Dedup.seedGramIndex(tx, postingsTable, dfTable,
+                  gramsTable, keptP, textCol, idCol, n = n, appendOnly = true)
+              crashHook(cleanTable, batchId)
+              appendClean(tx, cleanTable, keptP, idCol)
             }
-          // pin ONE evaluation: the index seed and the clean append must
-          // see the same survivor set (a nondeterministic-source batch
-          // re-planned twice could drift)
-          val keptP = kept.select(col(idCol), col(textCol)).localCheckpoint()
-          if (!keptP.isEmpty) {
-            if (banded)
-              graft.text.Dedup.seedWinnowIndex(tx, postingsTable,
-                dfTable, gramsTable, keptP, textCol, idCol, n = n, w = w,
-                appendOnly = true)
-            else
-              graft.text.Dedup.seedGramIndex(tx, postingsTable, dfTable,
-                gramsTable, keptP, textCol, idCol, n = n, appendOnly = true)
-            crashHook(cleanTable, batchId)
-            appendClean(tx, cleanTable, keptP, idCol)
+            maybeCompact(store, compactEvery, batchId, batch,
+              Seq(postingsTable, gramsTable, cleanTable))
           }
-          maybeCompact(store, compactEvery, batchId, batch,
-            Seq(postingsTable, gramsTable, cleanTable))
         }
       }
       .start()
@@ -381,30 +384,31 @@ object Streaming {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tx = store.txn(checkpoint, batchId)
-        if (!tx.committed(cleanTable)) {
-          val flagged = method match {
-            case "minhash" =>
-              graft.text.Dedup.minhashIncremental(tx, sigTable, batch,
-                textCol, idCol, numHashes = numHashes, bands = bands,
-                threshold = threshold, appendOnly = true)
-            case "simhash" =>
-              graft.text.Dedup.simhashIncremental(tx, sigTable, batch,
-                textCol, idCol, maxHamming = maxHamming, appendOnly = true)
-            case _ =>
-              graft.sim.Cluster.embeddingIncremental(tx, sigTable, batch,
-                textCol, idCol, centroids, threshold = threshold,
-                appendOnly = true)
+      .foreachBatch { (batch: DataFrame, batchId: Long) => Pins.scoped {
+          val tx = store.txn(checkpoint, batchId)
+          if (!tx.committed(cleanTable)) {
+            val flagged = method match {
+              case "minhash" =>
+                graft.text.Dedup.minhashIncremental(tx, sigTable, batch,
+                  textCol, idCol, numHashes = numHashes, bands = bands,
+                  threshold = threshold, appendOnly = true)
+              case "simhash" =>
+                graft.text.Dedup.simhashIncremental(tx, sigTable, batch,
+                  textCol, idCol, maxHamming = maxHamming, appendOnly = true)
+              case _ =>
+                graft.sim.Cluster.embeddingIncremental(tx, sigTable, batch,
+                  textCol, idCol, centroids, threshold = threshold,
+                  appendOnly = true)
+            }
+            // flagged is pinned by the probe, which registered the kept rows
+            val kept = flagged.where(col("kept")).select(col(idCol), col(textCol))
+            if (!kept.isEmpty) {
+              crashHook(cleanTable, batchId)
+              appendClean(tx, cleanTable, kept, idCol)
+            }
+            maybeCompact(store, compactEvery, batchId, batch,
+              Seq(sigTable, cleanTable))
           }
-          // flagged is pinned by the probe, which registered the kept rows
-          val kept = flagged.where(col("kept")).select(col(idCol), col(textCol))
-          if (!kept.isEmpty) {
-            crashHook(cleanTable, batchId)
-            appendClean(tx, cleanTable, kept, idCol)
-          }
-          maybeCompact(store, compactEvery, batchId, batch,
-            Seq(sigTable, cleanTable))
         }
       }
       .start()

@@ -19,7 +19,7 @@ import graft.functions.GraftFunctions
   * det-rounded value per bucket, the `woeTable` 6-dp-ln precedent) — so
   * per-document scores are exact BIGINT sums that any engine reproduces
   * bit-for-bit. Tokens bucket through the same portable md5 gate as
-  * [[Dsir.bucketOf]].
+  * [[graft.functions.DsirBuckets]].
   *
   * Scale (100 TB): training is one map-only token stream → `buckets`-row
   * conditional aggregate (map-side combine; shuffle = B rows per

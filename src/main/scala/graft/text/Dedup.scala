@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Pins
 import graft.functions.GraftFunctions
 import graft.ops.Pairs
 
@@ -89,11 +90,11 @@ object Dedup {
   private[graft] def duplicateClustersWithRounds(
       pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIter: Int = 20): (DataFrame, Int) = {
-    val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
+    val edges = Pins.pin(pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .unionByName(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-      .distinct().localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint()
+      .distinct())
+    var labels = Pins.pin(edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -105,17 +106,15 @@ object Dedup {
           Map("id" -> "dst", "label" -> "nlabel")).hint("shuffle_hash"),
         Seq("dst"))
         .groupBy(col("src").as("id")).agg(min("nlabel").as("nmin"))
-      val stepped = labels.join(viaNeighbors, Seq("id"), "left")
-        .select(col("id"), least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-        .localCheckpoint()
+      val stepped = Pins.pin(labels.join(viaNeighbors, Seq("id"), "left")
+        .select(col("id"), least(col("label"), coalesce(col("nmin"), col("label"))).as("label")))
       // pointer jump: L(v) ← min(L(v), L(L(v))). Every label IS a node id
       // (mins of node ids over a label table covering all nodes), so the
       // left join matches except at self-labeled roots.
-      val next = stepped.join(
+      val next = Pins.pin(stepped.join(
           stepped.select(col("id").as("__pid"), col("label").as("__plabel")),
           col("label") === col("__pid"), "left")
-        .select(col("id"), least(col("label"), coalesce(col("__plabel"), col("label"))).as("label"))
-        .localCheckpoint()
+        .select(col("id"), least(col("label"), coalesce(col("__plabel"), col("label"))).as("label")))
       val changed = next.join(labels.withColumnRenamed("label", "old"), Seq("id"))
         .where(col("label") =!= col("old")).limit(1).count()
       labels = next
@@ -151,16 +150,6 @@ object Dedup {
       .partitionBy(col("cluster_id"))
       .orderBy(col(scoreCol).desc, col(idCol))
     labeled.withColumn("kept", row_number().over(w) === 1)
-  }
-
-  // ------------------------------------------------------------- shingles
-
-  /** Character k-shingles of normalized text, distinct per doc. */
-  def shingles(text: Column, k: Int = 5): Column = {
-    val norm = regexp_replace(lower(trim(text)), "\\s+", " ")
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(norm) - (k - 1), lit(1))),
-      i => norm.substr(i, lit(k))))
   }
 
   /** The graft latin tokenizer — the [[graft.functions.GraftTokens]]
@@ -335,7 +324,7 @@ object Dedup {
       (if (w > 0)
         Seq(GraftFunctions.winnowHashes(col("__tokens"), n, w).as("__fp"))
       else Nil)
-    toks.select(cols: _*).localCheckpoint()
+    Pins.pin(toks.select(cols: _*))
   }
 
   /** Contract check for the `...FromPrepped` entry points (r15 advice):
@@ -532,11 +521,11 @@ object Dedup {
                                     benchIdCol: String,
                                     numHashes: Int = 64, bands: Int = 16,
                                     threshold: Double = 0.5): DataFrame = {
-    val benchBands = banded(benchmark, benchTextCol, benchIdCol, numHashes,
-        bands, fanOut = false) // probe-suite-sized by contract — no fan-out
+    // sign the suite once; two broadcast consumers
+    val benchBands = Pins.pin(banded(benchmark, benchTextCol, benchIdCol,
+        numHashes, bands, fanOut = false) // probe-suite-sized by contract — no fan-out
       .select(col("band"), col("key"),
-        col("__id").cast("long").as("bench_id"), col("__sig").as("sig_b"))
-      .localCheckpoint() // sign the suite once; two broadcast consumers
+        col("__id").cast("long").as("bench_id"), col("__sig").as("sig_b")))
     val cand = store.read(bandTable)
       .join(broadcast(benchBands.select("band", "key", "bench_id")),
         Seq("band", "key"))
@@ -590,10 +579,9 @@ object Dedup {
     // ONE batch-sized materialization feeds both the store write and the
     // returned frame (CLAUDE.md invariant 7 shape — and the probe job
     // runs once, not once per downstream action)
-    val flagged = fp.join(broadcast(hits), Seq("__fp"), "left")
+    val flagged = Pins.pin(fp.join(broadcast(hits), Seq("__fp"), "left")
       .withColumn("dup_of_corpus", coalesce(col("__hit"), lit(false)))
-      .withColumn("kept", !col("dup_of_corpus") && row_number().over(w) === 1)
-      .localCheckpoint()
+      .withColumn("kept", !col("dup_of_corpus") && row_number().over(w) === 1))
     val survivors = flagged.where(col("kept"))
       .select(col("__fp").as("fp"), col(idCol).cast("long").as("first_id"))
     if (store.exists(sigTable)) store.upsert(sigTable, survivors, Seq("fp"))
@@ -717,7 +705,7 @@ object Dedup {
                                         idCol: String, nd: NearDupSig,
                                         buckets: Int,
                                         appendOnly: Boolean): DataFrame = {
-    val bsig = signed.localCheckpoint()
+    val bsig = Pins.pin(signed)
     val probeSide = Pairs.probeSide(bsig)
     def storedSchema(df: DataFrame, id: Column): DataFrame =
       df.select(id.as("id") +: nd.sig.map { case (c, s) => col(c).as(s) }: _*)
@@ -728,13 +716,13 @@ object Dedup {
           .distinct().withColumn("__cd", lit(true))
       else batchKeyed.select(col("new_id")).limit(0).withColumn("__cd", lit(true))
     val batchDupIds = nd.batchDups(batchKeyed).distinct().withColumn("__bd", lit(true))
-    val flagged = bsig
+    // one materialization for store write + caller (inv. 7)
+    val flagged = Pins.pin(bsig
       .withColumn("new_id", col(idCol).cast("long"))
       .join(probeSide(corpusDupIds), Seq("new_id"), "left")
       .join(probeSide(batchDupIds), Seq("new_id"), "left")
       .withColumn("dup_of_corpus", coalesce(col("__cd"), lit(false)))
-      .withColumn("kept", !col("dup_of_corpus") && coalesce(col("__bd"), lit(false)) === false)
-      .localCheckpoint() // one materialization for store write + caller (inv. 7)
+      .withColumn("kept", !col("dup_of_corpus") && coalesce(col("__bd"), lit(false)) === false))
     val kept = storedSchema(flagged.where(col("kept")), col("new_id"))
     if (!kept.isEmpty) putSeed(store, sigTable, kept, buckets, appendOnly)
     flagged.drop("new_id" +: "__cd" +: "__bd" +: nd.sig.map(_._1): _*)
@@ -1383,7 +1371,7 @@ object Dedup {
                                     gramsTable: String, prepped: DataFrame,
                                     keysCol: String,
                                     keyName: String, buckets: Int,
-                                    appendOnly: Boolean): Unit = {
+                                    appendOnly: Boolean): Unit = Pins.scoped {
     require(!(appendOnly && buckets > 0),
       "appendOnly seeding needs plain snapshots (buckets = 0): bucketed " +
         "layouts carry catalog file metadata that file appends would skew")
@@ -1395,8 +1383,9 @@ object Dedup {
     // callers fan the kernel out first (explicit-count repartition on id,
     // AQE-coalescing-exempt), so the one pass is also parallel. The pin is
     // batch-sized (the same rows the gram-array write persists) and lives
-    // only for this call — no cross-run state.
-    val mat = prepped.localCheckpoint()
+    // only for this call's scope: a per-trigger streaming seeder would
+    // otherwise accumulate batch-sized pinned blocks across a long ingest.
+    val mat = Pins.pin(prepped)
     val postings = mat
       .select(explode(col(keysCol)).as(keyName), col("id"), col("sz"))
     def put(table: String, rows: DataFrame, pks: Seq[String]): Unit =
@@ -1421,22 +1410,7 @@ object Dedup {
     else store.overwrite(dfTable, batchDf,
       primaryKeys = Seq(keyName), buckets = buckets)
     put(gramsTable, mat.select("id", "grams", "sz"), Seq("id"))
-    // nothing references the pin past this call — free its blocks NOW
-    // instead of waiting for the ContextCleaner (r15 advice: a per-trigger
-    // streaming seeder otherwise accumulates batch-sized pinned blocks
-    // across a long ingest run)
-    unpinCheckpoint(mat)
   }
-
-  /** Eagerly free a `localCheckpoint` pin whose frame is no longer
-    * referenced. `Dataset.unpersist` is a no-op for checkpoints (they
-    * live as RDD storage, not in the CacheManager), so unpersist the
-    * underlying checkpointed RDD directly. Callers MUST NOT execute the
-    * frame afterwards — the truncated lineage cannot recompute. */
-  private def unpinCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(false))
 
   /** INCREMENTAL containment probe: flag each document of a NEW batch
     * whose n-gram set is ≥ `threshold` CONTAINED in some already-ingested
@@ -1473,11 +1447,10 @@ object Dedup {
                              n: Int = 3, threshold: Double = 0.8,
                              maxProbeCandidatesPerPosting: Long = 64): DataFrame = {
     val gramsStore = store.read(gramsTable)
-    val prepped = batch
+    val prepped = Pins.pin(batch
       .withColumn("__tokens", tokensCol(col(textCol)))
       .select(col(idCol).cast("long").as("probe_id"),
-        GraftFunctions.ngramHashes(col("__tokens"), n).as("__gh"))
-      .localCheckpoint()
+        GraftFunctions.ngramHashes(col("__tokens"), n).as("__gh")))
     val probeSide = Pairs.probeSide(prepped)
     val probeGrams = prepped
       .select(col("probe_id"), size(col("__gh")).as("__sz"),
@@ -1598,12 +1571,11 @@ object Dedup {
                                    candidateBudgetPerPosting: Long = 8,
                                    minCandidateBudget: Long = 2000000L): DataFrame = {
     val gramsStore = store.read(gramsTable)
-    val prepped = batch
+    val prepped = Pins.pin(batch
       .withColumn("__tokens", tokensCol(col(textCol)))
       .select(col(idCol).cast("long").as("probe_id"),
         GraftFunctions.ngramHashes(col("__tokens"), n).as("__gh"),
-        GraftFunctions.winnowHashes(col("__tokens"), n, w).as("__fp"))
-      .localCheckpoint()
+        GraftFunctions.winnowHashes(col("__tokens"), n, w).as("__fp")))
     val probeSide = Pairs.probeSide(prepped)
     val batchFps = prepped
       .select(col("probe_id"), size(col("__gh")).as("__sz"),

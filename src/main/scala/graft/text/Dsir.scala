@@ -43,32 +43,12 @@ import graft.functions.GraftFunctions
   */
 object Dsir {
 
-  /** READABLE REFERENCE FORM of the gram semantics (unigrams ++ bigrams
-    * from a MATERIALIZED token-array attribute, multiplicity preserved —
-    * DSIR counts occurrences, not distinct grams): the hot path is the
-    * [[graft.functions.DsirBuckets]] kernel; DsirSpec's differential test
-    * pins kernel ≡ this form + [[bucketOf]]. `toks` must be a
-    * projection-barrier attribute (invariant 6: expensive array exprs
-    * referenced from HOF lambdas re-evaluate otherwise). */
-  private[graft] def gramsCol(toks: Column): Column =
-    concat(
-      toks,
-      when(size(toks) >= 2,
-        transform(sequence(lit(1), size(toks) - 1),
-          i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1))))
-        .otherwise(array().cast("array<string>")))
-
-  /** Portable bucket gate: first 15 md5 hex digits mod `buckets` — replays
-    * in any engine (DuckDB: `('0x' || substr(md5(g),1,15))::UBIGINT % B`). */
-  def bucketOf(gram: Column, buckets: Int): Column =
-    conv(substring(md5(gram), 1, 15), 16, 10).cast("long") % buckets
-
   /** Map-only `(idCol?, bucket)` stream of hashed grams. Null/empty/
     * non-latin text yields zero grams (null-propagating tokenizer).
     * Bucketing runs in the [[graft.functions.DsirBuckets]] native kernel
     * (one array-in/array-out pass; same md5 gate bit-for-bit) — the
-    * readable Column form it replaced ([[gramsCol]] + [[bucketOf]] per
-    * exploded gram) cost ~4× the rest of the DSIR entries at sf0.1. */
+    * readable Column form it replaced (per exploded gram, now DsirSpec's
+    * reference) cost ~4× the rest of the DSIR entries at sf0.1. */
   private def bucketStream(df: DataFrame, textCol: String,
                            keepCols: Seq[String], buckets: Int): DataFrame = {
     df.withColumn("__toks",

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.text.Dsir
@@ -36,7 +37,24 @@ class DsirSpec extends AnyFunSuite {
     toks ++ toks.sliding(2).filter(_.size == 2).map(_.mkString(" "))
   }
 
-  /** Independent replay of [[Dsir.bucketOf]]: first 15 md5 hex digits. */
+  /** READABLE REFERENCE FORM of the gram semantics (unigrams ++ bigrams
+    * from a MATERIALIZED token-array attribute, multiplicity preserved —
+    * DSIR counts occurrences, not distinct grams) that the
+    * [[graft.functions.DsirBuckets]] kernel is pinned against. */
+  private def gramsCol(toks: Column): Column =
+    concat(
+      toks,
+      when(size(toks) >= 2,
+        transform(sequence(lit(1), size(toks) - 1),
+          i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1))))
+        .otherwise(array().cast("array<string>")))
+
+  /** The portable bucket gate as Columns: first 15 md5 hex digits mod
+    * `buckets` (DuckDB: `('0x' || substr(md5(g),1,15))::UBIGINT % B`). */
+  private def bucketOf(gram: Column, buckets: Int): Column =
+    conv(substring(md5(gram), 1, 15), 16, 10).cast("long") % buckets
+
+  /** Independent replay of [[bucketOf]]: first 15 md5 hex digits. */
   private def bucket(g: String, buckets: Int): Long = {
     val hex = java.security.MessageDigest.getInstance("MD5")
       .digest(g.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(15)
@@ -70,8 +88,8 @@ class DsirSpec extends AnyFunSuite {
       .groupBy("doc_id", "bucket").count()
       .as[(Long, Long, Long)].collect().toSet
     val viaColumns = docs.withColumn("__toks", toks)
-      .select(col("doc_id"), explode(Dsir.gramsCol(col("__toks"))).as("__gram"))
-      .select(col("doc_id"), Dsir.bucketOf(col("__gram"), B).as("bucket"))
+      .select(col("doc_id"), explode(gramsCol(col("__toks"))).as("__gram"))
+      .select(col("doc_id"), bucketOf(col("__gram"), B).as("bucket"))
       .groupBy("doc_id", "bucket").count()
       .as[(Long, Long, Long)].collect().toSet
     assert(viaKernel == viaColumns)
@@ -85,7 +103,7 @@ class DsirSpec extends AnyFunSuite {
       .as[(Long, Long, Long)].collect().toSet
     val uniColumns = docs.withColumn("__toks", toks)
       .select(col("doc_id"), explode(col("__toks")).as("__tok"))
-      .select(col("doc_id"), Dsir.bucketOf(col("__tok"), B).as("bucket"))
+      .select(col("doc_id"), bucketOf(col("__tok"), B).as("bucket"))
       .groupBy("doc_id", "bucket").count()
       .as[(Long, Long, Long)].collect().toSet
     assert(uniKernel == uniColumns)

@@ -463,12 +463,6 @@ class OpsSpec extends AnyFunSuite {
     assert(w11.toSeq == Seq(3.0, 4.0, 5.0)) // centered ±1 frame
   }
 
-  test("character shingles are windowed substrings of normalized text") {
-    val got = Seq("ab  cd").toDF("t")
-      .select(graft.text.Dedup.shingles($"t", 3)).as[Seq[String]].first()
-    assert(got == Seq("ab ", "b c", " cd")) // whitespace collapsed first
-  }
-
   test("upperRatio and qualityScore respond to case and length") {
     val r = Seq(("GOOD TEXT here", "x")).toDF("a", "b")
       .select(graft.text.TextStats.upperRatio($"a").as("u"),
