@@ -14,7 +14,8 @@ import org.apache.spark.sql.execution.LogicalRDD
 object Pins {
   // plain, not inheritable: Spark starts some thread pools lazily, and a
   // scope inherited by one of their threads would stay on it for life
-  private val scopes = ThreadLocal.withInitial[List[collection.mutable.Buffer[DataFrame]]](() => Nil)
+  private val scopes =
+    ThreadLocal.withInitial[List[collection.mutable.Buffer[DataFrame]]](() => Nil)
 
   /** `df` materialized now (an eager `localCheckpoint`), registered with
     * this thread's innermost open scope. */

@@ -70,7 +70,8 @@ class PinsSpec extends AnyFunSuite {
   test("the staged memo outlives the entry scopes that build and read it") {
     val dir = Files.createTempDirectory("graft_pins_memo").toString
     val rng = new scala.util.Random(7)
-    val vocab = IndexedSeq.fill(400)(rng.alphanumeric.filter(_.isLetter).take(6).mkString.toLowerCase)
+    val vocab = IndexedSeq.fill(400)(
+      rng.alphanumeric.filter(_.isLetter).take(6).mkString.toLowerCase)
     (1L to 80L).map { id =>
       val text = Seq.fill(30)(vocab(rng.nextInt(vocab.size))).mkString(" ")
       (id, text, "en", "web", text.length.toLong)
@@ -111,7 +112,8 @@ class PinsSpec extends AnyFunSuite {
 
     val source = (1 to 40).map("word" + _).mkString(" ")
     val contain = heldAfterEachTrigger("contain", k =>
-      if (k == 1) Seq((1L, source), (2L, "a separate page about unrelated topics")).toDF("doc_id", "text")
+      if (k == 1)
+        Seq((1L, source), (2L, "a separate page about unrelated topics")).toDF("doc_id", "text")
       else Seq((10L + k, (5 to 30).map("word" + _).mkString(" ")),
         (20L + k, (1 to 12).map(i => s"topic${k}_$i").mkString(" "))).toDF("doc_id", "text")) {
       (src, cp) =>
