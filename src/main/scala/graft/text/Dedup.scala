@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Pins
@@ -51,30 +51,32 @@ object Dedup {
   // ------------------------------------------------- duplicate clusters
 
   /** Connected components over a near-dup PAIR list → `(id, cluster_id)`
-    * with `cluster_id` = the smallest id in the component. This is the step
-    * between "pairs above threshold" and "keep one document per duplicate
-    * CLUSTER" that a real dedup pipeline needs: near-duplication is not
-    * transitive (a~b, b~c does not imply a~c above threshold), so per-pair
-    * keep-min under-deletes chains.
+    * with `cluster_id` = the smallest id in the component; both columns
+    * take the ids' (common) type. This is the step between "pairs above
+    * threshold" and "keep one document per duplicate CLUSTER" that a real
+    * dedup pipeline needs: near-duplication is not transitive (a~b, b~c
+    * does not imply a~c above threshold), so per-pair keep-min
+    * under-deletes chains.
     *
-    * Algorithm: neighbor-min label propagation WITH per-round pointer
-    * jumping — every node starts labeled with itself; each round a node
-    * (1) takes the min of its own and its neighbors' labels, then
-    * (2) shortcuts through its label's label (`L(v) ← L(L(v))`, the
-    * hash-to-min idea of Rastogi et al. ICDE'13 expressed as one
-    * labels⋈labels self-join). Labels only ever decrease toward the
-    * component min, and the jump composes reach multiplicatively
-    * (reach_{k+1} = 2·(reach_k + 1)), so convergence takes
-    * O(log diameter) rounds instead of diameter rounds — a 20-hop chain
-    * settles in 4 rounds + 1 confirmation sweep. Each round is one
-    * hash-shuffle join on the edge list plus one (cheaper, node-sized)
-    * label self-join; the driver sees only a changed COUNT per round
-    * (iteration control, never data). Each round's label table is
-    * `localCheckpoint`ed — iterative joins otherwise nest the whole
-    * previous round into the logical plan and the lineage (and planning
-    * cost) grows exponentially with rounds; the intermediate neighbor-min
-    * table is checkpointed too because it feeds both sides of the jump
-    * self-join.
+    * Algorithm: contract, then label only what is left (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC'14).
+    *  1. Contract: the pair list goes through one hash exchange with no
+    *     partition count, so AQE sizes it by bytes and coalesces a small
+    *     list into one task; each partition then runs union-find over its
+    *     own pairs (root = smallest id, path compression) and emits
+    *     `(id, root)` per id it saw. Memory per task grows with the
+    *     DISTINCT ids of that partition, never with the corpus. The
+    *     result is pinned (one checkpoint, two jobs).
+    *  2. One partition: its roots ARE the components — no label round
+    *     runs. The partition count of the pin is read on the driver
+    *     without a job.
+    *  3. Several partitions: an id seen in several of them links its
+    *     local roots (smallest root → each other one). The min-label
+    *     rounds of [[labelRounds]] run on that ROOT graph only, and each
+    *     id takes its smallest root's label.
+    *
+    * Ids never connect through a null: a pair with a null end adds its
+    * other end as a node, and a null id comes out once as `(null, null)`.
     *
     * If `maxIter` rounds pass without convergence the method THROWS —
     * returning half-propagated labels would silently split one component
@@ -84,10 +86,79 @@ object Dedup {
                         idB: String = "id_b", maxIter: Int = 20): DataFrame =
     duplicateClustersWithRounds(pairs, idA, idB, maxIter)._1
 
-  /** [[duplicateClusters]] + the number of rounds the loop ran (the last
-    * one is the zero-change confirmation sweep) — exposed for the
-    * log-round convergence spec. */
+  /** [[duplicateClusters]] + the number of label rounds it ran: 0 when the
+    * contraction left one partition. */
   private[graft] def duplicateClustersWithRounds(
+      pairs: DataFrame, idA: String = "id_a",
+      idB: String = "id_b", maxIter: Int = 20): (DataFrame, Int) = {
+    val t = pairs.select(coalesce(col(idA), col(idB))).schema.head.dataType
+    val edges = pairs.select(col(idA).cast(t).as("src"), col(idB).cast(t).as("dst"))
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("id", t).add("root", t)
+    val local = Pins.pin(edges.repartition(least(col("src"), col("dst")))
+      .mapPartitions(unionFind)(org.apache.spark.sql.Encoders.row(schema)))
+    if (local.rdd.getNumPartitions <= 1)
+      (local.select(col("id"), col("root").as("cluster_id")), 0)
+    else {
+      val glue = local.groupBy("id")
+        .agg(min("root").as("root"), collect_set("root").as("roots"))
+      val (labels, rounds) = labelRounds(
+        glue.select(col("root").as("id_a"), explode(col("roots")).as("id_b"))
+          .where(col("id_a") =!= col("id_b")), maxIter = maxIter)
+      (glue.join(labels.withColumnRenamed("id", "root"), Seq("root"), "left")
+        .select(col("id"), coalesce(col("cluster_id"), col("root")).as("cluster_id")), rounds)
+    }
+  }
+
+  /** Union-find over one partition's `(src, dst)` rows → `(id, root)` for
+    * every distinct non-null id seen, root = the smallest id connected to
+    * it within the partition, plus one `(null, null)` if a null end was
+    * seen. The union links the larger root under the smaller, so a root is
+    * always its set's minimum; finds compress the path they walk. */
+  private def unionFind(rows: Iterator[Row]): Iterator[Row] = {
+    val parent = new java.util.HashMap[Any, Any]
+    def find(x: Any): Any = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x
+      while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
+    }
+    var sawNull = false
+    rows.foreach { row =>
+      val (a, b) = (row.get(0), row.get(1))
+      Seq(a, b).foreach(x => if (x == null) sawNull = true else parent.putIfAbsent(x, x))
+      if (a != null && b != null) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) {
+          if (ra.asInstanceOf[Comparable[Any]].compareTo(rb) < 0) parent.put(rb, ra)
+          else parent.put(ra, rb)
+        }
+      }
+    }
+    import scala.jdk.CollectionConverters._
+    parent.keySet.asScala.toSeq.iterator.map(k => Row(k, find(k))) ++
+      (if (sawNull) Iterator.single(Row(null, null)) else Iterator.empty)
+  }
+
+  /** Connected components by min-label rounds — the plain form
+    * [[duplicateClusters]] runs on its root graph, and the reference it is
+    * checked against — + the number of rounds run (the last one is the
+    * zero-change confirmation sweep).
+    *
+    * Each round a node (1) takes the min of its own and its neighbors'
+    * labels, then (2) shortcuts through its label's label (`L(v) ←
+    * L(L(v))`, the hash-to-min idea of Rastogi et al. ICDE'13 expressed
+    * as one labels⋈labels self-join). Labels only ever decrease toward the
+    * component min, and the jump composes reach multiplicatively
+    * (reach_{k+1} = 2·(reach_k + 1)), so convergence takes O(log diameter)
+    * rounds — a 20-hop chain settles in 4 rounds + 1 confirmation sweep.
+    * Each round is one hash-shuffle join on the edge list plus one
+    * node-sized label self-join, both pinned (invariant 7: the lineage of
+    * a driver loop otherwise nests every previous round). The second pin
+    * carries a `changed` flag per node, so the driver's convergence test
+    * is a map-only scan of that pin, never a join. */
+  private[graft] def labelRounds(
       pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIter: Int = 20): (DataFrame, Int) = {
     val edges = Pins.pin(pairs.select(col(idA).as("src"), col(idB).as("dst"))
@@ -102,23 +173,25 @@ object Dedup {
       // loop-invariant edge list EVERY round (the sort above the edges
       // scan is not reusable across rounds) — same fix as the r12
       // PageRank/triangle joins in ops/Graph.scala.
-      val viaNeighbors = edges.join(labels.withColumnsRenamed(
-          Map("id" -> "dst", "label" -> "nlabel")).hint("shuffle_hash"),
-        Seq("dst"))
+      val viaNeighbors = edges.join(labels.select(col("id").as("dst"), col("label").as("nlabel"))
+          .hint("shuffle_hash"), Seq("dst"))
         .groupBy(col("src").as("id")).agg(min("nlabel").as("nmin"))
       val stepped = Pins.pin(labels.join(viaNeighbors, Seq("id"), "left")
-        .select(col("id"), least(col("label"), coalesce(col("nmin"), col("label"))).as("label")))
+        .select(col("id"), least(col("label"), coalesce(col("nmin"), col("label"))).as("label"),
+          col("label").as("old")))
       // pointer jump: L(v) ← min(L(v), L(L(v))). Every label IS a node id
       // (mins of node ids over a label table covering all nodes), so the
       // left join matches except at self-labeled roots.
       val next = Pins.pin(stepped.join(
           stepped.select(col("id").as("__pid"), col("label").as("__plabel")),
           col("label") === col("__pid"), "left")
-        .select(col("id"), least(col("label"), coalesce(col("__plabel"), col("label"))).as("label")))
-      val changed = next.join(labels.withColumnRenamed("label", "old"), Seq("id"))
-        .where(col("label") =!= col("old")).limit(1).count()
-      labels = next
-      converged = changed == 0
+        .select(col("id"), least(col("label"), coalesce(col("__plabel"), col("label"))).as("label"),
+          col("old"))
+        .withColumn("changed", col("label") =!= col("old")))
+      labels = next.select(col("id"), col("label"))
+      // one map-only job: does any partition of the pin hold a change?
+      converged = !next.where(col("changed")).select().rdd
+        .mapPartitions(rows => Iterator(rows.hasNext)).collect().contains(true)
       iter += 1
     }
     if (!converged)

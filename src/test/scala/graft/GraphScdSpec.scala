@@ -195,12 +195,13 @@ class GraphScdSpec extends AnyFunSuite {
 
   test("CC label propagation keeps its per-round edge join shuffle_hash " +
       "(one SHJ per round; rounds are checkpointed, so capture via listener)") {
-    // duplicateClusters localCheckpoints every round: the RETURNED frame's
-    // plan has no joins at all, so the guard must observe the executed
-    // plan of each round's eager checkpoint action. Each round runs
-    // exactly one hinted edges⋈labels join (the stepped checkpoint); the
-    // pointer-jump and changed-count joins are node-dimension and
-    // unhinted by design.
+    // Dedup.labelRounds (the rounds duplicateClusters runs on its root
+    // graph) pins every round: the RETURNED frame's plan has no joins at
+    // all, so the guard must observe the executed plan of each round's
+    // eager checkpoint action. Each round runs exactly one hinted
+    // edges⋈labels join (the stepped checkpoint); the pointer-jump join is
+    // node-dimension and unhinted by design, and the convergence test
+    // scans the round's pin without a join.
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val saved = spark.conf.get(key)
     spark.conf.set(key, "-1")
@@ -221,9 +222,8 @@ class GraphScdSpec extends AnyFunSuite {
     try {
       val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L))
         .toDF("id_a", "id_b")
-      val (labels, rounds) =
-        graft.text.Dedup.duplicateClustersWithRounds(pairs)
-      labels.collect()
+      val (labels, rounds) = graft.text.Dedup.labelRounds(pairs)
+      val out = labels.collect().toSet
       // listener callbacks post asynchronously — poll to drain, then
       // assert EQUALITY (a fallback round contributes 0, an extra
       // unexpected hash join contributes >rounds; both must fail)
@@ -234,6 +234,7 @@ class GraphScdSpec extends AnyFunSuite {
       assert(shjTotal.get() == rounds,
         s"expected one ShuffledHashJoin per label-prop round ($rounds), " +
           s"saw ${shjTotal.get()}")
+      assert(graft.text.Dedup.duplicateClusters(pairs).collect().toSet == out)
     } finally {
       spark.listenerManager.unregister(listener)
       spark.conf.set(key, saved)

@@ -139,18 +139,22 @@ class TextSimSpec extends AnyFunSuite {
 
   test("duplicateClusters: transitive chains merge, min-id representative") {
     // chain 1-2-3 (1~2, 2~3 but NOT 1~3) + isolated pair 10-11 + singleton edge-less 99
+    // the label rounds themselves: duplicateClusters contracts a list
+    // this small in one task and runs none
+    def labels(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val clusters = Dedup.duplicateClusters(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val clusters = labels(Dedup.labelRounds(pairs)._1)
     assert(clusters == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    assert(labels(Dedup.duplicateClusters(pairs)) == clusters)
     // a longer path exercises more than one propagation round
     val chain = (1L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val c2 = Dedup.duplicateClusters(chain).collect().map(_.getLong(1)).distinct.toSeq
+    val c2 = Dedup.labelRounds(chain)._1.collect().map(_.getLong(1)).distinct.toSeq
     assert(c2 == Seq(1L))
+    assert(labels(Dedup.duplicateClusters(chain)) == labels(Dedup.labelRounds(chain)._1))
     // non-convergence THROWS instead of returning mis-split components
     // (after 2 rounds pointer-jump reach is 6 hops < the chain's 8)
     val e = intercept[RuntimeException] {
-      Dedup.duplicateClusters(chain, maxIter = 2)
+      Dedup.labelRounds(chain, maxIter = 2)
     }
     assert(e.getMessage.contains("did not converge"))
   }
@@ -271,10 +275,11 @@ class TextSimSpec extends AnyFunSuite {
     // 20 rounds + confirm; pointer jumping reaches 2·(r+1) per round
     // (2, 6, 14, 30...) → labels settle in 4 rounds, +1 zero-change sweep
     val chain = (1L until 21L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val (clusters, rounds) = Dedup.duplicateClustersWithRounds(chain, maxIter = 7)
+    val (clusters, rounds) = Dedup.labelRounds(chain, maxIter = 7)
     val out = clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == (1L to 21L).map(_ -> 1L).toMap)
     assert(rounds <= 5, s"expected log-round convergence, took $rounds")
+    assert(Dedup.duplicateClusters(chain).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == out)
   }
 
   test("ngram jaccard: exact-boundary threshold pair survives the size filter") {
