@@ -14,7 +14,11 @@ median and quartiles, the pairs the change won (ties count for neither),
 and whether the gain rule holds: the change wins at least 9 of 10 pairs
 and the medians differ by more than the parent's interquartile range.
 Runs that fail a check or report failed operations are listed, not
-dropped.
+dropped. Each run's `named` metrics (the per-step medians the workload
+reports, e.g. `clusters_s`, `containment_s`) are read from its record,
+`.perfbench_results/<workload>-seed<n>-trace0.json`, and the summary
+prints their medians per side, so a change to one step can be seen
+moving that step and leaving the others flat.
 """
 import argparse
 import json
@@ -43,9 +47,16 @@ def run(checkout: Path, workload: str, seed: int, seconds: float) -> dict:
     try:
         r = json.loads(lines[-1])
     except (IndexError, ValueError):
-        return {"correct": False, "failed": None, "metrics": {}, "exit": p.returncode}
+        return {"correct": False, "failed": None, "metrics": {}, "named": {}, "exit": p.returncode}
+    try:
+        record = json.loads((checkout / ".perfbench_results"
+                             / f"{workload}-seed{seed}-trace0.json").read_text())
+        named = {k: v["value"] for k, v in record["named"].items()}
+    except (OSError, ValueError, KeyError):
+        named = {}
     return {"correct": r["correct"], "failed": r["failed"],
-            "metrics": {k: v["value"] for k, v in r["metrics"].items()}, "exit": p.returncode}
+            "metrics": {k: v["value"] for k, v in r["metrics"].items()}, "named": named,
+            "exit": p.returncode}
 
 
 def quartiles(xs):
@@ -78,6 +89,17 @@ def summarize(rows) -> int:
         fmt = lambda q: "/".join(f"{x:.2f}" for x in q)
         print(f"{m:<12} {fmt(qa):>26} {fmt(qb):>26} {delta:>+7.1%} {wins:>3}/{len(ok):<3}  "
               f"{'gain' if holds else 'no gain'}")
+    named = sorted({k for p in pairs for side in p.values() for k in side.get("named", {})}
+                   - set(METRICS))
+    if named:
+        print(f"{'named':<20} {'parent med':>10} {'change med':>10} {'delta':>8}")
+    for k in named:
+        a = [p["parent"]["named"][k] for p in pairs if k in p["parent"].get("named", {})]
+        b = [p["change"]["named"][k] for p in pairs if k in p["change"].get("named", {})]
+        if a and b:
+            ma, mb = statistics.median(a), statistics.median(b)
+            delta = f"{(mb - ma) / ma:>+7.1%}" if ma else f"{'-':>8}"
+            print(f"{k:<20} {ma:>10.3f} {mb:>10.3f} {delta}")
     return 0
 
 
