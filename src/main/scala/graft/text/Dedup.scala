@@ -125,9 +125,11 @@ object Dedup {
       r
     }
     var sawNull = false
+    def add(x: Any): Unit = if (x == null) sawNull = true else parent.putIfAbsent(x, x)
     rows.foreach { row =>
       val (a, b) = (row.get(0), row.get(1))
-      Seq(a, b).foreach(x => if (x == null) sawNull = true else parent.putIfAbsent(x, x))
+      add(a)
+      add(b)
       if (a != null && b != null) {
         val (ra, rb) = (find(a), find(b))
         if (ra != rb) {
@@ -136,8 +138,9 @@ object Dedup {
         }
       }
     }
+    // a find while iterating only re-points existing keys: no structural change
     import scala.jdk.CollectionConverters._
-    parent.keySet.asScala.toSeq.iterator.map(k => Row(k, find(k))) ++
+    parent.keySet.iterator.asScala.map(k => Row(k, find(k))) ++
       (if (sawNull) Iterator.single(Row(null, null)) else Iterator.empty)
   }
 
