@@ -1,7 +1,9 @@
 package graft
 
-/** Plan inspection tool: prints the formatted physical plan for the named
-  * queries (or a default set of scale-critical ones). Usage:
+/** Plan inspection tool: runs each named query (or a default set of
+  * scale-critical ones) and prints its EXECUTED plan — the adaptive plan
+  * after execution, `isFinalPlan=true`, with the exchanges, joins and
+  * partition counts AQE actually chose. Usage:
   *   runMain graft.Explain [sfDir] [queryName...]
   */
 object Explain {
@@ -32,8 +34,12 @@ object Explain {
     }
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      val plan = SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      // one scope per entry: its pins are released once the plan is printed
+      val plan = graft.core.Pins.scoped {
+        val df = SparkEntry.queries(n)(spark, sfDir)
+        df.collect()
+        df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+      }
       println(plan)
       outDir.foreach { d =>
         java.nio.file.Files.write(java.nio.file.Paths.get(d, s"$n.txt"),

@@ -210,10 +210,10 @@ object Cluster {
     * guard replays upstream). */
   def seedEmbeddingSignatures(store: graft.store.TableStore, sigTable: String,
                               corpus: DataFrame, vecCol: String, idCol: String,
-                              centroids: Seq[Seq[Long]], buckets: Int = 0,
+                              centroids: Seq[Seq[Long]],
                               appendOnly: Boolean = false): Unit =
     Dedup.putSeed(store, sigTable,
-      signatureRows(corpus, vecCol, idCol, centroids), buckets, appendOnly)
+      signatureRows(corpus, vecCol, idCol, centroids), appendOnly = appendOnly)
 
   /** EMBEDDING (SemDeDup) INCREMENTAL near-dedup: flag a new batch
     * against the persisted per-doc signature store
@@ -252,5 +252,5 @@ object Cluster {
         Seq("cluster"), identity,
         (x, y) => round(GraftFunctions.cosine(deq(x("codes"), x("scale")),
           deq(y("codes"), y("scale"))), 6) >= threshold),
-      buckets = 0, appendOnly)
+      appendOnly)
 }

@@ -59,6 +59,8 @@ object IvfIndex {
         batch.select(col(idCol), col(vecCol)), vecCol, centroids)
       .select(col(idCol).cast("long").as("id"), col("cluster"),
         col(vecCol).cast("array<double>").as("v"))
+    // a first write here also sets the hive partitioning, which only
+    // overwrite takes — so this one create stays outside append/upsert
     if (!store.exists(table))
       store.overwrite(table, assigned, primaryKeys = Seq("id"),
         partitionBy = Seq("cluster"))

@@ -254,13 +254,16 @@ final class TableStore private (spark: SparkSession, root: String,
       .parquet(versionDir(table, version).toString)
   }
 
-  /** Append-only log write for validation/monitoring logs: creates the
-    * table by [[overwrite]] on the first call, then appends by
-    * [[appendFiles]] — O(batch) written per call. */
-  def append(table: String, df: DataFrame): Unit = commit(table) { (current, v) =>
-    if (current.isEmpty) overwritten(table, df)(current, v)
-    else filesAppended(table, df)(current, v)
-  }
+  /** Append-only write: the first call creates the table as [[overwrite]]
+    * with `primaryKeys` would, later calls append as [[appendFiles]] —
+    * O(batch) written per call. Create-or-append is decided inside the
+    * commit, under the table's write lock, so two first writers cannot
+    * replace each other's rows. */
+  def append(table: String, df: DataFrame, primaryKeys: Seq[String] = Nil): Unit =
+    commit(table) { (current, v) =>
+      if (current.isEmpty) overwritten(table, df, primaryKeys)(current, v)
+      else filesAppended(table, df)(current, v)
+    }
 
   /** FILE-LEVEL append: the new snapshot version is `df`'s files plus
     * hardlinks of every previous data file — O(batch) data written +

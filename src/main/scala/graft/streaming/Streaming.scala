@@ -315,7 +315,7 @@ object Streaming {
                 graft.text.Dedup.seedGramIndex(tx, postingsTable, dfTable,
                   gramsTable, keptP, textCol, idCol, n = n, appendOnly = true)
               crashHook(cleanTable, batchId)
-              appendClean(tx, cleanTable, keptP, idCol)
+              tx.append(cleanTable, keptP, Seq(idCol))
             }
             maybeCompact(store, compactEvery, batchId, batch,
               Seq(postingsTable, gramsTable, cleanTable))
@@ -323,12 +323,6 @@ object Streaming {
         }
       }
       .start()
-
-  /** The gates' clean-output append, through the trigger's txn view. */
-  private def appendClean(tx: TableStore, cleanTable: String,
-                          kept: DataFrame, idCol: String): Unit =
-    if (tx.exists(cleanTable)) tx.appendFiles(cleanTable, kept)
-    else tx.overwrite(cleanTable, kept, primaryKeys = Seq(idCol))
 
   /** Best-effort file-count maintenance AFTER the clean commit (a crash
     * here replays into the skipped trigger) — see the compactEvery
@@ -404,7 +398,7 @@ object Streaming {
             val kept = flagged.where(col("kept")).select(col(idCol), col(textCol))
             if (!kept.isEmpty) {
               crashHook(cleanTable, batchId)
-              appendClean(tx, cleanTable, kept, idCol)
+              tx.append(cleanTable, kept, Seq(idCol))
             }
             maybeCompact(store, compactEvery, batchId, batch,
               Seq(sigTable, cleanTable))

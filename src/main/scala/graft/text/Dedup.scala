@@ -237,15 +237,47 @@ object Dedup {
   private[graft] def tokensCol(text: Column, keepAccents: Boolean = true): Column =
     GraftFunctions.tokens(text, keepAccents, dropEmpty = false)
 
-  /** Partition count for the kernel fan-out exchanges: the session's
-    * shuffle parallelism, PINNED as an explicit count — a bare
-    * `repartition(col)` is REPARTITION_BY_COL, which AQE's byte-based
-    * coalescing collapses to one partition on small text (measured r15:
-    * an 842 KB text exchange coalesced to 1 task and serialized the
-    * minhash kernel it existed to parallelize — byte-based sizing cannot
-    * see downstream per-row CPU). An explicit count is exempt. */
-  private def fanOutParts(df: DataFrame): Int =
-    df.sparkSession.sessionState.conf.numShufflePartitions
+  /** `df` repartitioned on `idCol` ahead of a per-row text kernel when
+    * `fanOut`, else `df` itself — the one kernel fan-out.
+    *
+    * Why: fused to the scan, the kernels inherit the INPUT LAYOUT's
+    * parallelism, and one unsplittable file (a single parquet row group)
+    * serializes the whole kernel pipeline onto one core (guide §2.5 input
+    * skew; measured r15: every sf0.1 table is one row group, so the kernel
+    * stages ran 1-task). The count is the session's shuffle parallelism,
+    * given explicitly: a bare `repartition(col)` is REPARTITION_BY_COL,
+    * which AQE's byte-based coalescing collapses to one partition on small
+    * text (measured r15: an 842 KB exchange coalesced to 1 task — bytes
+    * cannot see the per-row CPU downstream). Corpus-sized callers fan out;
+    * one text-sized exchange is minor next to the gram/band shuffles they
+    * already pay. Probe-sized callers (eval suites, per-batch probes) do
+    * not: on a 50-doc frame the exchange is pure overhead (measured r16:
+    * the unconditional r15 fan-out regressed q_decontam_inc 1.51 → 2.09 s). */
+  private def fannedOut(df: DataFrame, idCol: String, fanOut: Boolean): DataFrame = {
+    val fanOutParts = df.sparkSession.sessionState.conf.numShufflePartitions
+    if (fanOut) df.repartition(fanOutParts, col(idCol)) else df
+  }
+
+  /** THE tokenize → gram-hash kernel pass: `df` plus `__gh`, the distinct
+    * [[graft.functions.NgramHashes]] of `textCol`'s tokens (gram strings
+    * never materialize), and with `w > 0` `__fp`, their
+    * [[graft.functions.WinnowHashes]] fingerprints. The tokens are one
+    * staged column, so a second kernel reads them instead of re-tokenizing
+    * (invariant 6). `explodeAs` names the gram hashes exploded to one row
+    * per gram instead of `__gh`: an explode of the `__gh` ATTRIBUTE lets
+    * InferFiltersFromGenerate plant `size(__gh) > 0` under the kernel's
+    * projection, which then re-runs the kernel in that filter (measured
+    * on the Spark 4.1.2 plan). Unpinned; callers that read it twice pin it
+    * ([[preppedKernelFrame]]); each caller names, casts and fans out its
+    * own id column. */
+  private def kernelFrame(df: DataFrame, textCol: String, n: Int, w: Int = 0,
+                          explodeAs: Option[String] = None): DataFrame = {
+    val toks = df.withColumn("__tokens", tokensCol(col(textCol)))
+    val gh = GraftFunctions.ngramHashes(col("__tokens"), n)
+    val grams = explodeAs.fold(toks.withColumn("__gh", gh))(c => toks.withColumn(c, explode(gh)))
+    (if (w > 0) grams.withColumn("__fp", GraftFunctions.winnowHashes(col("__tokens"), n, w))
+     else grams).drop("__tokens")
+  }
 
   /** [[tokensCol]] with empty tokens dropped in the kernel — replaces the
     * `filter(tokensCol(_), t ≠ "")` HOF of the feature-stream callers
@@ -277,34 +309,23 @@ object Dedup {
         xxhash64(concat_ws(",",
           slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)).cast("array<string>"))).as("key")))
 
+  /** `rows` keyed by the LSH band keys of their `sig` column: `(id, sig,
+    * band, key)`, one row per band, `id` the caller's id column. */
+  private def bandKeyed(rows: DataFrame, id: Column, sig: String,
+                        numHashes: Int, bands: Int): DataFrame = {
+    val exploded = rows.select(id, col(sig),
+      explode(bandKeys(col(sig), bands, numHashes / bands)).as("__band"))
+    exploded.select(col(exploded.columns.head), col(sig), col("__band.band"), col("__band.key"))
+  }
+
   /** doc → (id, sig) → exploded (id, sig, band, key). The whole signature
-    * path is native codegen: tokens → [[graft.functions.NgramHashes]]
-    * (gram strings never materialize) → [[graft.functions.MinHashLong]].
-    *
-    * `fanOut = false` for PROBE-SIZED inputs (eval suites, per-batch
-    * probes): the corpus-side fan-out exchange is pure overhead on a
-    * 50-doc frame — measured r16: the unconditional r15 fan-out regressed
-    * q_decontam_inc 1.51 → 2.09 s in the driver run (VERDICT r15 #1), so
-    * callers that sign suite-sized frames keep the map-only shape. */
+    * path is native codegen: [[kernelFrame]] → [[graft.functions.MinHashLong]].
+    * `fanOut`: see [[fannedOut]]. */
   private def banded(df: DataFrame, textCol: String, idCol: String,
                      numHashes: Int, bands: Int,
-                     fanOut: Boolean = true): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    // Fan the kernel stage out on the id key BEFORE tokenize/hash: fused
-    // to the scan, the kernels inherit the INPUT LAYOUT's parallelism —
-    // one unsplittable file (single parquet row group) serializes the
-    // whole signature pipeline onto one core (guide §2.5 input skew;
-    // measured r15: every sf0.1 table is one row group, so kernel stages
-    // ran 1-task). One text-sized exchange is minor next to the gram/band
-    // shuffles these ops already pay, at any scale.
-    (if (fanOut) df.repartition(fanOutParts(df), col(idCol)) else df)
-      .withColumn("__tokens", tokensCol(col(textCol)))
-      .withColumn("__gh", GraftFunctions.ngramHashes(col("__tokens"), 3))
-      .withColumn("__sig", GraftFunctions.minhashLong(col("__gh"), numHashes))
-      .select(col(idCol).as("__id"), col("__sig"),
-        explode(bandKeys(col("__sig"), bands, rowsPerBand)).as("__band"))
-      .select(col("__id"), col("__sig"), col("__band.band"), col("__band.key"))
-  }
+                     fanOut: Boolean = true): DataFrame =
+    bandKeyed(withSignature(fannedOut(df, idCol, fanOut), textCol, numHashes),
+      col(idCol).as("__id"), "__sig", numHashes, bands)
 
   private def estJaccard(numHashes: Int): Column =
     GraftFunctions.eqPositions(col("sig_a"), col("sig_b"))
@@ -382,26 +403,16 @@ object Dedup {
     minhashVerifiedPairsFromPrepped(preppedKernelFrame(df, textCol, idCol, n),
       numHashes, bands, threshold, candidateEst)
 
-  /** ONE fanned-out, PINNED kernel pass `(__id, __gh[, __fp])` — THE
-    * shared prep of every verified-pair generator and the recall report
-    * (r15 advice: the prep exists in exactly one place, so the report's
-    * frame cannot silently drift from the production paths whose recall
-    * it certifies). `w > 0` adds the winnow-fingerprint column. The
-    * explicit-count id repartition lifts the kernels off the (often
-    * single-split) scan — guide §2.5 — and the localCheckpoint runs them
-    * ONCE for every consuming subtree; per call, no cross-run state. */
+  /** ONE fanned-out, PINNED [[kernelFrame]] `(__id, __gh[, __fp])` — the
+    * shared prep of every verified-pair generator and the recall report,
+    * so the report's frame cannot drift from the production paths whose
+    * recall it certifies. The pin runs the kernels ONCE for every
+    * consuming subtree; per call, no cross-run state. */
   private[graft] def preppedKernelFrame(df: DataFrame, textCol: String,
                                         idCol: String, n: Int,
-                                        w: Int = 0): DataFrame = {
-    val toks = df.repartition(fanOutParts(df), col(idCol))
-      .withColumn("__tokens", tokensCol(col(textCol)))
-    val cols = Seq(col(idCol).as("__id"),
-      GraftFunctions.ngramHashes(col("__tokens"), n).as("__gh")) ++
-      (if (w > 0)
-        Seq(GraftFunctions.winnowHashes(col("__tokens"), n, w).as("__fp"))
-      else Nil)
-    Pins.pin(toks.select(cols: _*))
-  }
+                                        w: Int = 0): DataFrame =
+    Pins.pin(kernelFrame(fannedOut(df, idCol, fanOut = true), textCol, n, w)
+      .select(col(idCol).as("__id") +: col("__gh") +: (if (w > 0) Seq(col("__fp")) else Nil): _*))
 
   /** Contract check for the `...FromPrepped` entry points (r15 advice):
     * the frame must carry the kernel columns and be PINNED — an unpinned
@@ -427,13 +438,9 @@ object Dedup {
       prepped: DataFrame, numHashes: Int, bands: Int,
       threshold: Double, candidateEst: Double = 0.35): DataFrame = {
     requirePrepped(prepped, "__id", "__gh")
-    val rowsPerBand = numHashes / bands
-    val bd = prepped
-      .withColumn("__sig",
-        GraftFunctions.minhashLong(col("__gh"), numHashes))
-      .select(col("__id"), col("__sig"),
-        explode(bandKeys(col("__sig"), bands, rowsPerBand)).as("__band"))
-      .select(col("__id"), col("__sig"), col("__band.band"), col("__band.key"))
+    val bd = bandKeyed(
+      prepped.withColumn("__sig", GraftFunctions.minhashLong(col("__gh"), numHashes)),
+      col("__id"), "__sig", numHashes, bands)
     val cand = bandPairs(bd)
       .where(estJaccard(numHashes) >= candidateEst)
       .select("id_a", "id_b").distinct()
@@ -459,12 +466,11 @@ object Dedup {
   def contaminationReport(corpus: DataFrame, textCol: String, idCol: String,
                           benchmark: DataFrame, benchTextCol: String,
                           n: Int = 5, minOverlap: Int = 1): DataFrame = {
-    def gramHashes(c: String): Column =
-      GraftFunctions.ngramHashes(tokensCol(col(c)), n)
     val benchGrams = broadcast(
-      benchmark.select(explode(gramHashes(benchTextCol)).as("__g")).distinct())
-    corpus
-      .select(col(idCol).as("id"), explode(gramHashes(textCol)).as("__g"))
+      kernelFrame(benchmark, benchTextCol, n, explodeAs = Some("__g"))
+        .select(col("__g")).distinct())
+    kernelFrame(corpus, textCol, n, explodeAs = Some("__g"))
+      .select(col(idCol).as("id"), col("__g"))
       .join(benchGrams, Seq("__g"))
       .groupBy("id").agg(count(lit(1)).as("n_overlap"))
       .where(col("n_overlap") >= minOverlap)
@@ -546,8 +552,7 @@ object Dedup {
                          numHashes: Int = 64, bands: Int = 16,
                          threshold: Double = 0.5): DataFrame = {
     val bench = broadcast(
-      banded(benchmark, benchTextCol, benchIdCol, numHashes, bands,
-          fanOut = false) // eval-suite-sized by contract — no fan-out
+      banded(benchmark, benchTextCol, benchIdCol, numHashes, bands, fanOut = false)
         .select(col("band"), col("key"),
           col("__id").as("bench_id"), col("__sig").as("sig_b")))
     banded(corpus, textCol, idCol, numHashes, bands)
@@ -568,14 +573,10 @@ object Dedup {
     * decontamination probe ever re-reads or re-signs the corpus. */
   def seedBandIndex(store: graft.store.TableStore, bandTable: String,
                     corpus: DataFrame, textCol: String, idCol: String,
-                    numHashes: Int = 64, bands: Int = 16,
-                    buckets: Int = 0): Unit = {
-    val rows = banded(corpus, textCol, idCol, numHashes, bands)
-      .select(col("band"), col("key"), col("__id").cast("long").as("id"))
-    if (store.exists(bandTable)) store.upsert(bandTable, rows, Seq("band", "key", "id"))
-    else store.overwrite(bandTable, rows,
-      primaryKeys = Seq("band", "key", "id"), buckets = buckets)
-  }
+                    numHashes: Int = 64, bands: Int = 16): Unit =
+    putSeed(store, bandTable, banded(corpus, textCol, idCol, numHashes, bands)
+      .select(col("band"), col("key"), col("__id").cast("long").as("id")),
+      Seq("band", "key", "id"))
 
   /** INCREMENTAL fuzzy decontamination: probe a NEW benchmark / eval
     * suite against the persisted corpus band index + signature store —
@@ -599,7 +600,7 @@ object Dedup {
                                     threshold: Double = 0.5): DataFrame = {
     // sign the suite once; two broadcast consumers
     val benchBands = Pins.pin(banded(benchmark, benchTextCol, benchIdCol,
-        numHashes, bands, fanOut = false) // probe-suite-sized by contract — no fan-out
+        numHashes, bands, fanOut = false)
       .select(col("band"), col("key"),
         col("__id").cast("long").as("bench_id"), col("__sig").as("sig_b")))
     val cand = store.read(bandTable)
@@ -622,17 +623,16 @@ object Dedup {
     * fingerprint store — the per-ingest form of [[exact]] at corpus scale,
     * where re-fingerprinting (or self-joining) 100 TB of already-ingested
     * corpus per arriving batch is exactly the cost to avoid. The store
-    * table (`fp BIGINT, first_id BIGINT`, PK `fp`, optionally bucketed)
-    * holds one row per distinct corpus fingerprint — ~16 bytes/doc, the
+    * table (`fp BIGINT, first_id BIGINT`, PK `fp`) holds one row per distinct corpus fingerprint — ~16 bytes/doc, the
     * only corpus-derived state the batch path ever reads.
     *
     * Topology: the store side STREAMS map-only — the batch's distinct
     * fingerprints (batch-sized) broadcast into a left-semi probe of the
     * store scan; the hit set (≤ batch-sized) broadcasts back onto the
     * batch; within-batch first-id resolution is a batch-sized window. The
-    * corpus is never shuffled and never re-hashed; survivors upsert
-    * through the store's bucketed 1-Exchange merge. Every shuffle in the
-    * plan is batch- or hit-sized (spec-asserted).
+    * corpus is never shuffled and never re-hashed; survivors upsert by
+    * PK ([[putSeed]]). Every shuffle of the probe is batch- or hit-sized
+    * (spec-asserted).
     *
     * Returns the batch plus `dup_of_corpus` (fingerprint already stored)
     * and `kept` (no corpus hit AND first id of its within-batch
@@ -641,8 +641,7 @@ object Dedup {
     * store is the memory. A first call on a missing table seeds it (no
     * corpus hits, every group-first row registers). */
   def exactIncremental(store: graft.store.TableStore, sigTable: String,
-                       batch: DataFrame, textCol: String, idCol: String,
-                       buckets: Int = 0): DataFrame = {
+                       batch: DataFrame, textCol: String, idCol: String): DataFrame = {
     val fp = batch.withColumn("__fp", TextStats.fingerprint(col(textCol)))
     val batchFps = fp.select(col("__fp")).distinct()
     val hits =
@@ -660,8 +659,7 @@ object Dedup {
       .withColumn("kept", !col("dup_of_corpus") && row_number().over(w) === 1))
     val survivors = flagged.where(col("kept"))
       .select(col("__fp").as("fp"), col(idCol).cast("long").as("first_id"))
-    if (store.exists(sigTable)) store.upsert(sigTable, survivors, Seq("fp"))
-    else store.overwrite(sigTable, survivors, primaryKeys = Seq("fp"), buckets = buckets)
+    putSeed(store, sigTable, survivors, Seq("fp"))
     flagged.drop("__fp", "__hit")
   }
 
@@ -671,43 +669,31 @@ object Dedup {
     * signature-parameter change). One signature row per doc, PK `id`. */
   def seedMinhashSignatures(store: graft.store.TableStore, sigTable: String,
                             corpus: DataFrame, textCol: String, idCol: String,
-                            numHashes: Int = 64, buckets: Int = 0,
-                            appendOnly: Boolean = false): Unit = {
-    // corpus-seed path: fan the kernel stage out (see withSignature doc)
-    val sigs = withSignature(corpus, textCol, numHashes, fanOutIdCol = Some(idCol))
-      .select(col(idCol).cast("long").as("id"), col("__sig").as("sig"))
-    putSeed(store, sigTable, sigs, buckets, appendOnly)
-  }
+                            numHashes: Int = 64, appendOnly: Boolean = false): Unit =
+    putSeed(store, sigTable,
+      withSignature(fannedOut(corpus, idCol, fanOut = true), textCol, numHashes)
+        .select(col(idCol).cast("long").as("id"), col("__sig").as("sig")),
+      appendOnly = appendOnly)
 
-  /** Shared seeder write: overwrite on first call; then FILE-LEVEL append
-    * (O(batch) per call — the streaming-ingest economics, duplicate rows
-    * tolerated by the probes) or PK upsert (idempotent, but a
-    * corpus-sized snapshot rewrite per call — the r13 measured trap). */
+  /** THE seed write of the dedup family: `rows` upsert by `pks`
+    * (idempotent, but a corpus-sized snapshot rewrite per call — the r13
+    * measured trap), or with `appendOnly` append FILE-LEVEL (O(batch) per
+    * call — the streaming-ingest economics; duplicate rows are tolerated by
+    * the probes). The store's commit creates a missing table with `pks`
+    * under its write lock, so two first writers cannot replace each other's
+    * rows. A table pre-created bucketed (`overwrite(…, buckets = n)`) takes
+    * the bucketed merge on upsert; appends refuse it. */
   private[graft] def putSeed(store: graft.store.TableStore, table: String,
-                             rows: DataFrame, buckets: Int,
-                             appendOnly: Boolean): Unit = {
-    require(!(appendOnly && buckets > 0),
-      "appendOnly seeding needs plain snapshots (buckets = 0)")
-    if (!store.exists(table))
-      store.overwrite(table, rows, primaryKeys = Seq("id"), buckets = buckets)
-    else if (appendOnly) store.appendFiles(table, rows)
-    else store.upsert(table, rows, Seq("id"))
-  }
+                             rows: DataFrame, pks: Seq[String] = Seq("id"),
+                             appendOnly: Boolean = false): Unit =
+    if (appendOnly) store.append(table, rows, pks) else store.upsert(table, rows, pks)
 
-  /** `fanOutIdCol`: corpus-SEED callers pass their id column so the
-    * tokenize/ngram/minhash kernel stage fans out off the (often
-    * single-split) scan before signing — the [[banded]] fan-out rationale
-    * (guide §2.5); probe-batch callers leave it None and stay map-only
-    * (the r15 q_decontam_inc lesson: fan-out on probe-sized frames is
-    * pure overhead). */
-  private[graft] def withSignature(df: DataFrame, textCol: String, numHashes: Int,
-                                   fanOutIdCol: Option[String] = None): DataFrame = {
-    fanOutIdCol.fold(df)(id => df.repartition(fanOutParts(df), col(id)))
-      .withColumn("__tokens", tokensCol(col(textCol)))
-      .withColumn("__gh", GraftFunctions.ngramHashes(col("__tokens"), 3))
+  /** `df` plus `__sig`, the MinHash signature of its 3-gram hashes. */
+  private[graft] def withSignature(df: DataFrame, textCol: String,
+                                   numHashes: Int): DataFrame =
+    kernelFrame(df, textCol, 3)
       .withColumn("__sig", GraftFunctions.minhashLong(col("__gh"), numHashes))
-      .drop("__tokens", "__gh")
-  }
+      .drop("__gh")
 
   /** One signature family as [[nearDupIncremental]] probes it — what the
     * minhash, simhash and embedding probes do NOT share:
@@ -779,7 +765,6 @@ object Dedup {
   private[graft] def nearDupIncremental(store: graft.store.TableStore,
                                         sigTable: String, signed: DataFrame,
                                         idCol: String, nd: NearDupSig,
-                                        buckets: Int,
                                         appendOnly: Boolean): DataFrame = {
     val bsig = Pins.pin(signed)
     val probeSide = Pairs.probeSide(bsig)
@@ -800,7 +785,7 @@ object Dedup {
       .withColumn("dup_of_corpus", coalesce(col("__cd"), lit(false)))
       .withColumn("kept", !col("dup_of_corpus") && coalesce(col("__bd"), lit(false)) === false))
     val kept = storedSchema(flagged.where(col("kept")), col("new_id"))
-    if (!kept.isEmpty) putSeed(store, sigTable, kept, buckets, appendOnly)
+    if (!kept.isEmpty) putSeed(store, sigTable, kept, appendOnly = appendOnly)
     flagged.drop("new_id" +: "__cd" +: "__bd" +: nd.sig.map(_._1): _*)
   }
 
@@ -809,10 +794,7 @@ object Dedup {
   private[graft] def minhashSig(numHashes: Int, bands: Int,
                                 threshold: Double): NearDupSig =
     NearDupSig(Seq("__sig" -> "sig"), Seq("band", "key"),
-      rows => rows
-        .select(col("id"), col("sig"),
-          explode(bandKeys(col("sig"), bands, numHashes / bands)).as("__b"))
-        .select(col("id"), col("sig"), col("__b.band").as("band"), col("__b.key").as("key")),
+      bandKeyed(_, col("id"), "sig", numHashes, bands),
       (x, y) => GraftFunctions.eqPositions(x("sig"), y("sig"))
         .cast("double") / lit(numHashes) >= threshold)
 
@@ -830,51 +812,45 @@ object Dedup {
   def minhashIncremental(store: graft.store.TableStore, sigTable: String,
                          batch: DataFrame, textCol: String, idCol: String,
                          numHashes: Int = 64, bands: Int = 16,
-                         threshold: Double = 0.8, buckets: Int = 0,
+                         threshold: Double = 0.8,
                          appendOnly: Boolean = false): DataFrame =
     nearDupIncremental(store, sigTable, withSignature(batch, textCol, numHashes),
-      idCol, minhashSig(numHashes, bands, threshold), buckets, appendOnly)
+      idCol, minhashSig(numHashes, bands, threshold), appendOnly)
 
   // ------------------------------------------------------------- simhash
 
-  /** 64-bit SimHash from a materialized token-hash array: per bit, sum ±1 by
-    * hash bit, sign → bit. One nested `aggregate` over the 64 bit positions;
-    * the size-guard doubles as the second reference keeping the hash array
-    * materialized (class doc). */
-  def simhashFromHashes(hashes: Column): Column =
-    when(size(hashes) > 0,
-      aggregate(sequence(lit(0), lit(63)), lit(0L), (acc, i) => {
-        val bitSum = aggregate(hashes, lit(0),
-          (s, h) => s + when(call_function("shiftright", h, i).bitwiseAND(1) === 1, 1).otherwise(-1))
-        acc + when(bitSum > 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))
-      })).otherwise(lit(0L))
-
-  /** Convenience column form (tokenizes inline — fine for one-off use). */
+  /** 64-bit SimHash of `text`: the [[graft.functions.SimHashSig]] kernel
+    * over its tokens (accents dropped) — bit i is set when more tokens'
+    * `xxhash64` have it set than not; 0 for no tokens. TextSimSpec keeps
+    * the readable nested-`aggregate` form as the kernel's reference. */
   def simhash(text: Column): Column =
-    simhashFromHashes(transform(tokensCol(text, keepAccents = false), t => xxhash64(t)))
+    GraftFunctions.simhash(tokensCol(text, keepAccents = false))
 
   /** Hamming distance between two 64-bit simhashes. */
   def hammingDist(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** Exploded (chunk, key) pigeonhole buckets of a 64-bit simhash under
-    * `maxHamming`: d+1 chunks, so any pair within Hamming distance d
-    * shares at least one EQUAL chunk — recall-complete candidate keys
-    * (Manku WWW'07), shared by [[simhashPairs]] and
-    * [[simhashIncremental]]. */
-  private def simhashChunks(sh: Column, maxHamming: Int): Column = {
+  /** `rows` keyed by the pigeonhole chunks of their 64-bit simhash `sh`
+    * under `maxHamming`: `(id, sh, chunk, key)`, d+1 rows per doc, so any
+    * pair within Hamming distance d shares at least one EQUAL chunk —
+    * recall-complete candidate keys (Manku WWW'07), shared by
+    * [[simhashPairs]] and [[simhashIncremental]]. */
+  private def simhashChunked(rows: DataFrame, id: String, sh: String,
+                             maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 16,
       s"maxHamming=$maxHamming out of range: chunk keys would be under 4 bits")
     val chunks = maxHamming + 1
     val base = 64 / chunks
     val widths = (0 until chunks).map(c => if (c < 64 % chunks) base + 1 else base)
     val offsets = widths.scanLeft(0)(_ + _)
-    explode(array((0 until chunks).map { c =>
+    val keys = array((0 until chunks).map { c =>
       // width 64 (maxHamming=0, exact-hash grouping): JVM shifts are
       // mod 64, so (1L<<64)-1 would be 0 — mask with all-ones instead
       val mask = if (widths(c) >= 64) -1L else (1L << widths(c)) - 1
       struct(lit(c).as("chunk"),
-        shiftright(sh, offsets(c)).bitwiseAND(lit(mask)).as("key"))
-    }: _*))
+        shiftright(col(sh), offsets(c)).bitwiseAND(lit(mask)).as("key"))
+    }: _*)
+    rows.select(col(id), col(sh), explode(keys).as("__c"))
+      .select(col(id), col(sh), col("__c.chunk"), col("__c.key"))
   }
 
   /** SimHash near-dup pairs: bucket by `maxHamming + 1` bit chunks — a doc
@@ -887,15 +863,10 @@ object Dedup {
     * Full distance is verified within buckets only. */
   def simhashPairs(df: DataFrame, textCol: String, idCol: String,
                    maxHamming: Int = 3): DataFrame = {
-    // fan the kernel off the scan (see banded)
-    val withSh = df.repartition(fanOutParts(df), col(idCol))
-      .withColumn("__sh",
-        GraftFunctions.simhash(tokensCol(col(textCol), keepAccents = false)))
+    val withSh = fannedOut(df, idCol, fanOut = true)
+      .withColumn("__sh", simhash(col(textCol)))
       .select(col(idCol).as("__id"), col("__sh"))
-    val chunked = withSh.select(col("__id"), col("__sh"),
-      simhashChunks(col("__sh"), maxHamming).as("__c"))
-      .select(col("__id"), col("__sh"), col("__c.chunk"), col("__c.key"))
-    Pairs.selfJoin(chunked, Seq("chunk", "key"), "__id", Seq("__sh" -> "sh"))
+    Pairs.selfJoin(simhashChunked(withSh, "__id", "__sh", maxHamming), Seq("chunk", "key"), "__id", Seq("__sh" -> "sh"))
       .select(col("id_a"), col("id_b"), hammingDist(col("sh_a"), col("sh_b")).as("hamming"))
       // filter before the pair-dedup (hamming is pair-pure; see minhashPairs)
       .where(col("hamming") <= maxHamming)
@@ -908,14 +879,10 @@ object Dedup {
     * [[seedMinhashSignatures]]). One row per doc, PK `id`. */
   def seedSimhashes(store: graft.store.TableStore, shTable: String,
                     corpus: DataFrame, textCol: String, idCol: String,
-                    buckets: Int = 0, appendOnly: Boolean = false): Unit = {
-    // corpus-seed path: fan the simhash kernel off the (often
-    // single-split) scan — the withSignature fan-out rationale (r16)
-    val rows = corpus.repartition(fanOutParts(corpus), col(idCol))
-      .select(col(idCol).cast("long").as("id"),
-        GraftFunctions.simhash(tokensCol(col(textCol), keepAccents = false)).as("sh"))
-    putSeed(store, shTable, rows, buckets, appendOnly)
-  }
+                    appendOnly: Boolean = false): Unit =
+    putSeed(store, shTable, fannedOut(corpus, idCol, fanOut = true)
+      .select(col(idCol).cast("long").as("id"), simhash(col(textCol)).as("sh")),
+      appendOnly = appendOnly)
 
   /** SimHash INCREMENTAL near-dedup: flag a new batch against the
     * persisted per-doc simhash store ([[seedSimhashes]]) — the
@@ -934,18 +901,14 @@ object Dedup {
     * Returns the batch plus `dup_of_corpus` and `kept`. */
   def simhashIncremental(store: graft.store.TableStore, shTable: String,
                          batch: DataFrame, textCol: String, idCol: String,
-                         maxHamming: Int = 3, buckets: Int = 0,
+                         maxHamming: Int = 3,
                          appendOnly: Boolean = false): DataFrame =
-    nearDupIncremental(store, shTable,
-      batch.withColumn("__sh",
-        GraftFunctions.simhash(tokensCol(col(textCol), keepAccents = false))),
+    nearDupIncremental(store, shTable, batch.withColumn("__sh", simhash(col(textCol))),
       idCol,
       NearDupSig(Seq("__sh" -> "sh"), Seq("chunk", "key"),
-        rows => rows
-          .select(col("id"), col("sh"), simhashChunks(col("sh"), maxHamming).as("__c"))
-          .select(col("id"), col("sh"), col("__c.chunk").as("chunk"), col("__c.key").as("key")),
+        simhashChunked(_, "id", "sh", maxHamming),
         (x, y) => hammingDist(x("sh"), y("sh")) <= maxHamming),
-      buckets, appendOnly)
+      appendOnly)
 
   // ----------------------------------------------------- n-gram jaccard
 
@@ -969,27 +932,65 @@ object Dedup {
     * ≤ 0 to disable the check entirely. The guard costs one extra
     * aggregation job over the gram stream (wordcount-shaped, collected as
     * ONE row — an AQE-style runtime-statistics decision, not data on the
-    * driver). */
-  private def guardCandidateVolume(dfTab: DataFrame, perPosting: Long,
-                                   caller: String): Unit = {
-    if (perPosting <= 0) return
-    val row = dfTab.agg(
-      sum(col("__df")).cast("double").as("postings"),
-      // df² through DOUBLE: the guard needs magnitude, not exactness, and
-      // long df² overflows (ANSI-errors) past df ≈ 3·10⁹
-      sum(col("__df").cast("double") * col("__df")).as("sum_df2")).head()
-    if (row.isNullAt(0)) return // empty corpus — nothing to guard
-    val postings = row.getDouble(0)
-    val sumDf2 = row.getDouble(1)
-    require(sumDf2 <= perPosting.toDouble * postings,
-      f"$caller: predicted candidate volume Σdf² = $sumDf2%.3g exceeds " +
-        f"$perPosting × postings ($postings%.3g) — this corpus is gram-" +
-        "saturated and the exact all-pairs join would go quadratic at " +
-        "scale. Use the banded production paths (minhashVerifiedPairs / " +
-        "containmentVerifiedPairs, linear by construction) and keep the " +
-        "exact form for verifier-grade spot checks; to proceed anyway, " +
-        "raise maxCandidatesPerPosting (or set it <= 0 to disable).")
+    * driver).
+    *
+    * The one candidate-volume `require` of the dedup family: `volume`
+    * gives `(predicted candidates, postings)`, or None when there is
+    * nothing to guard, and is only evaluated for a positive `perPosting`.
+    * `what` names the prediction, `advice` the way out. */
+  private def guardCandidateVolume(caller: String, perPosting: Long, what: String,
+                                   advice: String)(volume: => Option[(Double, Double)]): Unit =
+    if (perPosting > 0) volume.foreach { case (predicted, postings) =>
+      require(predicted <= perPosting.toDouble * postings,
+        f"$caller: predicted $what $predicted%.3g exceeds $perPosting × " +
+          f"postings ($postings%.3g) — $advice")
+    }
+
+  /** The rare-first prefix block of the exact containment / Jaccard
+    * generators. `prepped` `(id, __gh)` explodes to `grams` `(id, __sz,
+    * key)`; `withDf` gives each gram row its document frequency `__df`; the
+    * prefix keeps each id's `p = |G| − ⌈t·|G|⌉ + 1` rows rarest under
+    * (`__df`, key) — the global order invariant 9 requires. Returns
+    * `(grams, prefix)`. */
+  private def rareFirstPrefix(prepped: DataFrame, id: String, key: String,
+                              threshold: Double)(
+      withDf: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val grams = prepped.select(col(id), size(col("__gh")).as("__sz"), explode(col("__gh")).as(key))
+    // the 1e-9 slack keeps exact-boundary sizes on the safe side of
+    // ceil when threshold·sz overshoots its decimal value in binary
+    // (e.g. 0.55·20 = 11.000000000000002 would ceil to 12 and shave
+    // one element off the safe prefix)
+    val prefixLen = greatest(
+      col("__sz") - ceil(lit(threshold) * col("__sz") - 1e-9).cast("int") + 1, lit(1))
+    val rankW = Window.partitionBy(col(id)).orderBy(col("__df"), col(key))
+    (grams, withDf(grams).withColumn("__rn", row_number().over(rankW)).where(col("__rn") <= prefixLen))
   }
+
+  /** [[rareFirstPrefix]] of a corpus against itself: `(__id, __sz, __key)`
+    * grams, df counted over them (NgramHashes output is distinct per doc,
+    * so count(*) per gram IS the document frequency) after the Σdf²
+    * volume guard. */
+  private def corpusPrefix(prepped: DataFrame, threshold: Double, perPosting: Long,
+                           caller: String): (DataFrame, DataFrame) =
+    rareFirstPrefix(prepped, "__id", "__key", threshold) { grams =>
+      val dfTab = grams.groupBy("__key").agg(count(lit(1)).as("__df"))
+      guardCandidateVolume(caller, perPosting, "candidate volume Σdf² =",
+        "this corpus is gram-saturated and the exact all-pairs join would go " +
+          "quadratic at scale. Use the banded production paths " +
+          "(minhashVerifiedPairs / containmentVerifiedPairs, linear by " +
+          "construction) and keep the exact form for verifier-grade spot " +
+          "checks; to proceed anyway, raise maxCandidatesPerPosting (or set " +
+          "it <= 0 to disable).") {
+        val row = dfTab.agg(
+          sum(col("__df")).cast("double").as("postings"),
+          // df² through DOUBLE: the guard needs magnitude, not exactness,
+          // and long df² overflows (ANSI-errors) past df ≈ 3·10⁹
+          sum(col("__df").cast("double") * col("__df")).as("sum_df2")).head()
+        // an empty corpus has nothing to guard
+        if (row.isNullAt(0)) None else Some((row.getDouble(1), row.getDouble(0)))
+      }
+      grams.join(dfTab, Seq("__key"))
+    }
 
   /** ALL pairs with exact n-gram Jaccard ≥ `threshold` — candidate
     * generation by PREFIX FILTERING (Bayardo/Ma/Srikant, "Scaling Up All
@@ -1031,36 +1032,16 @@ object Dedup {
                         n: Int = 3, threshold: Double = 0.5,
                         maxCandidatesPerPosting: Long = 64): DataFrame = {
     // ONE kernel pass, fanned out and materialized ([[preppedKernelFrame]]):
-    // the id repartition lifts tokenize+ngram off the scan (single-row-group
-    // inputs would serialize them — see banded), and the eager
-    // localCheckpoint runs the kernels ONCE so the df-table, prefix and
-    // verify subtrees read the compact (id, grams) table instead of
-    // re-tokenizing per subtree (measured r15 at sf0.1: 4 single-threaded
-    // kernel passes — guard histogram + grams + dfTab + arrays — were
-    // ~4.0 s of this entry's 4.3 s; post-change one parallel pass). The
-    // materialization is O(corpus grams) — the same rows the arrays
-    // exchange already shuffles — and recomputes per call (no cross-run
-    // state).
+    // the df-table, prefix and verify subtrees read the compact (id, grams)
+    // table instead of re-tokenizing per subtree (measured r15 at sf0.1: 4
+    // single-threaded kernel passes — guard histogram + grams + dfTab +
+    // arrays — were ~4.0 s of this entry's 4.3 s; post-change one parallel
+    // pass). The materialization is O(corpus grams) — the same rows the
+    // arrays exchange already shuffles.
     val prepped = preppedKernelFrame(df, textCol, idCol, n)
-    // (id, sz, gram) scalar stream; NgramHashes output is distinct per doc,
-    // so count(*) per gram IS the document frequency
-    val grams = prepped
-      .select(col("__id"), size(col("__gh")).as("__sz"),
-        explode(col("__gh")).as("__key"))
-    val dfTab = grams.groupBy("__key").agg(count(lit(1)).as("__df"))
-    guardCandidateVolume(dfTab, maxCandidatesPerPosting, "ngramJaccardPairs")
-    // the 1e-9 slack keeps exact-boundary sizes on the safe side of
-    // ceil when threshold·sz overshoots its decimal value in binary
-    // (e.g. 0.55·20 = 11.000000000000002 would ceil to 12 and shave
-    // one element off the safe prefix)
-    val prefixLen = greatest(
-      col("__sz") - ceil(lit(threshold) * col("__sz") - 1e-9).cast("int") + 1,
-      lit(1))
-    val rankW = Window.partitionBy(col("__id")).orderBy(col("__df"), col("__key"))
-    val keys = grams.join(dfTab, Seq("__key"))
-      .withColumn("__rn", row_number().over(rankW))
-      .where(col("__rn") <= prefixLen)
-      .select(col("__key"), col("__id"), col("__sz"))
+    val (_, prefix) = corpusPrefix(prepped, threshold, maxCandidatesPerPosting,
+      "ngramJaccardPairs")
+    val keys = prefix.select(col("__key"), col("__id"), col("__sz"))
     val cand = Pairs.selfJoin(keys, Seq("__key"), "__id", Seq("__sz" -> "sz"))
       // size filter: J ≥ t ⟹ t·max(|A|,|B|) ≤ min(|A|,|B|); the 1e-9
       // slack keeps exact-boundary pairs (binary overshoot of t·sz)
@@ -1139,20 +1120,8 @@ object Dedup {
                        maxCandidatesPerPosting: Long = 64): DataFrame = {
     // one fanned-out kernel pass, materialized (see ngramJaccardPairs)
     val prepped = preppedKernelFrame(df, textCol, idCol, n)
-    val grams = prepped
-      .select(col("__id"), size(col("__gh")).as("__sz"),
-        explode(col("__gh")).as("__key"))
-    val dfTab = grams.groupBy("__key").agg(count(lit(1)).as("__df"))
-    guardCandidateVolume(dfTab, maxCandidatesPerPosting, "containmentPairs")
-    // 1e-9 slack: binary overshoot of t·sz must not ceil past the exact
-    // decimal value and shave an element off the safe prefix
-    val prefixLen = greatest(
-      col("__sz") - ceil(lit(threshold) * col("__sz") - 1e-9).cast("int") + 1,
-      lit(1))
-    val rankW = Window.partitionBy(col("__id")).orderBy(col("__df"), col("__key"))
-    val probe = grams.join(dfTab, Seq("__key"))
-      .withColumn("__rn", row_number().over(rankW))
-      .where(col("__rn") <= prefixLen)
+    val (grams, probe) = corpusPrefix(prepped, threshold, maxCandidatesPerPosting,
+      "containmentPairs")
     // probe prefixes against the index of ALL grams, both directions
     val cand = Pairs.bucketJoin(probe, grams, Seq("__key"), "__id",
         Seq("__sz" -> "sz"), ordered = true)
@@ -1259,14 +1228,11 @@ object Dedup {
       .orderBy("__df").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val postings = hist.iterator.map { case (d, k, _, _) => d * k }.sum
-    val budget = math.max(candidateBudgetPerPosting * postings, minCandidateBudget)
-    var cum = 0L
-    var effCap = if (hist.nonEmpty) hist.head._1 else 1L // rarest df always posts
-    hist.foreach { case (d, k, _, _) =>
-      cum += d * d * k
-      if (cum <= budget && d <= dfCap) effCap = math.max(effCap, d)
-    }
-    val capped = math.min(effCap, dfCap)
+    // candidate volume of a df row: each of its k keys pairs its d holders;
+    // the rarest df always posts
+    val capped = adaptiveCap(hist.toSeq.map { case (d, k, _, _) => (d, k) }, (d, k) => d * d * k,
+      math.max(candidateBudgetPerPosting * postings, minCandidateBudget), dfCap,
+      floor = hist.headOption.fold(1L)(_._1))
     // a key posted once pairs with nothing: its posting would carry an
     // array into the bucket for no candidate
     val kept = hist.toSeq.collect { case (d, k, g, _) if d >= 2 && d <= capped => (d, k, g) }
@@ -1299,6 +1265,17 @@ object Dedup {
       cand.select("id_a", "id_b").distinct(), prepped, "__id", "__gh"), "g_a", "g_b", threshold)
       .select("id_a", "id_b", "containment")
     if (carry) pairs.distinct() else pairs
+  }
+
+  /** The adaptive df cap: walking `hist` — `(df, keys)` rows in ascending
+    * df — the largest df whose cumulative `volume` fits `budget`, never
+    * above `dfCap`, never below `floor` (then cut to `dfCap`). */
+  private def adaptiveCap(hist: Seq[(Long, Long)], volume: (Long, Long) => Long,
+                          budget: Long, dfCap: Long, floor: Long): Long = {
+    val cum = hist.scanLeft(0L) { case (c, (d, k)) => c + volume(d, k) }.tail
+    math.min(hist.zip(cum).foldLeft(floor) { case (cap, ((d, _), c)) =>
+      if (c <= budget && d <= dfCap) math.max(cap, d) else cap
+    }, dfCap)
   }
 
   /** MEASURED recall of the two banded production candidate generators
@@ -1363,8 +1340,7 @@ object Dedup {
 
   /** Seed the persisted CONTAINMENT index for
     * [[containmentIncremental]]: three corpus-derived tables —
-    * `postingsTable (gram, id, sz)` (PK (gram, id); the inverted index,
-    * bucketed by gram so probes are partition-prunable),
+    * `postingsTable (gram, id, sz)` (PK (gram, id); the inverted index),
     * `dfTable (gram, df)` (vocab-sized; the global rare-first prefix
     * order without touching the postings), and
     * `gramsTable (id, grams, sz)` (PK id; the sorted gram arrays exact
@@ -1390,18 +1366,9 @@ object Dedup {
   def seedGramIndex(store: graft.store.TableStore, postingsTable: String,
                     dfTable: String, gramsTable: String,
                     corpus: DataFrame, textCol: String, idCol: String,
-                    n: Int = 3, buckets: Int = 0,
-                    appendOnly: Boolean = false): Unit = {
-    // one fanned-out kernel pass (see seedContainmentTables): the
-    // repartition lifts tokenize+ngram off the (often single-split) scan
-    val prepped = corpus.repartition(fanOutParts(corpus), col(idCol))
-      .withColumn("__tokens", tokensCol(col(textCol)))
-      .select(col(idCol).cast("long").as("id"),
-        GraftFunctions.ngramHashes(col("__tokens"), n).as("grams"))
-      .withColumn("sz", size(col("grams")))
+                    n: Int = 3, appendOnly: Boolean = false): Unit =
     seedContainmentTables(store, postingsTable, dfTable, gramsTable,
-      prepped, keysCol = "grams", "gram", buckets, appendOnly)
-  }
+      corpus, textCol, idCol, n, w = 0, "gram", appendOnly)
 
   /** Seed the persisted WINNOWED containment index for
     * [[containmentIncrementalBanded]]: the banded sibling of
@@ -1422,54 +1389,42 @@ object Dedup {
   def seedWinnowIndex(store: graft.store.TableStore, fpTable: String,
                       dfTable: String, gramsTable: String,
                       corpus: DataFrame, textCol: String, idCol: String,
-                      n: Int = 3, w: Int = 8, buckets: Int = 0,
-                      appendOnly: Boolean = false): Unit = {
-    // one fanned-out kernel pass (see seedContainmentTables)
-    val prepped = corpus.repartition(fanOutParts(corpus), col(idCol))
-      .withColumn("__tokens", tokensCol(col(textCol)))
-      .select(col(idCol).cast("long").as("id"),
-        GraftFunctions.ngramHashes(col("__tokens"), n).as("grams"),
-        GraftFunctions.winnowHashes(col("__tokens"), n, w).as("__keys"))
-      .withColumn("sz", size(col("grams")))
+                      n: Int = 3, w: Int = 8,
+                      appendOnly: Boolean = false): Unit =
     seedContainmentTables(store, fpTable, dfTable, gramsTable,
-      prepped, keysCol = "__keys", "fp", buckets, appendOnly)
-  }
+      corpus, textCol, idCol, n, w, "fp", appendOnly)
 
-  /** Shared seeding body of [[seedGramIndex]] / [[seedWinnowIndex]]:
-    * postings = `__keys` exploded under `keyName`, df delta-merged by
-    * sum, gram arrays upserted/appended by id. Through a txn view each of
+  /** Shared seeding body of [[seedGramIndex]] (`w = 0`: every gram posts)
+    * / [[seedWinnowIndex]] (`w > 0`: winnow fingerprints post): one
+    * fanned-out kernel pass; postings = the keys exploded under `keyName`,
+    * df delta-merged by sum, gram arrays upserted/appended by id
+    * ([[putSeed]]). Through a txn view each of
     * the three writes applies at most once per batch: a replayed seeding
     * would otherwise inflate df by one batch, and the winnow index's df
     * CAP is recall-bearing (an inflated fingerprint df can cross
     * dfCap/effCap and silently lose pairs). */
   private def seedContainmentTables(store: graft.store.TableStore,
                                     postingsTable: String, dfTable: String,
-                                    gramsTable: String, prepped: DataFrame,
-                                    keysCol: String,
-                                    keyName: String, buckets: Int,
+                                    gramsTable: String, corpus: DataFrame,
+                                    textCol: String, idCol: String, n: Int,
+                                    w: Int, keyName: String,
                                     appendOnly: Boolean): Unit = Pins.scoped {
-    require(!(appendOnly && buckets > 0),
-      "appendOnly seeding needs plain snapshots (buckets = 0): bucketed " +
-        "layouts carry catalog file metadata that file appends would skew")
     // ONE materialized kernel pass: seeding issues THREE write actions
     // (postings, df, gram arrays), and without the pin each action re-ran
     // tokenize + NgramHashes (+ WinnowHashes) over the whole batch —
     // measured r15 at sf0.1 (q_dedup_inc_containment event log): three
     // single-task corpus passes of 0.69/0.55/0.27 s per seeding call. The
-    // callers fan the kernel out first (explicit-count repartition on id,
-    // AQE-coalescing-exempt), so the one pass is also parallel. The pin is
-    // batch-sized (the same rows the gram-array write persists) and lives
-    // only for this call's scope: a per-trigger streaming seeder would
+    // pin is batch-sized (the same rows the gram-array write persists) and
+    // lives only for this call's scope: a per-trigger streaming seeder would
     // otherwise accumulate batch-sized pinned blocks across a long ingest.
-    val mat = Pins.pin(prepped)
+    val keysCol = if (w > 0) "__keys" else "grams"
+    val mat = Pins.pin(kernelFrame(fannedOut(corpus, idCol, fanOut = true), textCol, n, w)
+      .select(col(idCol).cast("long").as("id") +: col("__gh").as("grams") +:
+        (if (w > 0) Seq(col("__fp").as("__keys")) else Nil): _*)
+      .withColumn("sz", size(col("grams"))))
     val postings = mat
       .select(explode(col(keysCol)).as(keyName), col("id"), col("sz"))
-    def put(table: String, rows: DataFrame, pks: Seq[String]): Unit =
-      if (!store.exists(table))
-        store.overwrite(table, rows, primaryKeys = pks, buckets = buckets)
-      else if (appendOnly) store.appendFiles(table, rows)
-      else store.upsert(table, rows, pks)
-    put(postingsTable, postings, Seq(keyName, "id"))
+    putSeed(store, postingsTable, postings, Seq(keyName, "id"), appendOnly)
     // df must DELTA-MERGE (sum), never PK-replace: an upsert would reset a
     // corpus-wide key's df to its count in the latest batch, hot keys
     // would rank as rare, enter prefixes (or dodge the winnow df cap),
@@ -1479,13 +1434,12 @@ object Dedup {
     // merged table is vocab-sized, so the per-batch rewrite is bounded by
     // the vocabulary, not the corpus.
     val batchDf = postings.groupBy(keyName).agg(count(lit(1)).as("df"))
-    if (store.exists(dfTable))
-      store.overwrite(dfTable,
-        store.read(dfTable).unionByName(batchDf)
-          .groupBy(keyName).agg(sum("df").as("df")))
-    else store.overwrite(dfTable, batchDf,
-      primaryKeys = Seq(keyName), buckets = buckets)
-    put(gramsTable, mat.select("id", "grams", "sz"), Seq("id"))
+    store.overwrite(dfTable,
+      if (store.exists(dfTable))
+        store.read(dfTable).unionByName(batchDf).groupBy(keyName).agg(sum("df").as("df"))
+      else batchDf,
+      primaryKeys = Seq(keyName))
+    putSeed(store, gramsTable, mat.select("id", "grams", "sz"), appendOnly = appendOnly)
   }
 
   /** INCREMENTAL containment probe: flag each document of a NEW batch
@@ -1523,51 +1477,35 @@ object Dedup {
                              n: Int = 3, threshold: Double = 0.8,
                              maxProbeCandidatesPerPosting: Long = 64): DataFrame = {
     val gramsStore = store.read(gramsTable)
-    val prepped = Pins.pin(batch
-      .withColumn("__tokens", tokensCol(col(textCol)))
-      .select(col(idCol).cast("long").as("probe_id"),
-        GraftFunctions.ngramHashes(col("__tokens"), n).as("__gh")))
+    val prepped = Pins.pin(kernelFrame(batch, textCol, n)
+      .select(col(idCol).cast("long").as("probe_id"), col("__gh")))
     val probeSide = Pairs.probeSide(prepped)
-    val probeGrams = prepped
-      .select(col("probe_id"), size(col("__gh")).as("__sz"),
-        explode(col("__gh")).as("gram"))
-    val dfs = store.read(dfTable)
-      .join(probeSide(probeGrams.select("gram").distinct()), Seq("gram"))
-    val prefixLen = greatest(
-      col("__sz") - ceil(lit(threshold) * col("__sz") - 1e-9).cast("int") + 1,
-      lit(1))
-    val rankW = Window.partitionBy(col("probe_id"))
-      .orderBy(col("__df"), col("gram"))
-    val prefixAll = probeGrams.join(probeSide(dfs), Seq("gram"), "left")
-      .withColumn("__df", coalesce(col("df"), lit(0L)))
-      .withColumn("__rn", row_number().over(rankW))
-      .where(col("__rn") <= prefixLen)
-    // PROBE-SIDE candidate-volume guard (the guardCandidateVolume twin,
-    // found the hard way at sf10: a 100k-doc trigger against a 400k-doc
-    // saturated corpus predicted 2.34B candidates — ~200 per batch gram
-    // posting vs 17 at sf1 — and ENOSPC'd a >70 GB spill before this
-    // guard existed). The prediction is EXACT for the pre-dedup
-    // candidate stream: Σ df over the chosen prefix grams, one
-    // batch-sized aggregate; the budget is per batch gram posting, so
-    // it is scale-free in the batch and trips only when the CORPUS is
-    // gram-saturated enough that the recall-complete probe cannot stay
-    // linear (the r9/r10 data-bound term).
-    if (maxProbeCandidatesPerPosting > 0) {
-      val row = prefixAll
-        .agg(sum(col("__df")).cast("double").as("cand")).head()
-      if (!row.isNullAt(0)) {
-        val predicted = row.getDouble(0)
-        val postings = prepped
-          .agg(sum(size(col("__gh"))).cast("double")).head().getDouble(0)
-        require(predicted <= maxProbeCandidatesPerPosting * postings,
-          f"containmentIncremental: predicted probe candidate volume " +
-            f"$predicted%.3g exceeds $maxProbeCandidatesPerPosting × batch " +
-            f"postings ($postings%.3g) — the corpus is gram-saturated and " +
-            "the recall-complete probe would spill at scale. Shrink the " +
-            "batch (volume is linear in batch size), verify a bounded " +
-            "slice with containmentVerifiedPairs, or raise " +
-            "maxProbeCandidatesPerPosting (<= 0 disables).")
-      }
+    // grams unseen in the corpus take df 0
+    val (_, prefixAll) = rareFirstPrefix(prepped, "probe_id", "gram", threshold) { grams =>
+      val dfs = store.read(dfTable)
+        .join(probeSide(grams.select("gram").distinct()), Seq("gram"))
+      grams.join(probeSide(dfs), Seq("gram"), "left")
+        .withColumn("__df", coalesce(col("df"), lit(0L)))
+    }
+    // PROBE-SIDE candidate-volume guard (found the hard way at sf10: a
+    // 100k-doc trigger against a 400k-doc saturated corpus predicted 2.34B
+    // candidates — ~200 per batch gram posting vs 17 at sf1 — and ENOSPC'd
+    // a >70 GB spill before this guard existed). The prediction is EXACT
+    // for the pre-dedup candidate stream: Σ df over the chosen prefix
+    // grams, one batch-sized aggregate; the budget is per batch gram
+    // posting, so it is scale-free in the batch and trips only when the
+    // CORPUS is gram-saturated enough that the recall-complete probe
+    // cannot stay linear (the r9/r10 data-bound term).
+    guardCandidateVolume("containmentIncremental", maxProbeCandidatesPerPosting,
+      "probe candidate volume", "the corpus is gram-saturated and the " +
+        "recall-complete probe would spill at scale. Shrink the batch (volume " +
+        "is linear in batch size), verify a bounded slice with " +
+        "containmentVerifiedPairs, or raise maxProbeCandidatesPerPosting " +
+        "(<= 0 disables).") {
+      val row = prefixAll.agg(sum(col("__df")).cast("double").as("cand")).head()
+      if (row.isNullAt(0)) None
+      else Some((row.getDouble(0),
+        prepped.agg(sum(size(col("__gh"))).cast("double")).head().getDouble(0)))
     }
     containmentProbeTail(store.read(postingsTable), "gram",
       prefixAll.select(col("gram"), col("probe_id"), col("__sz")),
@@ -1647,11 +1585,8 @@ object Dedup {
                                    candidateBudgetPerPosting: Long = 8,
                                    minCandidateBudget: Long = 2000000L): DataFrame = {
     val gramsStore = store.read(gramsTable)
-    val prepped = Pins.pin(batch
-      .withColumn("__tokens", tokensCol(col(textCol)))
-      .select(col(idCol).cast("long").as("probe_id"),
-        GraftFunctions.ngramHashes(col("__tokens"), n).as("__gh"),
-        GraftFunctions.winnowHashes(col("__tokens"), n, w).as("__fp")))
+    val prepped = Pins.pin(kernelFrame(batch, textCol, n, w)
+      .select(col(idCol).cast("long").as("probe_id"), col("__gh"), col("__fp")))
     val probeSide = Pairs.probeSide(prepped)
     val batchFps = prepped
       .select(col("probe_id"), size(col("__gh")).as("__sz"),
@@ -1667,19 +1602,13 @@ object Dedup {
     // cap c is exactly Σ_{df ≤ c} df·k (each batch fp posting meets all
     // df corpus holders), so the cut keeps the probe linear in the batch
     val hist = withDf.groupBy("__df").agg(count(lit(1)).as("__k"))
-      .orderBy("__df").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val nPostings = hist.iterator.map(_._2).sum
-    val budget = math.max(candidateBudgetPerPosting * nPostings, minCandidateBudget)
-    var cum = 0L
+      .orderBy("__df").collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
     // rarest POSITIVE df always probes (under the hard ceiling; df 0 =
     // unseen fingerprints, free either way) — worst case k·dfCap, still
     // batch-bounded
-    var effCap = hist.iterator.map(_._1).filter(d => d > 0 && d <= dfCap)
-      .nextOption().getOrElse(0L)
-    hist.foreach { case (d, k) =>
-      cum += d * k
-      if (cum <= budget && d <= dfCap) effCap = math.max(effCap, d)
-    }
+    val effCap = adaptiveCap(hist, (d, k) => d * k,
+      math.max(candidateBudgetPerPosting * hist.iterator.map(_._2).sum, minCandidateBudget),
+      dfCap, floor = hist.iterator.map(_._1).find(d => d > 0 && d <= dfCap).getOrElse(0L))
     containmentProbeTail(store.read(fpTable), "fp",
       withDf.where(col("__df") <= effCap).select(col("fp"), col("probe_id"), col("__sz")),
       gramsStore, prepped, threshold, probeSide)
@@ -1778,11 +1707,9 @@ object Dedup {
     * projection barrier alone does NOT stop). */
   def docNovelty(df: DataFrame, textCol: String, idCol: String,
                  n: Int = 3): DataFrame = {
-    val pairs = df.select(col(idCol), col(textCol))
-      .withColumn("__tokens", tokensCol(col(textCol)))
-      .select(col(idCol),
-        explode(GraftFunctions.ngramHashes(col("__tokens"), n))
-          .as("__gram"))
+    val pairs = kernelFrame(df.select(col(idCol), col(textCol)), textCol, n,
+        explodeAs = Some("__gram"))
+      .select(col(idCol), col("__gram"))
     val first = pairs.groupBy(col("__gram"))
       .agg(min(col(idCol)).as("__first"))
     pairs.join(first, Seq("__gram"))
@@ -1837,11 +1764,9 @@ object Dedup {
                         n: Int = 3): DataFrame = {
     // native gram-hash kernel for the same reasons as [[docNovelty]]:
     // identity-only consumers + immunity to the Generate-filter inlining
-    val grams = df.select(col(groupCol), col(textCol))
-      .withColumn("__tokens", tokensCol(col(textCol)))
-      .select(col(groupCol),
-        explode(GraftFunctions.ngramHashes(col("__tokens"), n))
-          .as("__gram"))
+    val grams = kernelFrame(df.select(col(groupCol), col(textCol)), textCol, n,
+        explodeAs = Some("__gram"))
+      .select(col(groupCol), col("__gram"))
       .distinct()
     val totals = grams.groupBy(col(groupCol)).agg(count(lit(1)).as("__n"))
     val shared = grams.select(col(groupCol).as("group_a"), col("__gram"))

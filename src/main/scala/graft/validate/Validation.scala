@@ -125,8 +125,7 @@ object Validation {
     val row = spark.createDataFrame(
       java.util.List.of(org.apache.spark.sql.Row(tableName, validation, passed, detail, executedAt)),
       summarySchema)
-    if (store.exists(logTable)) store.append(logTable, row)
-    else store.overwrite(logTable, row, primaryKeys = Seq("table_name", "validation", "executed_at"))
+    store.append(logTable, row, primaryKeys = Seq("table_name", "validation", "executed_at"))
   }
 
   /** Column profile — the data-quality snapshot a monitor stores per

@@ -164,6 +164,21 @@ class StoreSpec extends AnyFunSuite {
     assert(d == Map(2L -> "updated", 3L -> "removed", 4L -> "added")) // pk=1 silent
   }
 
+  test("append: a first write with keys commits the meta overwrite would; " +
+      "later appends keep the keys diffVersions reads") {
+    val store = freshStore()
+    val rows = Seq((1L, "a"), (2L, "b")).toDF("pk", "v")
+    store.append("ap", rows, primaryKeys = Seq("pk"))
+    store.overwrite("ow", rows, primaryKeys = Seq("pk"))
+    assert(store.meta("ap").isDefined && store.meta("ap") == store.meta("ow"))
+    store.append("ap", Seq((3L, "c")).toDF("pk", "v"))
+    assert(store.meta("ap").get.primaryKeys == Seq("pk"))
+    assert(store.read("ap").count() == 3)
+    val d = store.diffVersions("ap", 0, 1)
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(d == Map(3L -> "added"))
+  }
+
   test("upsert evolves schema by null-padding new columns") {
     val store = freshStore()
     store.overwrite("e", Seq((1, 1.0)).toDF("pk", "a"), primaryKeys = Seq("pk"))

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.text.{Dedup, Packing, TextStats}
@@ -128,6 +129,35 @@ class TextSimSpec extends AnyFunSuite {
     assert(sh(1L) == sh(2L))
     assert(java.lang.Long.bitCount(sh(1L) ^ sh(3L)) <= 12)
     assert(java.lang.Long.bitCount(sh(1L) ^ sh(4L)) > 12)
+  }
+
+  /** Readable reference form of the SimHash kernel: per bit, sum ±1 by
+    * token-hash bit, sign → bit. One nested `aggregate` over the 64 bit
+    * positions (the form the native kernel replaced). */
+  private def simhashFromHashes(hashes: Column): Column =
+    when(size(hashes) > 0,
+      aggregate(sequence(lit(0), lit(63)), lit(0L), (acc, i) => {
+        val bitSum = aggregate(hashes, lit(0),
+          (s, h) => s + when(call_function("shiftright", h, i).bitwiseAND(1) === 1, 1).otherwise(-1))
+        acc + when(bitSum > 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))
+      })).otherwise(lit(0L))
+
+  test("Dedup.simhash kernel ≡ the nested-aggregate reference on a seeded corpus") {
+    val rnd = new scala.util.Random(12)
+    val vocab = Seq("the", "quick", "fox", "árbol", "niño", "Ünïcode", "x", "42",
+      "punct!", "zorro", "a-b", "ÉTÉ")
+    val texts = Seq("", "   ", "t", "ñ", "Ünïcode", "one", "  Mixed CASE  gaps ") ++
+      (1 to 200).map(_ => Seq.fill(1 + rnd.nextInt(30))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+    val ref = simhashFromHashes(transform(
+      Dedup.tokensColReference(col("text"), keepAccents = false), t => xxhash64(t)))
+    val got = df.select(col("id"), Dedup.simhash(col("text")).as("k"), ref.as("r"))
+      .as[(Long, Long, Long)].collect()
+    assert(got.length == texts.length)
+    got.foreach { case (id, k, r) => assert(k == r, s"text '${texts(id.toInt)}'") }
+    // null text: the kernel propagates null (the reference folds it to 0)
+    assert(Seq[String](null).toDF("text").select(Dedup.simhash(col("text")))
+      .head().isNullAt(0))
   }
 
   test("ngram jaccard pairs: exact dup scores 1.0") {
@@ -1539,5 +1569,40 @@ class TextSimSpec extends AnyFunSuite {
     assert(a == b)
     // every pair appears once with group_a < group_b
     assert(a.forall(r => r.getString(0) < r.getString(1)))
+  }
+
+  test("one kernel prep: gram-hash kernels, the fan-out, band-key explodes and " +
+      "the simhash of text appear only in their one Dedup helper") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root (no $root)")
+    val dedup = root.resolve("graft/text/Dedup.scala")
+    // pattern -> the Dedup helper that holds its one copy
+    val owner = Seq("ngramHashes(" -> "kernelFrame", "winnowHashes(" -> "kernelFrame",
+      "repartition(fanOutParts" -> "fannedOut", "explode(bandKeys(" -> "bandKeyed",
+      "GraftFunctions.simhash(" -> "simhash")
+    val files = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !p.startsWith(root.resolve("graft/functions")))
+      .toSeq
+    assert(files.contains(dedup))
+    // a member of Dedup spans from its `def` line to the next line at
+    // member indentation (a doc comment, a def, the closing brace)
+    def span(lines: IndexedSeq[String], name: String): Range = {
+      val start = lines.indexWhere(_.contains(s"def $name("))
+      assert(start >= 0, s"Dedup.$name is gone — update this guard")
+      val end = lines.indexWhere(l => l.matches("^ {0,2}\\S.*"), start + 1)
+      start until (if (end < 0) lines.length else end)
+    }
+    val hits = for {
+      p: Path <- files
+      lines = Files.readAllLines(p).asScala.toIndexedSeq
+      (line, i) <- lines.zipWithIndex
+      (pattern, name) <- owner
+      if line.contains(pattern) && !(p == dedup && span(lines, name).contains(i))
+    } yield s"$p:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString(
+      "kernel prep outside its Dedup helper (use kernelFrame / fannedOut / " +
+        "bandKeyed / Dedup.simhash):\n", "\n", ""))
   }
 }
