@@ -623,8 +623,9 @@ object Dedup {
     * fingerprint store — the per-ingest form of [[exact]] at corpus scale,
     * where re-fingerprinting (or self-joining) 100 TB of already-ingested
     * corpus per arriving batch is exactly the cost to avoid. The store
-    * table (`fp BIGINT, first_id BIGINT`, PK `fp`) holds one row per distinct corpus fingerprint — ~16 bytes/doc, the
-    * only corpus-derived state the batch path ever reads.
+    * table (`fp BIGINT, first_id BIGINT`, PK `fp`) holds one row per
+    * distinct corpus fingerprint — ~16 bytes/doc, the only corpus-derived
+    * state the batch path ever reads.
     *
     * Topology: the store side STREAMS map-only — the batch's distinct
     * fingerprints (batch-sized) broadcast into a left-semi probe of the
@@ -866,7 +867,8 @@ object Dedup {
     val withSh = fannedOut(df, idCol, fanOut = true)
       .withColumn("__sh", simhash(col(textCol)))
       .select(col(idCol).as("__id"), col("__sh"))
-    Pairs.selfJoin(simhashChunked(withSh, "__id", "__sh", maxHamming), Seq("chunk", "key"), "__id", Seq("__sh" -> "sh"))
+    Pairs.selfJoin(simhashChunked(withSh, "__id", "__sh", maxHamming),
+        Seq("chunk", "key"), "__id", Seq("__sh" -> "sh"))
       .select(col("id_a"), col("id_b"), hammingDist(col("sh_a"), col("sh_b")).as("hamming"))
       // filter before the pair-dedup (hamming is pair-pure; see minhashPairs)
       .where(col("hamming") <= maxHamming)
@@ -963,7 +965,8 @@ object Dedup {
     val prefixLen = greatest(
       col("__sz") - ceil(lit(threshold) * col("__sz") - 1e-9).cast("int") + 1, lit(1))
     val rankW = Window.partitionBy(col(id)).orderBy(col("__df"), col(key))
-    (grams, withDf(grams).withColumn("__rn", row_number().over(rankW)).where(col("__rn") <= prefixLen))
+    (grams, withDf(grams).withColumn("__rn", row_number().over(rankW))
+      .where(col("__rn") <= prefixLen))
   }
 
   /** [[rareFirstPrefix]] of a corpus against itself: `(__id, __sz, __key)`
