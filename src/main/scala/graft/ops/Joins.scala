@@ -80,6 +80,45 @@ object Joins {
               rightPayload.map(c => col("r." + c)): _*)
   }
 
+  /** The as-of joins' tagged union: right rows carry `__src = 0`, their
+    * time as `__t` and `__payload = struct(rightTime, payload…)` with the
+    * left columns null; left rows carry `__src = 1`, a null payload and
+    * their own columns. `time(c)` is the `__t` of time column `c`.
+    * Returns the union and the payload column names. */
+  private def asofTagged(left: DataFrame, right: DataFrame, keys: Seq[String],
+                         leftTime: String, rightTime: String,
+                         time: String => Column): (DataFrame, Seq[String]) = {
+    val payloadCols = right.columns.filterNot(c => keys.contains(c) || c == rightTime).toSeq
+    val leftCols = left.columns.filterNot(keys.contains).toSeq
+    val rTagged = right.select(
+      keys.map(col) ++ Seq(
+        time(rightTime).as("__t"), lit(0).as("__src"),
+        struct((col(rightTime).as(rightTime) +: payloadCols.map(col)): _*).as("__payload")) ++
+      leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
+    val lTagged = left.select(
+      keys.map(col) ++ Seq(
+        time(leftTime).as("__t"), lit(1).as("__src"),
+        lit(null).cast(rTagged.schema("__payload").dataType).as("__payload")) ++
+      leftCols.map(col): _*)
+    (rTagged.unionByName(lTagged), payloadCols)
+  }
+
+  /** The as-of joins' output: the left columns, then the matched right
+    * row's time (`<rightTime>_right` when the left has that name) and its
+    * payload columns the left does not have, read from struct `matched`,
+    * then `extra`. */
+  private def asofOutput(merged: DataFrame, left: DataFrame, keys: Seq[String],
+                         rightTime: String, payloadCols: Seq[String],
+                         matched: String, extra: Column*): DataFrame = {
+    val rightTimeOut = if (left.columns.contains(rightTime)) rightTime + "_right" else rightTime
+    merged.select(
+      keys.map(col) ++
+      left.columns.filterNot(keys.contains).map(col) ++
+      Seq(col(s"$matched.$rightTime").as(rightTimeOut)) ++
+      payloadCols.filterNot(left.columns.contains).map(c => col(s"$matched.$c").as(c)) ++
+      extra: _*)
+  }
+
   /** J3 (scale shape) — as-of join via union-tag + last(ignoreNulls) over a
     * per-key running window. Semantics identical to the naive form (inclusive
     * `right.t <= left.t`, latest right row wins); cost is one shuffle on
@@ -91,34 +130,17 @@ object Joins {
     * deterministic winner as the naive form's desc tie-break. */
   def pointInTimeJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
                       leftTime: String, rightTime: String): DataFrame = {
-    val payloadCols = right.columns.filterNot(c => keys.contains(c) || c == rightTime).toSeq
-    val rTagged = right.select(
-      keys.map(col) ++ Seq(
-        col(rightTime).as("__t"), lit(0).as("__src"),
-        struct((col(rightTime).as(rightTime) +: payloadCols.map(col)): _*).as("__payload"),
-        lit(null).cast("long").as("__rowid")) ++
-      left.columns.filterNot(keys.contains).map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
-    val lTagged = left.select(
-      keys.map(col) ++ Seq(
-        col(leftTime).as("__t"), lit(1).as("__src"),
-        lit(null).cast(rTagged.schema("__payload").dataType).as("__payload"),
-        monotonically_increasing_id().as("__rowid")) ++
-      left.columns.filterNot(keys.contains).map(col): _*)
+    val (tagged, payloadCols) = asofTagged(left, right, keys, leftTime, rightTime, col)
     // right rows sort before left rows at equal time (src 0 < 1) → inclusive
     // asof; equal-(keys, t) right rows order by payload asc → last() takes
     // the greatest payload tuple (deterministic, layout-independent)
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col("__t"), col("__src"), col("__payload"))
       .rowsBetween(Window.unboundedPreceding, 0)
-    val merged = rTagged.unionByName(lTagged)
+    val merged = tagged
       .withColumn("__asof", last(col("__payload"), ignoreNulls = true).over(w))
       .where(col("__src") === 1)
-    val rightTimeOut = if (left.columns.contains(rightTime)) rightTime + "_right" else rightTime
-    merged.select(
-      keys.map(col) ++
-      left.columns.filterNot(keys.contains).map(col) ++
-      Seq(col(s"__asof.$rightTime").as(rightTimeOut)) ++
-      payloadCols.filterNot(left.columns.contains).map(c => col(s"__asof.$c").as(c)): _*)
+    asofOutput(merged, left, keys, rightTime, payloadCols, "__asof")
   }
 
   /** J3 (SKEW-SAFE shape) — [[pointInTimeJoin]] for HOT entities: the
@@ -151,22 +173,11 @@ object Joins {
                               keys: Seq[String], leftTime: String,
                               rightTime: String,
                               partitions: Int = 0): DataFrame = {
-    val payloadCols = right.columns.filterNot(c => keys.contains(c) || c == rightTime).toSeq
-    val rTagged = right.select(
-      keys.map(col) ++ Seq(
-        col(rightTime).as("__t"), lit(0).as("__src"),
-        struct((col(rightTime).as(rightTime) +: payloadCols.map(col)): _*).as("__payload")) ++
-      left.columns.filterNot(keys.contains).map(c =>
-        lit(null).cast(left.schema(c).dataType).as(c)): _*)
-    val lTagged = left.select(
-      keys.map(col) ++ Seq(
-        col(leftTime).as("__t"), lit(1).as("__src"),
-        lit(null).cast(rTagged.schema("__payload").dataType).as("__payload")) ++
-      left.columns.filterNot(keys.contains).map(col): _*)
+    val (tagged, payloadCols) = asofTagged(left, right, keys, leftTime, rightTime, col)
     val nParts = if (partitions > 0) partitions
       else left.sparkSession.sessionState.conf.numShufflePartitions
     val orderCols = keys.map(col) ++ Seq(col("__t"), col("__src"), col("__payload"))
-    val sliced = rTagged.unionByName(lTagged)
+    val sliced = tagged
       .repartitionByRange(nParts, orderCols: _*)
       .withColumn("__slice", spark_partition_id())
     val ranged = Pins.pin(sliced)
@@ -206,12 +217,7 @@ object Joins {
       .join(carryJoinable, keys :+ "__slice", "left")
       .withColumn("__asof", coalesce(col("__asof_local"), col("__carry_payload")))
       .where(col("__src") === 1)
-    val rightTimeOut = if (left.columns.contains(rightTime)) rightTime + "_right" else rightTime
-    merged.select(
-      keys.map(col) ++
-      left.columns.filterNot(keys.contains).map(col) ++
-      Seq(col(s"__asof.$rightTime").as(rightTimeOut)) ++
-      payloadCols.filterNot(left.columns.contains).map(c => col(s"__asof.$c").as(c)): _*)
+    asofOutput(merged, left, keys, rightTime, payloadCols, "__asof")
   }
 
   /** J11 (extension) — NEAREST-event join: for each left row, the right
@@ -251,18 +257,9 @@ object Joins {
       s"nearestEventJoin time columns must share a unit: $leftTime is " +
         s"${left.schema(leftTime).dataType.simpleString} but $rightTime is " +
         s"${right.schema(rightTime).dataType.simpleString}")
-    val payloadCols = right.columns.filterNot(c => keys.contains(c) || c == rightTime).toSeq
-    val rTagged = right.select(
-      keys.map(col) ++ Seq(
-        toNum(col(rightTime), rIsTs).as("__t"), lit(0).as("__src"),
-        struct((col(rightTime).as(rightTime) +: payloadCols.map(col)): _*).as("__payload")) ++
-      left.columns.filterNot(keys.contains)
-        .map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
-    val lTagged = left.select(
-      keys.map(col) ++ Seq(
-        toNum(col(leftTime), lIsTs).as("__t"), lit(1).as("__src"),
-        lit(null).cast(rTagged.schema("__payload").dataType).as("__payload")) ++
-      left.columns.filterNot(keys.contains).map(col): _*)
+    // both times share one unit (checked above)
+    val (tagged, payloadCols) = asofTagged(left, right, keys, leftTime, rightTime,
+      c => toNum(col(c), rIsTs))
     val ord = Seq(col("__t"), col("__src"), col("__payload"))
     val wPrev = Window.partitionBy(keys.map(col): _*).orderBy(ord: _*)
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -271,7 +268,7 @@ object Joins {
     // the payload struct leads with rightTime, so its numeric form is
     // recoverable from the match itself
     def pt(p: Column): Column = toNum(p.getField(rightTime), rIsTs)
-    val merged = rTagged.unionByName(lTagged)
+    val merged = tagged
       .withColumn("__prev", last(col("__payload"), ignoreNulls = true).over(wPrev))
       .withColumn("__next", first(col("__payload"), ignoreNulls = true).over(wNext))
       .where(col("__src") === 1)
@@ -285,13 +282,7 @@ object Joins {
       .withColumn("__match",
         when(col("__dist") <= tolerance, col("__best")))
       .withColumn("asof_dist", when(col("__match").isNotNull, col("__dist")))
-    val rightTimeOut = if (left.columns.contains(rightTime)) rightTime + "_right" else rightTime
-    merged.select(
-      keys.map(col) ++
-      left.columns.filterNot(keys.contains).map(col) ++
-      Seq(col(s"__match.$rightTime").as(rightTimeOut)) ++
-      payloadCols.filterNot(left.columns.contains).map(c => col(s"__match.$c").as(c)) ++
-      Seq(col("asof_dist")): _*)
+    asofOutput(merged, left, keys, rightTime, payloadCols, "__match", col("asof_dist"))
   }
 
   /** J4 — left-anti exclusion on distinct-projected keys (`joins.py:241-268`). */

@@ -2,7 +2,6 @@ package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 import graft.ops.Pairs
 import graft.text.Dedup
 
@@ -49,7 +48,9 @@ object Cluster {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0d), (acc, v) => acc + v)
 
-  private def centroidsLit[T: Numeric](cs: Seq[Seq[T]]): Column =
+  /** A literal `array<array<…>>` (centroids, codebooks, an ADC table):
+    * it rides in the plan into every task, so a lookup needs no join. */
+  private[sim] def centroidsLit[T: Numeric](cs: Seq[Seq[T]]): Column =
     array(cs.map(c => array(c.map(v => lit(v)): _*)): _*)
 
   /** Argmin cluster over a literal distance array, lowest index on ties
@@ -159,8 +160,7 @@ object Cluster {
       .select(col("cluster"), col(idCol).as("__id"),
         col(vecCol).cast("array<double>").as("__v"))
     Pairs.selfJoin(b, Seq("cluster"), "__id", Seq("__v" -> "v"))
-      .withColumn("cosine_sim",
-        round(GraftFunctions.cosine(col("v_a"), col("v_b")), 6))
+      .withColumn("cosine_sim", Similarity.cosine6(col("v_a"), col("v_b")))
       .where(col("cosine_sim") >= threshold)
       .select("id_a", "id_b", "cosine_sim")
   }
@@ -250,7 +250,7 @@ object Cluster {
       Dedup.NearDupSig(
         Seq("__cluster" -> "cluster", "__codes" -> "codes", "__scale" -> "scale"),
         Seq("cluster"), identity,
-        (x, y) => round(GraftFunctions.cosine(deq(x("codes"), x("scale")),
-          deq(y("codes"), y("scale"))), 6) >= threshold),
+        (x, y) => Similarity.cosine6(deq(x("codes"), x("scale")),
+          deq(y("codes"), y("scale"))) >= threshold),
       appendOnly)
 }

@@ -30,9 +30,6 @@ import graft.store.TableStore
   */
 object IvfIndex {
 
-  private def centroidsLit(cs: Seq[Seq[Long]]) =
-    array(cs.map(c => array(c.map(v => lit(v)): _*)): _*)
-
   /** Assign `batch` to its IVF buckets and register the postings
     * (`id, cluster, v`) in the store — seeds the table partitioned by
     * `cluster` on first use, PK-upserts afterwards (idempotent replay,
@@ -100,7 +97,9 @@ object IvfIndex {
                    centroids: Seq[Seq[Long]], k: Int = 10,
                    nProbe: Int = 4): DataFrame = {
     require(nProbe > 0 && k > 0, "nProbe and k must be positive")
-    val cLit = centroidsLit(centroids)
+    val cLit = Cluster.centroidsLit(centroids)
+    // the probe ranks clusters by integer squared L2 ascending (the
+    // assignment's metric), not by cosine, so it is its own window
     val q = queries.select(col(queryIdCol).cast("long").as("query_id"),
         col(vecCol).cast("array<double>").as("__qv"))
       .withColumn("__cq", Cluster.quantize(col("__qv")))
@@ -122,14 +121,9 @@ object IvfIndex {
       // collapse append-only replay duplicates BEFORE ranking — exact
       // duplicate postings would otherwise occupy two of the k ranks
       .dropDuplicates("query_id", "id")
-      .withColumn("cosine_sim",
-        round(Similarity.cosine(col("v"), col("__qv")), 6))
-    val rankW = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("id"))
-    cands.withColumn("rank", row_number().over(rankW))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        col("cosine_sim"), col("rank"))
+      .withColumnRenamed("id", "neighbor_id")
+      .withColumn("cosine_sim", Similarity.cosine6(col("v"), col("__qv")))
+    Similarity.topK(cands, k)
   }
 
   /** DRIFT VISIBILITY (r15 — the alarm an operator watches so a frozen
@@ -147,7 +141,7 @@ object IvfIndex {
     * a k-row aggregate; centroids ride as a broadcast literal. */
   def driftStats(store: TableStore, table: String,
                  centroids: Seq[Seq[Long]]): DataFrame = {
-    val cLit = centroidsLit(centroids)
+    val cLit = Cluster.centroidsLit(centroids)
     store.read(table)
       // append-only replay duplicates would inflate n and the mean
       .dropDuplicates("id")

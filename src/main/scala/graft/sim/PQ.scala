@@ -2,7 +2,6 @@ package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 /** Product-quantization codebook: `codebooks(s)(c)` is centroid `c` of
   * subspace `s`, in integer micro-units (the [[Cluster.quantize]] scale),
@@ -41,9 +40,6 @@ object PQ {
   private def subVec(q: Column, s: Int, subDim: Int): Column =
     slice(q, s * subDim + 1, subDim)
 
-  private def cbLit(cb: Seq[Seq[Long]]): Column =
-    array(cb.map(c => array(c.map(lit): _*)): _*)
-
   /** Fit per-subspace codebooks with [[Cluster.kmeans]] (deterministic
     * lowest-id init), then freeze the centroids to integer micro-units.
     * `m` sequential k-means runs over sliced views of the SAME frame —
@@ -78,7 +74,7 @@ object PQ {
     val q = df.withColumn("__q", Cluster.quantize(col(vecCol)))
     val withDists = (0 until model.m).foldLeft(q) { (acc, s) =>
       acc.withColumn(s"__d_$s",
-        transform(cbLit(model.codebooks(s)),
+        transform(Cluster.centroidsLit(model.codebooks(s)),
           c => Cluster.sqDistLong(subVec(col("__q"), s, model.subDim), c)))
     }
     withDists
@@ -111,7 +107,7 @@ object PQ {
         qs.zip(c).map { case (a, b) => val d = a - b; d * d }.sum
       }
     }
-    val tabLit = array(table.map(row => array(row.map(lit): _*)): _*)
+    val tabLit = Cluster.centroidsLit(table)
     val dist = (0 until model.m)
       .map(s => element_at(element_at(tabLit, s + 1), col(codeCol)(s) + 1))
       .reduce(_ + _)
@@ -149,39 +145,25 @@ object PQ {
                  nProbe: Int = 4, shortlist: Int = 64): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(k > 0 && shortlist >= k, "need shortlist >= k > 0")
-    def cos(a: Column, b: Column) = GraftFunctions.cosine(a, b)
 
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<double>").as("__cv"))
+    val c = Similarity.vectors(corpus, idCol, vecCol, "neighbor_id", "__cv")
     // literal centroid picks + MAP-ONLY corpus assignment (zero corpus
-    // shuffle — same topology as [[Similarity.ivfTopK]]); the local
-    // centroid frame serves the query-side probe join
-    val (cents, centDf) = Similarity.collectCentroids(c, nCentroids,
-      "centroid_id", "__centroid")
-    val idLit = array(cents.map(p => lit(p._1)): _*)
-    val assigned = Similarity.assignIdx(c, "__cv", "__ci", cents.map(_._2))
-      .withColumn("centroid_id", element_at(idLit, col("__ci") + 1))
-      .drop("__ci")
+    // shuffle) and the query-side probe — the [[Similarity.ivfTopK]] build
+    val (assigned, probes) = Similarity.ivfProbed(c,
+      Similarity.vectors(queries, queryIdCol, vecCol, "query_id", "__qv"),
+      nCentroids, nProbe)
     // the compressed index: (cell, code) per corpus vector — at scale this
     // is the ONLY corpus-wide table the query path scans
     val codes = encode(assigned, "__cv", model).drop("__cv")
 
-    val q = queries.select(col(queryIdCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("__qv"))
-    val probes = q.crossJoin(broadcast(centDf))
-      .withColumn("__sim", cos(col("__qv"), col("__centroid")))
-      .withColumn("__pr", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("__sim").desc, col("centroid_id"))))
-      .where(col("__pr") <= nProbe)
-      .select(col("query_id"), col("__qv"), col("centroid_id"))
-
     val qq = probes.withColumn("__qq", Cluster.quantize(col("__qv")))
     val adc = (0 until model.m).map { s =>
       Cluster.sqDistLong(subVec(col("__qq"), s, model.subDim),
-        element_at(cbLit(model.codebooks(s)), col("pq_code")(s) + 1))
+        element_at(Cluster.centroidsLit(model.codebooks(s)), col("pq_code")(s) + 1))
     }.reduce(_ + _)
     // codes stream, probes broadcast — the shortlist window over probed
-    // buckets' candidates is the only code-row shuffle
+    // buckets' candidates is the only code-row shuffle; it ranks by
+    // integer ADC distance ascending, not by cosine, so it is its own window
     val short = codes.join(broadcast(qq), Seq("centroid_id"))
       .where(col("neighbor_id") =!= col("query_id"))
       .withColumn("__adc", adc)
@@ -190,11 +172,7 @@ object PQ {
       .where(col("__sr") <= shortlist)
       .select("query_id", "__qv", "neighbor_id")
     // exact refine: raw vectors fetched for shortlist rows only
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbor_id"))
-    c.join(broadcast(short), Seq("neighbor_id"))
-      .withColumn("cosine_sim", round(cos(col("__cv"), col("__qv")), 6))
-      .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine_sim", "rank")
+    Similarity.topK(c.join(broadcast(short), Seq("neighbor_id"))
+      .withColumn("cosine_sim", Similarity.cosine6(col("__cv"), col("__qv"))), k)
   }
 }

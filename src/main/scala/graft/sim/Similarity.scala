@@ -22,45 +22,71 @@ import graft.functions.GraftFunctions
   *    bounded, and the bucket join is a plain hash join Catalyst can
   *    shuffle-partition).
   *
-  * Vector math is done with `zip_with`/`aggregate` higher-order functions —
-  * Catalyst expressions, so codegen applies and no UDF serialization cost.
+  * Every operator scores with [[cosine6]], the fused native cosine
+  * kernel, and ranks with [[topK]]'s one tie rule.
   */
 object Similarity {
-
-  /** Dot product of two array<float/double> columns. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
 
   def l2Norm(a: Column): Column =
     sqrt(aggregate(transform(a, x => x * x), lit(0.0d), (acc, v) => acc + v))
 
-  /** Composed reference form. Operators use the fused native
-    * [[graft.functions.GraftFunctions.cosine]]: identical double semantics
-    * (same sequential accumulation order), one codegen'd loop instead of
-    * three interpreted HOF walks. */
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (l2Norm(a) * l2Norm(b))
+  /** A search side's projection: `idCol` as `idAs`, the vector as
+    * `array<double>` (the cosine kernel's input) named `vecAs`, then
+    * `extra`. */
+  private[sim] def vectors(df: DataFrame, idCol: String, vecCol: String,
+                           idAs: String, vecAs: String, extra: Column*): DataFrame =
+    df.select(Seq(col(idCol).as(idAs), col(vecCol).cast("array<double>").as(vecAs)) ++
+      extra: _*)
+
+  /** The scored cosine every retrieval operator ranks or gates on: the
+    * fused [[graft.functions.GraftFunctions.cosine]] kernel rounded to
+    * 6 dp. The rounding is what makes results hash-equal across engines:
+    * a DuckDB oracle recomputes the cosine with its own float
+    * accumulation, and 6 dp absorbs those last-bit differences, so both
+    * engines see the same score and the same ties. */
+  private[sim] def cosine6(a: Column, b: Column): Column =
+    round(GraftFunctions.cosine(a, b), 6)
+
+  /** The rank rule of every top-k operator over `(query_id, neighbor_id,
+    * cosine_sim)`: per query, highest `cosine_sim` first, exact ties
+    * (equal 6-dp scores, duplicate vectors among them) to the smaller
+    * `neighbor_id`; keeps `rank ≤ k`. The oracles replay this rule as
+    * `row_number() OVER (PARTITION BY query_id ORDER BY cosine_sim DESC,
+    * neighbor_id)`. Returns `(query_id, neighbor_id, carry…, cosine_sim,
+    * rank)`. */
+  private[sim] def topK(scored: DataFrame, k: Int, carry: String*): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine_sim").desc, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+      .select((Seq("query_id", "neighbor_id") ++ carry ++ Seq("cosine_sim", "rank"))
+        .map(col): _*)
+  }
+
+  /** Exact scoring against a broadcast side (the core of [[bruteForceTopK]],
+    * [[hardNegativesTopK]] and [[knnDensity]]): broadcast `(query_id, __qv
+    * [, __qlabel])` × streamed `(neighbor_id, __cv[, neighbor_label])`,
+    * minus the pair itself (with `labelCol`: minus same-label pairs)
+    * BEFORE the dot product, plus `cosine_sim`. */
+  private def exactScored(corpus: DataFrame, corpusIdCol: String,
+                          queries: DataFrame, queryIdCol: String,
+                          vecCol: String, labelCol: Option[String]): DataFrame = {
+    val q = broadcast(vectors(queries, queryIdCol, vecCol, "query_id", "__qv",
+      labelCol.map(l => col(l).as("__qlabel")).toSeq: _*))
+    val c = vectors(corpus, corpusIdCol, vecCol, "neighbor_id", "__cv",
+      labelCol.map(l => col(l).as("neighbor_label")).toSeq: _*)
+    val keep = if (labelCol.isEmpty) col("neighbor_id") =!= col("query_id")
+      else col("neighbor_label") =!= col("__qlabel")
+    c.crossJoin(q).where(keep)
+      .withColumn("cosine_sim", cosine6(col("__cv"), col("__qv")))
+  }
 
   /** Exact top-k by cosine for each query vector. `queries` must be small
     * (it is broadcast); corpus side streams — no corpus shuffle until the
     * final per-query top-k, which is a window over k·|queries| rows. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
                      idCol: String, vecCol: String, queryIdCol: String,
-                     k: Int = 10): DataFrame = {
-    val q = broadcast(queries.select(col(queryIdCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("__qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<double>").as("__cv"))
-    val scored = c.crossJoin(q)
-      .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine_sim",
-        round(GraftFunctions.cosine(col("__cv"), col("__qv")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbor_id"))
-    scored.withColumn("__rn", row_number().over(w)).where(col("__rn") <= k)
-      .select("query_id", "neighbor_id", "cosine_sim", "__rn")
-      .withColumnRenamed("__rn", "rank")
-  }
+                     k: Int = 10): DataFrame =
+    topK(exactScored(corpus, idCol, queries, queryIdCol, vecCol, None), k)
 
   /** kNN-density outlier score over an ANCHOR panel: each vector's cosine
     * similarity to its `k`-th most-similar anchor (self excluded, 6-dp
@@ -90,18 +116,14 @@ object Similarity {
   def knnDensity(df: DataFrame, anchors: DataFrame, idCol: String,
                  vecCol: String, k: Int = 8): DataFrame = {
     require(k > 0, "k must be positive")
-    val a = broadcast(anchors.select(col(idCol).as("__aid"),
-      col(vecCol).cast("array<double>").as("__av")))
-    val v = df.select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
-    val scored = v.crossJoin(a)
-      .where(col(idCol) =!= col("__aid"))
-      .withColumn("__sim",
-        round(GraftFunctions.cosine(col("__v"), col("__av")), 6))
-    val w = Window.partitionBy(col(idCol))
-      .orderBy(col("__sim").desc, col("__aid"))
+    // each vector streams as the core's corpus side (`neighbor_id`), the
+    // anchors are its broadcast side (`query_id`); the rank runs per vector
+    val scored = exactScored(df, idCol, anchors, idCol, vecCol, None)
+    val w = Window.partitionBy(col("neighbor_id"))
+      .orderBy(col("cosine_sim").desc, col("query_id"))
     scored.withColumn("__rn", row_number().over(w))
       .where(col("__rn") === k)
-      .select(col(idCol), col("__sim").as("knn_sim"))
+      .select(col("neighbor_id").as(idCol), col("cosine_sim").as("knn_sim"))
   }
 
   /** Hard-negative mining for contrastive training: for each query vector,
@@ -122,23 +144,9 @@ object Similarity {
     * bruteforce vs IVF recall). */
   def hardNegativesTopK(corpus: DataFrame, queries: DataFrame,
                         idCol: String, vecCol: String, labelCol: String,
-                        k: Int = 5): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("__qv"),
-      col(labelCol).as("__qlabel")))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<double>").as("__cv"),
-      col(labelCol).as("neighbor_label"))
-    val scored = c.crossJoin(q)
-      .where(col("neighbor_label") =!= col("__qlabel"))
-      .withColumn("cosine_sim",
-        round(GraftFunctions.cosine(col("__cv"), col("__qv")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbor_id"))
-    scored.withColumn("__rn", row_number().over(w)).where(col("__rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("neighbor_label"),
-        col("cosine_sim"), col("__rn").as("rank"))
-  }
+                        k: Int = 5): DataFrame =
+    topK(exactScored(corpus, idCol, queries, idCol, vecCol, Some(labelCol)), k,
+      "neighbor_label")
 
   /** Hard-negative mining on an ANN shortlist — the >10⁹-corpus form
     * [[hardNegativesTopK]]'s Scaladoc names: [[ivfTopK]] retrieves an
@@ -168,11 +176,7 @@ object Similarity {
       .join(broadcast(short.join(queryLabels, Seq("query_id"))),
         Seq("neighbor_id"))
       .where(col("neighbor_label") =!= col("__qlabel"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbor_id"))
-    filtered.withColumn("__rn", row_number().over(w)).where(col("__rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("neighbor_label"),
-        col("cosine_sim"), col("__rn").as("rank"))
+    topK(filtered, k, "neighbor_label")
   }
 
   /** Integer micro-unit dot product of two quantized vectors (exact —
@@ -269,7 +273,7 @@ object Similarity {
   private def srpBucketed(df: DataFrame, id: String, vecCol: String,
                           outId: String, outVec: String,
                           nBits: Int, nTables: Int): DataFrame = {
-    df.select(col(id).as(outId), col(vecCol).cast("array<double>").as(outVec))
+    vectors(df, id, vecCol, outId, outVec)
       .select(col(outId), col(outVec),
         posexplode(GraftFunctions.srpKeys(col(outVec), nBits, nTables))
           .as(Seq("__t", "__key")))
@@ -288,14 +292,10 @@ object Similarity {
     // pair instead of two dim-length vectors
     val cand = c.join(q, Seq("__t", "__key"))
       .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine_sim",
-        round(GraftFunctions.cosine(col("__cv"), col("__qv")), 6))
+      .withColumn("cosine_sim", cosine6(col("__cv"), col("__qv")))
       .select(col("query_id"), col("neighbor_id"), col("cosine_sim"))
       .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbor_id"))
-    cand.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine_sim", "rank")
+    topK(cand, k)
   }
 
   /** Hash-ranked deterministic centroid draws (a k-means-free stand-in
@@ -328,13 +328,52 @@ object Similarity {
   private[graft] def assignIdx(df: DataFrame, vecCol: String, outCol: String,
                                centroids: Seq[Seq[Double]]): DataFrame = {
     require(centroids.nonEmpty, "need at least one centroid")
-    val cos = GraftFunctions.cosine _
-    val cLit = array(centroids.map(v => array(v.map(lit(_)): _*)): _*)
-    df.withColumn("__sims", transform(cLit, cc => cos(col(vecCol), cc)))
+    df.withColumn("__sims", transform(Cluster.centroidsLit(centroids),
+        cc => GraftFunctions.cosine(col(vecCol), cc)))
       .withColumn(outCol,
         (array_position(col("__sims"), array_max(col("__sims"))) - 1).cast("int"))
       .drop("__sims")
   }
+
+  /** Each query's `n` nearest centroids of the broadcast centroid frame
+    * `cents` by unrounded fused cosine, ties to the smaller centroid id:
+    * `(query_id, __qv, idName)`. The coarse probe of [[ivfTopK]],
+    * [[ivfTopK2]] and [[PQ.ivfAdcTopK]]. */
+  private def probe(q: DataFrame, cents: DataFrame, idName: String,
+                    vecName: String, n: Int): DataFrame =
+    q.crossJoin(broadcast(cents))
+      .withColumn("__sim", GraftFunctions.cosine(col("__qv"), col(vecName)))
+      .withColumn("__pr", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(col("__sim").desc, col(idName))))
+      .where(col("__pr") <= n)
+      .select(col("query_id"), col("__qv"), col(idName))
+
+  /** The single-level IVF build and probe of [[ivfTopK]] and
+    * [[PQ.ivfAdcTopK]]: `nCentroids` hash-ranked centroid picks from the
+    * `(neighbor_id, __cv)` corpus projection `c` ([[collectCentroids]]),
+    * every corpus vector assigned map-only to its nearest one
+    * ([[assignIdx]]), and each `(query_id, __qv)` query's `nProbe`
+    * nearest centroids ([[probe]]). Returns `(assigned, probes)`:
+    * `c` + `centroid_id`, and `(query_id, __qv, centroid_id)`. */
+  private[sim] def ivfProbed(c: DataFrame, q: DataFrame, nCentroids: Int,
+                             nProbe: Int): (DataFrame, DataFrame) = {
+    val (cents, centDf) = collectCentroids(c, nCentroids, "centroid_id", "__centroid")
+    val idLit = array(cents.map(p => lit(p._1)): _*)
+    val assigned = assignIdx(c, "__cv", "__ci", cents.map(_._2))
+      .withColumn("centroid_id", element_at(idLit, col("__ci") + 1))
+      .drop("__ci")
+    (assigned, probe(q, centDf, "centroid_id", "__centroid", nProbe))
+  }
+
+  /** The IVF exact refine: the assigned corpus streams against the
+    * broadcast probe rows on the bucket `keys` (no corpus shuffle until
+    * the final per-query top-k window over candidate rows), the query
+    * itself is excluded, and candidates rank by [[cosine6]]. */
+  private def bucketTopK(assigned: DataFrame, probes: DataFrame,
+                         keys: Seq[String], k: Int): DataFrame =
+    topK(assigned.join(broadcast(probes), keys)
+      .where(col("neighbor_id") =!= col("query_id"))
+      .withColumn("cosine_sim", cosine6(col("__cv"), col("__qv"))), k)
 
   /** IVF (inverted-file) approximate top-k: the centroid-bucketed scale
     * path. `nCentroids` vectors are drawn deterministically from the corpus
@@ -364,31 +403,10 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, queryIdCol: String,
               k: Int = 10, nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
-    val cos = GraftFunctions.cosine _
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<double>").as("__cv"))
-    val (cents, centDf) = collectCentroids(c, nCentroids, "centroid_id", "__centroid")
-    val idLit = array(cents.map(p => lit(p._1)): _*)
-    val assigned = assignIdx(c, "__cv", "__ci", cents.map(_._2))
-      .withColumn("centroid_id", element_at(idLit, col("__ci") + 1))
-      .drop("__ci")
-    val q = queries.select(col(queryIdCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("__qv"))
-    val probes = q.crossJoin(broadcast(centDf))
-      .withColumn("__sim", cos(col("__qv"), col("__centroid")))
-      .withColumn("__pr", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("__sim").desc, col("centroid_id"))))
-      .where(col("__pr") <= nProbe)
-      .select(col("query_id"), col("__qv"), col("centroid_id"))
-    // corpus streams, probes broadcast — no corpus shuffle until the final
-    // per-query top-k window over candidate rows
-    val cand = assigned.join(broadcast(probes), Seq("centroid_id"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine_sim", round(cos(col("__cv"), col("__qv")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbor_id"))
-    cand.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine_sim", "rank")
+    val (assigned, probes) = ivfProbed(
+      vectors(corpus, idCol, vecCol, "neighbor_id", "__cv"),
+      vectors(queries, queryIdCol, vecCol, "query_id", "__qv"), nCentroids, nProbe)
+    bucketTopK(assigned, probes, Seq("centroid_id"), k)
   }
 
   /** TWO-LEVEL IVF approximate top-k — the >10⁹-vector path sketched in
@@ -416,8 +434,7 @@ object Similarity {
                probeCoarse: Int = 2, probeFine: Int = 4): DataFrame = {
     val spark = corpus.sparkSession
     val cos = GraftFunctions.cosine _
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<double>").as("__cv"))
+    val c = vectors(corpus, idCol, vecCol, "neighbor_id", "__cv")
     // level 1: coarse cells — literal picks, map-only corpus assignment
     val (cells, coarseDf) = collectCentroids(c, nCoarse, "cell_id", "__cc")
     val cellIdLit = array(cells.map(p => lit(p._1)): _*)
@@ -445,7 +462,7 @@ object Similarity {
     val vecType = c.schema("__cv").dataType
     val fineVecLit = array(fineByCell.map { fs =>
       if (fs.isEmpty) array().cast("array<array<double>>")
-      else array(fs.map(f => array(f._2.map(lit(_)): _*)): _*)
+      else Cluster.centroidsLit(fs.map(_._2))
     }: _*)
     val fineIdLit = array(fineByCell.map { fs =>
       if (fs.isEmpty) array().cast(org.apache.spark.sql.types.ArrayType(idType))
@@ -467,28 +484,17 @@ object Similarity {
       fineRows.map(r => Row(cells(r.getInt(0))._1, r.get(2), r.get(3))).asJava,
       StructType(Seq(StructField("cell_id", idType),
         StructField("fine_id", idType), StructField("__fc", vecType)))))
-    val q = queries.select(col(queryIdCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("__qv"))
-    val qCells = q.crossJoin(broadcast(coarseDf))
-      .withColumn("__sim", cos(col("__qv"), col("__cc")))
-      .withColumn("__pr", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("__sim").desc, col("cell_id"))))
-      .where(col("__pr") <= probeCoarse)
-      .select(col("query_id"), col("__qv"), col("cell_id"))
+    val q = vectors(queries, queryIdCol, vecCol, "query_id", "__qv")
+    val qCells = probe(q, coarseDf, "cell_id", "__cc", probeCoarse)
+    // the fine probe stays its own window: a join to each probed cell's
+    // fine centroids, ranked with the two-column (cell_id, fine_id) tie
     val qFine = qCells.join(fineDf, Seq("cell_id"))
       .withColumn("__sim", cos(col("__qv"), col("__fc")))
       .withColumn("__pf", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("__sim").desc, col("cell_id"), col("fine_id"))))
       .where(col("__pf") <= probeFine)
       .select(col("query_id"), col("__qv"), col("cell_id"), col("fine_id"))
-    // corpus streams, probed buckets broadcast — same tail as [[ivfTopK]]
-    val cand = assigned.join(broadcast(qFine), Seq("cell_id", "fine_id"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine_sim", round(cos(col("__cv"), col("__qv")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_sim").desc, col("neighbor_id"))
-    cand.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine_sim", "rank")
+    bucketTopK(assigned, qFine, Seq("cell_id", "fine_id"), k)
   }
 
   /** Embedding-cosine near-duplicate pairs over one corpus (id_a < id_b,
@@ -503,8 +509,7 @@ object Similarity {
         Seq("__t", "__key"), "__id", Seq("__v" -> "v"))
       // cosine + threshold BEFORE the pair-dedup (see lshTopK note): the
       // distinct aggregates scalar rows of passing pairs only
-      .withColumn("cosine_sim",
-        round(GraftFunctions.cosine(col("v_a"), col("v_b")), 6))
+      .withColumn("cosine_sim", cosine6(col("v_a"), col("v_b")))
       .where(col("cosine_sim") >= threshold)
       .select("id_a", "id_b", "cosine_sim")
       .dropDuplicates("id_a", "id_b")
@@ -556,7 +561,7 @@ object Similarity {
     require(dims.nonEmpty, "seed set must be non-empty")
     val proto = array(dims.toIndexedSeq.map(lit(_)): _*)
     val scored = df.withColumn("proto_sim",
-      round(GraftFunctions.cosine(col(vecCol).cast("array<double>"), proto), 6))
+      cosine6(col(vecCol).cast("array<double>"), proto))
     graft.ops.Filters.topFractionByGroupExact(
         scored.withColumn("__g", lit(1)), "__g", "proto_sim", fraction, idCol)
       .drop("__g")

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
@@ -223,6 +224,15 @@ class ScaleFunctionsSpec extends AnyFunSuite {
 
   // ---- native codegen expression ----
 
+  /** Readable reference of the fused `graft_cosine` kernel: dot product
+    * over norms as three HOF walks. Both forms accumulate left to right,
+    * so they agree bit for bit, which 6-dp scores and their ranks rely on. */
+  private def composedDot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
+
+  private def composedCosine(a: Column, b: Column): Column =
+    composedDot(a, b) / (Similarity.l2Norm(a) * Similarity.l2Norm(b))
+
   test("CosineSimilarity expression matches the composed HOF form") {
     GraftFunctions.register(spark)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -231,11 +241,11 @@ class ScaleFunctionsSpec extends AnyFunSuite {
       emb.select(col("vec_id").as("id2"), col("v").as("w")).limit(40))
     val both = pairs.select(
       expr("graft_cosine(v, w)").as("native"),
-      Similarity.cosine(col("v"), col("w")).as("composed"))
+      composedCosine(col("v"), col("w")).as("composed"))
     val rows = both.collect()
     assert(rows.length == 1600)
     rows.foreach { r =>
-      assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-12)
+      assert(r.getDouble(0) == r.getDouble(1), s"native ${r.get(0)} != composed ${r.get(1)}")
     }
   }
 
