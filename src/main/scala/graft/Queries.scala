@@ -2975,8 +2975,8 @@ object Queries {
       .agg(max(when(col("event_type") === "purchase", 1).otherwise(0))
         .as("converted"))
       .withColumn("variant",
-        when(conv(substring(md5(concat_ws("|", col("user_id"), lit("ab"))),
-          1, 15), 16, 10).cast("long") % 2 === 0, "A").otherwise("B"))
+        when(Exprs.md5Gate(Exprs.md5Key(Seq(col("user_id"), lit("ab")))) % 2 === 0, "A")
+          .otherwise("B"))
     graft.ops.Stats.abReport(units, "variant", "converted", "A")
       .orderBy("variant")
   }
@@ -3040,8 +3040,7 @@ object Queries {
             col("o_totalprice").cast("decimal(18,2)"))
           .otherwise(lit(0).cast("decimal(18,2)"))).as("post_spend"))
       .withColumn("variant",
-        when(conv(substring(md5(concat_ws("|", col("o_custkey"),
-          lit("cuped"))), 1, 15), 16, 10).cast("long") % 2 === 0, "A")
+        when(Exprs.md5Gate(Exprs.md5Key(Seq(col("o_custkey"), lit("cuped")))) % 2 === 0, "A")
           .otherwise("B"))
     graft.ops.Stats.cupedReport(units, "variant", "pre_spend", "post_spend",
         "A")
@@ -3058,8 +3057,8 @@ object Queries {
       .select(col("event_type"), to_date(col("ts")).cast("string").as("day"))
       .distinct()
       .withColumn("p_micros",
-        conv(substring(md5(concat_ws("|", col("event_type"), col("day"),
-          lit("pv"))), 1, 15), 16, 10).cast("long") % 1000000L)
+        Exprs.md5Gate(Exprs.md5Key(Seq(col("event_type"), col("day"), lit("pv")))) %
+          1000000L)
     graft.ops.Stats.bhDiscoveries(hyp, "p_micros",
         Seq("event_type", "day"), qMicros = 50000L)
       .orderBy("p_rank")
@@ -3083,8 +3082,7 @@ object Queries {
     graft.ops.Stats.diffInDiff(
       t(s, dir, "orders")
         .withColumn("treat",
-          conv(substring(md5(concat_ws("|", col("o_custkey"), lit("did"))),
-            1, 15), 16, 10).cast("long") % 2 === 0)
+          Exprs.md5Gate(Exprs.md5Key(Seq(col("o_custkey"), lit("did")))) % 2 === 0)
         .withColumn("post", col("o_orderdate") >=
           lit("1998-01-01").cast("timestamp")),
       "treat", "post", "o_totalprice")

@@ -66,4 +66,15 @@ object Exprs {
 
   /** Typed constant column (`feature_generation.py:320-345`). */
   def litCol(v: Any, castTo: String): Column = lit(v).cast(castTo)
+
+  /** The portable md5 order key `md5(concat_ws('|', parts…))` — a hex
+    * string any SQL engine rebuilds verbatim. */
+  def md5Key(parts: Seq[Column]): Column = md5(concat_ws("|", parts: _*))
+
+  /** The portable md5 gate: the first 15 hex digits of an md5 hex
+    * `digest` read as a non-negative long (the high 60 bits of the
+    * digest). md5 and the base-16 parse are universal, so every engine
+    * replays the gate bit for bit. */
+  def md5Gate(digest: Column): Column =
+    conv(substring(digest, 1, 15), 16, 10).cast("long")
 }

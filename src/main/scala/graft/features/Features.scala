@@ -3,7 +3,8 @@ package graft.features
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Pins
+import graft.core.{Exprs, Pins}
+import graft.ops.{Scale, Stats}
 
 /** Feature-engineering math the reference's banking pipelines feed into
   * downstream credit-risk models: column scaling, smoothed target encoding,
@@ -345,33 +346,35 @@ object Features {
   def robustScale(df: DataFrame, valueCol: String, groupCols: Seq[String],
                   tieCol: String, suffix: String = "_robust"): DataFrame = {
     require(groupCols.nonEmpty, "groupCols must be non-empty (global scaling: pass a literal group)")
-    nearestRankQuartiles(df, valueCol, groupCols, tieCol)
+    nearestRanks(df, valueCol, groupCols, tieCol, Quartiles)
       .withColumn(valueCol + suffix,
         when(col("__q3") =!= col("__q1"),
           (col(valueCol) - col("__med")) / (col("__q3") - col("__q1"))))
       .drop("__q1", "__med", "__q3")
   }
 
-  /** Input rows joined with their group's nearest-rank quartiles as
-    * `__q1/__med/__q3` (one group-key window + one small broadcast-back
-    * aggregate — the shared machinery of [[robustScale]] and
-    * [[iqrOutlierFlags]]). */
-  private def nearestRankQuartiles(df: DataFrame, valueCol: String,
-                                   groupCols: Seq[String], tieCol: String): DataFrame = {
+  /** The nearest-rank quartiles of [[robustScale]] and [[iqrOutlierFlags]]. */
+  private val Quartiles = Seq("__q1" -> 0.25, "__med" -> 0.5, "__q3" -> 0.75)
+
+  /** Input rows joined with their group's nearest-rank quantiles, one
+    * double column per named probability `p`: the value at rank
+    * `ceil(p·n)` in `(valueCol, tieCol)` order. One group-key window
+    * ranks the rows; the quantiles are a #groups-row aggregate
+    * broadcast back. */
+  private def nearestRanks(df: DataFrame, valueCol: String, groupCols: Seq[String],
+                           tieCol: String, probs: Seq[(String, Double)]): DataFrame = {
     val gw = Window.partitionBy(groupCols.map(col): _*)
     val w = gw.orderBy(col(valueCol), col(tieCol))
     val ranked = df
       .withColumn("__rn", row_number().over(w))
       .withColumn("__n", count(lit(1)).over(gw))
+    val qs = probs.map { case (name, p) =>
+      max(when(col("__rn") === ceil(col("__n") * p), dec(col(valueCol))))
+        .cast("double").as(name)
+    }
     val stats = ranked
       .groupBy(groupCols.map(col): _*)
-      .agg(
-        max(when(col("__rn") === ceil(col("__n") * 0.25), dec(col(valueCol))))
-          .cast("double").as("__q1"),
-        max(when(col("__rn") === ceil(col("__n") * 0.5), dec(col(valueCol))))
-          .cast("double").as("__med"),
-        max(when(col("__rn") === ceil(col("__n") * 0.75), dec(col(valueCol))))
-          .cast("double").as("__q3"))
+      .agg(qs.head, qs.tail: _*)
     ranked.drop("__rn", "__n").join(broadcast(stats), groupCols)
   }
 
@@ -405,9 +408,8 @@ object Features {
     require(n > 0, "item universe is empty")
     val cand = positives.select(col(entityCol)).distinct()
       .withColumn("slot", explode(sequence(lit(0), lit(k - 1))))
-      .withColumn("__idx", conv(substring(md5(concat_ws("|",
-        col(entityCol), col("slot"), lit(salt.toString))), 1, 15), 16, 10)
-        .cast("long") % n)
+      .withColumn("__idx", Exprs.md5Gate(Exprs.md5Key(
+        Seq(col(entityCol), col("slot"), lit(salt.toString)))) % n)
     cand.join(broadcast(idx), "__idx")
       .join(positives.select(col(entityCol), col(itemCol).as("__item")),
         Seq(entityCol, "__item"), "left_anti")
@@ -426,8 +428,7 @@ object Features {
   def hashEncode(df: DataFrame, catCol: String, buckets: Int,
                  suffix: String = "_hashed"): DataFrame = {
     require(buckets > 0, "buckets must be positive")
-    val h = conv(substring(md5(col(catCol).cast("string")), 1, 15), 16, 10)
-      .cast("long") % buckets
+    val h = Exprs.md5Gate(md5(col(catCol).cast("string"))) % buckets
     df.withColumn(catCol + suffix,
       when(col(catCol).isNotNull, h.cast("int")))
   }
@@ -444,20 +445,7 @@ object Features {
                 suffix: String = "_wins"): DataFrame = {
     require(groupCols.nonEmpty, "groupCols must be non-empty")
     require(pLo > 0 && pHi < 1 && pLo < pHi, "need 0 < pLo < pHi < 1")
-    val gw = Window.partitionBy(groupCols.map(col): _*)
-    val w = gw.orderBy(col(valueCol), col(tieCol))
-    val ranked = df
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("__n", count(lit(1)).over(gw))
-    val stats = ranked
-      .groupBy(groupCols.map(col): _*)
-      .agg(
-        max(when(col("__rn") === ceil(col("__n") * pLo), dec(col(valueCol))))
-          .cast("double").as("__lo"),
-        max(when(col("__rn") === ceil(col("__n") * pHi), dec(col(valueCol))))
-          .cast("double").as("__hi"))
-    ranked.drop("__rn", "__n")
-      .join(broadcast(stats), groupCols)
+    nearestRanks(df, valueCol, groupCols, tieCol, Seq("__lo" -> pLo, "__hi" -> pHi))
       .withColumn(valueCol + suffix,
         least(greatest(col(valueCol), col("__lo")), col("__hi")))
       .drop("__lo", "__hi")
@@ -474,7 +462,7 @@ object Features {
   def iqrOutlierFlags(df: DataFrame, valueCol: String, groupCols: Seq[String],
                       tieCol: String, k: Double = 1.5): DataFrame = {
     require(groupCols.nonEmpty, "groupCols must be non-empty")
-    nearestRankQuartiles(df, valueCol, groupCols, tieCol)
+    nearestRanks(df, valueCol, groupCols, tieCol, Quartiles)
       .withColumn("fence_lo", col("__q1") - lit(k) * (col("__q3") - col("__q1")))
       .withColumn("fence_hi", col("__q3") + lit(k) * (col("__q3") - col("__q1")))
       .withColumn(valueCol + "_outlier",
@@ -562,23 +550,17 @@ object Features {
     * always does), plus [[graft.ops.Scale.sliceOffsets]]' count of the
     * earlier slices. */
   private def rankedSlices(df: DataFrame, order: Seq[Column]): DataFrame =
-    graft.ops.Scale.sliceOffsets(
-        graft.ops.Scale.rangeSlices(df, order, sorted = true)
+    // not Scale.sliceRank: its row_number over __part re-shuffles the pinned slices
+    Scale.sliceOffsets(
+        Scale.rangeSlices(df, order, sorted = true)
           .withColumn("__lrk",
             monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)) + 1L),
         Seq("__rows" -> count(lit(1))))
       .withColumn("__rk", col("__rows_before") + col("__lrk"))
 
-  /** ntile(b) of rank `__rk` over `__rows_total` rows, as arithmetic: the
-    * first (n mod b) buckets hold ceil(n/b) rows, the rest floor(n/b). */
-  private def ntileOf(nBuckets: Int): Column = {
-    val qz = floor(col("__rows_total") / nBuckets).cast("long")
-    val rem = col("__rows_total") % nBuckets
-    val cut = rem * (qz + 1)
-    when(col("__rk") <= cut, floor((col("__rk") - 1) / (qz + 1)) + 1)
-      .otherwise(rem + floor((col("__rk") - cut - 1) / greatest(qz, lit(1L))) + 1)
-      .cast("int")
-  }
+  /** [[graft.ops.Scale.ntileOf]] of [[rankedSlices]]' rank `__rk`. */
+  private def ntileOf(nBuckets: Int): Column =
+    Scale.ntileOf(col("__rk"), col("__rows_total"), nBuckets).cast("int")
 
   /** One exact-ntile scoring pass over a keyed frame: rows ranked by
     * `sortExprs` (must be a TOTAL order — include a unique tie-break)
@@ -648,9 +630,15 @@ object Features {
     * aggregate. No single-partition window over the data. */
   def ksStatistic(df: DataFrame, valueCol: String, groupCol: String,
                   aLabel: String, bLabel: String): DataFrame = {
+    ksOfCdf(twoSampleCdf(df, valueCol, groupCol, aLabel, bLabel))
+  }
+
+  /** The exact KS row `(n_a, n_b, ks_micros)` of a two-cohort CDF
+    * ([[cdfFromCounts]]): the integral gap `|cum_a·n_b − cum_b·n_a|` in
+    * DECIMAL(38,0), one truncating micro-unit division of its max. */
+  private def ksOfCdf(cdf: DataFrame): DataFrame = {
     val dec38 = "decimal(38,0)"
-    twoSampleCdf(df, valueCol, groupCol, aLabel, bLabel)
-      .withColumn("__gap", abs(
+    cdf.withColumn("__gap", abs(
         col("__cuma").cast(dec38) * col("__nb").cast(dec38) -
           col("__cumb").cast(dec38) * col("__na").cast(dec38)))
       .agg(max("__na").as("n_a"), max("__nb").as("n_b"),
@@ -674,18 +662,12 @@ object Features {
     * feeds the bounds, offsets, cumsum and fence subtrees), 1-row
     * quartile broadcast, scalar rollups. */
   def robustStats(df: DataFrame, valueCol: String): DataFrame = {
-    val d0 = "decimal(38,0)"
-    val v = df.select(
-        expr(s"CAST(CAST($valueCol AS decimal(18,2)) * 100 AS $d0)").as("__v"))
-      .where(col("__v").isNotNull)
-      .groupBy("__v").agg(count(lit(1)).as("__c"))
-    val ranged = graft.ops.Scale.orderedBuckets(Pins.pin(v), "__v")
-    val cum = cumulativeCounts(ranged)
-    def q(p: Int): Column =
-      min(when(expr(s"__cum >= ($p * __c_total + 99) div 100"), col("__v")))
-        .cast("long")
-    val quarts = broadcast(cum.agg(max("__c_total").as("n"), q(25).as("q1_cents"),
-      q(50).as("median_cents"), q(75).as("q3_cents")))
+    val ranged = Scale.orderedBuckets(
+      Pins.pin(Stats.centsCounts(df, valueCol, col("__v").isNotNull)), "__v")
+    val cum = Scale.cumulativeCounts(ranged, Seq(("__cum", "__c", col("__c"))))
+    val quarts = broadcast(cum.agg(max("__c_total").as("n"),
+      nearestRankOfCounts(25).as("q1_cents"), nearestRankOfCounts(50).as("median_cents"),
+      nearestRankOfCounts(75).as("q3_cents")))
     ranged.crossJoin(quarts)
       .groupBy("n", "q1_cents", "median_cents", "q3_cents")
       .agg(
@@ -711,11 +693,7 @@ object Features {
     * (never the raw data again) with the 1-row median broadcast; both
     * passes share the [[ksStatistic]] topology contract. */
   def madStats(df: DataFrame, valueCol: String): DataFrame = {
-    val d0 = "decimal(38,0)"
-    val counts = Pins.pin(df.select(
-        expr(s"CAST(CAST($valueCol AS decimal(18,2)) * 100 AS $d0)").as("__v"))
-      .where(col("__v").isNotNull)
-      .groupBy("__v").agg(count(lit(1)).as("__c")))
+    val counts = Pins.pin(Stats.centsCounts(df, valueCol, col("__v").isNotNull))
     val med1 = broadcast(medianOfCounts(counts)
       .select(col("n"), col("med").as("median_cents")))
     // pinned (r16): medianOfCounts' eager quantile-boundary pass plus its
@@ -734,20 +712,15 @@ object Features {
   /** Nearest-rank median of a `(__v, __c)` count table (pinned by the
     * caller) — 1 row `(n, med)`. */
   private def medianOfCounts(counts: DataFrame): DataFrame =
-    cumulativeCounts(graft.ops.Scale.orderedBuckets(counts, "__v"))
-      .agg(max("__c_total").cast("long").as("n"),
-        min(when(expr("__cum >= (50 * __c_total + 99) div 100"), col("__v")))
-          .cast("long").as("med"))
+    Scale.cumulativeCounts(Scale.orderedBuckets(counts, "__v"),
+        Seq(("__cum", "__c", col("__c"))))
+      .agg(max("__c_total").cast("long").as("n"), nearestRankOfCounts(50).as("med"))
 
-  /** `(__v, __c)` bucketed count rows with the global running count
-    * `__cum` in value order and the total `__c_total` — the
-    * [[graft.ops.Scale.sliceOffsets]] prefix sum over value buckets. */
-  private def cumulativeCounts(ranged: DataFrame): DataFrame = {
-    val local = Window.partitionBy("__part").orderBy("__v")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    graft.ops.Scale.sliceOffsets(ranged, Seq("__c" -> sum("__c")))
-      .withColumn("__cum", sum("__c").over(local) + col("__c_before"))
-  }
+  /** The nearest-rank `p`-th percentile (`p` in 1..100) of a
+    * [[graft.ops.Scale.cumulativeCounts]] table: the least `__v` whose
+    * running count `__cum` reaches `⌈p·n/100⌉`, as a long. */
+  private def nearestRankOfCounts(p: Int): Column =
+    min(when(expr(s"__cum >= ($p * __c_total + 99) div 100"), col("__v"))).cast("long")
 
   /** Config-driven drift battery — the one-call reference-vs-current
     * monitoring table a feature store runs per refresh: exact KS for
@@ -775,7 +748,7 @@ object Features {
             col("n_a").as("n_ref"), col("n_b").as("n_cur"),
             col("ks_micros").as("stat_micros"))
       } ++ categoricalCols.map { c =>
-        graft.ops.Stats.tvDistance(df, c, groupCol, refLabel, curLabel)
+        Stats.tvDistance(df, c, groupCol, refLabel, curLabel)
           .select(lit(c).as("feature"), lit("tvd").as("kind"),
             col("n_a").as("n_ref"), col("n_b").as("n_cur"),
             col("tvd_micros").as("stat_micros"))
@@ -835,33 +808,19 @@ object Features {
     * raw history per trigger is exactly the cost to avoid. Same output
     * and topology as [[ksStatistic]]. */
   def ksFromCounts(counts: DataFrame, valueCol: String,
-                   aCountCol: String, bCountCol: String): DataFrame = {
-    val dec38 = "decimal(38,0)"
-    cdfFromCounts(counts.select(col(valueCol).as("__v"),
-        coalesce(col(aCountCol), lit(0L)).cast("long").as("__ca"),
-        coalesce(col(bCountCol), lit(0L)).cast("long").as("__cb")))
-      .withColumn("__gap", abs(
-        col("__cuma").cast(dec38) * col("__nb").cast(dec38) -
-          col("__cumb").cast(dec38) * col("__na").cast(dec38)))
-      .agg(max("__na").as("n_a"), max("__nb").as("n_b"),
-        expr(s"(max(__gap) * 1000000L) div " +
-          s"(max(CAST(__na AS $dec38)) * max(CAST(__nb AS $dec38)))")
-          .as("ks_micros"))
-  }
+                   aCountCol: String, bCountCol: String): DataFrame =
+    ksOfCdf(cdfFromCounts(counts.select(col(valueCol).as("__v"),
+      coalesce(col(aCountCol), lit(0L)).cast("long").as("__ca"),
+      coalesce(col(bCountCol), lit(0L)).cast("long").as("__cb"))))
 
   /** The two-cohort CDF over a `(__v, __ca, __cb)` count table: the
     * table is pinned once for the bounds, offsets and cumsum subtrees,
     * value-bucketed and prefix-summed per cohort. */
-  private def cdfFromCounts(v: DataFrame): DataFrame = {
-    val local = Window.partitionBy("__part").orderBy("__v")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    graft.ops.Scale.sliceOffsets(graft.ops.Scale.orderedBuckets(Pins.pin(v), "__v"),
-        Seq("__ca" -> sum("__ca"), "__cb" -> sum("__cb")))
+  private def cdfFromCounts(v: DataFrame): DataFrame =
+    Scale.cumulativeCounts(Scale.orderedBuckets(Pins.pin(v), "__v"),
+        Seq(("__cuma", "__ca", col("__ca")), ("__cumb", "__cb", col("__cb"))))
       .withColumnRenamed("__ca_total", "__na")
       .withColumnRenamed("__cb_total", "__nb")
-      .withColumn("__cuma", sum("__ca").over(local) + col("__ca_before"))
-      .withColumn("__cumb", sum("__cb").over(local) + col("__cb_before"))
-  }
 
   /** Exact Mann–Whitney U (Wilcoxon rank-sum) two-sample test — the
     * nonparametric location-shift gate that pairs with [[ksStatistic]]

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Exprs
 
 /** Filter / null-handling / dedup operator kit.
   *
@@ -79,10 +80,22 @@ object Filters {
   def portableHashSample(df: DataFrame, keyCols: Seq[String], fraction: Double,
                          salt: Int = 42): DataFrame = {
     require(fraction >= 0 && fraction <= 1, "fraction must be in [0,1]")
-    val h = conv(substring(md5(concat_ws("|",
-      keyCols.map(col) :+ lit(salt.toString): _*)), 1, 15), 16, 10)
-      .cast("long") % 1000000000L
-    df.where(h < (fraction * 1e9).toLong)
+    df.where(u9(keyCols.map(col) :+ lit(salt.toString)) < (fraction * 1e9).toLong)
+  }
+
+  /** Position in [0, 1e9) of the portable md5 gate over `parts`. */
+  private[ops] def u9(parts: Seq[Column]): Column =
+    Exprs.md5Gate(Exprs.md5Key(parts)) % 1000000000L
+
+  /** The train/val/test label of gate position `h` (in [0, 1e9)) cut at
+    * per-mille boundaries: `[0, train)`, `[train, train + val)`, rest. */
+  private def permilleSplit(h: Column, trainPermille: Int, valPermille: Int): Column = {
+    require(trainPermille >= 0 && valPermille >= 0 &&
+      trainPermille + valPermille <= 1000,
+      "per-mille budgets must be non-negative and sum to <= 1000")
+    when(h < trainPermille * 1000000L, "train")
+      .when(h < (trainPermille + valPermille) * 1000000L, "val")
+      .otherwise("test")
   }
 
   /** Per-row weighted deterministic sample: keep a row iff its portable
@@ -95,9 +108,7 @@ object Filters {
   def weightedHashSample(df: DataFrame, keyCols: Seq[String], weightCol: String,
                          salt: Int = 42): DataFrame = {
     require(keyCols.nonEmpty, "keyCols must be non-empty")
-    val u = (conv(substring(md5(concat_ws("|",
-      keyCols.map(col) :+ lit(salt.toString): _*)), 1, 15), 16, 10)
-      .cast("long") % 1000000000L).cast("double") / 1e9
+    val u = u9(keyCols.map(col) :+ lit(salt.toString)).cast("double") / 1e9
     df.where(u < col(weightCol))
   }
 
@@ -126,16 +137,8 @@ object Filters {
                     trainPermille: Int = 800, valPermille: Int = 100,
                     salt: Int = 42): DataFrame = {
     require(keyCols.nonEmpty, "keyCols must be non-empty")
-    require(trainPermille >= 0 && valPermille >= 0 &&
-      trainPermille + valPermille <= 1000,
-      "per-mille budgets must be non-negative and sum to <= 1000")
-    val h = conv(substring(md5(concat_ws("|",
-      keyCols.map(col) :+ lit(salt.toString): _*)), 1, 15), 16, 10)
-      .cast("long") % 1000000000L
-    df.withColumn("split",
-      when(h < trainPermille * 1000000L, "train")
-        .when(h < (trainPermille + valPermille) * 1000000L, "val")
-        .otherwise("test"))
+    df.withColumn("split", permilleSplit(u9(keyCols.map(col) :+ lit(salt.toString)),
+      trainPermille, valPermille))
   }
 
   /** Near-dup-LEAKAGE-SAFE split: split membership is decided per duplicate
@@ -154,19 +157,13 @@ object Filters {
   def leakageSafeSplit(df: DataFrame, idCol: String, clusters: DataFrame,
                        trainPermille: Int = 800, valPermille: Int = 100,
                        salt: Int = 42): DataFrame = {
-    require(trainPermille >= 0 && valPermille >= 0 &&
-      trainPermille + valPermille <= 1000,
-      "per-mille budgets must be non-negative and sum to <= 1000")
+    val split = permilleSplit(
+      u9(Seq(coalesce(col("__cluster"), col(idCol)), lit(salt.toString))),
+      trainPermille, valPermille)
     val c = clusters.select(col("id").as("__cid"),
       col("cluster_id").as("__cluster"))
-    val h = conv(substring(md5(concat_ws("|",
-      coalesce(col("__cluster"), col(idCol)), lit(salt.toString))), 1, 15),
-      16, 10).cast("long") % 1000000000L
     df.join(c, df(idCol) === c("__cid"), "left")
-      .withColumn("split",
-        when(h < trainPermille * 1000000L, "train")
-          .when(h < (trainPermille + valPermille) * 1000000L, "val")
-          .otherwise("test"))
+      .withColumn("split", split)
       .drop("__cid", "__cluster")
   }
 
@@ -231,14 +228,8 @@ object Filters {
                               scoreCol: String, fraction: Double,
                               idCol: String): DataFrame = {
     require(fraction > 0 && fraction <= 1, "fraction must be in (0, 1]")
-    val hist = df.groupBy(col(groupCol), col(scoreCol))
-      .agg(count(lit(1)).as("__c"))
-    val byScoreDesc = Window.partitionBy(col(groupCol))
-      .orderBy(col(scoreCol).desc)
     val whole = Window.partitionBy(col(groupCol))
-    val th = hist
-      .withColumn("__above", coalesce(sum("__c").over(
-        byScoreDesc.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+    val th = Scale.scoreHistogram(df, groupCol, scoreCol, "__above")
       .withColumn("__k", ceil(lit(fraction) * sum("__c").over(whole)))
       .where(col("__above") < col("__k") &&
         col("__k") <= col("__above") + col("__c"))
@@ -298,23 +289,8 @@ object Filters {
                        nBuckets: Int, idCol: String,
                        bucketCol: String = "bucket"): DataFrame = {
     require(nBuckets > 0, "nBuckets must be positive")
-    val b = lit(nBuckets.toLong)
-    val hist = df.groupBy(col(groupCol), col(scoreCol))
-      .agg(count(lit(1)).as("__c"))
-    val byScoreDesc = Window.partitionBy(col(groupCol))
-      .orderBy(col(scoreCol).desc)
-    def tileOf(i: Column): Column = {
-      val q = floor(col("__n") / b)
-      val r = col("__n") % b
-      when(i <= (q + lit(1L)) * r,
-          floor((i - lit(1L)) / (q + lit(1L))) + lit(1L))
-        .otherwise(r +
-          floor((i - (q + lit(1L)) * r - lit(1L)) / greatest(q, lit(1L))) +
-          lit(1L))
-    }
-    val ranked = hist
-      .withColumn("__a", coalesce(sum("__c").over(
-        byScoreDesc.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+    def tileOf(i: Column): Column = Scale.ntileOf(i, col("__n"), nBuckets)
+    val ranked = Scale.scoreHistogram(df, groupCol, scoreCol, "__a")
       .withColumn("__n", sum("__c").over(Window.partitionBy(col(groupCol))))
       .withColumn("__tileLo", tileOf(col("__a") + lit(1L)))
       .withColumn("__tileHi", tileOf(col("__a") + col("__c")))
@@ -349,7 +325,7 @@ object Filters {
                        keyCols: Seq[String], salt: Int = 42): DataFrame = {
     require(n > 0, "n must be positive")
     require(keyCols.nonEmpty, "keyCols must be non-empty")
-    val h = md5(concat_ws("|", keyCols.map(col) :+ lit(salt.toString): _*))
+    val h = Exprs.md5Key(keyCols.map(col) :+ lit(salt.toString))
     val w = Window.partitionBy(groupCols.map(col): _*)
       .orderBy(h +: keyCols.map(col): _*)
     df.withColumn("__rn", row_number().over(w))
@@ -395,7 +371,10 @@ object Filters {
                        scoreCol: String, tieCol: String): DataFrame = {
     require(weights.nonEmpty && weights.values.forall(_ > 0),
       "weights must be non-empty and positive")
-    val counts = df.groupBy(col(groupCol)).agg(count(lit(1)).as("n"))
+    // keyed on the string form of the group (the weights' key type): a
+    // non-string column would otherwise CCE on getString
+    val key = col(groupCol).cast("string")
+    val counts = df.groupBy(key).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val total = weights.collect { case (g, w) if counts.contains(g) =>
       math.floor(counts(g) / w).toLong
@@ -406,40 +385,12 @@ object Filters {
     val keepN = typedLit(weights.map { case (g, w) => g -> math.floor(w * total).toLong })
     val w = Window.partitionBy(col(groupCol))
       .orderBy(col(scoreCol).desc, col(tieCol))
-    df.where(element_at(keepN, col(groupCol)).isNotNull)
+    df.where(element_at(keepN, key).isNotNull)
       .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= element_at(keepN, col(groupCol)))
+      .where(col("__rn") <= element_at(keepN, key))
       .drop("__rn")
   }
 
-  /** Temperature-flattened mixture sampling: keep
-    * `min(n_g, floor(c · n_g^(alphaQuarters/4)))` rows of each group,
-    * chosen in portable-hash order — the sublinear domain-rebalancing
-    * draw of multilingual/multi-source pretraining (exponent-smoothed
-    * sampling p ∝ n^α, as popularized for language balancing in
-    * multilingual model training): big domains are damped, small ones
-    * kept (nearly) whole, and `c` sets the overall budget.
-    *
-    * Unlike [[rebalanceMixture]] (explicit target fractions, score-ranked
-    * keeps) the mixture here is DERIVED from the observed counts, and
-    * selection is an unbiased deterministic draw (md5 order, the
-    * [[groupSampleExact]] audit property) rather than quality-ranked.
-    *
-    * `α` is restricted to quarters (`alphaQuarters` ∈ 1..4) so the weight
-    * is an exact IEEE-754 composition: `n^(1/4) = sqrt(sqrt(n))`,
-    * `n^(2/4) = sqrt(n)`, `n^(3/4) = sqrt(n)·sqrt(sqrt(n))`, `n^1 = n` —
-    * sqrt and multiply are correctly-rounded in every IEEE engine, so
-    * `floor(c·w)` lands on the same integer everywhere (a free-form
-    * `pow(n, α)` is NOT correctly rounded and may differ in the last ulp
-    * across engines — see Queries.scala determinism rules).
-    *
-    * Scale: ONE scan, ONE hash shuffle on the group key — the per-group
-    * count rides the selection window's own partitioning (an unordered
-    * count(*) frame over the same Window spec, so both resolve against a
-    * single Exchange + sort; the [[topFractionByGroup]] shape) instead of
-    * a second counting scan + broadcast join. Few-huge-group corpora hit
-    * the same window-task caveat as [[groupSampleExact]] — shard the
-    * group key first if a single group exceeds one task's budget. */
   /** UniMax budget allocation (Chung et al., "UniMax: Fairer and More
     * Effective Language Sampling for Large-Scale Multilingual
     * Pretraining", ICLR 2023): split a total training budget across
@@ -527,8 +478,7 @@ object Filters {
           .otherwise(expr("alloc_units div n_units")))
         .withColumn("__rem", col("alloc_units") - col("__full") * col("n_units"))
         .select(col(groupCol), col("__full"), col("__rem")))
-    val keyed = df.withColumn("__h",
-      md5(concat_ws("|", keyCols.map(col) :+ lit(salt.toString): _*)))
+    val keyed = df.withColumn("__h", Exprs.md5Key(keyCols.map(col) :+ lit(salt.toString)))
     val sliced = Scale.rangeSlices(keyed, col(groupCol) +: col("__h") +: keyCols.map(col))
     val units = col(unitsCol).cast("long")
     val localW = Window.partitionBy(col("__part"), col(groupCol))
@@ -544,6 +494,34 @@ object Filters {
       .drop("__part", "__units_before", "__units_total", "__h", "__cb", "__full", "__rem")
   }
 
+  /** Temperature-flattened mixture sampling: keep
+    * `min(n_g, floor(c · n_g^(alphaQuarters/4)))` rows of each group,
+    * chosen in portable-hash order — the sublinear domain-rebalancing
+    * draw of multilingual/multi-source pretraining (exponent-smoothed
+    * sampling p ∝ n^α, as popularized for language balancing in
+    * multilingual model training): big domains are damped, small ones
+    * kept (nearly) whole, and `c` sets the overall budget.
+    *
+    * Unlike [[rebalanceMixture]] (explicit target fractions, score-ranked
+    * keeps) the mixture here is DERIVED from the observed counts, and
+    * selection is an unbiased deterministic draw (md5 order, the
+    * [[groupSampleExact]] audit property) rather than quality-ranked.
+    *
+    * `α` is restricted to quarters (`alphaQuarters` ∈ 1..4) so the weight
+    * is an exact IEEE-754 composition: `n^(1/4) = sqrt(sqrt(n))`,
+    * `n^(2/4) = sqrt(n)`, `n^(3/4) = sqrt(n)·sqrt(sqrt(n))`, `n^1 = n` —
+    * sqrt and multiply are correctly-rounded in every IEEE engine, so
+    * `floor(c·w)` lands on the same integer everywhere (a free-form
+    * `pow(n, α)` is NOT correctly rounded and may differ in the last ulp
+    * across engines — see Queries.scala determinism rules).
+    *
+    * Scale: ONE scan, ONE hash shuffle on the group key — the per-group
+    * count rides the selection window's own partitioning (an unordered
+    * count(*) frame over the same Window spec, so both resolve against a
+    * single Exchange + sort; the [[topFractionByGroup]] shape) instead of
+    * a second counting scan + broadcast join. Few-huge-group corpora hit
+    * the same window-task caveat as [[groupSampleExact]] — shard the
+    * group key first if a single group exceeds one task's budget. */
   def temperatureSample(df: DataFrame, groupCol: String, c: Double,
                         alphaQuarters: Int, keyCols: Seq[String],
                         salt: Int = 42): DataFrame = {
@@ -558,7 +536,7 @@ object Filters {
       case 3 => sqrt(n) * sqrt(sqrt(n))
       case 4 => n
     }
-    val h = md5(concat_ws("|", keyCols.map(col) :+ lit(salt.toString): _*))
+    val h = Exprs.md5Key(keyCols.map(col) :+ lit(salt.toString))
     val w = Window.partitionBy(col(groupCol))
       .orderBy(h +: keyCols.map(col): _*)
     val cnt = Window.partitionBy(col(groupCol))

@@ -193,6 +193,52 @@ object Scale {
     sliced.join(broadcast(offsets), keys)
   }
 
+  /** The running sums over a value-bucketed count table
+    * ([[orderedBuckets]] on `__v`, distinct values): for each
+    * `(cum, name, value)`, [[sliceOffsets]]' `<name>_before` and
+    * `<name>_total` of `sum(value)`, and `cum` — the global running sum
+    * of `value` in `__v` order, a bucket-local window plus the earlier
+    * buckets' total. */
+  def cumulativeCounts(ranged: DataFrame, sums: Seq[(String, String, Column)]): DataFrame = {
+    val local = Window.partitionBy("__part").orderBy("__v")
+      .rowsBetween(Window.unboundedPreceding, 0)
+    sums.foldLeft(sliceOffsets(ranged, sums.map { case (_, name, v) => name -> sum(v) })) {
+      case (df, (cum, name, v)) => df.withColumn(cum, sum(v).over(local) + col(s"${name}_before"))
+    }
+  }
+
+  /** The 1-based global row position under `order` — a TOTAL order, the
+    * one the frame was [[rangeSlices]]-sliced on, after `groupBy` — of a
+    * [[sliceOffsets]] frame counting `__rows`: the rows of the group's
+    * earlier slices plus a slice-local `row_number`. */
+  def sliceRank(order: Seq[Column], groupBy: Seq[String] = Nil): Column =
+    col("__rows_before") + row_number().over(
+      Window.partitionBy(("__part" +: groupBy).map(col): _*).orderBy(order: _*))
+
+  /** The `(group, score)` histogram of `df` — `__c` rows per distinct
+    * score — with `above`, the count of the group's rows scoring strictly
+    * higher (the exclusive running count in descending score order). The
+    * window runs over distinct scores, never over rows. */
+  def scoreHistogram(df: DataFrame, groupCol: String, scoreCol: String,
+                     above: String): DataFrame =
+    df.groupBy(col(groupCol), col(scoreCol))
+      .agg(count(lit(1)).as("__c"))
+      .withColumn(above, coalesce(sum("__c").over(
+        Window.partitionBy(col(groupCol)).orderBy(col(scoreCol).desc)
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+
+  /** SQL `ntile(nBuckets)` of the 1-based `rank` among `rows` rows, as
+    * arithmetic: ntile front-loads the remainder, so the first
+    * `rows mod nBuckets` tiles hold one row more. Exact below 2^52 rows
+    * (the floor runs on a double quotient). */
+  def ntileOf(rank: Column, rows: Column, nBuckets: Int): Column = {
+    val q = floor(rows / nBuckets)
+    val r = rows % nBuckets
+    val cut = r * (q + 1)
+    when(rank <= cut, floor((rank - 1) / (q + 1)) + 1)
+      .otherwise(r + floor((rank - cut - 1) / greatest(q, lit(1L))) + 1)
+  }
+
   /** Spread a CPU-bound stage (native digest kernels: bootstrap weights,
     * CMS buckets, minhash) across the cores when — and ONLY when — the
     * input scan is too small to feed them: a single small parquet file

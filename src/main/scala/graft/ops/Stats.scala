@@ -61,12 +61,6 @@ object Stats {
           .otherwise(z).as("z_stat"))
   }
 
-  /** Deterministic unit-interval position in [0, 1e9) from the portable
-    * md5 gate over (keys…, salt) — replayable by any engine with md5. */
-  private def u9(keys: Seq[Column], salt: Column): Column =
-    conv(substring(md5(concat_ws("|", keys :+ salt: _*)), 1, 15), 16, 10)
-      .cast("long") % 1000000000L
-
   /** Cumulative Poisson(1) thresholds scaled to 1e9 (floor): weight k is
     * drawn when the uniform lands in [cum(k−1), cum(k)). The tail is
     * capped at 8 (P(X>8|λ=1) ≈ 1e-6 — negligible bias, exact
@@ -134,7 +128,7 @@ object Stats {
   private[graft] def bootstrapReplicatesColumnForm(
       df: DataFrame, valueCol: String, keyCols: Seq[String],
       nReplicates: Int = 32, salt: Int = 42): DataFrame = {
-    val u = u9(keyCols.map(col) ++ Seq(col("replicate")), lit(salt.toString))
+    val u = Filters.u9(keyCols.map(col) ++ Seq(col("replicate"), lit(salt.toString)))
     val w = PoissonCum9.zipWithIndex.foldRight(lit(PoissonCum9.size): Column) {
       case ((thr, k), rest) => when(u < thr, k).otherwise(rest)
     }
@@ -325,11 +319,9 @@ object Stats {
     val sliced = Scale.rangeSlices(
       df.select(col(pMicrosCol).cast("long").as("__p") +: keyCols.map(col): _*),
       sortExprs, sorted = true)
-    val local = Window.partitionBy("__part").orderBy(sortExprs: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
     val ranked = Pins.pin(Scale.sliceOffsets(sliced, Seq("__rows" -> count(lit(1))))
       .withColumnRenamed("__rows_total", "__m")
-      .withColumn("__rk", sum(lit(1L)).over(local) + col("__rows_before"))
+      .withColumn("__rk", Scale.sliceRank(sortExprs))
       .withColumn("__term", least(lit(1000000L),
         expr(s"(CAST(__p AS $d0) * __m) div CAST(__rk AS $d0)")
           .cast("long"))))
@@ -463,18 +455,11 @@ object Stats {
     * the bounds, offsets and cumsum subtrees), [[Scale.orderedBuckets]] +
     * [[Scale.sliceOffsets]] prefix sums, scalar rollup. */
   def giniCoefficient(df: DataFrame, valueCol: String): DataFrame = {
-    val d0 = "decimal(38,0)"
-    val v = df.select(
-        expr(s"CAST(CAST($valueCol AS decimal(18,2)) * 100 AS $d0)")
-          .as("__v"))
-      .where(col("__v") >= 0)
-      .groupBy("__v").agg(count(lit(1)).cast(d0).as("__c"))
-    val local = Window.partitionBy("__part").orderBy("__v")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    Scale.sliceOffsets(Scale.orderedBuckets(Pins.pin(v), "__v"),
-        Seq("__c" -> sum("__c")))
-      .withColumn("__prev", sum("__c").over(local) + col("__c_before")
-        - col("__c"))
+    val v = centsCounts(df, valueCol, col("__v") >= 0)
+      .withColumn("__c", col("__c").cast("decimal(38,0)"))
+    Scale.cumulativeCounts(Scale.orderedBuckets(Pins.pin(v), "__v"),
+        Seq(("__cum", "__c", col("__c"))))
+      .withColumn("__prev", col("__cum") - col("__c"))
       .withColumn("__ranksum",
         expr("__c * __prev + (__c * (__c + 1)) div 2"))
       .agg(sum("__c").as("__n"), sum(expr("__v * __c")).as("__t"),
@@ -500,19 +485,10 @@ object Stats {
     * prefix sums of count AND wealth, then a 10-row broadcast decile dim
     * joined on the boundary condition; one row matches per decile. */
   def lorenzCurve(df: DataFrame, valueCol: String): DataFrame = {
-    val d0 = "decimal(38,0)"
-    val v = df.select(
-        expr(s"CAST(CAST($valueCol AS decimal(18,2)) * 100 AS $d0)")
-          .as("__v"))
-      .where(col("__v") >= 0)
-      .groupBy("__v").agg(count(lit(1)).cast(d0).as("__c"))
-    val wealth = expr("__v * __c")
-    val local = Window.partitionBy("__part").orderBy("__v")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val cum = Scale.sliceOffsets(Scale.orderedBuckets(Pins.pin(v), "__v"),
-        Seq("__c" -> sum("__c"), "__w" -> sum(wealth)))
-      .withColumn("__cum", sum("__c").over(local) + col("__c_before"))
-      .withColumn("__cumw", sum(wealth).over(local) + col("__w_before"))
+    val v = centsCounts(df, valueCol, col("__v") >= 0)
+      .withColumn("__c", col("__c").cast("decimal(38,0)"))
+    val cum = Scale.cumulativeCounts(Scale.orderedBuckets(Pins.pin(v), "__v"),
+      Seq(("__cum", "__c", col("__c")), ("__cumw", "__w", expr("__v * __c"))))
     val deciles = broadcast(
       df.sparkSession.range(1, 11).select(col("id").cast("int").as("decile")))
     cum.join(deciles,
@@ -524,6 +500,18 @@ object Stats {
           "(__cum - (decile * __c_total + 9) div 10) * __v) * 1000000) div __w_total " +
           "AS bigint) END").as("wealth_share_micros"))
   }
+
+  /** The value-distinct count table `(__v, __c)` of `valueCol` in exact
+    * cents: `__v = CAST(CAST(v AS decimal(18,2))·100 AS decimal(38,0))`,
+    * the rows `keep` admits (a predicate on `__v`), one `count` per
+    * distinct value — the map-side-combined input of every value-bucket
+    * prefix sum. */
+  private[graft] def centsCounts(df: DataFrame, valueCol: String,
+                                 keep: Column): DataFrame =
+    df.select(
+        expr(s"CAST(CAST($valueCol AS decimal(18,2)) * 100 AS decimal(38,0))").as("__v"))
+      .where(keep)
+      .groupBy("__v").agg(count(lit(1)).as("__c"))
 
   /** Percentile CI over a replicate table: nearest-rank lo/hi quantiles
     * of `wmean` plus their mean — a 1-row summary of

@@ -194,28 +194,24 @@ object Streaming {
                         store: TableStore, countsTable: String,
                         checkpoint: String,
                         onReport: DataFrame => Unit): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) => Pins.scoped {
-          val tx = store.txn(checkpoint, batchId)
-          if (!tx.committed(countsTable)) {
-            val bc = batch.groupBy(col(valueCol).cast("double").as("value"))
-              .agg(count(lit(1)).as("cur_count"))
-            tx.overwrite(countsTable,
-              if (!tx.exists(countsTable)) bc
-              else tx.read(countsTable).unionByName(bc)
-                .groupBy("value").agg(sum("cur_count").as("cur_count")))
-          }
-          val joined = refCounts
-            .select(col("value"), col("ref_count"))
-            .join(store.read(countsTable), Seq("value"), "full_outer")
-          onReport(graft.features.Features.ksFromCounts(
-            joined, "value", "ref_count", "cur_count"))
+    startAvailableNow(stream, OutputMode.Append(), checkpoint) {
+      (batch, batchId) => Pins.scoped {
+        val tx = store.txn(checkpoint, batchId)
+        if (!tx.committed(countsTable)) {
+          val bc = batch.groupBy(col(valueCol).cast("double").as("value"))
+            .agg(count(lit(1)).as("cur_count"))
+          tx.overwrite(countsTable,
+            if (!tx.exists(countsTable)) bc
+            else tx.read(countsTable).unionByName(bc)
+              .groupBy("value").agg(sum("cur_count").as("cur_count")))
         }
+        val joined = refCounts
+          .select(col("value"), col("ref_count"))
+          .join(store.read(countsTable), Seq("value"), "full_outer")
+        onReport(graft.features.Features.ksFromCounts(
+          joined, "value", "ref_count", "cur_count"))
       }
-      .start()
+    }
 
   /** Quote-of-corpus INGEST GATE: each arriving micro-batch is probed for
     * ≥ `threshold` n-gram containment in the already-ingested corpus
@@ -280,49 +276,45 @@ object Streaming {
                             n: Int = 3, banded: Boolean = false,
                             w: Int = 8, dfCap: Long = 4096,
                             compactEvery: Int = 0): StreamingQuery =
-    arrivals.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) => Pins.scoped {
-          val tx = store.txn(checkpoint, batchId)
-          if (!tx.committed(cleanTable)) {
-            val kept =
-              if (!tx.exists(postingsTable)) batch
-              else {
-                val contained = (if (banded)
-                    graft.text.Dedup.containmentIncrementalBanded(
-                      tx, postingsTable, dfTable, gramsTable,
-                      batch, textCol, idCol, n = n, w = w,
-                      threshold = threshold, dfCap = dfCap)
-                  else
-                    graft.text.Dedup.containmentIncremental(
-                      tx, postingsTable, dfTable, gramsTable,
-                      batch, textCol, idCol, n = n, threshold = threshold))
-                  .select(col("probe_id").as(idCol)).distinct()
-                batch.join(contained, Seq(idCol), "left_anti")
-              }
-            // pin ONE evaluation: the index seed and the clean append must
-            // see the same survivor set (a nondeterministic-source batch
-            // re-planned twice could drift)
-            val keptP = Pins.pin(kept.select(col(idCol), col(textCol)))
-            if (!keptP.isEmpty) {
-              if (banded)
-                graft.text.Dedup.seedWinnowIndex(tx, postingsTable,
-                  dfTable, gramsTable, keptP, textCol, idCol, n = n, w = w,
-                  appendOnly = true)
-              else
-                graft.text.Dedup.seedGramIndex(tx, postingsTable, dfTable,
-                  gramsTable, keptP, textCol, idCol, n = n, appendOnly = true)
-              crashHook(cleanTable, batchId)
-              tx.append(cleanTable, keptP, Seq(idCol))
+    startAvailableNow(arrivals, OutputMode.Append(), checkpoint) {
+      (batch, batchId) => Pins.scoped {
+        val tx = store.txn(checkpoint, batchId)
+        if (!tx.committed(cleanTable)) {
+          val kept =
+            if (!tx.exists(postingsTable)) batch
+            else {
+              val contained = (if (banded)
+                  graft.text.Dedup.containmentIncrementalBanded(
+                    tx, postingsTable, dfTable, gramsTable,
+                    batch, textCol, idCol, n = n, w = w,
+                    threshold = threshold, dfCap = dfCap)
+                else
+                  graft.text.Dedup.containmentIncremental(
+                    tx, postingsTable, dfTable, gramsTable,
+                    batch, textCol, idCol, n = n, threshold = threshold))
+                .select(col("probe_id").as(idCol)).distinct()
+              batch.join(contained, Seq(idCol), "left_anti")
             }
-            maybeCompact(store, compactEvery, batchId, batch,
-              Seq(postingsTable, gramsTable, cleanTable))
+          // pin ONE evaluation: the index seed and the clean append must
+          // see the same survivor set (a nondeterministic-source batch
+          // re-planned twice could drift)
+          val keptP = Pins.pin(kept.select(col(idCol), col(textCol)))
+          if (!keptP.isEmpty) {
+            if (banded)
+              graft.text.Dedup.seedWinnowIndex(tx, postingsTable,
+                dfTable, gramsTable, keptP, textCol, idCol, n = n, w = w,
+                appendOnly = true)
+            else
+              graft.text.Dedup.seedGramIndex(tx, postingsTable, dfTable,
+                gramsTable, keptP, textCol, idCol, n = n, appendOnly = true)
+            crashHook(cleanTable, batchId)
+            tx.append(cleanTable, keptP, Seq(idCol))
           }
+          maybeCompact(store, compactEvery, batchId, batch,
+            Seq(postingsTable, gramsTable, cleanTable))
         }
       }
-      .start()
+    }
 
   /** Best-effort file-count maintenance AFTER the clean commit (a crash
     * here replays into the skipped trigger) — see the compactEvery
@@ -374,50 +366,53 @@ object Streaming {
       s"unknown near-dup method '$method' (minhash | simhash | embedding)")
     require(method != "embedding" || centroids.nonEmpty,
       "method = embedding needs the fixed quantized coarse centroids")
-    arrivals.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) => Pins.scoped {
-          val tx = store.txn(checkpoint, batchId)
-          if (!tx.committed(cleanTable)) {
-            val flagged = method match {
-              case "minhash" =>
-                graft.text.Dedup.minhashIncremental(tx, sigTable, batch,
-                  textCol, idCol, numHashes = numHashes, bands = bands,
-                  threshold = threshold, appendOnly = true)
-              case "simhash" =>
-                graft.text.Dedup.simhashIncremental(tx, sigTable, batch,
-                  textCol, idCol, maxHamming = maxHamming, appendOnly = true)
-              case _ =>
-                graft.sim.Cluster.embeddingIncremental(tx, sigTable, batch,
-                  textCol, idCol, centroids, threshold = threshold,
-                  appendOnly = true)
-            }
-            // flagged is pinned by the probe, which registered the kept rows
-            val kept = flagged.where(col("kept")).select(col(idCol), col(textCol))
-            if (!kept.isEmpty) {
-              crashHook(cleanTable, batchId)
-              tx.append(cleanTable, kept, Seq(idCol))
-            }
-            maybeCompact(store, compactEvery, batchId, batch,
-              Seq(sigTable, cleanTable))
+    startAvailableNow(arrivals, OutputMode.Append(), checkpoint) {
+      (batch, batchId) => Pins.scoped {
+        val tx = store.txn(checkpoint, batchId)
+        if (!tx.committed(cleanTable)) {
+          val flagged = method match {
+            case "minhash" =>
+              graft.text.Dedup.minhashIncremental(tx, sigTable, batch,
+                textCol, idCol, numHashes = numHashes, bands = bands,
+                threshold = threshold, appendOnly = true)
+            case "simhash" =>
+              graft.text.Dedup.simhashIncremental(tx, sigTable, batch,
+                textCol, idCol, maxHamming = maxHamming, appendOnly = true)
+            case _ =>
+              graft.sim.Cluster.embeddingIncremental(tx, sigTable, batch,
+                textCol, idCol, centroids, threshold = threshold,
+                appendOnly = true)
           }
+          // flagged is pinned by the probe, which registered the kept rows
+          val kept = flagged.where(col("kept")).select(col(idCol), col(textCol))
+          if (!kept.isEmpty) {
+            crashHook(cleanTable, batchId)
+            tx.append(cleanTable, kept, Seq(idCol))
+          }
+          maybeCompact(store, compactEvery, batchId, batch,
+            Seq(sigTable, cleanTable))
         }
       }
-      .start()
+    }
   }
+
+  /** Start `stream` as an AvailableNow query checkpointed at
+    * `checkpoint` in output `mode`, handing each micro-batch and its id
+    * to `body` — the one starter of the gates and [[streamIntoStore]]. */
+  private def startAvailableNow(stream: DataFrame, mode: OutputMode, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(body)
+      .start()
 
   /** Continuous feature refresh: each micro-batch upserts into the store by
     * PK — replay-idempotent, like the reference's scheduled MERGE jobs. */
   def streamIntoStore(agg: DataFrame, store: TableStore, table: String,
                       primaryKeys: Seq[String], checkpoint: String): StreamingQuery =
-    agg.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        store.upsert(table, batch, primaryKeys)
-      }
-      .start()
+    startAvailableNow(agg, OutputMode.Update(), checkpoint) { (batch, _) =>
+      store.upsert(table, batch, primaryKeys)
+    }
 }

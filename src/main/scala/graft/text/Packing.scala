@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Exprs
 import graft.ops.Scale
 
 /** Training-example packing: the concat-and-chunk preparation step of
@@ -71,12 +72,10 @@ object Packing {
     require(nShards > 0, s"nShards must be positive, got $nShards")
     // (key, id) ordering: md5 collisions are negligible but the id
     // tie-break makes the order a total one by construction
-    val keyed = df.withColumn("__k",
-      md5(concat_ws("|", col(idCol), lit(salt.toString))))
-    val sliced = Scale.rangeSlices(keyed, Seq(col("__k"), col(idCol)))
-    val localW = Window.partitionBy("__part").orderBy(col("__k"), col(idCol))
-    Scale.sliceOffsets(sliced, Seq("__rows" -> count(lit(1))))
-      .withColumn("__rank0", col("__rows_before") + row_number().over(localW) - 1)
+    val keyed = df.withColumn("__k", Exprs.md5Key(Seq(col(idCol), lit(salt.toString))))
+    val order = Seq(col("__k"), col(idCol))
+    Scale.sliceOffsets(Scale.rangeSlices(keyed, order), Seq("__rows" -> count(lit(1))))
+      .withColumn("__rank0", Scale.sliceRank(order) - 1)
       .withColumn("shard", pmod(col("__rank0"), lit(nShards.toLong)).cast("int"))
       .withColumn("shard_pos", expr(s"__rank0 div ${nShards}L"))
       .drop("__part", "__rows_before", "__rows_total", "__k", "__rank0")
@@ -203,10 +202,8 @@ object Packing {
       .withColumn("pad_tokens", (col("bucket_len") - eff).cast("int"))
       .withColumn("truncated", n > maxBucket)
     val sliced = Scale.rangeSlices(staged, Seq(col("bucket_len"), col(idCol)))
-    val localW = Window.partitionBy("__part", "bucket_len").orderBy(col(idCol))
     Scale.sliceOffsets(sliced, Seq("__rows" -> count(lit(1))), groupBy = Seq("bucket_len"))
-      .withColumn("seq_in_bucket",
-        col("__rows_before") + row_number().over(localW) - 1)
+      .withColumn("seq_in_bucket", Scale.sliceRank(Seq(col(idCol)), Seq("bucket_len")) - 1)
       .withColumn("batch_in_bucket",
         expr(s"seq_in_bucket div greatest(1, $maxTokensPerBatch div bucket_len)"))
       .drop("__part", "__rows_before", "__rows_total")
@@ -225,10 +222,8 @@ object Packing {
     * prefix rank sliced on (score, id) instead. */
   def curriculumOrder(df: DataFrame, idCol: String, scoreCol: String): DataFrame = {
     val order = Seq(col(scoreCol), col(idCol))
-    val localW = Window.partitionBy("__part").orderBy(order: _*)
     Scale.sliceOffsets(Scale.rangeSlices(df, order), Seq("__rows" -> count(lit(1))))
-      .withColumn("curriculum_pos",
-        col("__rows_before") + row_number().over(localW) - 1)
+      .withColumn("curriculum_pos", Scale.sliceRank(order) - 1)
       .drop("__part", "__rows_before", "__rows_total")
   }
 

@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import graft.ops.Filters
 import graft.text.Packing
@@ -102,6 +104,19 @@ class CurateSpec extends AnyFunSuite {
     val out = Filters.rebalanceMixture(df, "source",
       Map("web" -> 0.5, "ghost" -> 0.5), "score", "id")
     assert(out.count() == 2)
+  }
+
+  test("rebalanceMixture keys a non-string group column on its string form") {
+    val rows = (1L to 12L).map(i => ((i % 3).toInt, i, (i * 7) % 5))
+    val ints = rows.toDF("source", "id", "score")
+    val strs = ints.withColumn("source", col("source").cast("string"))
+    val weights = Map("0" -> 0.5, "1" -> 0.25, "2" -> 0.25)
+    def kept(df: DataFrame): Set[Long] =
+      Filters.rebalanceMixture(df, "source", weights, "score", "id")
+        .select("id").as[Long].collect().toSet
+    // T = min(4/.5, 4/.25, 4/.25) = 8: group 0 keeps 4, groups 1 and 2 keep 2
+    assert(kept(strs).size == 8)
+    assert(kept(ints) == kept(strs))
   }
 
   test("slidingChunks: clipped spans, overlap, zero-length docs emit nothing") {

@@ -30,6 +30,8 @@ class PrefixSumSpec extends AnyFunSuite {
       .toDF("v")
     val counts = (0 until 30).map(v => (v.toLong, (v % 4).toLong, (v % 5).toLong))
       .toDF("v", "a", "b")
+    val cohorts = (1 to 60).map(i => ((i % 13) * 1.5, if (i % 3 == 0) "a" else "b"))
+      .toDF("v", "grp")
     val orders = (1 to 60).map(i =>
         (i % 12L, java.sql.Date.valueOf(f"2024-01-${i % 28 + 1}%02d"), i * 1.25))
       .toDF("cust", "day", "amount")
@@ -59,7 +61,18 @@ class PrefixSumSpec extends AnyFunSuite {
       ("Features.robustStats", () => Features.robustStats(values, "v"), 14, 7),
       ("Features.madStats (medianOfCounts ×2)", () => Features.madStats(values, "v"), 28, 10),
       ("Features.ksFromCounts (cdfFromCounts)",
-        () => Features.ksFromCounts(counts, "v", "a", "b"), 9, 5))
+        () => Features.ksFromCounts(counts, "v", "a", "b"), 9, 5),
+      // recorded before the histogram, CDF and KS steps became shared helpers
+      ("Features.ksStatistic (twoSampleCdf)",
+        () => Features.ksStatistic(cohorts, "v", "grp", "a", "b"), 10, 5),
+      ("Features.cramerVonMises (twoSampleCdf)",
+        () => Features.cramerVonMises(cohorts, "v", "grp", "a", "b"), 10, 5),
+      ("Features.mannWhitney (twoSampleCdf)",
+        () => Features.mannWhitney(cohorts, "v", "grp", "a", "b"), 10, 5),
+      ("Filters.topFractionByGroupExact",
+        () => Filters.topFractionByGroupExact(grouped, "g", "units", 0.3, "id"), 6, 3),
+      ("Filters.rankBucketsExact",
+        () => Filters.rankBucketsExact(grouped, "g", "units", 4, "id"), 5, 2))
     val got = cases.map { case (name, op, _, _) =>
       val (df, jobs) = TestSpark.jobsOf { val df = op(); df.collect(); df }
       (name, jobs, Scale.countExchanges(df))
@@ -160,5 +173,59 @@ class PrefixSumSpec extends AnyFunSuite {
     } yield s"$p:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString(
       "range slices outside Scale.rangeSlices (use rangeSlices + sliceOffsets):\n", "\n", ""))
+  }
+
+  test("one count table, running count, nearest rank, rank and md5 gate: their " +
+      "hand copies appear only in the helpers") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root (no $root)")
+    val scale = root.resolve("graft/ops/Scale.scala")
+    val features = root.resolve("graft/features/Features.scala")
+    // (file, code line) → why it may spell the step out
+    val exempt: Map[(Path, String), String] = Map(
+      (scale, """val local = Window.partitionBy("__part").orderBy("__v")""") ->
+        "Scale.cumulativeCounts: the running count over value buckets",
+      (scale, "col(\"__rows_before\") + row_number().over(") ->
+        "Scale.sliceRank: the row-position rank over range slices",
+      (features, """max(when(col("__rn") === ceil(col("__n") * p), dec(col(valueCol))))""") ->
+        "Features.nearestRanks: the nearest-rank rule on a group window",
+      (features, "monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)) + 1L),") ->
+        "Features.rankedSlices: sliceRank's row_number over __part would re-shuffle its pinned slices",
+      (root.resolve("graft/Queries.scala"), """substring(md5(col("blob")), 1, 8).as("shard_key"),""") ->
+        "Queries.qMmBinaryMeta: an 8-hex shard-key prefix, not the 15-hex gate")
+    val banned = Seq(
+      "the md5 gate (Exprs.md5Gate)" -> """substring\(md5\(""".r,
+      "a value-bucket running count (Scale.cumulativeCounts)" ->
+        """partitionBy\("__part"\)\s*\.orderBy\((col\()?"__v"""".r,
+      "a window nearest rank (Features.nearestRanks)" -> """ceil\(col\("__n"\) \*""".r,
+      "a slice rank (Scale.sliceRank)" -> """monotonically_increasing_id\(\)""".r)
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty)
+    val found = for {
+      p <- files
+      text = new String(Files.readAllBytes(p), "UTF-8")
+      lines = text.split("\n", -1)
+      // a row_number over a window partitioned by __part, inline or via a val
+      partVals = """val (\w+) = Window\.partitionBy\(\(?"__part"""".r
+        .findAllMatchIn(text).map(_.group(1)).toSeq
+      rowNumber = ("""row_number\(\)\.over\(\s*(Window\.partitionBy\(\(?"__part"""" +
+        partVals.map(v => s"|$v\\b").mkString + ")").r
+      (what, re) <- banned :+ ("a slice rank (Scale.sliceRank)" -> rowNumber)
+      m <- re.findAllMatchIn(text)
+      i = text.substring(0, m.start).count(_ == '\n')
+      code = lines(i).split("//", 2)(0).trim
+      at = m.start - text.lastIndexOf('\n', m.start - 1) - 1
+      comment = lines(i).indexOf("//")
+      if !code.startsWith("*") && !code.startsWith("/*") && (comment < 0 || at < comment)
+    } yield (p, code, i, what)
+    val bad = found.collect { case (p, code, i, what) if !exempt.contains((p, code)) =>
+      s"$p:${i + 1}: $code  — use $what" }
+    assert(bad.isEmpty, bad.mkString(
+      "a hand-copied statistics or sampling step outside its helper:\n", "\n", ""))
+    val stale = exempt.keySet -- found.map { case (p, code, _, _) => (p, code) }
+    assert(stale.isEmpty, s"exemptions that match no line: $stale")
   }
 }
