@@ -305,7 +305,7 @@ object Stats {
     * `(keyCols…, p_micros, p_rank, padj_micros, is_discovery)`.
     *
     * Scale: the family table is metric-dimension-sized, but the plan
-    * never assumes it — ranks are the prefix count of
+    * never assumes it — ranks are [[Scale.sliceRank]] over
     * [[Scale.rangeSlices]] (sorted) + [[Scale.sliceOffsets]], and padj's
     * suffix min is the same scan reversed: a slice-local reverse min plus
     * a broadcast min over the later slices; the `k*` cut is a 1-row
